@@ -767,6 +767,18 @@ def _rank_series(pdf: pd.DataFrame, cols: list) -> pd.Series:
     return rank
 
 
+def order_rank(*cols):
+    """Strict merge order over numpy columns (first = primary, all
+    ascending): each row's 0-based rank, with row position breaking
+    full ties — the ``ord_col`` :func:`merge_group` takes."""
+    import numpy as np
+
+    order = np.lexsort(cols[::-1])
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order))
+    return rank
+
+
 def _pandas_scalar_agg(
     pdf, c, fn, rank, add_mask, ret_mask, ignore_ret, delim, merge_keys
 ):
@@ -989,3 +1001,49 @@ def pandas_partial_update_merge(
         ).to_numpy()
     ].reset_index(drop=True)
     return out[merge_keys + list(value_cols)]
+
+
+def merge_group(pdf: pd.DataFrame, schema, keys, ord_col, kind_col) -> pd.DataFrame:
+    """THE in-task primary-key merge of one (partition, bucket) group —
+    the pandas counterpart of the reference's ``SortMergeReader`` with
+    a pluggable merge function, shared by every executor-local read
+    (lake and engine builders' bucket-local paths, both ``format(...)``
+    data sources). ``ord_col`` is a STRICT merge order the caller
+    derives from its own tie-break (commit sequence first); ``keys``
+    are the group's key columns as stored. ``ignore-delete`` drops
+    retracts before the merge, then the merge-engine option picks the
+    fold:
+
+    - ``deduplicate``: the max-``ord_col`` row per key, dropped when it
+      is a retract (``-D``/``-U``);
+    - ``first-row``: the min-``ord_col`` row per key, same drop;
+    - ``partial-update`` / ``aggregation``: the full pandas twins
+      :func:`pandas_partial_update_merge` / :func:`pandas_agg_merge`
+      over every value column the frame carries.
+
+    Returns the merged frame (dedup / first-row keep every input
+    column; the folds return keys + value columns)."""
+    opts = schema.options
+    if opts.get("ignore-delete", "false").lower() == "true":
+        # retracts drop BEFORE the merge: a -D must never shadow the
+        # standing row (merge_on_read's pre-merge filter)
+        pdf = pdf[pdf[kind_col].isin(ADD_KINDS)]
+    engine = opts.get("merge-engine", "deduplicate")
+    if engine in ("deduplicate", "first-row"):
+        pdf = pdf.sort_values(list(keys) + [ord_col], kind="mergesort")
+        pdf = pdf.drop_duplicates(
+            subset=list(keys),
+            keep="last" if engine == "deduplicate" else "first",
+        )
+        return pdf[pdf[kind_col].isin(ADD_KINDS)]
+    value_cols = [
+        f.name
+        for f in schema.spark_schema.fields
+        if f.name not in keys and f.name in pdf.columns
+    ]
+    fold = (
+        pandas_partial_update_merge
+        if engine == "partial-update"
+        else pandas_agg_merge
+    )
+    return fold(pdf, schema, list(keys), value_cols, ord_col, kind_col)

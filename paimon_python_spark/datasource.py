@@ -236,12 +236,11 @@ def _parse_scan_start(options):
 
 def _check_ds_merge_supported(schema, fmt: str) -> None:
     """Driver-side guard shared by both data sources: their PK merges
-    run as an in-task pandas fold, which expresses deduplicate,
-    first-row, and PLAIN partial-update (latest non-null per column).
-    Aggregation and the partial-update extras (sequence-groups,
-    per-field aggregate-function, remove-record-on-delete) need the
-    builder's full merge_on_read dispatch — refuse at plan time with a
-    pointer instead of silently merging with the wrong semantics."""
+    run in-task through ``agg_merge.merge_group``, which expresses
+    every merge engine; refuse at plan time, with a pointer to the
+    builder, only what it cannot (hll_sketch aggregation fields) and
+    the option combinations merge_on_read refuses too, instead of
+    failing mid-task or merging with the wrong semantics."""
     is_pk = (
         schema.is_primary_key_table()
         if hasattr(schema, "is_primary_key_table")
@@ -401,7 +400,7 @@ class PaimonBatchReader(DataSourceReader):
         import pyarrow.dataset as ds
 
         from paimon_python_spark.types import spark_schema_to_pa
-        from paimon_python_spark.write import ADD_KINDS, KIND_COL, SEQ_COL
+        from paimon_python_spark.write import KIND_COL, SEQ_COL
 
         schema = self.table_schema
         if not partition.paths:
@@ -481,77 +480,24 @@ class PaimonBatchReader(DataSourceReader):
 
         if is_pk:
             # executor-local merge: this partition IS one (partition,
-            # bucket) — all runs for these keys are in hand. Engine
-            # dispatch mirrors merge_on_read for the in-task-expressible
-            # engines (anything else was refused at plan time by
-            # _check_ds_merge_supported); a declared sequence.field
-            # (possibly multi-field) orders before the arrival sequence.
+            # bucket) — all runs for these keys are in hand — through
+            # the one in-task merge kernel (engines it cannot express
+            # were refused at plan time by _check_ds_merge_supported).
+            # A declared sequence.field (possibly multi-field) orders
+            # before the arrival sequence, via a composite rank.
+            from paimon_python_spark.agg_merge import _rank_series, merge_group
+
             pdf = tbl.to_pandas()
             keys = list(
                 dict.fromkeys(schema.partition_keys + schema.primary_keys)
             )
-            opts = schema.options
-            engine = opts.get("merge-engine", "deduplicate")
             seq_fields = [
                 c.strip()
-                for c in opts.get("sequence.field", "").split(",")
+                for c in schema.options.get("sequence.field", "").split(",")
                 if c.strip()
             ]
-            order_cols = seq_fields + [SEQ_COL]
-            if opts.get("ignore-delete", "false").lower() == "true":
-                # drops retracts BEFORE the merge: a -D must not shadow
-                # the standing row (read.py's pre-merge filter)
-                pdf = pdf[pdf[KIND_COL].isin(ADD_KINDS)]
-            if engine == "first-row":
-                pdf = pdf.sort_values(
-                    order_cols,
-                    ascending=True,
-                    na_position="first",  # Spark asc = NULLS FIRST
-                    kind="mergesort",
-                ).drop_duplicates(subset=keys, keep="first")
-                pdf = pdf[pdf[KIND_COL].isin(ADD_KINDS)]
-            elif engine == "partial-update":
-                # full partial-update surface in-task (r12): sequence
-                # groups, per-field scalar aggregates,
-                # remove-record-on-delete — the builder's semantics via
-                # the shared pandas twin. A declared sequence.field
-                # orders through a composite rank, arrival as tie-break.
-                from paimon_python_spark.agg_merge import (
-                    pandas_partial_update_merge,
-                    _rank_series,
-                )
-
-                value_cols = [
-                    f.name
-                    for f in schema.spark_schema.fields
-                    if f.name not in keys
-                ]
-                pdf = pdf.reset_index(drop=True)
-                pdf["__ord"] = _rank_series(pdf, order_cols)
-                pdf = pandas_partial_update_merge(
-                    pdf, schema, keys, value_cols, "__ord", KIND_COL
-                )
-            elif engine == "aggregation":
-                # executor-local twin of the builder's one-hash-
-                # aggregate fold (hll_sketch refused at plan time)
-                from paimon_python_spark.agg_merge import pandas_agg_merge
-
-                value_cols = [
-                    f.name
-                    for f in schema.spark_schema.fields
-                    if f.name not in keys
-                ]
-                pdf = pandas_agg_merge(
-                    pdf, schema, keys, value_cols, SEQ_COL, KIND_COL
-                )
-            else:  # deduplicate
-                pdf = pdf.sort_values(
-                    order_cols,
-                    ascending=False,
-                    na_position="last",  # Spark desc = NULLS LAST
-                    kind="mergesort",
-                ).drop_duplicates(subset=keys, keep="first")
-                pdf = pdf[pdf[KIND_COL].isin(ADD_KINDS)]
+            pdf["__ord"] = _rank_series(pdf, seq_fields + [SEQ_COL])
+            pdf = merge_group(pdf, schema, keys, "__ord", KIND_COL)
             tbl = pa.Table.from_pandas(
                 pdf[[f.name for f in schema.spark_schema.fields]],
                 schema=logical_pa,

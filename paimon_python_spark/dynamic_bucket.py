@@ -107,37 +107,14 @@ def write_hash_index_file(path: str, hashes) -> int:
 def _make_key_hash_fn(key_types):
     """Batch key-hashcode function (signed int32 murmur over the key's
     BinaryRow bytes) for a pandas UDF — the raw-hash sibling of
-    ``_make_lake_bucket_fn``, same vectorized encoder, same scalar
-    oracle fallback."""
+    ``_make_lake_bucket_fn``, same vectorized encoder."""
 
     def fn(*cols):
         import pandas as pd
 
-        from paimon_python_spark.paimon_lake import (
-            _lake_bucket_key_logical,
-            _vectorized_fixed_buckets,
-        )
+        from paimon_python_spark.paimon_lake import _vectorized_fixed_buckets
 
-        try:
-            return pd.Series(_vectorized_fixed_buckets(cols, key_types, None))
-        except Exception:
-            from paimon_python_spark.paimon_import import (
-                encode_binary_row,
-                murmur_hash_words,
-            )
-
-            out = []
-            for vals in zip(*cols):
-                row = [
-                    None
-                    if (v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)))
-                    else _lake_bucket_key_logical(v, t)
-                    for v, t in zip(vals, key_types)
-                ]
-                out.append(
-                    murmur_hash_words(encode_binary_row(row, key_types)[4:])
-                )
-            return pd.Series(out, dtype="int32")
+        return pd.Series(_vectorized_fixed_buckets(cols, key_types, None))
 
     return fn
 

@@ -49,6 +49,7 @@ import json
 import os
 import re
 import struct
+import dataclasses
 from dataclasses import dataclass, field
 from typing import Any, List, Optional
 
@@ -2340,22 +2341,33 @@ def _load_lake_entries(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-#: value dtypes the bucket-local merge keeps exact through the
-#: arrow→pandas→arrow roundtrip (others fall back to the window path)
+#: value dtypes the bucket-local merges (lake and engine) keep exact
+#: through the arrow→pandas→arrow roundtrip (others take the window path)
 _BUCKET_LOCAL_TYPES = (
     T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.BooleanType,
     T.FloatType, T.DoubleType, T.StringType, T.DateType,
 )
 
-#: default per-(partition, bucket) on-disk byte budget for the
-#: bucket-local merge. The merge materializes one whole group in a
-#: single task's pandas memory, so a misconfigured lake (bucket=1, or
-#: a skewed bucket key) must NOT take this path: above the budget the
-#: caller falls back to the exact key-window merge, whose shuffle
-#: spills instead of OOMing. 1 GiB on disk ≈ a few GiB decoded —
-#: comfortably inside one executor task at default sizing. Override
-#: per table with option ``bucket-local.max-group-bytes``.
+#: per-(partition, bucket) on-disk byte budget of the bucket-local
+#: merges. One group merges whole in a single task's pandas memory, so
+#: a misconfigured table (bucket=1, or a skewed bucket key) must NOT
+#: take that path: above the budget the read builders fall back to the
+#: exact key-window merge, whose shuffle spills instead of OOMing, and
+#: the ``format("paimon_lake")`` data source refuses. 1 GiB on disk ≈ a
+#: few GiB decoded — comfortably inside one executor task at default
+#: sizing.
 _BUCKET_LOCAL_MAX_GROUP_BYTES = 1 << 30
+
+
+def bucket_groups(entries) -> list:
+    """Entries grouped by (partition, bucket) — the unit a key's
+    versions are closed in — as ``[(manifest entry index, entry)]``
+    lists, in a stable group order."""
+    groups: dict = {}
+    for i, e in enumerate(entries):
+        key = (tuple(sorted(e.partition.items())), e.bucket)
+        groups.setdefault(key, []).append((i, e))
+    return [groups[k] for k in sorted(groups)]
 
 
 def max_group_bytes(entries) -> int:
@@ -2374,10 +2386,10 @@ def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries, fmt: str, dv_ranges)
     (no field-id remap needed in the task), parquet files, deduplicate
     engine without sequence.field, no deletion vectors, value dtypes
     the pandas roundtrip keeps exact, and — the scale guard — no
-    (partition, bucket) group larger than ``bucket-local.max-group-bytes``
-    on disk (a whole group merges in ONE task's memory; an oversized
-    group falls back to the exact key-window path, which shuffles but
-    spills instead of OOMing)."""
+    (partition, bucket) group larger than
+    ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk (a whole group merges in
+    ONE task's memory; an oversized group falls back to the exact
+    key-window path, which shuffles but spills instead of OOMing)."""
     if fmt not in ("parquet", "orc") or dv_ranges:
         return False
     if info.options.get("merge-engine", "deduplicate") != "deduplicate":
@@ -2398,17 +2410,189 @@ def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries, fmt: str, dv_ranges)
         return False
     if any(e.total_buckets not in (None, nb) for e in entries):
         return False  # mixed geometry (pre-rescale history): stay exact
-    budget = int(
-        info.options.get(
-            "bucket-local.max-group-bytes", _BUCKET_LOCAL_MAX_GROUP_BYTES
-        )
-    )
-    if max_group_bytes(entries) > budget:
+    if max_group_bytes(entries) > _BUCKET_LOCAL_MAX_GROUP_BYTES:
         return False  # one task would hold the whole group: stay exact
     return all(
         isinstance(f.dataType, _BUCKET_LOCAL_TYPES)
         for f in info.spark_schema.fields
     )
+
+
+def read_data_file(path: str, fmt: str, cols, arrow_filter=None, filter_fields=()):
+    """One data file (parquet / orc / avro) as an arrow table of the
+    ``cols`` it carries. ``arrow_filter`` prunes parquet row groups and
+    rows at the read when the file has every ``filter_fields`` column
+    (otherwise the file reads unfiltered)."""
+    if fmt == "orc":
+        import pyarrow.orc as po
+
+        f = po.ORCFile(path)
+        return f.read(columns=[c for c in cols if c in f.schema.names])
+    if fmt == "avro":
+        import pyarrow as pa
+
+        from paimon_python_spark.avro_codec import read_avro_table
+
+        with open(path, "rb") as fh:
+            names, rows = read_avro_table(fh.read())
+        idx = {c: names.index(c) for c in cols if c in names}
+        return pa.table({c: [r[i] for r in rows] for c, i in idx.items()})
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    names = pf.schema_arrow.names
+    have = [c for c in cols if c in names]
+    if arrow_filter is not None and all(c in names for c in filter_fields):
+        return pq.read_table(path, columns=have, filters=arrow_filter)
+    return pf.read(columns=have)
+
+
+def kv_column_pa_type(schema, col: str):
+    """Arrow type of a stored key-value column: the two system columns
+    are fixed by the writers (int64 sequence, int32 kind), ``_KEY_*``
+    and value columns follow the current table schema."""
+    import pyarrow as pa
+
+    from paimon_python_spark.types import spark_type_to_pa
+
+    if col == "_SEQUENCE_NUMBER":
+        return pa.int64()
+    if col == "_VALUE_KIND":
+        return pa.int32()
+    base = col[5:] if col.startswith("_KEY_") else col
+    for f in schema.spark_schema.fields:
+        if f.name == base:
+            return spark_type_to_pa(f.dataType)
+    return pa.null()
+
+
+def read_group_frame(files, fmt: str, cols, schema, key_predicate=None):
+    """THE pyarrow read of one merge group's files into one pandas
+    frame holding exactly ``cols`` plus ``__file`` (each row's index
+    in ``files``), shared by both builders' bucket-local merges and the
+    ``format("paimon_lake")`` data source.
+
+    ``files`` holds ``(path, colmap, dv)`` triples. ``colmap`` (field-id
+    schema evolution) maps current column names to a pre-evolution
+    file's own names; a None entry is a dropped field id, and names
+    outside the map (system columns) read as they are. ``dv`` is a
+    deletion vector's (index path, offset, length): its marked row
+    positions drop before anything else sees the rows. Columns a file
+    lacks NULL-fill with their :func:`kv_column_pa_type`.
+    ``key_predicate`` (parquet, DV-free files) filters rows at the read
+    — exact BEFORE a merge, because every version of a key shares its
+    key values — so a point lookup reads only the row groups whose
+    stats admit the key. ArrowDtype keeps null ints and longs past
+    2^53 exact through the pandas merge."""
+    import numpy as np
+    import pandas as pd
+
+    arrow_filter = None
+    if key_predicate is not None and fmt == "parquet":
+        arrow_filter = key_predicate.to_arrow()
+        filter_fields = sorted(key_predicate.fields())
+    frames = []
+    for fi, (path, colmap, dv) in enumerate(files):
+        stored = {c: colmap.get(c) if colmap and c in colmap else c for c in cols}
+        t = read_data_file(
+            path,
+            fmt,
+            [s for s in stored.values() if s],
+            None if dv else arrow_filter,
+            filter_fields if arrow_filter is not None else (),
+        )
+        f = t.to_pandas(types_mapper=pd.ArrowDtype)
+        if dv:
+            pos = read_dv_index_entry(str(dv[0]), int(dv[1]), int(dv[2]))
+            keep = np.setdiff1d(
+                np.arange(len(f), dtype=np.int64), pos.astype(np.int64)
+            )
+            f = f.iloc[keep].reset_index(drop=True)
+        renamed = {s: c for c, s in stored.items() if s and s != c}
+        if renamed:
+            f = f.rename(columns=renamed)
+        for c in cols:
+            if c not in f.columns:
+                # dtype-explicit filler: an object all-NA column would
+                # make pd.concat's result dtype depend on pandas version
+                f[c] = pd.Series(
+                    pd.NA,
+                    index=f.index,
+                    dtype=pd.ArrowDtype(kv_column_pa_type(schema, c)),
+                )
+        f["__file"] = fi
+        frames.append(f)
+    return pd.concat(frames, ignore_index=True)
+
+
+def merge_lake_group(info: PaimonSchemaInfo, files, fmt: str, cols, key_predicate=None):
+    """Read and merge one lake (partition, bucket) group. ``files``
+    rows are ``[manifest entry index, path, level, colmap, dv]``;
+    ``cols`` are the kv columns to read (``_KEY_*``, sequence, kind and
+    values). The merge order is the lake tie-break: max
+    ``_SEQUENCE_NUMBER``, then the lower LSM level (the newer run),
+    then the later manifest entry — the reference's sort-merge input
+    order."""
+    import numpy as np
+
+    from paimon_python_spark.agg_merge import merge_group, order_rank
+
+    g = read_group_frame(
+        [(path, colmap, dv) for _, path, _, colmap, dv in files],
+        fmt,
+        cols,
+        info,
+        key_predicate,
+    )
+    fi = g["__file"].to_numpy()
+    g["__ord"] = order_rank(
+        g["_SEQUENCE_NUMBER"].to_numpy(dtype="int64"),
+        -np.asarray([f[2] for f in files], dtype=np.int64)[fi],
+        np.asarray([f[0] for f in files], dtype=np.int64)[fi],
+    )
+    keys = [f"_KEY_{k}" for k in info.primary_keys if k not in info.partition_keys]
+    return merge_group(g, info, keys, "__ord", "_VALUE_KIND")
+
+
+def json_safe_partition(info: PaimonSchemaInfo, partition: dict) -> dict:
+    """A group's logical partition values in JSON-safe form (dates as
+    ISO strings) — what rides a group spec to the executor."""
+    out = {}
+    for k, v in logical_partition_values(info, partition).items():
+        out[k] = v.isoformat() if hasattr(v, "isoformat") else v
+    return out
+
+
+def partition_value(info: PaimonSchemaInfo, name: str, v):
+    """Inverse of :func:`json_safe_partition` for one column."""
+    import datetime
+
+    dt = info.spark_schema[name].dataType
+    if v is not None and isinstance(dt, T.DateType):
+        if isinstance(v, int):
+            return datetime.date(1970, 1, 1) + datetime.timedelta(days=v)
+        return datetime.date.fromisoformat(v)
+    return v
+
+
+def group_output(g, fields, info=None, partition=None):
+    """A merged group frame → the plain-object pandas columns of
+    ``fields``: Spark's arrow serializer rejects chunk-backed ArrowDtype
+    columns, and object scalars stay EXACT (null ints never detour
+    through float64). With ``partition`` (lake groups, whose data files
+    do not carry the partition columns) the partition values of
+    ``info`` are injected as constants."""
+    import pandas as pd
+
+    out = pd.DataFrame(index=g.index)
+    for f in fields:
+        if partition is not None and f.name in info.partition_keys:
+            v = partition_value(info, f.name, partition.get(f.name))
+            out[f.name] = pd.Series([v] * len(g), index=g.index, dtype=object)
+        else:
+            col = g[f.name]
+            out[f.name] = col.astype(object).where(col.notna(), None)
+    return out
 
 
 def merge_pk_entries_bucket_local(
@@ -2423,24 +2607,18 @@ def merge_pk_entries_bucket_local(
     """NO-SHUFFLE merge of a fixed-bucket PK lake — real Paimon's own
     execution shape: a key lives in exactly ONE (partition, bucket)
     group, so the merge is closed per group and needs no cross-task
-    key clustering. One task per group reads its files with pyarrow
-    (column-complete, Arrow-batched), resolves max-sequence-per-key
-    (level asc, then entry order desc as tie-breaks, ``-D``/``-U``
-    dropped) in-memory, and emits the group's visible rows. The
-    window-function path this replaces shuffles EVERY scanned byte by
-    key — at 100 TB that exchange is the dominant cost of every PK
-    read, while per-group state is bounded by bucket sizing exactly as
-    in Paimon's own per-bucket merge. Plan shape: scan → mapInPandas,
-    zero Exchange nodes (asserted by the gated roundtrip)."""
+    key clustering. One task per group reads its files and merges them
+    with :func:`merge_lake_group` (the shared frame reader plus
+    ``agg_merge.merge_group``, the one in-task merge kernel), then
+    emits the group's visible rows. The key-window path this replaces
+    shuffles EVERY scanned byte by key — at 100 TB that exchange is the
+    dominant cost of every PK read, while per-group state is bounded by
+    bucket sizing exactly as in Paimon's own per-bucket merge. Plan
+    shape: scan → mapInPandas, zero Exchange nodes (asserted by the
+    gated roundtrip)."""
     import json as _json
 
-    from pyspark.sql import functions as F
-
     part_keys = list(info.partition_keys)
-    trimmed = [k for k in info.primary_keys if k not in part_keys]
-    ignore_delete = (
-        info.options.get("ignore-delete", "false").lower() == "true"
-    )
     # COLUMN PRUNING pushed into the per-group pyarrow reads — the
     # bucket-local path has no Catalyst scan to prune for it, so the
     # caller passes projection ∪ predicate columns (keys always read:
@@ -2450,115 +2628,31 @@ def merge_pk_entries_bucket_local(
         value_fields = [f for f in info.spark_schema.fields if f.name in keep]
     else:
         value_fields = list(info.spark_schema.fields)
-    groups: dict = {}
-    for i, e in enumerate(entries):
-        key = (tuple(sorted(e.partition.items())), e.bucket)
-        groups.setdefault(key, []).append((i, e))
-    specs = []
-    for (_, _bkt), es in sorted(groups.items()):
-        e0 = es[0][1]
-        pvals = {}
-        for k in part_keys:
-            v = e0.partition.get(k)
-            # JSON-safe transport; DateType partition values are epoch
-            # days on disk and datetime.date after logical decode
-            if hasattr(v, "isoformat"):
-                v = v.isoformat()
-            pvals[k] = v
-        specs.append(
-            (
-                _json.dumps(
-                    {
-                        "files": [[i, src(e), e.level] for i, e in es],
-                        "partition": pvals,
-                    }
-                ),
-            )
+    specs = [
+        (
+            _json.dumps(
+                {
+                    "files": [[i, src(e), e.level, None, None] for i, e in es],
+                    "partition": json_safe_partition(info, es[0][1].partition),
+                }
+            ),
         )
-    schema = T.StructType(value_fields)
-    kv_value_names = [f.name for f in value_fields if f.name not in part_keys]
-    key_cols = [f"_KEY_{k}" for k in trimmed]
-    read_cols = key_cols + ["_SEQUENCE_NUMBER", "_VALUE_KIND"] + kv_value_names
+        for es in bucket_groups(entries)
+    ]
+    read_cols = (
+        [f"_KEY_{k}" for k in info.primary_keys if k not in part_keys]
+        + ["_SEQUENCE_NUMBER", "_VALUE_KIND"]
+        + [f.name for f in value_fields if f.name not in part_keys]
+    )
 
     def _merge_groups(batches):
-        import datetime
-        import json
-
-        import pandas as pd
-        import pyarrow.parquet as pq
-
-        # KEY-predicate pushdown into the per-group reads (parquet
-        # only): every version of a key shares its _KEY_* values, so
-        # filtering kv rows on a key predicate BEFORE the merge keeps
-        # max-seq resolution exact for the surviving keys — a point
-        # lookup reads only the row groups whose stats admit the key
-        # instead of the whole surviving file. Built once per task;
-        # an inexpressible op falls back to unfiltered reads.
-        arrow_filter = None
-        if key_predicate is not None and fmt == "parquet":
-            try:
-                arrow_filter = key_predicate.to_arrow()
-            except Exception:
-                arrow_filter = None
         for pdf_in in batches:
             for spec_s in pdf_in["spec"]:
-                spec = json.loads(spec_s)
-                frames = []
-                for idx, path, level in spec["files"]:
-                    if fmt == "orc":
-                        import pyarrow.orc as po
-
-                        t = po.ORCFile(path).read(columns=read_cols)
-                    elif arrow_filter is not None:
-                        t = pq.read_table(
-                            path, columns=read_cols, filters=arrow_filter
-                        )
-                    else:
-                        t = pq.read_table(path, columns=read_cols)
-                    # ArrowDtype keeps null ints/big longs EXACT through
-                    # the pandas merge (classic to_pandas would promote
-                    # nullable ints to float64 and corrupt > 2^53)
-                    f = t.to_pandas(types_mapper=pd.ArrowDtype)
-                    f["__lvl"] = level
-                    f["__idx"] = idx
-                    frames.append(f)
-                g = pd.concat(frames, ignore_index=True)
-                if ignore_delete:
-                    # ignore-delete: retracts drop BEFORE the merge so a
-                    # -D can never erase the standing row (read.py's
-                    # pre-merge filter, Paimon's CDC-replay option)
-                    g = g[g["_VALUE_KIND"].isin((0, 2))]
-                # max seq wins; ties: lower level (newer run), then
-                # later commit — mergesort keeps determinism
-                g = g.sort_values(
-                    key_cols + ["_SEQUENCE_NUMBER", "__lvl", "__idx"],
-                    ascending=[True] * len(key_cols) + [False, True, False],
-                    kind="mergesort",
+                spec = _json.loads(spec_s)
+                g = merge_lake_group(
+                    info, spec["files"], fmt, read_cols, key_predicate
                 )
-                g = g.drop_duplicates(subset=key_cols, keep="first")
-                g = g[g["_VALUE_KIND"].isin((0, 2))]
-                out = pd.DataFrame(index=g.index)
-                for f in value_fields:
-                    if f.name in part_keys:
-                        v = spec["partition"].get(f.name)
-                        if v is not None and isinstance(f.dataType, T.DateType):
-                            if isinstance(v, int):
-                                v = datetime.date(1970, 1, 1) + datetime.timedelta(days=v)
-                            else:
-                                v = datetime.date.fromisoformat(v)
-                        out[f.name] = pd.Series(
-                            [v] * len(g), index=g.index, dtype=object
-                        )
-                    else:
-                        col = g[f.name]
-                        # plain-object output: Spark's arrow serializer
-                        # rejects chunk-backed ArrowDtype columns, and
-                        # object scalars stay EXACT (null ints never
-                        # detour through float64)
-                        out[f.name] = col.astype(object).where(
-                            col.notna(), None
-                        )
-                yield out
+                yield group_output(g, value_fields, info, spec["partition"])
 
     # one spec row per task partition via parallelize(numSlices=n): each
     # group merges alone and the plan carries ZERO Exchange nodes — the
@@ -2567,7 +2661,7 @@ def merge_pk_entries_bucket_local(
     plan_df = spark.createDataFrame(
         spark.sparkContext.parallelize(specs, numSlices=n), "spec string"
     )
-    return plan_df.mapInPandas(_merge_groups, schema)
+    return plan_df.mapInPandas(_merge_groups, T.StructType(value_fields))
 
 
 def merge_paimon_pk_entries(
@@ -2582,7 +2676,9 @@ def merge_paimon_pk_entries(
     key_predicate=None,
 ):
     """Distributed merge of a PK table's key-value files into the
-    visible rows: max ``_SEQUENCE_NUMBER`` per (partition, key) wins,
+    visible rows: the bucket-local per-group merge when the groups are
+    merge-closed, else ``read.merge_on_read``'s key-window merge. For
+    deduplicate, max ``_SEQUENCE_NUMBER`` per (partition, key) wins,
     ties broken deterministically by LSM level (0 = newest) then
     manifest entry order (later commit wins — the reference's
     sort-merge input-order convention); ``-D``/``-U`` kinds dropped.
@@ -2595,7 +2691,6 @@ def merge_paimon_pk_entries(
 
     ``src`` maps a :class:`PaimonFileEntry` to its absolute path.
     Returns a DataFrame with exactly the declared schema columns."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from paimon_python_spark.write import KIND_COL, SEQ_COL
@@ -2637,61 +2732,48 @@ def merge_paimon_pk_entries(
         # parquet scan, so the exchange feeding the window carries only
         # matching keys' versions
         raw = raw.filter(key_predicate.to_column())
-    value_cols = [f.name for f in info.spark_schema.fields]
-    engine = info.options.get("merge-engine", "deduplicate")
-    if engine != "deduplicate":
-        # a lake declaring first-row / partial-update / aggregation
-        # carries the SAME options vocabulary as the engine's own
-        # tables, so the shared merge_on_read resolves it (hash
-        # aggregates for partial-update/aggregation — map-side combine,
-        # not a window); reading such a lake as deduplicate would be a
-        # silently wrong answer
-        from paimon_python_spark.read import merge_on_read
-
-        merged = merge_on_read(
-            raw.select(*value_cols, SEQ_COL, KIND_COL),
-            info,
-            seq_col=SEQ_COL,
-            kind_col=KIND_COL,
-        )
-        return merged.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in info.spark_schema.fields
-            ]
-        )
-    merge_keys = list(dict.fromkeys(info.partition_keys + info.primary_keys))
-    # file names are UUID-unique within a Paimon table, so a broadcast
-    # (file_name → entry order, level) lookup rides next to every row
-    order_rows = [(e.file_name, i, e.level) for i, e in enumerate(entries)]
-
-    order_df = F.broadcast(
-        local_df(
-            spark,
-            order_rows,
-            "__file_name string, __entry_idx int, __level int",
-            max_slices=1,
-        )
-    )
-    raw = raw.join(order_df, "__file_name")
-    if info.options.get("ignore-delete", "false").lower() == "true":
-        # ignore-delete: retracts drop BEFORE the merge so a -D can
-        # never erase the standing row (read.py's pre-merge filter)
-        raw = raw.filter(F.col(KIND_COL).isin(0, 2))
-    w = Window.partitionBy(*merge_keys).orderBy(
-        F.col(SEQ_COL).desc(), F.col("__level").asc(), F.col("__entry_idx").desc()
-    )
+    # a lake declaring first-row / partial-update / aggregation carries
+    # the SAME options vocabulary as the engine's own tables, so the
+    # shared merge_on_read resolves every engine (hash aggregates for
+    # partial-update/aggregation — map-side combine, not a window)
     from paimon_python_spark._localdf import cast_select_sql
+    from paimon_python_spark.read import merge_on_read
 
-    return (
-        raw.select(*value_cols, SEQ_COL, KIND_COL, "__level", "__entry_idx")
-        .withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .filter(F.col(KIND_COL).isin(0, 2))  # +I / +U survive
-        # align physical widths with the declared schema — one parsed
-        # select (single py4j round trip) per merged read (guide §5.3)
-        .selectExpr(*cast_select_sql(info.spark_schema.fields))
+    merge_info, tie_cols, tie_breaks = info, [], ()
+    if info.options.get("merge-engine", "deduplicate") == "deduplicate":
+        # lake writers bake a declared sequence.field into
+        # _SEQUENCE_NUMBER, which alone orders the deduplicate window
+        # (as in the bucket-local and data-source merges)
+        merge_info = dataclasses.replace(
+            info,
+            options={
+                k: v for k, v in info.options.items() if k != "sequence.field"
+            },
+        )
+        # file names are UUID-unique within a Paimon table, so a
+        # broadcast (file_name → entry order, level) lookup rides next
+        # to every row: equal sequences resolve to the lower level,
+        # then the later manifest entry
+        order_df = F.broadcast(
+            local_df(
+                spark,
+                [(e.file_name, i, e.level) for i, e in enumerate(entries)],
+                "__file_name string, __entry_idx int, __level int",
+                max_slices=1,
+            )
+        )
+        raw = raw.join(order_df, "__file_name")
+        tie_cols = ["__level", "__entry_idx"]
+        tie_breaks = (F.col("__level").asc(), F.col("__entry_idx").desc())
+    value_cols = [f.name for f in info.spark_schema.fields]
+    merged = merge_on_read(
+        raw.select(*value_cols, SEQ_COL, KIND_COL, *tie_cols),
+        merge_info,
+        tie_breaks=tie_breaks,
     )
+    # align physical widths with the declared schema — one parsed
+    # select (single py4j round trip) per merged read (guide §5.3)
+    return merged.selectExpr(*cast_select_sql(info.spark_schema.fields))
 
 
 def _relevant_dv(dv_ranges, entries):

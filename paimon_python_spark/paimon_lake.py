@@ -2830,33 +2830,14 @@ def _make_lake_bucket_fn(key_types, num_buckets: int):
     buffer), rows grouped by encoded length, and the word-wise murmur
     runs as W numpy passes over N rows instead of N Python-loop rows —
     at 100-TB ingest the router is on every written row, so per-row
-    Python here was the write bottleneck. Falls back to the scalar
-    ``fixed_bucket`` (the property-test oracle) on any shape the
-    vector path doesn't cover."""
+    Python here was the write bottleneck. Every key type the lake
+    accepts is covered; the scalar ``fixed_bucket`` is the property
+    tests' oracle for it."""
 
     def fn(*cols):
         import pandas as pd
 
-        try:
-            return pd.Series(
-                _vectorized_fixed_buckets(cols, key_types, num_buckets)
-            )
-        except Exception:
-            from paimon_python_spark.paimon_import import fixed_bucket
-
-            out = []
-            for vals in zip(*cols):
-                row = [
-                    None
-                    if (
-                        v is None
-                        or (not isinstance(v, (bytes, str)) and pd.isna(v))
-                    )
-                    else _lake_bucket_key_logical(v, t)
-                    for v, t in zip(vals, key_types)
-                ]
-                out.append(fixed_bucket(row, key_types, num_buckets))
-            return pd.Series(out, dtype="int32")
+        return pd.Series(_vectorized_fixed_buckets(cols, key_types, num_buckets))
 
     return fn
 
@@ -2900,12 +2881,11 @@ def _vectorized_fixed_buckets(cols, key_types, num_buckets: Optional[int] = None
     """Column-wise BinaryRow encode + batched murmur for a pandas
     batch. Returns an int32 numpy array of bucket ids — or, with
     ``num_buckets=None``, the RAW signed int32 key hashcodes (the
-    dynamic-bucket assigner's currency). Raises on key shapes outside
-    the fast path (caller falls back to the scalar oracle). Byte-exact
+    dynamic-bucket assigner's currency). Covers every type
+    encode_binary_row accepts and raises on any other. Byte-exact
     with encode_binary_row: same bitset header, little-endian slots,
     ≤7-byte inline strings, word-aligned var region."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql import types as T
 
     from paimon_python_spark.paimon_import import (
@@ -2936,33 +2916,23 @@ def _vectorized_fixed_buckets(cols, key_types, num_buckets: Optional[int] = None
                 T.ShortType: (2, "<i2"),
                 T.ByteType: (1, "i1"),
             }[type(dt)]
-            if col.dtype == object:
-                # exact int path: going through float64 would corrupt
-                # longs past 2^53
-                vals = (
-                    pd.array(col, dtype="Int64")
-                    .to_numpy(dtype="int64", na_value=0)
-                    .astype(code)
-                )
-            else:
-                vals = col.fillna(0).to_numpy().astype(code)
+            # exact int path: object ints never detour through float64
+            # (which would corrupt longs past 2^53)
+            vals = col.to_numpy(dtype="int64", na_value=0).astype(code)
             fixed[:, slot : slot + w] = vals.view(np.uint8).reshape(n, w)
         elif isinstance(dt, T.DateType):
-            days = (
-                pd.to_datetime(col, errors="raise")
-                .fillna(pd.Timestamp(0))
-                .to_numpy()
-                .astype("datetime64[D]")
-                .astype("<i4")
-            )
+            # day precision straight away: dates outside the datetime64[ns]
+            # range (years < 1677 or > 2262) stay exact; ints are epoch days
+            days = np.asarray(col.to_numpy(), dtype="datetime64[D]")
+            days = np.where(null, 0, days.astype(np.int64)).astype("<i4")
             fixed[:, slot : slot + 4] = days.view(np.uint8).reshape(n, 4)
         elif isinstance(dt, T.BooleanType):
-            fixed[:, slot] = col.fillna(False).to_numpy().astype(np.uint8)
+            fixed[:, slot] = col.to_numpy(dtype=bool, na_value=False)
         elif isinstance(dt, T.FloatType):
-            vals = col.fillna(0.0).to_numpy().astype("<f4")
+            vals = col.to_numpy(dtype="float64", na_value=0.0).astype("<f4")
             fixed[:, slot : slot + 4] = vals.view(np.uint8).reshape(n, 4)
         elif isinstance(dt, T.DoubleType):
-            vals = col.fillna(0.0).to_numpy().astype("<f8")
+            vals = col.to_numpy(dtype="<f8", na_value=0.0)
             fixed[:, slot : slot + 8] = vals.view(np.uint8).reshape(n, 8)
         elif isinstance(dt, (T.StringType, T.BinaryType)):
             if isinstance(dt, T.StringType):

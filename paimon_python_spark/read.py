@@ -212,46 +212,31 @@ MERGE_ENGINES = ("deduplicate", "first-row", "partial-update", "aggregation")
 from paimon_python_spark.agg_merge import AGG_FUNCTIONS  # noqa: E402,F401
 
 
-#: value dtypes the engine bucket-local merge keeps exact through the
-#: pandas roundtrip (mirrors the lake path's gate)
-_BL_TYPES = (
-    T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.BooleanType,
-    T.FloatType, T.DoubleType, T.StringType, T.DateType,
-)
-
-
-#: default single-task on-disk byte budget for the engine bucket-local
-#: merge (mirrors paimon_import._BUCKET_LOCAL_MAX_GROUP_BYTES): one
-#: split merges in one task's pandas memory, so an oversized split —
-#: bucket=1, or a skewed bucket key — must fall back to the exact
-#: key-window path, whose shuffle spills instead of OOMing.
-_BL_MAX_GROUP_BYTES = 1 << 30
-
-
 def _engine_bucket_local_ok(schema, splits) -> bool:
-    """Eligibility for the NO-SHUFFLE engine PK merge: parquet files,
-    plain deduplicate engine (no salt, no ignore-delete rewrite needed
-    — handled in-task anyway), exact-roundtrip value dtypes, and — the
-    scale guard — no split larger than ``bucket-local.max-group-bytes``
-    on disk. PK splits are already one (partition, bucket) group each
+    """Eligibility for the NO-SHUFFLE engine PK merge — the lake gate
+    (paimon_import._bucket_local_merge_ok) applied to engine splits:
+    parquet/orc files, plain deduplicate engine without sequence.field
+    or salt, exact-roundtrip value dtypes, and — the scale guard — no
+    split larger than ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk. PK
+    splits are already one (partition, bucket) group each
     (scan._group), which is what closes the merge per task."""
+    from paimon_python_spark import paimon_import as pi
+
     if schema.file_format() not in ("parquet", "orc"):
         return False
     if schema.options.get("merge-engine", "deduplicate") != "deduplicate":
         return False
     if schema.options.get("sequence.field"):
         # read-side sequence ordering lives in merge_on_read; the
-        # in-task pandas merge sorts by _SEQUENCE_NUMBER only
+        # in-task merge orders by _SEQUENCE_NUMBER only
         return False
     if int(schema.options.get("bucket-shuffle.salt", "0")) > 1:
         return False
-    budget = int(
-        schema.options.get("bucket-local.max-group-bytes", _BL_MAX_GROUP_BYTES)
-    )
-    if any(s.file_size() > budget for s in splits):
+    if any(s.file_size() > pi._BUCKET_LOCAL_MAX_GROUP_BYTES for s in splits):
         return False  # one task would hold the whole group: stay exact
     return all(
-        isinstance(f.dataType, _BL_TYPES) for f in schema.spark_schema.fields
+        isinstance(f.dataType, pi._BUCKET_LOCAL_TYPES)
+        for f in schema.spark_schema.fields
     )
 
 
@@ -262,13 +247,15 @@ def merge_on_read_bucket_local(
     the same execution shape as the lake path
     (paimon_import.merge_pk_entries_bucket_local): each planned split
     is one merge-closed (partition, bucket) group, so one task reads
-    the group's files with pyarrow (pruned to projection ∪ predicate
-    columns + keys) and resolves latest-per-key in memory. The window
-    formulation this replaces exchanges every scanned byte on the
-    merge key — the dominant PK-read cost at 100 TB. ``ignore-delete``
-    and ``-D`` drops apply in-task; ties beyond the sequence number
-    break by manifest file order then in-file position (a superset of
-    the window path's seq-only contract, fully deterministic)."""
+    the group's files with the shared frame reader
+    (paimon_import.read_group_frame: pruned to projection ∪ predicate
+    columns + keys, key predicate applied at the read) and merges them
+    with ``agg_merge.merge_group``, the one in-task merge kernel. The
+    window formulation this replaces exchanges every scanned byte on
+    the merge key — the dominant PK-read cost at 100 TB. Ties beyond
+    the sequence number break by manifest file order then in-file
+    position (a superset of the window path's seq-only contract, fully
+    deterministic)."""
     import json as _json
 
     merge_keys = list(dict.fromkeys(schema.partition_keys + schema.primary_keys))
@@ -276,89 +263,50 @@ def merge_on_read_bucket_local(
     if needed_cols is not None:
         keep = set(needed_cols) | set(merge_keys)
         fields = [f for f in fields if f.name in keep]
-    out_schema = T.StructType(fields)
     read_cols = list(
         dict.fromkeys([*merge_keys, *[f.name for f in fields], SEQ_COL, KIND_COL])
     )
-    ignore_delete = (
-        schema.options.get("ignore-delete", "false").lower() == "true"
-    )
-    out_names = [f.name for f in fields]
     fmt = schema.file_format()
     specs = [
         (_json.dumps({"files": list(s.file_paths())}),) for s in splits
     ]
 
     def _merge(batches):
-        import pandas as pd
-        import pyarrow.parquet as pq
+        from paimon_python_spark.agg_merge import merge_group, order_rank
+        from paimon_python_spark.paimon_import import (
+            group_output,
+            read_group_frame,
+        )
 
-        # KEY-predicate pushdown (parquet): kv rows filter on key
-        # columns BEFORE the merge — sound, every version of a key
-        # shares them — so point lookups read only the row groups
-        # whose stats admit the key
-        arrow_filter = None
-        if key_predicate is not None and fmt == "parquet":
-            try:
-                arrow_filter = key_predicate.to_arrow()
-            except Exception:
-                arrow_filter = None
         for pdf_in in batches:
             for spec_s in pdf_in["spec"]:
-                spec = _json.loads(spec_s)
-                frames = []
-                for fi, path in enumerate(spec["files"]):
-                    if fmt == "orc":
-                        import pyarrow.orc as po
-
-                        pf = po.ORCFile(path)
-                        names = pf.schema.names
-                    else:
-                        pf = pq.ParquetFile(path)
-                        names = pf.schema_arrow.names
-                    have = [c for c in read_cols if c in names]
-                    if arrow_filter is not None and fmt == "parquet" and all(
-                        c in names
-                        for c in key_predicate.fields()
-                    ):
-                        f = pq.read_table(
-                            path, columns=have, filters=arrow_filter
-                        ).to_pandas(types_mapper=pd.ArrowDtype)
-                    else:
-                        f = pf.read(columns=have).to_pandas(
-                            types_mapper=pd.ArrowDtype
-                        )
-                    for c in read_cols:
-                        if c not in f.columns:
-                            f[c] = None  # pre-ALTER file: NULL-fill
-                    f["__fi"] = fi
-                    frames.append(f)
-                g = pd.concat(frames, ignore_index=True)
-                if ignore_delete:
-                    g = g[g[KIND_COL].isin(ADD_KINDS)]
-                g["__pos"] = range(len(g))
-                g = g.sort_values(
-                    merge_keys + [SEQ_COL, "__fi", "__pos"],
-                    ascending=[True] * len(merge_keys) + [False, False, False],
-                    kind="mergesort",
+                files = _json.loads(spec_s)["files"]
+                g = read_group_frame(
+                    [(path, None, None) for path in files],
+                    fmt,
+                    read_cols,
+                    schema,
+                    key_predicate,
                 )
-                g = g.drop_duplicates(subset=merge_keys, keep="first")
-                g = g[g[KIND_COL].isin(ADD_KINDS)]
-                out = pd.DataFrame(index=g.index)
-                for name in out_names:
-                    col = g[name]
-                    out[name] = col.astype(object).where(col.notna(), None)
-                yield out
+                g["__ord"] = order_rank(
+                    g[SEQ_COL].to_numpy(dtype="int64"), g["__file"].to_numpy()
+                )
+                g = merge_group(g, schema, merge_keys, "__ord", KIND_COL)
+                yield group_output(g, fields)
 
     n = max(1, len(specs))
     plan_df = spark.createDataFrame(
         spark.sparkContext.parallelize(specs, numSlices=n), "spec string"
     )
-    return plan_df.mapInPandas(_merge, out_schema)
+    return plan_df.mapInPandas(_merge, T.StructType(fields))
 
 
 def merge_on_read(
-    df: DataFrame, schema, seq_col: str = None, kind_col: str = None
+    df: DataFrame,
+    schema,
+    seq_col: str = None,
+    kind_col: str = None,
+    tie_breaks=(),
 ) -> DataFrame:
     """Collapse raw LSM rows (value fields + sequence + kind) into the
     table's merged state according to the schema's merge-engine option.
@@ -366,7 +314,10 @@ def merge_on_read(
     Every engine is a single exchange keyed on the merge key:
 
     - ``deduplicate`` (default): latest row per key wins; deletes drop
-      the key — one window sort, ``row_number() == 1``.
+      the key — one window sort, ``row_number() == 1``. ``tie_breaks``
+      (sort-order Columns) trail the sequence in that window, so equal
+      sequences resolve deterministically (the lake read passes its
+      LSM level and manifest entry order).
     - ``first-row``: earliest row per key wins (same window, ascending).
     - ``partial-update``: per value column, the latest NON-NULL value
       across versions, as ONE hash aggregate (map-side combine halves
@@ -449,7 +400,11 @@ def merge_on_read(
         df = df.filter(F.col(kind_col).isin(*ADD_KINDS))
 
     if engine == "deduplicate" or engine == "first-row":
-        order = F.col(seq_col).asc() if engine == "first-row" else F.col(seq_col).desc()
+        order = [
+            F.col(seq_col).asc() if engine == "first-row" else F.col(seq_col).desc()
+        ]
+        if engine == "deduplicate":
+            order += list(tie_breaks)
         # skew-aware two-phase merge (``bucket-shuffle.salt`` = S > 1):
         # a pathologically hot key (one counter row hammered with
         # millions of versions, or a bad user key choice collapsing a
@@ -463,7 +418,7 @@ def merge_on_read(
         # opt-in rather than default.
         salt = int(schema.options.get("bucket-shuffle.salt", "0"))
         if salt > 1:
-            w1 = Window.partitionBy(*merge_keys, "__salt").orderBy(order)
+            w1 = Window.partitionBy(*merge_keys, "__salt").orderBy(*order)
             df = (
                 df.withColumn(
                     "__salt", F.pmod(F.xxhash64(F.col(seq_col)), F.lit(salt))
@@ -472,7 +427,7 @@ def merge_on_read(
                 .filter(F.col("__rn1") == 1)
                 .drop("__salt", "__rn1")
             )
-        w = Window.partitionBy(*merge_keys).orderBy(order)
+        w = Window.partitionBy(*merge_keys).orderBy(*order)
         return (
             df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)

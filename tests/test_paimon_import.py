@@ -4532,13 +4532,14 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark):
     assert df2.count() == 199
 
 
-def test_bucket_local_merge_size_guard(tmp_path, spark):
-    """SCALE GUARD: a (partition, bucket) group bigger than
-    ``bucket-local.max-group-bytes`` on disk must NOT merge in one
-    task's pandas memory — the read falls back to the exact key-window
-    path (Exchange present, shuffle spills instead of OOMing) with
+def test_bucket_local_merge_size_guard(tmp_path, spark, monkeypatch):
+    """SCALE GUARD: a (partition, bucket) group bigger than the
+    bucket-local byte budget on disk must NOT merge in one task's
+    pandas memory — the read falls back to the exact key-window path
+    (Exchange present, shuffle spills instead of OOMing) with
     bit-identical results. Simulates the misconfigured-lake shape
     (bucket=1 holding the whole table) by dropping the budget to 1."""
+    from paimon_python_spark import paimon_import
     from paimon_python_spark.paimon_lake import (
         PaimonLakeTable,
         create_lake_table,
@@ -4547,12 +4548,13 @@ def test_bucket_local_merge_size_guard(tmp_path, spark):
     from paimon_python_spark.session import set_spark
 
     set_spark(spark)
+    monkeypatch.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
     p = str(tmp_path / "guard_lake")
     create_lake_table(
         p,
         [("k", "INT NOT NULL"), ("v", "STRING")],
         primary_keys=["k"],
-        options={"bucket": "1", "bucket-local.max-group-bytes": "1"},
+        options={"bucket": "1"},
     )
     write_lake_pk_append(
         p, spark.createDataFrame([(i, f"a{i}") for i in range(50)], "k int, v string")
@@ -4570,12 +4572,13 @@ def test_bucket_local_merge_size_guard(tmp_path, spark):
     assert len(got) == 50 and got[5] == "b5" and got[1] == "a1"
 
 
-def test_lake_datasource_size_guard(tmp_path, spark):
+def test_lake_datasource_size_guard(tmp_path, spark, monkeypatch):
     """The ``format('paimon_lake')`` front door refuses an oversized
     (partition, bucket) group with a pointer to the builder path (it
     has no window plan to fall back to), instead of OOMing a task."""
     import pytest
 
+    from paimon_python_spark import paimon_import
     from paimon_python_spark.lake_datasource import PaimonLakeBatchReader
     from paimon_python_spark.paimon_lake import (
         create_lake_table,
@@ -4584,12 +4587,13 @@ def test_lake_datasource_size_guard(tmp_path, spark):
     from paimon_python_spark.session import set_spark
 
     set_spark(spark)
+    monkeypatch.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
     p = str(tmp_path / "guard_ds_lake")
     create_lake_table(
         p,
         [("k", "INT NOT NULL"), ("v", "STRING")],
         primary_keys=["k"],
-        options={"bucket": "1", "bucket-local.max-group-bytes": "1"},
+        options={"bucket": "1"},
     )
     write_lake_pk_append(
         p, spark.createDataFrame([(i, f"a{i}") for i in range(20)], "k int, v string")
@@ -4992,46 +4996,182 @@ def test_target_file_size_rolls_changelog_files_too(tmp_path, spark):
     assert set(cl._row_kind) == {"+I"}
 
 
-def test_lake_ignore_delete_all_merge_paths(tmp_path, spark):
-    """``ignore-delete`` on LAKE reads: retracts drop BEFORE the merge
-    on all three execution paths — bucket-local in-task fold, exact
-    key-window merge, and the format('paimon_lake') data source — so a
-    -D record never erases the standing row (previously the option was
-    engine-table-only and a lake -D always deleted)."""
+#: (merge engine, ignore-delete) cases of the merge-path equivalence
+#: matrix; partial-update refuses retracts without ignore-delete
+_MERGE_MATRIX = [
+    ("deduplicate", "true"),
+    ("deduplicate", "false"),
+    ("first-row", "true"),
+    ("first-row", "false"),
+    ("partial-update", "true"),
+    ("aggregation", "true"),
+    ("aggregation", "false"),
+]
+_MERGE_ENGINE_OPTIONS = {
+    "deduplicate": {},
+    "first-row": {"merge-engine": "first-row"},
+    "partial-update": {"merge-engine": "partial-update"},
+    "aggregation": {
+        "merge-engine": "aggregation",
+        "fields.n.aggregate-function": "sum",
+        "fields.v.ignore-retract": "true",
+    },
+}
+#: (k, v, n, row kind) commits; the first is compacted to the top
+#: level before the rest land at level 0. -D then a re-insert (k=2), a
+#: -U/+U pair (k=4), NULL values, and k=6's last two versions sharing
+#: one sequence number on lakes (see _tie_last_commit)
+_MERGE_COMMITS = [
+    [(1, "a", 10, 0), (2, "b", 20, 0), (3, None, 30, 0), (4, "d", None, 0),
+     (5, "e", 50, 0), (6, "f", 60, 0)],
+    [(1, "a", 10, 3), (2, "b", 20, 3), (4, "d", None, 1), (4, "d4", 44, 2),
+     (5, None, 55, 0), (6, "f6", 66, 0)],
+    [(2, "b2", 22, 0), (6, None, 67, 0)],
+    [(6, "g", None, 0)],
+]
+
+
+def _merged_rows(pdf):
+    return sorted(
+        tuple(None if pd.isna(x) else x for x in r)
+        for r in pdf[["k", "v", "n"]].itertuples(index=False)
+    )
+
+
+def _tie_last_commit(lake):
+    """Give the last commit's level-0 file the sequence number k=6
+    carries in the commit before it — two files holding one key at
+    EQUAL _SEQUENCE_NUMBER, as foreign writers can leave them."""
+    from paimon_python_spark.paimon_import import plan_paimon_files
+
+    l0 = sorted(
+        (e for e in plan_paimon_files(lake) if e.level == 0),
+        key=lambda e: e.max_seq,
+    )
+
+    def path_of(e):
+        return next(
+            os.path.join(d, e.file_name)
+            for d, _, names in os.walk(lake)
+            if e.file_name in names
+        )
+
+    prev = pq.read_table(path_of(l0[-2]))
+    seq = prev["_SEQUENCE_NUMBER"].to_pylist()[
+        prev["_KEY_k"].to_pylist().index(6)
+    ]
+    last = pq.read_table(path_of(l0[-1]))
+    i = last.schema.get_field_index("_SEQUENCE_NUMBER")
+    last = last.set_column(
+        i, last.schema.field(i), pa.array([seq] * last.num_rows, pa.int64())
+    )
+    pq.write_table(last, path_of(l0[-1]))
+
+
+@pytest.mark.parametrize("engine,ignore_delete", _MERGE_MATRIX)
+def test_lake_ignore_delete_all_merge_paths(
+    tmp_path, spark, catalog, monkeypatch, engine, ignore_delete
+):
+    """The PK merge paths agree row for row, per merge engine: a lake's
+    bucket-local in-task fold, its exact key-window merge and the
+    format('paimon_lake') data source; an engine table's bucket-local
+    merge, its key-window merge and format('paimon_spark') — over
+    multi-level files, a -D followed by a re-insert, -U/+U pairs, NULL
+    values and (lakes) equal sequence numbers across two files. Under
+    ``ignore-delete`` retracts drop BEFORE the merge on every path, so
+    a -D never erases the standing row."""
+    from paimon_python_spark import Schema
+    from paimon_python_spark import paimon_import
+    from paimon_python_spark.compaction import compact_table
+    from paimon_python_spark.datasource import register
     from paimon_python_spark.lake_datasource import register_lake
     from paimon_python_spark.paimon_lake import (
         PaimonLakeTable,
+        compact_lake,
         create_lake_table,
-        delete_lake_rows,
         write_lake_pk_append,
     )
 
     register_lake(spark)
+    register(spark)
+    opts = {
+        "bucket": "1",
+        "ignore-delete": ignore_delete,
+        **_MERGE_ENGINE_OPTIONS[engine],
+    }
+    ddl = "k int, v string, n bigint, rk int"
 
-    def build(name, opts):
-        d = str(tmp_path / name)
-        create_lake_table(
-            d,
-            [("k", "INT NOT NULL"), ("v", "STRING")],
-            primary_keys=["k"],
-            options={"bucket": "1", "ignore-delete": "true", **opts},
-        )
-        write_lake_pk_append(
-            d, spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
-        )
-        pb = PaimonLakeTable(d).new_read_builder().new_predicate_builder()
-        delete_lake_rows(d, pb.equal("k", 1))
-        return d
+    def builder_paths(read):
+        """(bucket-local, key-window) reads; the group-size guard forces
+        the window fallback. Only deduplicate is bucket-local-eligible."""
+        bl = read()
+        with monkeypatch.context() as m:
+            m.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
+            win = read()
+            win_rows = _merged_rows(win.toPandas())
+            win_plan = win._jdf.queryExecution().executedPlan().toString()
+        bl_plan = bl._jdf.queryExecution().executedPlan().toString()
+        return _merged_rows(bl.toPandas()), bl_plan, win_rows, win_plan
 
-    d = build("igd_bl", {})  # bucket-local-eligible
-    out = PaimonLakeTable(d).new_read_builder().new_read().to_pandas()
-    assert sorted(out.k.tolist()) == [1, 2]
-    # window path (group-size guard forces the fallback)
-    d2 = build("igd_win", {"bucket-local.max-group-bytes": "1"})
-    out2 = PaimonLakeTable(d2).new_read_builder().new_read().to_pandas()
-    assert sorted(out2.k.tolist()) == [1, 2]
-    # data source in-task merge
-    ds = (
-        spark.read.format("paimon_lake").option("path", d).load().toPandas()
+    lake = str(tmp_path / f"lake_{engine}_{ignore_delete}")
+    create_lake_table(
+        lake,
+        [("k", "INT NOT NULL"), ("v", "STRING"), ("n", "BIGINT")],
+        primary_keys=["k"],
+        options=opts,
     )
-    assert sorted(ds.k.tolist()) == [1, 2]
+    for i, rows in enumerate(_MERGE_COMMITS):
+        write_lake_pk_append(
+            lake, spark.createDataFrame(rows, ddl), row_kind_col="rk"
+        )
+        if i == 0:
+            compact_lake(lake)
+    _tie_last_commit(lake)
+    bl, bl_plan, win, win_plan = builder_paths(
+        lambda: PaimonLakeTable(lake).new_read_builder().new_read().to_df()
+    )
+    ds = _merged_rows(
+        spark.read.format("paimon_lake").option("path", lake).load().toPandas()
+    )
+    assert bl == win == ds, (bl, win, ds)
+    assert "Exchange" in win_plan
+    if engine == "deduplicate":
+        assert "Exchange" not in bl_plan
+        # equal sequences: the later manifest entry wins
+        assert (6, "g", None) in bl
+    if ignore_delete == "true":
+        assert {1, 2} <= {r[0] for r in bl}
+
+    name = f"default.eq_{engine.replace('-', '_')}_{ignore_delete}"
+    catalog.create_table(
+        name,
+        Schema(
+            T.StructType(
+                [
+                    T.StructField("k", T.IntegerType(), False),
+                    T.StructField("v", T.StringType()),
+                    T.StructField("n", T.LongType()),
+                ]
+            ),
+            primary_keys=["k"],
+            options=opts,
+        ),
+        False,
+    )
+    t = catalog.get_table(name)
+    for i, rows in enumerate(_MERGE_COMMITS):
+        wb = t.new_batch_write_builder()
+        w, c = wb.new_write(), wb.new_commit()
+        w.write_dataframe(spark.createDataFrame(rows, ddl), row_kind_col="rk")
+        c.commit(w.prepare_commit())
+        if i == 0:
+            compact_table(t, small_file_threshold=1)
+    ebl, _, ewin, _ = builder_paths(
+        lambda: t.new_read_builder().new_read().to_df()
+    )
+    eds = _merged_rows(
+        spark.read.format("paimon_spark").option("path", t.table_path).load().toPandas()
+    )
+    assert ebl == ewin == eds, (ebl, ewin, eds)
+    if ignore_delete == "true":
+        assert {1, 2} <= {r[0] for r in ebl}

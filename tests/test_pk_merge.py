@@ -809,22 +809,23 @@ def test_engine_bucket_local_merge_no_shuffle(catalog, spark):
     assert sorted(df2.toPandas().k) == list(range(100))
 
 
-def test_engine_bucket_local_size_guard(catalog, spark):
-    """SCALE GUARD (engine twin): a split bigger than
-    ``bucket-local.max-group-bytes`` falls back to the exact key-window
-    merge — Exchange present, identical results."""
+def test_engine_bucket_local_size_guard(catalog, spark, monkeypatch):
+    """SCALE GUARD (engine twin): a split bigger than the bucket-local
+    byte budget falls back to the exact key-window merge — Exchange
+    present, identical results."""
     import pandas as pd
     import pyarrow as pa
 
-    from paimon_python_spark import Schema
+    from paimon_python_spark import Schema, paimon_import
 
+    monkeypatch.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
     schema = pa.schema([("k", pa.int64()), ("v", pa.string())])
     catalog.create_table(
         "default.blm_guard",
         Schema(
             schema,
             primary_keys=["k"],
-            options={"bucket": "1", "bucket-local.max-group-bytes": "1"},
+            options={"bucket": "1"},
         ),
         False,
     )

@@ -12,6 +12,7 @@ import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
 from paimon_python_spark import Schema
 
@@ -272,37 +273,83 @@ def test_scalable_rank_matches_window_property(spark, vals, tiles, buckets):
     assert got == want
 
 
+#: every bucket-key type encode_binary_row accepts, with a value strategy
+_KEY_TYPES = [
+    (T.ByteType(), st.integers(min_value=-(2**7), max_value=2**7 - 1)),
+    (T.ShortType(), st.integers(min_value=-(2**15), max_value=2**15 - 1)),
+    (T.IntegerType(), st.integers(min_value=-(2**31), max_value=2**31 - 1)),
+    (T.LongType(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+    (T.BooleanType(), st.booleans()),
+    (T.FloatType(), st.floats(allow_nan=False, width=32)),
+    (T.DoubleType(), st.floats(allow_nan=False)),
+    (T.StringType(), st.text(max_size=30)),
+    (T.BinaryType(), st.binary(max_size=30)),
+    (T.DateType(), st.dates()),
+]
+
+
+def _key_column(vals, dt, typed):
+    """A bucket-key column as the routers receive it: object dtype, or
+    the typed pandas form of its arrow conversion (a pandas UDF's
+    input)."""
+    from paimon_python_spark.types import spark_type_to_pa
+
+    if not typed:
+        return pd.Series(vals, dtype="object")
+    if isinstance(dt, T.LongType) and None in vals:
+        # arrow's NULL-able int64 → float64 would round longs past 2^53
+        return pd.Series(vals, dtype="Int64")
+    return pa.array(vals, spark_type_to_pa(dt)).to_pandas()
+
+
 @given(
-    keys=st.lists(
-        st.tuples(
-            st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
-            st.one_of(st.none(), st.text(max_size=30)),
-        ),
+    rows=st.lists(
+        st.tuples(*[st.one_of(st.none(), v) for _, v in _KEY_TYPES]),
         min_size=1,
-        max_size=200,
+        max_size=100,
     ),
     nb=st.sampled_from([1, 2, 8, 16, 97]),
+    typed=st.booleans(),
 )
 @settings(**SETTINGS)
-def test_vectorized_bucket_matches_scalar_oracle(keys, nb):
+def test_vectorized_bucket_matches_scalar_oracle(rows, nb, typed):
     """The numpy-vectorized lake bucket router must agree with the
     scalar spec implementation (fixed_bucket over encode_binary_row)
-    for ANY key values — ints incl. negatives, unicode strings of every
-    inline/var length, NULLs — so a vectorization bug can never route a
-    row to the wrong bucket."""
-    from pyspark.sql import types as T
-
+    for ANY key values of EVERY key type it accepts — each type alone
+    and all of them as one composite key, as object-dtype and typed
+    columns, with NULLs, negatives, unicode strings and binaries of
+    every inline/var length, and dates outside the datetime64[ns] range
+    — so a vectorization bug can never route a row to the wrong bucket
+    (there is no scalar fallback behind it)."""
     from paimon_python_spark.paimon_import import fixed_bucket
-    from paimon_python_spark.paimon_lake import _vectorized_fixed_buckets
-
-    types = [T.LongType(), T.StringType()]
-    cols = (
-        pd.Series([k[0] for k in keys], dtype="object"),
-        pd.Series([k[1] for k in keys], dtype="object"),
+    from paimon_python_spark.paimon_lake import (
+        _lake_bucket_key_logical,
+        _vectorized_fixed_buckets,
     )
-    got = list(_vectorized_fixed_buckets(cols, types, nb))
-    want = [fixed_bucket(list(k), types, nb) for k in keys]
-    assert got == want
+
+    types = [dt for dt, _ in _KEY_TYPES]
+    cols = [
+        _key_column([r[i] for r in rows], dt, typed) for i, dt in enumerate(types)
+    ]
+
+    def oracle(key_rows, key_types):
+        return [
+            fixed_bucket(
+                [
+                    None if v is None else _lake_bucket_key_logical(v, dt)
+                    for v, dt in zip(r, key_types)
+                ],
+                key_types,
+                nb,
+            )
+            for r in key_rows
+        ]
+
+    for i, dt in enumerate(types):
+        got = list(_vectorized_fixed_buckets((cols[i],), [dt], nb))
+        assert got == oracle([(r[i],) for r in rows], [dt]), dt
+    got = list(_vectorized_fixed_buckets(tuple(cols), types, nb))
+    assert got == oracle(rows, types)
 
 
 @given(
@@ -335,10 +382,10 @@ def test_bloom_never_false_negative(values):
     assert pb.is_in("u", list(values)[:5]).test_by_stats(st_) is True
 
 
-def test_bucket_router_scalar_fallback(monkeypatch):
-    """When the vectorized path raises (unsupported key shape), the
-    router must fall back to the scalar spec oracle and produce the
-    identical routing."""
+def test_bucket_router_has_no_scalar_fallback(monkeypatch):
+    """The router is the vectorized encoder alone: it routes like the
+    scalar spec oracle, and an encoder failure surfaces instead of
+    silently re-hashing row by row through a second implementation."""
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -357,5 +404,5 @@ def test_bucket_router_scalar_fallback(monkeypatch):
         raise RuntimeError("forced")
 
     monkeypatch.setattr(pl, "_vectorized_fixed_buckets", boom)
-    fn2 = pl._make_lake_bucket_fn(types, 8)
-    assert list(fn2(keys)) == want  # scalar fallback, same routing
+    with pytest.raises(RuntimeError, match="forced"):
+        pl._make_lake_bucket_fn(types, 8)(keys)
