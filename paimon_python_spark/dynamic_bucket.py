@@ -12,7 +12,8 @@ is that assigner, Spark-shaped:
 
 - the key hashcode is the same word-wise murmur over the key's
   BinaryRow bytes the fixed router uses (``bucketKeyHashCode``) — the
-  vectorized encoder is shared with ``_make_lake_bucket_fn``;
+  JVM expression ``binary_row_hash_expr`` on the builder path, the
+  vectorized encoder ``_vectorized_fixed_buckets`` in tasks;
 - existing keys resolve their bucket by a DataFrame JOIN against the
   decoded hash index (index files decode EXECUTOR-SIDE via
   ``mapInPandas`` — the index of a 100-TB lake never lands on the
@@ -104,26 +105,50 @@ def write_hash_index_file(path: str, hashes) -> int:
     return os.path.getsize(path)
 
 
-def _make_key_hash_fn(key_types):
-    """Batch key-hashcode function (signed int32 murmur over the key's
-    BinaryRow bytes) for a pandas UDF — the raw-hash sibling of
-    ``_make_lake_bucket_fn``, same vectorized encoder."""
+def union_hash_index(
+    table_path: str, part_keys: List[str], new_by_group: dict, old_files: dict
+) -> list:
+    """Extend HASH index files with new key hashcodes: per (part_json,
+    bucket) group of ``new_by_group``, write a fresh index file holding
+    the group's old hashcodes (``old_files`` maps the group to its
+    current file; absent = none) followed by the new ones not already
+    in it. Returns the pending index metas, in group order, for
+    :func:`write_merged_index_manifest` / :func:`pending_to_entries`."""
+    import numpy as np
 
-    def fn(*cols):
-        import pandas as pd
-
-        from paimon_python_spark.paimon_lake import _vectorized_fixed_buckets
-
-        return pd.Series(_vectorized_fixed_buckets(cols, key_types, None))
-
-    return fn
+    os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
+    pending = []
+    for (pj, bucket), hashes in sorted(new_by_group.items()):
+        new = np.unique(np.asarray(hashes, dtype=np.int32))
+        old_name = old_files.get((pj, bucket))
+        if old_name is not None:
+            old = read_hash_index_file(os.path.join(table_path, "index", old_name))
+            merged = np.concatenate([old, np.setdiff1d(new, old)])
+        else:
+            merged = new
+        idx_file = f"index-{uuid.uuid4().hex}-0"
+        size = write_hash_index_file(
+            os.path.join(table_path, "index", idx_file), merged
+        )
+        pvals = json.loads(pj)
+        pending.append(
+            {
+                "part_json": pj,
+                "part_values": [pvals[k] for k in part_keys],
+                "bucket": int(bucket),
+                "file": idx_file,
+                "size": size,
+                "rows": len(merged),
+            }
+        )
+    return pending
 
 
 def _part_json_of(pvals: dict, part_keys: List[str]) -> str:
     """Canonical partition-group id — identical construction to
-    ``_distributed_lake_write``'s ``_write_group`` meta rows (logical
-    values: DATE as epoch days), so index metas and data metas key the
-    same way."""
+    :func:`~paimon_python_spark.paimon_lake.write_lake_group`'s meta
+    rows (logical values: DATE as epoch days), so index metas and data
+    metas key the same way."""
     return json.dumps({k: pvals[k] for k in part_keys})
 
 
@@ -336,22 +361,19 @@ class DynamicBucketAssigner:
 
         spark = sdf.sparkSession
         P = self.par
-        # JVM-native BinaryRow hash when the key types allow it — the
-        # pandas-UDF form put a Python-worker round trip in every
-        # routing stage's lineage (and each re-evaluation of a
-        # non-persisted fragment paid it again); the parsed expression
-        # keeps the stage whole-stage-codegen (guide §4.1). Fallback:
-        # the vectorized pandas UDF for unsupported key types.
-        from paimon_python_spark.paimon_import import binary_row_hash_expr
+        # JVM-native BinaryRow hash — a pandas UDF put a Python-worker
+        # round trip in every routing stage's lineage (and each
+        # re-evaluation of a non-persisted fragment paid it again); the
+        # parsed expression keeps the stage whole-stage-codegen (guide
+        # §4.1)
+        from paimon_python_spark.paimon_import import (
+            binary_row_hash_expr,
+            logical_value,
+        )
 
-        _hexpr = binary_row_hash_expr(self.bcols, self.key_types)
-        if _hexpr is not None:
-            sdf = sdf.withColumn("__h", F.expr(_hexpr))
-        else:
-            hash_udf = F.pandas_udf(_make_key_hash_fn(self.key_types), "int")
-            sdf = sdf.withColumn(
-                "__h", hash_udf(*[F.col(c) for c in self.bcols])
-            )
+        sdf = sdf.withColumn(
+            "__h", F.expr(binary_row_hash_expr(self.bcols, self.key_types))
+        )
 
         part_keys = self.part_keys
         # the batch's partitions — bounded by the table's partition
@@ -363,7 +385,7 @@ class DynamicBucketAssigner:
             batch_parts = sdf.select(*part_keys).distinct().collect()
         pj_of = lambda r: _part_json_of(
             {
-                k: _logical_value(r[k], self.info.spark_schema[k].dataType)
+                k: logical_value(r[k], self.info.spark_schema[k].dataType)
                 for k in part_keys
             },
             part_keys,
@@ -493,27 +515,6 @@ def _part_cond(left, right, part_keys):
     for k in part_keys:
         cond = cond & left[k].eqNullSafe(right[k])
     return cond
-
-
-def _logical_value(v, dt):
-    """Pandas/Row value → the logical value ``encode_binary_row``
-    expects (identical to ``_write_group``'s ``logical``: DATE as epoch
-    days, numpy scalars unboxed)."""
-    import datetime
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
-        return None
-    if hasattr(v, "item"):
-        v = v.item()
-    if isinstance(dt, T.DateType):
-        if isinstance(v, datetime.datetime):
-            v = v.date()
-        if isinstance(v, datetime.date):
-            return (v - datetime.date(1970, 1, 1)).days
-    return v
 
 
 def pending_to_entries(info, pending: list):
@@ -871,6 +872,7 @@ class CrossPartitionRouter:
         if old is not None and self._probe_rows is not None and part_keys:
             from paimon_python_spark.paimon_import import (
                 logical_partition_values,
+                logical_value,
             )
 
             hint, seen = [], set()
@@ -878,7 +880,7 @@ class CrossPartitionRouter:
                 pv = {k: r[k] for k in part_keys}
                 pj = _part_json_of(
                     {
-                        k: _logical_value(
+                        k: logical_value(
                             pv[k], info.spark_schema[k].dataType
                         )
                         for k in part_keys

@@ -18,13 +18,14 @@ on the same driver-side planner every lake read uses.
   micro-batch rows never pass through the driver, so a high-rate
   source scales with the cluster, not the driver).
 - write: ``df.write.format("paimon_lake")`` on append lakes AND
-  fixed-bucket PK lakes, ``mode("append")`` / ``mode("overwrite")`` —
-  executors route rows (PK: the same murmur bucket hash the builder
-  uses) and write spec-named data files straight into the partitioned
-  lake layout; the driver commits one spec snapshot with stats (an
-  OVERWRITE commit DELETEs every previously-visible file, like
-  overwrite_lake). See ``PaimonLakeBatchWriter`` for the refusals
-  (dynamic-bucket routing, changelog-producing PK appends).
+  PK lakes (fixed and dynamic bucket), ``mode("append")`` /
+  ``mode("overwrite")`` — executors route rows (PK: the same murmur
+  bucket hash the builder uses) and hand each (partition, bucket)
+  group to the builder's lake file writer
+  (``paimon_lake.write_lake_group``); the driver commits one spec
+  snapshot (an OVERWRITE commit DELETEs every previously-visible
+  file, like overwrite_lake). See ``PaimonLakeBatchWriter`` for the
+  refusals (cross-partition lakes, changelog-producing PK appends).
 
 Deletion-vector lakes read transparently: each file's (index, offset,
 length) triple rides its partition spec and the executor decodes the
@@ -56,8 +57,8 @@ from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
+    DataSourceArrowWriter,
     DataSourceStreamReader,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -713,50 +714,63 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
 
 class _LakeWrittenFiles(WriterCommitMessage):
     def __init__(self, files, new_hashes=None):
-        #: [(relative path, {partition key: logical value}, row count)]
+        #: the task's per-file meta rows (paimon_lake.write_lake_group)
         self.files = files
         #: dynamic-bucket only: {(part_json, bucket): [new key hashcodes]}
         #: — the commit unions them into the buckets' HASH index files
         self.new_hashes = new_hashes
 
 
-class PaimonLakeBatchWriter(DataSourceWriter):
+#: largest HASH index (bytes of index files) a dynamic-bucket
+#: front-door write routes against: the serialized copy rides to every
+#: task, so beyond it the writer refuses toward write_lake_pk_append's
+#: distributed-join routing
+_DYN_INDEX_COPY_LIMIT_BYTES = 32 << 20
+
+
+class PaimonLakeBatchWriter(DataSourceArrowWriter):
     """``df.write.format("paimon_lake")`` — the engine as a lake
     participant through the Spark-native front door: APPEND lakes and
-    fixed-bucket PRIMARY-KEY lakes, ``mode("append")`` and
-    ``mode("overwrite")`` (whole-table INSERT OVERWRITE, like
+    PRIMARY-KEY lakes (fixed and dynamic bucket), ``mode("append")``
+    and ``mode("overwrite")`` (whole-table INSERT OVERWRITE, like
     overwrite_lake).
 
-    Executor side (``write``): each task groups its rows by partition
-    values (PK lakes additionally by ``abs(murmur(BinaryRow(bucket
-    key))) % num_buckets`` — the same FixedBucketRowKeyExtractor
-    routing write_lake_pk_append uses) and writes one spec-named data
-    file per group directly into the lake's ``<k>=<v>/bucket-<b>/``
-    layout. PK groups write key-value files: ``_KEY_*`` columns, a
-    fresh ``_SEQUENCE_NUMBER`` range past every live file's max
-    (``sequence.field`` honored when declared), sorted by trimmed key —
-    plus per-file value stats and the table's configured bloom file
-    index, so front-door files prune exactly like builder-written ones.
-    Driver side (``commit``): only when every task succeeded, one spec
-    snapshot commits atomically (OVERWRITE commits DELETE entries for
-    every previously-visible file and drop the DV index, exactly like
-    overwrite_lake); ``abort`` removes the orphan files — readers only
-    ever see committed snapshots either way.
+    Executor side (``write``): each task turns its Arrow batches into
+    one table in the naive session-local form ``applyInPandas``
+    delivers, plus a pandas view of it, and keeps only what is specific
+    to this door — routing
+    (PK lakes: ``abs(murmur(BinaryRow(bucket key))) % num_buckets``,
+    the FixedBucketRowKeyExtractor routing write_lake_pk_append uses;
+    dynamic lakes: the plan-time HASH index below), grouping by
+    (partition, bucket), an ``__input_order`` column and ``__row_kind``
+    from ``rowkind.field``. Each group then goes to
+    ``paimon_lake.write_lake_group``, the same lake file writer the
+    builder's tasks run, which stores the table's exact values: data
+    files land directly in the lake's
+    ``<k>=<v>/bucket-<b>/`` layout with the builder's key columns,
+    sequence numbers (plan-time base past every live file's max, or
+    ``sequence.field``), value stats and file indexes. Driver side
+    (``commit``): only when every task succeeded, one spec snapshot
+    commits atomically, its entries built by the builder's
+    ``lake_add_entry`` (OVERWRITE also commits ``lake_delete_entry``
+    for every previously-visible file and drops the DV index, exactly
+    like overwrite_lake); ``abort`` removes the orphan files — readers
+    only ever see committed snapshots either way.
 
-    DYNAMIC-BUCKET lakes (``'bucket' = '-1'``) write through this door
-    too (r12): existing keys route against a size-capped plan-time copy
-    of the spec HASH index, new keys assign deterministically by
-    ``|hash| % dynamic-bucket.initial-buckets`` (unshuffled tasks agree
-    without coordination), and the commit unions the new hashcodes into
-    the touched buckets' index files (overwrite rebuilds the index from
-    the new data). avro/orc lakes write through the engine codecs with
-    in-task value stats.
+    DYNAMIC-BUCKET lakes (``'bucket' = '-1'``): existing keys route
+    against a size-capped plan-time copy of the spec HASH index, new
+    keys assign deterministically by ``|hash| %
+    dynamic-bucket.initial-buckets`` (unshuffled tasks agree without
+    coordination), and the commit unions the new hashcodes into the
+    touched buckets' index files (overwrite rebuilds the index from
+    the new data).
 
     Refusals (with pointers, not half-support): cross-partition PK
     lakes (the retraction protocol is a driver-side DataFrame concern —
     write_lake_pk_append / overwrite_lake), changelog-producing PK
-    appends (same pointer), and dynamic lakes whose HASH index exceeds
-    the serialized-copy cap.
+    appends (same pointer), bucket keys routing cannot hash, and
+    dynamic lakes whose HASH index exceeds
+    ``_DYN_INDEX_COPY_LIMIT_BYTES``.
 
     Scale note: each task writes one file per (partition, bucket) it
     SEES — a wide unpartitioned input can emit tasks×groups small
@@ -766,7 +780,10 @@ class PaimonLakeBatchWriter(DataSourceWriter):
 
     def __init__(self, table_path: str, overwrite: bool):
         from paimon_python_spark.paimon_import import plan_paimon_files
-        from paimon_python_spark.paimon_lake import read_paimon_schema
+        from paimon_python_spark.paimon_lake import (
+            _check_bucket_key,
+            read_paimon_schema,
+        )
 
         self.table_path = table_path
         self.info = read_paimon_schema(table_path)
@@ -783,6 +800,8 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         self.num_buckets = 1
         self.bucket_cols = None
         self.dynamic = False
+        self.seq_field = None
+        self.rk_field = None
         if self.is_pk:
             self.num_buckets = int(info.options.get("bucket", "-1"))
             if self.num_buckets < 1:
@@ -813,11 +832,11 @@ class PaimonLakeBatchWriter(DataSourceWriter):
                     "PK appends derive changelog at commit time — use "
                     "write_lake_pk_append()"
                 )
-            self.bucket_cols = [
-                c.strip()
-                for c in info.options.get("bucket-key", "").split(",")
-                if c.strip()
-            ] or None
+            self.bucket_cols = _check_bucket_key(info)
+            self.seq_field = info.options.get("sequence.field") or None
+            # rowkind.field: kinds come from the USER column (the
+            # builder's contract) — all +I otherwise
+            self.rk_field = info.options.get("rowkind.field") or None
         # plan-time (driver-side) state carried to tasks/commit — only
         # the modes that need it pay the manifest plan (a plain append
         # uses neither the sequence base nor the before-set)
@@ -832,19 +851,7 @@ class PaimonLakeBatchWriter(DataSourceWriter):
                 #: overwrite replaces the WHOLE visible table — DELETE
                 #: entries for every file live at plan time (same race
                 #: window as overwrite_lake, which plans at call time)
-                self.before = [
-                    {
-                        "partition": dict(e.partition),
-                        "bucket": e.bucket,
-                        "file_name": e.file_name,
-                        "file_size": e.file_size,
-                        "row_count": e.row_count,
-                        "schema_id": e.schema_id,
-                        "max_seq": e.max_seq,
-                        "level": e.level,
-                    }
-                    for e in before
-                ]
+                self.before = before
 
     def _load_dyn_index(self) -> None:
         """Driver-side snapshot of the lake's HASH index for executor
@@ -852,8 +859,8 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         packed as bytes (compact to serialize into tasks), plus the old
         index file name per (partition, bucket) for the commit-time
         union. Size-capped: a serialized copy rides to every task, so
-        beyond the limit the front door refuses toward the builder's
-        distributed-join routing."""
+        beyond ``_DYN_INDEX_COPY_LIMIT_BYTES`` the front door refuses
+        toward the builder's distributed-join routing."""
         import numpy as np
 
         from paimon_python_spark.dynamic_bucket import (
@@ -869,19 +876,14 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         part_keys = list(info.partition_keys)
         part_types = [info.spark_schema[k].dataType for k in part_keys]
         entries = plan_paimon_hash_index(self.table_path)
-        limit = int(
-            info.options.get(
-                "dynamic-bucket.frontdoor-index-limit-bytes", str(32 << 20)
-            )
-        )
+        limit = _DYN_INDEX_COPY_LIMIT_BYTES
         total = sum(int(e.get("_FILE_SIZE") or 0) for e in entries)
         if total > limit:
             raise RuntimeError(
                 f"paimon_lake writer: dynamic-bucket HASH index is "
                 f"{total} bytes (limit {limit}) — front-door tasks route "
                 f"against a serialized copy; use write_lake_pk_append() "
-                f"(distributed-join routing) or raise "
-                f"'dynamic-bucket.frontdoor-index-limit-bytes'"
+                f"(distributed-join routing)"
             )
         per: dict = {}
         self._dyn_old_files: dict = {}
@@ -922,497 +924,169 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         )
         self._dyn_mod = max(1, int(init))
 
-    def _write_pk(self, iterator) -> _LakeWrittenFiles:
-        """Executor-side PK task write: route rows to (partition,
-        bucket) with the writer's murmur hash, one sorted level-0
-        key-value file per group (mirrors the shape
-        paimon_lake._distributed_lake_write's task writes). Parallel
-        tasks share the plan-time sequence base — same-key collisions
-        across tasks tie-break by file order at read, exactly like real
-        Paimon's per-writer sequence generators."""
-        import datetime
-        import os
-        import uuid
+    def _route_dynamic(self, pdf, hashes):
+        """Route a task's rows against the plan-time HASH index
+        snapshot: existing hashcodes keep their bucket (binary search
+        per partition); new ones assign |hash| % initial-buckets —
+        deterministic, so unshuffled tasks seeing the same key always
+        agree. Returns (buckets, {(part_json, bucket): hashcodes}):
+        an append records the NEW hashcodes for the commit's index
+        union; an overwrite records EVERY hashcode — the commit
+        rebuilds the index from scratch (old keys are gone)."""
+        import numpy as np
 
-        import pandas as pd
-        import pyarrow as pa
+        from paimon_python_spark.paimon_import import logical_value
 
-        from paimon_python_spark.paimon_import import (
-            DEFAULT_PARTITION_NAME,
-            _value_stats_for,
-            _write_fixture_data_file,
-            encode_binary_row,
-            format_partition_segment,
+        info = self.info
+        part_keys = list(info.partition_keys)
+        part_types = [info.spark_schema[k].dataType for k in part_keys]
+        part_cols = [pdf[k].tolist() for k in part_keys]
+        pjs = np.array(
+            [
+                json.dumps(
+                    {
+                        k: logical_value(c[i], t)
+                        for k, c, t in zip(part_keys, part_cols, part_types)
+                    }
+                )
+                for i in range(len(pdf))
+            ],
+            dtype=object,
         )
+        buckets = np.empty(len(pdf), dtype=np.int64)
+        new_by_group: dict = {}
+        for pj in set(pjs.tolist()):
+            mask = pjs == pj
+            hs = hashes[mask]
+            hb, bb = self._dyn_index.get(pj, (b"", b""))
+            sorted_h = np.frombuffer(hb, dtype=np.int32)
+            bucket_of = np.frombuffer(bb, dtype=np.int32)
+            if len(sorted_h):
+                pos = np.searchsorted(sorted_h, hs).clip(
+                    0, len(sorted_h) - 1
+                )
+                found = sorted_h[pos] == hs
+                assigned = np.where(
+                    found,
+                    bucket_of[pos],
+                    np.abs(hs.astype(np.int64)) % self._dyn_mod,
+                )
+            else:
+                found = np.zeros(len(hs), dtype=bool)
+                assigned = np.abs(hs.astype(np.int64)) % self._dyn_mod
+            buckets[mask] = assigned
+            rec = np.ones(len(hs), dtype=bool) if self.overwrite else ~found
+            for b in np.unique(assigned[rec]):
+                new_by_group[(pj, int(b))] = np.unique(
+                    hs[rec][assigned[rec] == b]
+                ).tolist()
+        return buckets, new_by_group
+
+    def write(self, iterator) -> _LakeWrittenFiles:
+        """Executor-side task write: route, group, and hand each
+        (partition, bucket) group to ``paimon_lake.write_lake_group``.
+        Parallel tasks share the plan-time sequence base — same-key
+        collisions across tasks tie-break by file order at read,
+        exactly like real Paimon's per-writer sequence generators."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from paimon_python_spark.datasource import _decode_rowkind
         from paimon_python_spark.paimon_lake import (
-            _bloom_option_cols,
-            _embedded_index_payload,
-            _make_lake_bucket_fn,
-            _split_standalone_index,
+            _vectorized_fixed_buckets,
+            write_lake_group,
         )
         from paimon_python_spark.types import spark_type_to_pa
 
         info = self.info
-        part_keys = list(info.partition_keys)
-        part_types = [info.spark_schema[k].dataType for k in part_keys]
-        trimmed = [k for k in info.primary_keys if k not in part_keys]
-        trimmed_types = [info.spark_schema[k].dataType for k in trimmed]
-        names = [f.name for f in info.spark_schema.fields]
-        default_name = info.options.get(
-            "partition.default-name", DEFAULT_PARTITION_NAME
-        )
-        seq_field = info.options.get("sequence.field") or None
-        (
-            bloom_cols,
-            bloom_spec,
-            bloom_dtypes,
-            bitmap_cols,
-            bitmap_kinds,
-            bsi_cols,
-            bsi_kinds,
-        ) = _bloom_option_cols(info)
-        from paimon_python_spark.paimon_lake import _target_file_size
-
-        target_bytes = _target_file_size(info)
-        rows = [tuple(row[n] for n in names) for row in iterator]
-        if not rows:
+        batches = [b for b in iterator if b.num_rows]
+        if not batches:
             return _LakeWrittenFiles([])
-        pdf = pd.DataFrame(rows, columns=names)
-        bcols = list(self.bucket_cols or trimmed)
-        key_types = [info.spark_schema[c].dataType for c in bcols]
-        # typed key series (object-dtype columns from row tuples would
-        # push the router onto its per-row scalar fallback)
-        typed_keys = [
-            pa.array(
-                pdf[c], type=spark_type_to_pa(info.spark_schema[c].dataType)
-            ).to_pandas()
-            for c in bcols
-        ]
-        if not self.dynamic:
-            bfn = _make_lake_bucket_fn(key_types, self.num_buckets)
-            buckets = bfn(*typed_keys).tolist()
-
-        epoch = datetime.date(1970, 1, 1)
-
-        def logical(v, dt):
-            if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
-                return None
-            if hasattr(v, "item"):
-                v = v.item()
-            if isinstance(dt, T.DateType):
-                if isinstance(v, datetime.datetime):
-                    v = v.date()
-                if isinstance(v, datetime.date):
-                    return (v - epoch).days
-            return v
-
-        part_cols = [pdf[k].tolist() for k in part_keys]
-        new_by_group: dict = {}
-        if self.dynamic:
-            # route against the plan-time HASH index snapshot: existing
-            # hashcodes keep their bucket (binary search per partition);
-            # new ones assign |hash| % initial-buckets — deterministic,
-            # so unshuffled tasks seeing the same key always agree
-            import json as _json
-
-            import numpy as np
-
-            from paimon_python_spark.dynamic_bucket import (
-                _make_key_hash_fn,
-            )
-
-            hashes = (
-                _make_key_hash_fn(key_types)(*typed_keys)
-                .to_numpy()
-                .astype(np.int32)
-            )
-            pjs = np.array(
-                [
-                    _json.dumps(
-                        {
-                            k: logical(c[i], t)
-                            for k, c, t in zip(part_keys, part_cols, part_types)
-                        }
-                    )
-                    for i in range(len(pdf))
-                ],
-                dtype=object,
-            )
-            buckets = np.empty(len(pdf), dtype=np.int64)
-            for pj in set(pjs.tolist()):
-                mask = pjs == pj
-                hs = hashes[mask]
-                hb, bb = self._dyn_index.get(pj, (b"", b""))
-                sorted_h = np.frombuffer(hb, dtype=np.int32)
-                bucket_of = np.frombuffer(bb, dtype=np.int32)
-                if len(sorted_h):
-                    pos = np.searchsorted(sorted_h, hs).clip(
-                        0, len(sorted_h) - 1
-                    )
-                    found = sorted_h[pos] == hs
-                    assigned = np.where(
-                        found,
-                        bucket_of[pos],
-                        np.abs(hs.astype(np.int64)) % self._dyn_mod,
-                    )
-                else:
-                    found = np.zeros(len(hs), dtype=bool)
-                    assigned = np.abs(hs.astype(np.int64)) % self._dyn_mod
-                buckets[mask] = assigned
-                # append: record NEW hashcodes for the commit's index
-                # union; overwrite: record EVERY hashcode — the commit
-                # rebuilds the index from scratch (old keys are gone)
-                rec = (
-                    np.ones(len(hs), dtype=bool) if self.overwrite else ~found
-                )
-                for b in np.unique(assigned[rec]):
-                    grp = new_by_group.setdefault((pj, int(b)), set())
-                    grp.update(
-                        int(x)
-                        for x in np.unique(hs[rec][assigned[rec] == b])
-                    )
-            buckets = buckets.tolist()
-        groups: dict = {}
-        for i in range(len(pdf)):
-            key = (
-                tuple(
-                    logical(c[i], t) for c, t in zip(part_cols, part_types)
-                ),
-                int(buckets[i]),
-            )
-            groups.setdefault(key, []).append(i)
-        written = []
-        for (pvals_t, bucket), idxs in groups.items():
-            # ascending row indices preserve arrival order; the stable
-            # sort then sequences same-key rows in arrival order
-            sub = pdf.iloc[idxs]
-            if trimmed:
-                sub = sub.sort_values(trimmed, kind="mergesort")
-            sub = sub.reset_index(drop=True)
-            n = len(sub)
-            arrays = {}
-            for k, t in zip(trimmed, trimmed_types):
-                arrays[f"_KEY_{k}"] = pa.array(sub[k], type=spark_type_to_pa(t))
-            if seq_field is not None:
-                sv = sub[seq_field]
-                if len(sv) and isinstance(
-                    sv.iloc[0], (datetime.datetime, pd.Timestamp)
-                ):
-                    seqs = [int(pd.Timestamp(x).value // 1_000_000) for x in sv]
-                else:
-                    seqs = [int(x) for x in sv]
-            else:
-                seqs = list(range(self.seq_base, self.seq_base + n))
-            arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
-            # rowkind.field: kinds come from the USER column (the
-            # builder's contract) — all +I otherwise
-            rk_field = info.options.get("rowkind.field")
-            if rk_field:
-                from paimon_python_spark.datasource import _decode_rowkind
-
-                if rk_field not in sub.columns:
-                    raise ValueError(
-                        f"rowkind.field {rk_field!r} is not a table column"
-                    )
-                kinds = [_decode_rowkind(v) for v in sub[rk_field]]
-            else:
-                kinds = [0] * n
-            arrays["_VALUE_KIND"] = pa.array(kinds, pa.int32())
-            for f in info.spark_schema.fields:
-                arrays[f.name] = pa.array(
-                    sub[f.name], type=spark_type_to_pa(f.dataType)
-                )
-            table = pa.table(arrays)
-            pvals = dict(zip(part_keys, pvals_t))
-            rel_parts = [
-                f"{k}={format_partition_segment(pvals[k], dt, default_name)}"
-                for k, dt in zip(part_keys, part_types)
-            ]
-            ddir = os.path.join(self.table_path, *rel_parts, f"bucket-{bucket}")
-            os.makedirs(ddir, exist_ok=True)
-            # target-file-size rolling, same rule as the group writer:
-            # sorted chunks keep per-file key ranges disjoint
-            n_files = 1
-            if n > 1 and target_bytes and table.nbytes > target_bytes:
-                n_files = min(n, -(-table.nbytes // target_bytes))
-            rows_per = -(-n // n_files)
-            for ci in range(n_files):
-                lo = ci * rows_per
-                hi = min(n, lo + rows_per)
-                if lo >= hi:
-                    continue
-                sub_tbl = table.slice(lo, hi - lo)
-                sub_pdf = sub.iloc[lo:hi]
-                sub_seqs = seqs[lo:hi]
-                name = f"data-{uuid.uuid4()}-{ci}.{self.fmt}"
-                fpath = os.path.join(ddir, name)
-                _write_fixture_data_file(sub_tbl, fpath, self.fmt)
-                kmin = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[0], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-                kmax = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[-1], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-                stats = _value_stats_for(sub_tbl, info)
-                emb = _embedded_index_payload(
-                    sub_pdf,
-                    bloom_cols,
-                    bloom_spec,
-                    bloom_dtypes,
-                    bitmap_cols,
-                    bitmap_kinds,
-                    bsi_cols,
-                    bsi_kinds,
-                )
-                emb, extra = _split_standalone_index(emb, info, ddir, name)
-                written.append(
-                    {
-                        "rel": os.path.join(
-                            *rel_parts, f"bucket-{bucket}", name
-                        )
-                        if rel_parts
-                        else os.path.join(f"bucket-{bucket}", name),
-                        "pvals": pvals,
-                        "bucket": bucket,
-                        "rows": hi - lo,
-                        "size": os.path.getsize(fpath),
-                        "min_seq": min(sub_seqs) if sub_seqs else self.seq_base,
-                        "max_seq": max(sub_seqs) if sub_seqs else self.seq_base,
-                        "min_key": kmin,
-                        "max_key": kmax,
-                        "stats": stats,
-                        "emb": emb,
-                        "extra": extra,
-                    }
-                )
-        return _LakeWrittenFiles(
-            written,
-            new_hashes=(
-                {k: sorted(v) for k, v in new_by_group.items()}
-                if new_by_group
-                else None
-            ),
-        )
-
-    def write(self, iterator) -> _LakeWrittenFiles:
+        tbl = pa.Table.from_batches(batches)
+        cols = []
+        for f in info.spark_schema.fields:
+            col = tbl.column(f.name)
+            if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+                # applyInPandas' form, which the builder's writer sees:
+                # the wall clock in the batch's (session) time zone
+                col = pc.local_timestamp(col)
+            cols.append(col.cast(spark_type_to_pa(f.dataType)))
+        tbl = pa.table(cols, names=info.spark_schema.names)
+        # routing, grouping and sorting read pandas; the writer takes
+        # the stored values from ``tbl`` itself (values=), exactly
+        pdf = tbl.to_pandas(date_as_object=True, integer_object_nulls=True)
+        new_hashes = None
+        gcols = list(info.partition_keys)
         if self.is_pk:
-            return self._write_pk(iterator)
-        import datetime
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from paimon_python_spark.paimon_import import (
-            DEFAULT_PARTITION_NAME,
-            format_partition_segment,
-        )
-        from paimon_python_spark.types import spark_schema_to_pa
-
-        info = self.info
-        part_keys = list(info.partition_keys)
-        part_types = [info.spark_schema[k].dataType for k in part_keys]
-        default_name = info.options.get(
-            "partition.default-name", DEFAULT_PARTITION_NAME
-        )
-        value_fields = [
-            f for f in info.spark_schema.fields if f.name not in part_keys
-        ]
-        pa_schema = spark_schema_to_pa(T.StructType(value_fields))
-
-        def logical(v, dt):
-            # on-disk logical form: DATE → epoch days (BinaryRow + dirs)
-            if v is not None and isinstance(dt, T.DateType):
-                if isinstance(v, datetime.datetime):
-                    v = v.date()
-                return (v - datetime.date(1970, 1, 1)).days
-            return v
-
-        groups: dict = {}
-        for row in iterator:
-            key = tuple(
-                logical(row[k], dt) for k, dt in zip(part_keys, part_types)
-            )
-            groups.setdefault(key, []).append(
-                tuple(row[f.name] for f in value_fields)
-            )
-        written = []
-        for key, rows in groups.items():
-            rel_parts = [
-                f"{k}={format_partition_segment(v, dt, default_name)}"
-                for k, v, dt in zip(part_keys, key, part_types)
+            keys = [pdf[c] for c in self.bucket_cols]
+            key_types = [
+                info.spark_schema[c].dataType for c in self.bucket_cols
             ]
-            ddir = os.path.join(self.table_path, *rel_parts, "bucket-0")
-            os.makedirs(ddir, exist_ok=True)
-            name = f"data-{uuid.uuid4()}-0.{self.fmt}"
-            cols = list(zip(*rows)) if rows else [[] for _ in value_fields]
-            table = pa.Table.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, pa_schema)],
-                schema=pa_schema,
-            )
-            from paimon_python_spark.paimon_import import (
-                _value_stats_for,
-                _write_fixture_data_file,
-            )
-
-            _write_fixture_data_file(table, os.path.join(ddir, name), self.fmt)
-            # avro/orc carry no usable footer-at-commit path: compute
-            # value stats in-task over the batch (parquet keeps its
-            # zero-extra-IO footer fold at commit time)
-            stats = (
-                _value_stats_for(table, info) if self.fmt != "parquet" else None
-            )
-            emb, extra = None, None
-            if rows:
-                # honor the table's declared file indexes (bloom/bitmap
-                # /bsi columns) — front-door files must prune like
-                # builder-written ones
-                from paimon_python_spark.paimon_lake import (
-                    _bloom_option_cols,
-                    _embedded_index_payload,
-                    _split_standalone_index,
+            if self.dynamic:
+                pdf["__bucket"], new_hashes = self._route_dynamic(
+                    pdf, _vectorized_fixed_buckets(keys, key_types, None)
                 )
-
-                opts = _bloom_option_cols(info)
-                if opts[0] or opts[3] or opts[5]:
-                    emb = _embedded_index_payload(
-                        table.to_pandas(), *opts
+            else:
+                pdf["__bucket"] = _vectorized_fixed_buckets(
+                    keys, key_types, self.num_buckets
+                )
+            # same-key events sequence in arrival order, as the
+            # builder's monotonic id orders them
+            pdf["__input_order"] = np.arange(len(pdf))
+            if self.rk_field:
+                if self.rk_field not in pdf.columns:
+                    raise ValueError(
+                        f"rowkind.field {self.rk_field!r} is not a table column"
                     )
-                    emb, extra = _split_standalone_index(
-                        emb, info, ddir, name
-                    )
-            written.append(
-                (
-                    os.path.join(*rel_parts, "bucket-0", name)
-                    if rel_parts
-                    else os.path.join("bucket-0", name),
-                    dict(zip(part_keys, key)),
-                    len(rows),
-                    emb,
-                    extra,
-                    stats,
+                pdf["__row_kind"] = [
+                    _decode_rowkind(v) for v in pdf[self.rk_field]
+                ]
+            gcols.append("__bucket")
+        groups = (
+            pdf.groupby(gcols, sort=False, dropna=False) if gcols else [(None, pdf)]
+        )
+        files = []
+        for _, group in groups:
+            files.extend(
+                write_lake_group(
+                    group,
+                    self.table_path,
+                    info,
+                    self.fmt,
+                    self.is_pk,
+                    seq_base=self.seq_base,
+                    sequence_field=self.seq_field,
+                    values=tbl,
                 )
             )
-        return _LakeWrittenFiles(written)
+        return _LakeWrittenFiles(files, new_hashes=new_hashes or None)
 
     def commit(self, messages) -> None:
-        import pyarrow.parquet as pq
-
-        from paimon_python_spark.paimon_import import (
-            _spec_file_meta,
-            encode_binary_row,
-        )
+        from paimon_python_spark.dynamic_bucket import union_hash_index
         from paimon_python_spark.paimon_lake import (
+            _INHERIT_INDEX,
             _commit_lake_snapshot,
-            _parquet_footer_value_stats,
+            lake_add_entry,
+            lake_delete_entry,
         )
 
         info = self.info
         part_keys = list(info.partition_keys)
-        part_types = [info.spark_schema[k].dataType for k in part_keys]
-        entries = []
-        n_rows = 0
+        metas = [r for m in messages if m is not None for r in m.files]
+        entries = [lake_add_entry(info, r, self.num_buckets) for r in metas]
+        n_rows = sum(int(r["rows"]) for r in metas)
         dyn_new: dict = {}
         for m in messages:
-            if m is None:
-                continue
-            if getattr(m, "new_hashes", None):
+            if m is not None and m.new_hashes:
                 for k, hs in m.new_hashes.items():
-                    dyn_new.setdefault(tuple(k), set()).update(hs)
-            for f in m.files:
-                if self.is_pk:
-                    if f["rows"] == 0:
-                        continue
-                    entries.append(
-                        {
-                            "_VERSION": 2,
-                            "_KIND": 0,
-                            "_PARTITION": encode_binary_row(
-                                [f["pvals"][k] for k in part_keys], part_types
-                            ),
-                            "_BUCKET": int(f["bucket"]),
-                            "_TOTAL_BUCKETS": self.num_buckets,
-                            "_FILE": _spec_file_meta(
-                                os.path.basename(f["rel"]),
-                                int(f["size"]),
-                                int(f["rows"]),
-                                schema_id=info.id,
-                                value_stats=f["stats"],
-                                min_key=f["min_key"],
-                                max_key=f["max_key"],
-                                min_seq=int(f["min_seq"]),
-                                max_seq=int(f["max_seq"]),
-                                level=0,
-                                embedded_index=f["emb"],
-                                extra_files=(
-                                    [f["extra"]] if f.get("extra") else None
-                                ),
-                            ),
-                        }
-                    )
-                    n_rows += int(f["rows"])
-                    continue
-                rel, pvals, rows, emb, extra, stats = f
-                if rows == 0:
-                    continue
-                dest = os.path.join(self.table_path, rel)
-                if stats is None and rel.endswith(".parquet"):
-                    md = pq.ParquetFile(dest).metadata
-                    stats = _parquet_footer_value_stats(md, info)
-                entries.append(
-                    {
-                        "_VERSION": 2,
-                        "_KIND": 0,
-                        "_PARTITION": encode_binary_row(
-                            [pvals[k] for k in part_keys], part_types
-                        ),
-                        "_BUCKET": 0,
-                        "_TOTAL_BUCKETS": 1,
-                        "_FILE": _spec_file_meta(
-                            os.path.basename(rel),
-                            os.path.getsize(dest),
-                            rows,
-                            schema_id=info.id,
-                            value_stats=stats,
-                            embedded_index=emb,
-                            extra_files=[extra] if extra else None,
-                        ),
-                    }
-                )
-                n_rows += rows
+                    dyn_new.setdefault(tuple(k), []).extend(hs)
         if self.overwrite:
             # whole-table INSERT OVERWRITE (overwrite_lake semantics):
             # DELETE every file visible at plan time, drop the DV index
             # (nothing it marked survives), explicit new total — even an
             # empty df commits (it replaces the table with nothing)
-            delete_entries = [
-                {
-                    "_VERSION": 2,
-                    "_KIND": 1,
-                    "_PARTITION": encode_binary_row(
-                        [e["partition"][k] for k in part_keys], part_types
-                    ),
-                    "_BUCKET": e["bucket"],
-                    "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-                    "_FILE": _spec_file_meta(
-                        e["file_name"],
-                        e["file_size"],
-                        e["row_count"],
-                        schema_id=e["schema_id"],
-                        max_seq=e["max_seq"],
-                        level=e["level"],
-                    ),
-                }
-                for e in self.before
-            ]
+            delete_entries = [lake_delete_entry(info, e) for e in self.before]
             overwrite_index = None
             if self.dynamic and dyn_new:
                 # dynamic overwrite REBUILDS the HASH index from the new
@@ -1420,39 +1094,14 @@ class PaimonLakeBatchWriter(DataSourceWriter):
                 # re-assign an existing key to a different bucket
                 # (key split across buckets = wrong merge); carrying the
                 # old entries would resurrect deleted keys' assignments
-                import json as _json
-                import uuid as _uuid
-
-                import numpy as np
-
                 from paimon_python_spark.dynamic_bucket import (
                     pending_to_entries,
-                    write_hash_index_file,
                     write_index_manifest,
                 )
 
-                os.makedirs(
-                    os.path.join(self.table_path, "index"), exist_ok=True
+                pending = union_hash_index(
+                    self.table_path, part_keys, dyn_new, {}
                 )
-                pending = []
-                for (pj, bucket), hs in sorted(dyn_new.items()):
-                    merged = np.array(sorted(hs), dtype=np.int32)
-                    idx_file = f"index-{_uuid.uuid4().hex}-0"
-                    size = write_hash_index_file(
-                        os.path.join(self.table_path, "index", idx_file),
-                        merged,
-                    )
-                    pvals = _json.loads(pj)
-                    pending.append(
-                        {
-                            "part_json": pj,
-                            "part_values": [pvals[k] for k in part_keys],
-                            "bucket": int(bucket),
-                            "file": idx_file,
-                            "size": size,
-                            "rows": len(merged),
-                        }
-                    )
                 fresh, _replaced = pending_to_entries(info, pending)
                 overwrite_index = write_index_manifest(
                     self.table_path, fresh
@@ -1470,53 +1119,18 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         if not entries:
             return  # empty append is a successful no-op, like every
             # standard Spark sink (parquet/JDBC) — no snapshot commits
-        from paimon_python_spark.paimon_lake import _INHERIT_INDEX
-
         index_manifest = _INHERIT_INDEX
         if self.dynamic and dyn_new:
             # union each touched bucket's NEW key hashcodes into a fresh
             # index file; the merged index manifest carries every other
             # entry (DVs included) forward verbatim
-            import json as _json
-            import uuid as _uuid
-
-            import numpy as np
-
             from paimon_python_spark.dynamic_bucket import (
-                read_hash_index_file,
-                write_hash_index_file,
                 write_merged_index_manifest,
             )
 
-            os.makedirs(
-                os.path.join(self.table_path, "index"), exist_ok=True
+            pending = union_hash_index(
+                self.table_path, part_keys, dyn_new, self._dyn_old_files
             )
-            pending = []
-            for (pj, bucket), hs in sorted(dyn_new.items()):
-                new = np.array(sorted(hs), dtype=np.int32)
-                old_name = self._dyn_old_files.get((pj, bucket))
-                if old_name is not None:
-                    old = read_hash_index_file(
-                        os.path.join(self.table_path, "index", old_name)
-                    )
-                    merged = np.concatenate([old, np.setdiff1d(new, old)])
-                else:
-                    merged = new
-                idx_file = f"index-{_uuid.uuid4().hex}-0"
-                size = write_hash_index_file(
-                    os.path.join(self.table_path, "index", idx_file), merged
-                )
-                pvals = _json.loads(pj)
-                pending.append(
-                    {
-                        "part_json": pj,
-                        "part_values": [pvals[k] for k in part_keys],
-                        "bucket": int(bucket),
-                        "file": idx_file,
-                        "size": size,
-                        "rows": len(merged),
-                    }
-                )
             name = write_merged_index_manifest(
                 self.table_path, info, pending
             )
@@ -1531,19 +1145,20 @@ class PaimonLakeBatchWriter(DataSourceWriter):
         )
 
     def abort(self, messages) -> None:
+        from paimon_python_spark.paimon_lake import lake_group_dir
+
         for m in messages:
             if m is None:
                 continue
-            for f in m.files:
-                rel = f["rel"] if self.is_pk else f[0]
-                p = os.path.join(self.table_path, rel)
-                if os.path.exists(p):
-                    os.remove(p)
-                extra = f.get("extra") if self.is_pk else f[4]
-                if extra:
-                    xp = os.path.join(os.path.dirname(p), extra)
-                    if os.path.exists(xp):
-                        os.remove(xp)
+            for r in m.files:
+                pvals = json.loads(r["part_json"])
+                ddir = lake_group_dir(
+                    self.table_path, self.info, pvals, r["bucket"]
+                )
+                for name in (r["file_name"], r["extra_idx"]):
+                    p = os.path.join(ddir, name) if name else None
+                    if p and os.path.exists(p):
+                        os.remove(p)
 
 
 class PaimonLakeSystemReader(DataSourceReader):

@@ -358,6 +358,21 @@ def decode_binary_row(data: bytes, types: List[T.DataType]) -> List[Any]:
     return out
 
 
+# the field types encode_binary_row writes (and binary_row_hash_expr hashes)
+_BINARY_ROW_TYPES = (
+    T.LongType,
+    T.IntegerType,
+    T.ShortType,
+    T.ByteType,
+    T.BooleanType,
+    T.DateType,
+    T.FloatType,
+    T.DoubleType,
+    T.StringType,
+    T.BinaryType,
+)
+
+
 def encode_binary_row(values: List[Any], types: List[T.DataType]) -> bytes:
     """Spec-conformant encoder — used by the fixture builder and kept
     next to the decoder so the two byte-level conventions cannot
@@ -433,6 +448,29 @@ def murmur_hash_words(data: bytes, seed: int = 42) -> int:
     return h1 - 0x100000000 if h1 >= 0x80000000 else h1
 
 
+def logical_value(v, dt):
+    """Pandas/Row value → the logical value ``encode_binary_row``
+    expects: NULL and NaN as None, numpy scalars unboxed, DATE as epoch
+    days, integral floats as ints."""
+    import datetime
+
+    import pandas as pd
+
+    if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
+        return None
+    if hasattr(v, "item"):
+        v = v.item()
+    if isinstance(dt, T.DateType):
+        if isinstance(v, datetime.datetime):
+            v = v.date()
+        if isinstance(v, datetime.date):
+            return (v - datetime.date(1970, 1, 1)).days
+    if isinstance(dt, T.IntegralType) and isinstance(v, float):
+        # a NULL-able integer column reaches pandas as float64
+        return int(v)
+    return v
+
+
 def fixed_bucket(values: List[Any], types: List[T.DataType], num_buckets: int) -> int:
     """Paimon's fixed-bucket assignment for one row's bucket key:
     ``Math.abs(bucketKey.hashCode() % numBuckets)`` where the hashCode
@@ -460,18 +498,6 @@ def fixed_bucket(values: List[Any], types: List[T.DataType], num_buckets: int) -
 # size) just to route rows — with the expression the stage is
 # whole-stage-codegen JVM and the boundary disappears (guide §4.1).
 
-_BRH_SUPPORTED = (
-    T.LongType,
-    T.IntegerType,
-    T.ShortType,
-    T.ByteType,
-    T.BooleanType,
-    T.DateType,
-    T.StringType,
-    T.BinaryType,
-)
-
-
 def _le_hex(value_sql: str, n_bytes: int) -> str:
     """SQL producing the little-endian ``n_bytes`` hex of a BIGINT-typed
     SQL expression (two's complement, like struct.pack('<q'/'<i'/...))."""
@@ -486,13 +512,50 @@ def _le_hex(value_sql: str, n_bytes: int) -> str:
     return "concat(" + ", ".join(parts) + ")" if len(parts) > 1 else parts[0]
 
 
-def binary_row_hash_expr(col_names, types) -> "str | None":
+def _ieee_bits_sql(col: str, double: bool) -> str:
+    """BIGINT SQL for the raw IEEE-754 bits of a float/double column,
+    like ``struct.pack('<f'/'<d')``: -0.0, ±inf and subnormals keep
+    their own patterns. Parsed from Java's exact hex rendering
+    (``format_string('%a', x)``: ``-0x1.8p3``, ``0x0.0000000000001p-1022``,
+    ``Infinity``) because ``reflect(... floatToRawIntBits ...)`` is
+    nondeterministic to Spark, which would mark the routing shuffle
+    indeterminate. NULL and NaN parse as 0.0; callers mask them."""
+    s = (
+        f"replace(format_string('%a', coalesce(nanvl(cast({col} as double), 0D), 0D)), "
+        f"'Infinity', '0x1.0p{1024 if double else 128}')"
+    )
+    # the double's 52 fraction bits, and its unbiased exponent
+    frac = (
+        f"cast(conv(rpad(regexp_extract({s}, '[.]([0-9a-f]+)p', 1), 13, '0'), "
+        "16, 10) as bigint)"
+    )
+    exp = f"cast(regexp_extract({s}, 'p(-?[0-9]+)', 1) as int)"
+    zero_or_sub = f"{s} LIKE '%0x0.%'"
+    if double:
+        sign = f"CASE WHEN {s} LIKE '-%' THEN shiftleft(1L, 63) ELSE 0L END"
+        return (
+            f"({sign} | shiftleft(CASE WHEN {zero_or_sub} THEN 0L "
+            f"ELSE cast({exp} + 1023 as bigint) END, 52) | {frac})"
+        )
+    # a float widened to double is never subnormal: 0x0. means zero,
+    # and an exponent below -126 is a float subnormal
+    sign = f"CASE WHEN {s} LIKE '-%' THEN {1 << 31}L ELSE 0L END"
+    return (
+        f"({sign} | CASE WHEN {zero_or_sub} THEN 0L "
+        f"WHEN {exp} >= -126 THEN shiftleft(cast({exp} + 127 as bigint), 23) "
+        f"| shiftright({frac}, 29) "
+        f"ELSE shiftright({frac} | shiftleft(1L, 52), -97 - {exp}) END)"
+    )
+
+
+def binary_row_hash_expr(col_names, types) -> str:
     """SQL expression (a string for ``F.expr``) computing
     ``murmur_hash_words(encode_binary_row(values)[4:])`` — the signed
     int32 BinaryRow hashCode Paimon's bucket routing is built on —
-    entirely in JVM built-ins. Returns ``None`` when any key type is
-    outside the supported set (float/double/decimal/timestamp keys
-    fall back to the vectorized pandas UDF).
+    entirely in JVM built-ins. Raises ``ValueError`` naming the column
+    when a key type is outside the supported set (decimal, timestamp
+    and nested keys) or the key has more than 55 columns; this is the
+    one definition of a hashable bucket key.
 
     Byte layout reproduced (see encode_binary_row): 8-byte null bitset
     (bit 8+i marks field i null), one 8-byte little-endian slot per
@@ -501,18 +564,35 @@ def binary_row_hash_expr(col_names, types) -> "str | None":
     var region), then each var payload zero-padded to a word multiple.
     """
     arity = len(types)
-    if arity == 0 or arity > 55:  # bitset must fit one 8-byte word
-        return None
-    for dt in types:
-        if not isinstance(dt, _BRH_SUPPORTED):
-            return None
+    if arity == 0:
+        raise ValueError("bucket key: no columns to hash")
+    if arity > 55:  # bitset must fit one 8-byte word
+        raise ValueError(
+            f"bucket key: {arity} columns (from {col_names[55]!r} on) — "
+            "at most 55 bucket-key columns are supported"
+        )
+    for c, dt in zip(col_names, types):
+        if not isinstance(dt, _BINARY_ROW_TYPES):
+            raise ValueError(
+                f"bucket key column {c!r} has type {dt.simpleString()}, "
+                "which lake bucket routing cannot hash (supported: "
+                "integers, boolean, date, float, double, string, binary)"
+            )
 
     nb = 8  # _bitset_bytes(arity) for arity <= 55
     q = [f"`{str(c).replace(chr(96), chr(96) * 2)}`" for c in col_names]
+    # a float NaN routes like NULL, as the in-task vectorized router
+    # (which reads pandas NaN as missing) has always routed it
+    null_sql = [
+        f"({q[i]} IS NULL OR isnan({q[i]}))"
+        if isinstance(dt, (T.FloatType, T.DoubleType))
+        else f"{q[i]} IS NULL"
+        for i, dt in enumerate(types)
+    ]
 
     # null bitset word (little-endian hex of the OR of per-field bits)
     bit_terms = [
-        f"CASE WHEN {q[i]} IS NULL THEN {1 << (8 + i)}L ELSE 0L END"
+        f"CASE WHEN {null_sql[i]} THEN {1 << (8 + i)}L ELSE 0L END"
         for i in range(arity)
     ]
     bitset_hex = _le_hex(" + ".join(bit_terms), 8)
@@ -564,6 +644,10 @@ def binary_row_hash_expr(col_names, types) -> "str | None":
             body = f"concat({_le_hex(f'cast({q[i]} as bigint)', 1)}, '00000000000000')"
         elif isinstance(dt, T.BooleanType):
             body = f"concat(CASE WHEN {q[i]} THEN '01' ELSE '00' END, '00000000000000')"
+        elif isinstance(dt, T.FloatType):
+            body = f"concat({_le_hex(_ieee_bits_sql(q[i], False), 4)}, '00000000')"
+        elif isinstance(dt, T.DoubleType):
+            body = _le_hex(_ieee_bits_sql(q[i], True), 8)
         else:  # string/binary
             inline = (
                 f"concat(rpad({raw_hex[i]}, 14, '0'), "
@@ -578,20 +662,18 @@ def binary_row_hash_expr(col_names, types) -> "str | None":
                 f"CASE WHEN {q[i]} IS NULL OR {blen[i]} <= 7 THEN '' "
                 f"ELSE rpad({raw_hex[i]}, cast(ceil(({blen[i]}) / 8.0) * 16 as int), '0') END"
             )
-        slots.append(f"CASE WHEN {q[i]} IS NULL THEN {null_slot} ELSE {body} END")
+        slots.append(f"CASE WHEN {null_sql[i]} THEN {null_slot} ELSE {body} END")
 
     row_hex = "concat(" + ", ".join([bitset_hex, *slots, *var_parts]) + ")"
     return f"hash(unhex({row_hex}))"
 
 
-def binary_row_bucket_expr(col_names, types, num_buckets: int) -> "str | None":
+def binary_row_bucket_expr(col_names, types, num_buckets: int) -> str:
     """SQL expression for Paimon's fixed-bucket routing
     (``abs(BinaryRow hashCode) % num_buckets``, Java abs semantics —
-    the bigint cast makes abs(INT_MIN) exact), or ``None`` when the
-    key types need the pandas-UDF fallback."""
+    the bigint cast makes abs(INT_MIN) exact). Raises like
+    :func:`binary_row_hash_expr` on an unhashable key."""
     h = binary_row_hash_expr(col_names, types)
-    if h is None:
-        return None
     return f"cast(abs(cast({h} as bigint)) % {num_buckets} as int)"
 
 
@@ -1346,10 +1428,6 @@ def export_paimon_table(table, dest_path: str, file_format: str = "parquet") -> 
     ``to_pandas`` adapters): export is an interchange operation for
     driver-sized extracts, not a data path — for TB-scale handoff keep
     the data in this engine or copy its parquet files directly."""
-    import datetime
-
-    import numpy as np
-    import pandas as pd
     import pyarrow as pa
 
     schema = table.schema
@@ -1358,13 +1436,6 @@ def export_paimon_table(table, dest_path: str, file_format: str = "parquet") -> 
     part_keys = list(schema.partition_keys)
     pks = list(schema.primary_keys)
     pdf = table.new_read_builder().new_read().to_pandas()
-
-    def py_part_value(v, dt):
-        if isinstance(dt, T.DateType) and isinstance(v, datetime.date):
-            return (v - datetime.date(1970, 1, 1)).days
-        if isinstance(v, np.generic):
-            return v.item()
-        return v
 
     def pa_value_table(g: "pd.DataFrame") -> "pa.Table":
         from paimon_python_spark.types import spark_type_to_pa
@@ -1386,10 +1457,9 @@ def export_paimon_table(table, dest_path: str, file_format: str = "parquet") -> 
     )
     for kvals, g in groups:
         pvals = {
-            k: py_part_value(v, schema.spark_schema[k].dataType)
+            k: logical_value(v, schema.spark_schema[k].dataType)
             for k, v in zip(part_keys, kvals)
         }
-        pvals = {k: (None if pd.isna(v) else v) for k, v in pvals.items()}
         if pks:
             trimmed = [k for k in pks if k not in part_keys]
             g = g.sort_values(trimmed, kind="mergesort").reset_index(drop=True)
@@ -1550,7 +1620,12 @@ def _value_stats_for(table, info: "PaimonSchemaInfo") -> dict:
             continue
         col = table[f.name]
         nulls.append(int(col.null_count))
-        if col.length() == col.null_count:
+        # an all-NULL column bounds nothing; nor does one whose type the
+        # BinaryRow cannot encode (timestamp, decimal, nested) — the
+        # other columns keep their min/max
+        if col.length() == col.null_count or not isinstance(
+            f.dataType, _BINARY_ROW_TYPES
+        ):
             mins.append(None)
             maxs.append(None)
             continue
@@ -1558,6 +1633,11 @@ def _value_stats_for(table, info: "PaimonSchemaInfo") -> dict:
             mm = pc.min_max(col)
             mn, mx = mm["min"].as_py(), mm["max"].as_py()
         except Exception:
+            mn = mx = None
+        if isinstance(f.dataType, (T.FloatType, T.DoubleType)) and pc.any(
+            pc.is_nan(col)
+        ).as_py():
+            # min_max skips NaN, which Spark orders above every value
             mn = mx = None
         if isinstance(types[len(mins)], T.DateType):
             import datetime

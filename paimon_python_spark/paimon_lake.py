@@ -602,21 +602,26 @@ def _limited_entries(entries, limit: "int | None"):
     return out
 
 
-def _lake_bucket_key_logical(v, dt):
-    """Normalize one bucket-key literal to the logical value the lake
-    writer hashed (DATE → epoch days, numpy scalars unwrapped) —
-    mirrors the lake bucket router's conversions."""
-    import datetime
+def _lake_bucket_cols(options, primary_keys, partition_keys) -> List[str]:
+    """A PK lake's bucket key: the ``bucket-key`` option, else the
+    primary key minus the partition keys."""
+    return [
+        c.strip()
+        for c in options.get("bucket-key", "").split(",")
+        if c.strip()
+    ] or [k for k in primary_keys if k not in partition_keys]
 
-    from pyspark.sql import types as T
 
-    if hasattr(v, "item"):
-        v = v.item()
-    if isinstance(v, datetime.datetime):
-        v = v.date()
-    if isinstance(dt, T.DateType) and isinstance(v, datetime.date):
-        return (v - datetime.date(1970, 1, 1)).days
-    return v
+def _check_bucket_key(info: PaimonSchemaInfo) -> List[str]:
+    """The bucket key of a PK lake, refused on the driver (a
+    ``ValueError`` naming the column) when bucket routing cannot hash
+    it — instead of failing inside the first write's tasks."""
+    from paimon_python_spark.paimon_import import binary_row_hash_expr
+
+    cols = _lake_bucket_cols(info.options, info.primary_keys, info.partition_keys)
+    if cols:
+        binary_row_hash_expr(cols, [info.spark_schema[c].dataType for c in cols])
+    return cols
 
 
 def _lake_candidate_buckets(predicate, info: PaimonSchemaInfo) -> Optional[set]:
@@ -633,11 +638,7 @@ def _lake_candidate_buckets(predicate, info: PaimonSchemaInfo) -> Optional[set]:
     nb = int(info.options.get("bucket", "-1"))
     if nb < 1:
         return None
-    bcols = [
-        c.strip()
-        for c in info.options.get("bucket-key", "").split(",")
-        if c.strip()
-    ] or [k for k in info.primary_keys if k not in info.partition_keys]
+    bcols = _lake_bucket_cols(info.options, info.primary_keys, info.partition_keys)
     if not bcols:
         return None
     eq = predicate.equality_sets()
@@ -650,13 +651,13 @@ def _lake_candidate_buckets(predicate, info: PaimonSchemaInfo) -> Optional[set]:
             return None
     from itertools import product
 
-    from paimon_python_spark.paimon_import import fixed_bucket
+    from paimon_python_spark.paimon_import import fixed_bucket, logical_value
 
     types = [info.spark_schema[k].dataType for k in bcols]
     try:
         return {
             fixed_bucket(
-                [_lake_bucket_key_logical(v, t) for v, t in zip(vals, types)],
+                [logical_value(v, t) for v, t in zip(vals, types)],
                 types,
                 nb,
             )
@@ -2123,8 +2124,6 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
         MANIFEST_LIST_SCHEMA,
         MANIFEST_SCHEMA,
         _EMPTY_STATS,
-        _spec_file_meta,
-        encode_binary_row,
         latest_paimon_snapshot_id,
         read_manifest_list,
         read_paimon_snapshot,
@@ -2224,23 +2223,24 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
                 os.makedirs(ddir, exist_ok=True)
                 shutil.move(src_f, os.path.join(ddir, new_name))
                 dest = os.path.join(ddir, new_name)
+                vstats = vstats or _EMPTY_STATS
                 entries.append(
-                    {
-                        "_VERSION": 2,
-                        "_KIND": 0,
-                        "_PARTITION": encode_binary_row(
-                            [pvals[k] for k in part_keys], part_types
-                        ),
-                        "_BUCKET": 0,
-                        "_TOTAL_BUCKETS": 1,
-                        "_FILE": _spec_file_meta(
-                            new_name,
-                            os.path.getsize(dest),
-                            rows,
-                            schema_id=info.id,
-                            value_stats=vstats,
-                        ),
-                    }
+                    lake_add_entry(
+                        info,
+                        {
+                            "file_name": new_name,
+                            "part_json": json.dumps(pvals),
+                            "bucket": 0,
+                            "rows": rows,
+                            "size": os.path.getsize(dest),
+                            "min_seq": 0,
+                            "max_seq": rows,
+                            "stats_min": vstats["_MIN_VALUES"],
+                            "stats_max": vstats["_MAX_VALUES"],
+                            "null_counts": vstats["_NULL_COUNTS"],
+                        },
+                        num_buckets=1,
+                    )
                 )
 
         def walk(cur: str, keys_left: list, pvals: dict, rel_parts: list):
@@ -2393,6 +2393,7 @@ def _commit_lake_snapshot(
     import uuid
 
     from paimon_python_spark.avro_codec import write_avro_records
+    from paimon_python_spark.metadata import SnapshotConflictError, _exclusive_write
     from paimon_python_spark.paimon_import import (
         MANIFEST_LIST_SCHEMA,
         MANIFEST_SCHEMA,
@@ -2554,13 +2555,13 @@ def _commit_lake_snapshot(
             }
             spath = os.path.join(table_path, "snapshot", f"snapshot-{new_id}")
             try:
-                # O_EXCL: a concurrent committer racing for the same id
-                # loses exactly one of the two — loser re-plans above
-                fd = os.open(spath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-            except FileExistsError:
+                # create-if-absent with its full content (hardlink CAS):
+                # a concurrent committer racing for the same id loses
+                # exactly one of the two — loser re-plans above — and
+                # no reader ever sees an empty snapshot file
+                _exclusive_write(spath, json.dumps(snap))
+            except SnapshotConflictError:
                 continue
-            with os.fdopen(fd, "w") as f:
-                json.dump(snap, f)
             write_hint_atomic(
                 os.path.join(table_path, "snapshot", "LATEST"), new_id
             )
@@ -2820,28 +2821,6 @@ def _pd_isna(v) -> bool:
     return v is None or (not isinstance(v, (bytes, str)) and pd.isna(v))
 
 
-def _make_lake_bucket_fn(key_types, num_buckets: int):
-    """Batch bucket assignment for Paimon's fixed-bucket routing:
-    ``abs(murmur(BinaryRow(bucket key))) % num_buckets`` over a pandas
-    batch (``FixedBucketRowKeyExtractor`` semantics, paimon_import.py
-    fixed_bucket). VECTORIZED: the BinaryRow bytes of the whole batch
-    are built column-wise into numpy matrices (fixed-width fields are
-    byte views; string/binary payloads scatter through a flattened
-    buffer), rows grouped by encoded length, and the word-wise murmur
-    runs as W numpy passes over N rows instead of N Python-loop rows —
-    at 100-TB ingest the router is on every written row, so per-row
-    Python here was the write bottleneck. Every key type the lake
-    accepts is covered; the scalar ``fixed_bucket`` is the property
-    tests' oracle for it."""
-
-    def fn(*cols):
-        import pandas as pd
-
-        return pd.Series(_vectorized_fixed_buckets(cols, key_types, num_buckets))
-
-    return fn
-
-
 def _murmur_words_batch(words, num_buckets: int):
     """Paimon's hashBytesByWords (murmur3-32, seed 42, no tail) over an
     (N, W) uint32 word matrix — W vector passes over all N rows — then
@@ -3004,6 +2983,417 @@ def _vectorized_fixed_buckets(cols, key_types, num_buckets: Optional[int] = None
     return out
 
 
+def _lake_meta_schema():
+    """Per-file meta row of :func:`write_lake_group` — the KB-scale
+    record a write task returns to the driver instead of data."""
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("file_name", T.StringType()),
+            T.StructField("part_json", T.StringType()),
+            T.StructField("bucket", T.IntegerType()),
+            T.StructField("rows", T.LongType()),
+            T.StructField("size", T.LongType()),
+            T.StructField("min_seq", T.LongType()),
+            T.StructField("max_seq", T.LongType()),
+            T.StructField("min_key", T.BinaryType()),
+            T.StructField("max_key", T.BinaryType()),
+            T.StructField("stats_min", T.BinaryType()),
+            T.StructField("stats_max", T.BinaryType()),
+            T.StructField("null_counts", T.ArrayType(T.LongType())),
+            T.StructField("cl_name", T.StringType()),
+            T.StructField("cl_size", T.LongType()),
+            T.StructField("emb_idx", T.BinaryType()),
+            # spec index payload above file-index.in-manifest-threshold:
+            # written as a standalone <data-stem>.index beside the data
+            # file (JVM shape), manifest lists it in _EXTRA_FILES
+            T.StructField("extra_idx", T.StringType()),
+            # dynamic-bucket lakes: JSON of the group's rewritten HASH
+            # index meta (None on fixed-bucket/append writes and on
+            # groups with no new keys)
+            T.StructField("index_meta", T.StringType()),
+        ]
+    )
+
+
+def lake_group_dir(table_path: str, info, pvals: dict, bucket: int) -> str:
+    """``<table>/<k>=<v>/…/bucket-<b>`` — the directory of one
+    (partition, bucket) group; ``pvals`` holds logical values."""
+    import os
+
+    from paimon_python_spark.paimon_import import (
+        DEFAULT_PARTITION_NAME,
+        format_partition_segment,
+    )
+
+    default_name = info.options.get("partition.default-name", DEFAULT_PARTITION_NAME)
+    rel = [
+        f"{k}="
+        + format_partition_segment(
+            pvals[k], info.spark_schema[k].dataType, default_name
+        )
+        for k in info.partition_keys
+    ]
+    return os.path.join(table_path, *rel, f"bucket-{bucket}")
+
+
+def write_lake_group(
+    pdf: "pd.DataFrame",
+    table_path: str,
+    info,
+    fmt: str,
+    kv: bool,
+    seq_base: int = 0,
+    sort_cols: Optional[List[str]] = None,
+    changelog: bool = False,
+    file_prefix: str = "data",
+    sequence_field: Optional[str] = None,
+    dyn_old_files: Optional[dict] = None,
+    values: Optional["pa.Table"] = None,
+) -> List[dict]:
+    """The lake file writer: write ONE (partition, bucket) group as
+    spec data files in the lake's final layout and return their
+    per-file meta rows (:func:`_lake_meta_schema`). Every lake data
+    file goes through here — the builder's ``applyInPandas`` tasks
+    (:func:`_distributed_lake_write`: writes, compaction, overwrite)
+    and ``df.write.format("paimon_lake")`` tasks alike.
+
+    ``pdf`` carries the table's columns in the naive session-local
+    form ``applyInPandas`` delivers, plus ``__bucket`` (``kv``), an
+    optional ``__row_kind`` (0=+I, 1=-U, 2=+U, 3=-D) and an optional
+    ``__input_order`` (arrival order). ``kv=True`` writes Paimon
+    key-value files: ``_KEY_*`` system columns, per-row
+    ``_SEQUENCE_NUMBER`` from ``seq_base`` (or ``sequence_field``),
+    sorted by trimmed key — the level-0 LSM shape. ``kv=False`` writes
+    plain value files into ``bucket-0``. Files roll at the table's
+    target file size. ``dyn_old_files`` ({(part_json, bucket): index
+    file}) fuses dynamic-bucket index upkeep into the write: the
+    group's new key hashcodes (``__kn`` = 1 rows' ``__h``) extend its
+    bucket's HASH index file. ``values`` (an arrow table of the
+    table's columns, positionally aligned with ``pdf``'s index) supplies
+    the written values exactly, past pandas' NULL rules: a BIGINT
+    beside a NULL stays an int, a NaN stays apart from NULL."""
+    import json as _json
+    import os
+    import uuid
+
+    import pyarrow as pa
+
+    from paimon_python_spark.paimon_import import (
+        _value_stats_for,
+        _write_fixture_data_file,
+        encode_binary_row,
+        logical_value,
+    )
+    from paimon_python_spark.types import spark_type_to_pa
+
+    part_keys = list(info.partition_keys)
+    trimmed = [k for k in info.primary_keys if k not in part_keys] if kv else []
+    trimmed_types = [info.spark_schema[k].dataType for k in trimmed]
+    # file-index.bloom-filter.columns: per-file bloom bitmaps for
+    # equality file skipping, built over each group's batch and carried
+    # in the manifest entry's _EMBEDDED_FILE_INDEX slot (engine payload
+    # format — see _decode_embedded_blooms)
+    (
+        bloom_cols,
+        bloom_spec,
+        bloom_dtypes,
+        bitmap_cols,
+        bitmap_kinds,
+        bsi_cols,
+        bsi_kinds,
+    ) = _bloom_option_cols(info)
+    target_bytes = _target_file_size(info)
+
+    bucket = int(pdf["__bucket"].iloc[0]) if kv else 0
+    pvals = {
+        k: logical_value(pdf[k].iloc[0], info.spark_schema[k].dataType)
+        for k in part_keys
+    }
+    if trimmed:
+        if "__input_order" in pdf.columns:
+            # same-key events sequence in ARRIVAL order (see the
+            # __input_order comment in _distributed_lake_write)
+            ks = trimmed + ["__input_order"]
+        else:
+            # changelog-diff writers: one logical event per key; a
+            # full-compaction changelog carries (-U, +U) pairs and
+            # the -U (kind 1) must precede the +U (kind 2) in
+            # sequence order for streaming consumers
+            ks = trimmed + (
+                ["__row_kind"] if "__row_kind" in pdf.columns else []
+            )
+        pdf = pdf.sort_values(ks, kind="mergesort")
+    elif sort_cols:
+        # intra-file clustering order (sort compaction): file-level
+        # min/max don't care, but parquet page stats do
+        pdf = pdf.sort_values(sort_cols, kind="mergesort")
+    if values is not None:
+        values = values.take(pdf.index.to_numpy())
+    pdf = pdf.reset_index(drop=True)
+    n = len(pdf)
+
+    def column(name, dt):
+        if values is not None:
+            return values.column(name)
+        return pa.array(pdf[name], type=spark_type_to_pa(dt))
+
+    arrays = {}
+    if kv:
+        for k, t in zip(trimmed, trimmed_types):
+            arrays[f"_KEY_{k}"] = column(k, t)
+        if sequence_field is not None:
+            # Paimon's sequence.field: a USER column drives the
+            # sequence, so out-of-order CDC events merge by event
+            # time instead of arrival order (a stale update loses
+            # to the newer row already in the lake)
+            import datetime as _sdt
+
+            import pandas as pd
+
+            sv = pdf[sequence_field]
+            if len(sv) and isinstance(
+                sv.iloc[0], (_sdt.datetime, pd.Timestamp)
+            ):
+                seqs = [int(pd.Timestamp(x).value // 1_000_000) for x in sv]
+            else:
+                seqs = [int(x) for x in sv]
+            arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
+        else:
+            seqs = list(range(seq_base, seq_base + n))
+            arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
+        arrays["_VALUE_KIND"] = pa.array(
+            [int(x) for x in pdf["__row_kind"]]
+            if "__row_kind" in pdf.columns
+            else [0] * n,
+            pa.int32(),
+        )
+    for f in info.spark_schema.fields:
+        arrays[f.name] = column(f.name, f.dataType)
+    table = pa.table(arrays)
+    ddir = lake_group_dir(table_path, info, pvals, bucket)
+    os.makedirs(ddir, exist_ok=True)
+    part_json = _json.dumps(pvals)
+    index_meta = None
+    if dyn_old_files is not None and "__kn" in pdf.columns:
+        # dynamic-bucket index upkeep, fused into the write task:
+        # this group's NEW key hashcodes extend its bucket's index
+        # file (a hash already present stays — a collision with an
+        # existing key routes here by design, same as real Paimon)
+        newh = pdf.loc[pdf["__kn"] == 1, "__h"]
+        if len(newh):
+            from paimon_python_spark.dynamic_bucket import union_hash_index
+
+            (meta,) = union_hash_index(
+                table_path,
+                part_keys,
+                {(part_json, bucket): newh.to_numpy()},
+                dyn_old_files,
+            )
+            index_meta = _json.dumps(meta)
+
+    if n == 0:
+        return []
+    # target-file-size ROLLING (real Paimon's rolling writer): a
+    # group whose Arrow batch exceeds the target splits into
+    # consecutive row chunks, one data file each — a partition's
+    # compaction at scale must not fold into one multi-GB file.
+    # Chunks preserve the sort above, so per-file key ranges stay
+    # disjoint and per-file min/max stats stay tight.
+    n_files = 1
+    if n > 1 and target_bytes and table.nbytes > target_bytes:
+        n_files = min(n, -(-table.nbytes // target_bytes))
+    rows_per = -(-n // n_files)
+    out_rows = []
+    for ci in range(n_files):
+        lo = ci * rows_per
+        hi = min(n, lo + rows_per)
+        if lo >= hi:
+            continue
+        sub_tbl = table.slice(lo, hi - lo)
+        sub_pdf = pdf.iloc[lo:hi]
+        name = f"{file_prefix}-{uuid.uuid4()}-{ci}.{fmt}"
+        fpath = os.path.join(ddir, name)
+        _write_fixture_data_file(sub_tbl, fpath, fmt)
+        cl_name, cl_size = None, 0
+        if changelog:
+            # changelog-producer=input: the commit's input rows
+            # double as the changelog; a SEPARATE physical file
+            # (real Paimon's shape) so compaction can fold the data
+            # file while the changelog stays for streaming readers.
+            # Executor-local byte copy — same task, no extra pass.
+            import shutil as _shutil
+
+            cl_name = f"changelog-{uuid.uuid4()}-{ci}.{fmt}"
+            _shutil.copyfile(fpath, os.path.join(ddir, cl_name))
+            cl_size = os.path.getsize(os.path.join(ddir, cl_name))
+        if trimmed:
+            kmin = encode_binary_row(
+                [
+                    logical_value(sub_pdf[k].iloc[0], t)
+                    for k, t in zip(trimmed, trimmed_types)
+                ],
+                trimmed_types,
+            )
+            kmax = encode_binary_row(
+                [
+                    logical_value(sub_pdf[k].iloc[-1], t)
+                    for k, t in zip(trimmed, trimmed_types)
+                ],
+                trimmed_types,
+            )
+        else:
+            kmin = kmax = b""
+        stats = _value_stats_for(sub_tbl, info)
+        emb = _embedded_index_payload(
+            sub_pdf,
+            bloom_cols,
+            bloom_spec,
+            bloom_dtypes,
+            bitmap_cols,
+            bitmap_kinds,
+            bsi_cols,
+            bsi_kinds,
+        )
+        emb, extra_idx = _split_standalone_index(emb, info, ddir, name)
+        sub_seqs = seqs[lo:hi] if kv else None
+        out_rows.append(
+            {
+                "file_name": name,
+                "part_json": part_json,
+                "bucket": bucket,
+                "rows": hi - lo,
+                "size": os.path.getsize(fpath),
+                "min_seq": (
+                    (min(sub_seqs) if sub_seqs else seq_base) if kv else 0
+                ),
+                "max_seq": (
+                    (max(sub_seqs) if sub_seqs else seq_base)
+                    if kv
+                    else hi - lo
+                ),
+                "min_key": kmin,
+                "max_key": kmax,
+                "stats_min": stats["_MIN_VALUES"],
+                "stats_max": stats["_MAX_VALUES"],
+                "null_counts": stats["_NULL_COUNTS"],
+                "cl_name": cl_name,
+                "cl_size": cl_size,
+                "emb_idx": emb,
+                "extra_idx": extra_idx,
+                # the group's rewritten HASH index rides the first
+                # chunk's row (one index file per group, not per file)
+                "index_meta": index_meta if ci == 0 else None,
+            }
+        )
+    return out_rows
+
+
+def lake_add_entry(
+    info, r, num_buckets: int, level: int = 0, changelog: bool = False
+) -> dict:
+    """Manifest ADD entry for one :func:`write_lake_group` meta row
+    (a dict; ``changelog=True`` adds the row's changelog file instead
+    of its data file). Optional fields (keys, stats, file indexes) may
+    be absent. With :func:`lake_delete_entry`, the one way a lake
+    commit here builds a data-file manifest entry."""
+    import json as _json
+
+    from paimon_python_spark.paimon_import import (
+        _spec_file_meta,
+        encode_binary_row,
+    )
+
+    part_keys = list(info.partition_keys)
+    pj = _json.loads(r["part_json"])
+    name, size = (
+        (r["cl_name"], r["cl_size"]) if changelog else (r["file_name"], r["size"])
+    )
+    extra = None if changelog else r.get("extra_idx")
+    return {
+        "_VERSION": 2,
+        "_KIND": 0,
+        "_PARTITION": encode_binary_row(
+            [pj[k] for k in part_keys],
+            [info.spark_schema[k].dataType for k in part_keys],
+        ),
+        "_BUCKET": int(r["bucket"]),
+        "_TOTAL_BUCKETS": num_buckets,
+        "_FILE": _spec_file_meta(
+            name,
+            int(size),
+            int(r["rows"]),
+            schema_id=info.id,
+            value_stats={
+                "_MIN_VALUES": bytes(r.get("stats_min") or b""),
+                "_MAX_VALUES": bytes(r.get("stats_max") or b""),
+                "_NULL_COUNTS": (
+                    list(r["null_counts"])
+                    if r.get("null_counts") is not None
+                    else None
+                ),
+            },
+            min_key=bytes(r.get("min_key") or b""),
+            max_key=bytes(r.get("max_key") or b""),
+            min_seq=int(r["min_seq"]),
+            max_seq=int(r["max_seq"]),
+            level=level,
+            embedded_index=(
+                bytes(r["emb_idx"]) if r.get("emb_idx") is not None else None
+            ),
+            extra_files=[extra] if extra is not None else None,
+        ),
+    }
+
+
+def lake_delete_entry(info, e: PaimonFileEntry) -> dict:
+    """Manifest DELETE entry removing the live file ``e``."""
+    from paimon_python_spark.paimon_import import (
+        _spec_file_meta,
+        encode_binary_row,
+    )
+
+    part_keys = list(info.partition_keys)
+    return {
+        "_VERSION": 2,
+        "_KIND": 1,
+        "_PARTITION": encode_binary_row(
+            [e.partition[k] for k in part_keys],
+            [info.spark_schema[k].dataType for k in part_keys],
+        ),
+        "_BUCKET": e.bucket,
+        "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
+        "_FILE": _spec_file_meta(
+            e.file_name,
+            e.file_size,
+            e.row_count,
+            schema_id=e.schema_id,
+            max_seq=e.max_seq,
+            level=e.level,
+        ),
+    }
+
+
+def _surviving_dv_marks(table_path: str, removed: set) -> dict:
+    """{data file: deleted positions} of the DV marks on files NOT in
+    ``removed`` — marks on removed files drop with their rows, marks on
+    kept files must re-commit in the new index manifest."""
+    import numpy as np
+
+    from paimon_python_spark.paimon_import import read_dv_index_entry
+
+    surviving: dict = {}
+    for r in plan_paimon_dv(table_path):
+        if r.data_file_name not in removed:
+            pos = read_dv_index_entry(r.index_path, r.offset, r.length)
+            cur = surviving.get(r.data_file_name)
+            surviving[r.data_file_name] = (
+                np.union1d(cur, pos) if cur is not None else pos
+            )
+    return surviving
+
+
 def _distributed_lake_write(
     table_path: str,
     info,
@@ -3025,48 +3415,22 @@ def _distributed_lake_write(
     dyn_fresh: bool = False,
 ):
     """EXECUTOR-SIDE data-file write into a real lake's final layout,
-    one file per (partition, bucket) group via ``applyInPandas`` —
-    Arrow-batched, no driver materialization, no staging-dir move.
-    ``kv=True`` writes Paimon key-value files (``_KEY_*`` system
-    columns, per-row ``_SEQUENCE_NUMBER`` from ``seq_base``, sorted by
-    trimmed key — the level-0 LSM shape); ``kv=False`` groups by
-    (partition, input task) and writes plain value files into
-    ``bucket-0`` (append tables have no bucket routing). Only KB-scale
-    per-file metadata returns to the driver. Returns (manifest ADD
-    entries, total rows)."""
+    the builder's front end to :func:`write_lake_group`: casts ``df``
+    to the table schema, routes rows to (partition, bucket) groups
+    (``kv``) or (partition, input task) groups (append tables have no
+    bucket routing), and runs the group writer once per group via
+    ``applyInPandas`` — Arrow-batched, no driver materialization, no
+    staging-dir move. Only KB-scale per-file metadata returns to the
+    driver, which turns it into manifest ADD entries with
+    :func:`lake_add_entry`. Returns (manifest ADD entries, total
+    rows), plus the changelog entries when ``changelog``."""
     import json as _json
 
     import pandas as pd
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from paimon_python_spark.paimon_import import (
-        DEFAULT_PARTITION_NAME,
-        _spec_file_meta,
-        encode_binary_row,
-    )
 
     part_keys = list(info.partition_keys)
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
     trimmed = [k for k in info.primary_keys if k not in part_keys] if kv else []
-    trimmed_types = [info.spark_schema[k].dataType for k in trimmed]
-    default_name = info.options.get("partition.default-name", DEFAULT_PARTITION_NAME)
-    value_fields = info.spark_schema
-    schema_id = info.id
-    # file-index.bloom-filter.columns: per-file bloom bitmaps for
-    # equality file skipping, built EXECUTOR-SIDE over each group's
-    # batch and carried in the manifest entry's _EMBEDDED_FILE_INDEX
-    # slot (engine payload format — see _decode_embedded_blooms)
-    (
-        bloom_cols,
-        bloom_spec,
-        bloom_dtypes,
-        bitmap_cols,
-        bitmap_kinds,
-        bsi_cols,
-        bsi_kinds,
-    ) = _bloom_option_cols(info)
-    target_bytes = _target_file_size(info)
 
     from paimon_python_spark._localdf import cast_select_sql, quote_ident
 
@@ -3154,28 +3518,17 @@ def _distributed_lake_write(
                     if m["file"]
                 }
         else:
-            # JVM-native routing when the key types allow it: the
-            # BinaryRow murmur as a single parsed expression keeps the
-            # pre-shuffle map stage whole-stage-codegen — the pandas-UDF
-            # form cost a Python-worker round trip (~100-140 ms profiled)
-            # in EVERY commit's map stage just to route rows (guide §4.1)
+            # JVM-native routing: the BinaryRow murmur as a single
+            # parsed expression keeps the pre-shuffle map stage
+            # whole-stage-codegen — a pandas UDF cost a Python-worker
+            # round trip (~100-140 ms profiled) in EVERY commit's map
+            # stage just to route rows (guide §4.1)
             from paimon_python_spark.paimon_import import (
                 binary_row_bucket_expr,
             )
 
             _bexpr = binary_row_bucket_expr(bcols, key_types, num_buckets)
-            if _bexpr is not None:
-                sdf = sdf.withColumn("__bucket", F.expr(_bexpr))
-            else:
-                # no type hints on the bucket fn: the module's postponed
-                # annotations would reach pandas_udf as unresolvable
-                # strings
-                _bucket_of = F.pandas_udf(
-                    _make_lake_bucket_fn(key_types, num_buckets), "int"
-                )
-                sdf = sdf.withColumn(
-                    "__bucket", _bucket_of(*[F.col(c) for c in bcols])
-                )
+            sdf = sdf.withColumn("__bucket", F.expr(_bexpr))
         gcols = part_keys + ["__bucket"]
     else:
         # no bucket routing on append tables: keep the input task
@@ -3188,260 +3541,23 @@ def _distributed_lake_write(
         )
         gcols = part_keys + ["__task"]
 
-    meta_schema = T.StructType(
-        [
-            T.StructField("file_name", T.StringType()),
-            T.StructField("part_json", T.StringType()),
-            T.StructField("bucket", T.IntegerType()),
-            T.StructField("rows", T.LongType()),
-            T.StructField("size", T.LongType()),
-            T.StructField("min_seq", T.LongType()),
-            T.StructField("max_seq", T.LongType()),
-            T.StructField("min_key", T.BinaryType()),
-            T.StructField("max_key", T.BinaryType()),
-            T.StructField("stats_min", T.BinaryType()),
-            T.StructField("stats_max", T.BinaryType()),
-            T.StructField("null_counts", T.ArrayType(T.LongType())),
-            T.StructField("cl_name", T.StringType()),
-            T.StructField("cl_size", T.LongType()),
-            T.StructField("emb_idx", T.BinaryType()),
-            # spec index payload above file-index.in-manifest-threshold:
-            # written as a standalone <data-stem>.index beside the data
-            # file (JVM shape), manifest lists it in _EXTRA_FILES
-            T.StructField("extra_idx", T.StringType()),
-            # dynamic-bucket lakes: the group's rewritten HASH index
-            # file (None on fixed-bucket/append writes and on groups
-            # with no new keys)
-            T.StructField("idx_file", T.StringType()),
-            T.StructField("idx_size", T.LongType()),
-            T.StructField("idx_rows", T.LongType()),
-        ]
-    )
-    schema_info = info
+    meta_schema = _lake_meta_schema()
 
     def _write_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import datetime
-        import os
-        import uuid
-
-        import pyarrow as pa
-        from pyspark.sql import types as T
-
-        from paimon_python_spark.paimon_import import (
-            _value_stats_for,
-            _write_fixture_data_file,
-            encode_binary_row,
-            format_partition_segment,
+        rows = write_lake_group(
+            pdf,
+            table_path,
+            info,
+            fmt,
+            kv,
+            seq_base=seq_base,
+            sort_cols=sort_cols,
+            changelog=changelog,
+            file_prefix=file_prefix,
+            sequence_field=sequence_field,
+            dyn_old_files=dyn_old_files,
         )
-        from paimon_python_spark.types import spark_type_to_pa
-
-        epoch = datetime.date(1970, 1, 1)
-
-        def logical(v, dt):
-            if v is None or (not isinstance(v, (bytes, str)) and pd.isna(v)):
-                return None
-            if hasattr(v, "item"):
-                v = v.item()
-            if isinstance(dt, T.DateType):
-                if isinstance(v, datetime.datetime):
-                    v = v.date()
-                if isinstance(v, datetime.date):
-                    return (v - epoch).days
-            return v
-
-        bucket = int(pdf["__bucket"].iloc[0]) if kv else 0
-        pvals = {
-            k: logical(pdf[k].iloc[0], dt) for k, dt in zip(part_keys, part_types)
-        }
-        if trimmed:
-            if "__input_order" in pdf.columns:
-                # same-key events sequence in ARRIVAL order (see the
-                # __input_order comment above)
-                ks = trimmed + ["__input_order"]
-            else:
-                # changelog-diff writers: one logical event per key; a
-                # full-compaction changelog carries (-U, +U) pairs and
-                # the -U (kind 1) must precede the +U (kind 2) in
-                # sequence order for streaming consumers
-                ks = trimmed + (
-                    ["__row_kind"] if "__row_kind" in pdf.columns else []
-                )
-            pdf = pdf.sort_values(ks, kind="mergesort")
-        elif sort_cols:
-            # intra-file clustering order (sort compaction): file-level
-            # min/max don't care, but parquet page stats do
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        pdf = pdf.reset_index(drop=True)
-        n = len(pdf)
-        arrays = {}
-        if kv:
-            for k, t in zip(trimmed, trimmed_types):
-                arrays[f"_KEY_{k}"] = pa.array(pdf[k], type=spark_type_to_pa(t))
-            if sequence_field is not None:
-                # Paimon's sequence.field: a USER column drives the
-                # sequence, so out-of-order CDC events merge by event
-                # time instead of arrival order (a stale update loses
-                # to the newer row already in the lake)
-                import datetime as _sdt
-
-                sv = pdf[sequence_field]
-                if len(sv) and isinstance(
-                    sv.iloc[0], (_sdt.datetime, pd.Timestamp)
-                ):
-                    seqs = [int(pd.Timestamp(x).value // 1_000_000) for x in sv]
-                else:
-                    seqs = [int(x) for x in sv]
-                arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
-            else:
-                seqs = list(range(seq_base, seq_base + n))
-                arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
-            arrays["_VALUE_KIND"] = pa.array(
-                [int(x) for x in pdf["__row_kind"]]
-                if "__row_kind" in pdf.columns
-                else [0] * n,
-                pa.int32(),
-            )
-        for f in value_fields.fields:
-            arrays[f.name] = pa.array(pdf[f.name], type=spark_type_to_pa(f.dataType))
-        table = pa.table(arrays)
-        rel = [
-            f"{k}={format_partition_segment(pvals[k], dt, default_name)}"
-            for k, dt in zip(part_keys, part_types)
-        ]
-        ddir = os.path.join(table_path, *rel, f"bucket-{bucket}")
-        os.makedirs(ddir, exist_ok=True)
-        idx_file, idx_size, idx_rows = None, 0, 0
-        if dyn_old_files is not None and "__kn" in pdf.columns:
-            # dynamic-bucket index upkeep, fused into the write task:
-            # this group's NEW key hashcodes extend its bucket's index
-            # file (a hash already present stays — a collision with an
-            # existing key routes here by design, same as real Paimon)
-            import numpy as np
-
-            from paimon_python_spark.dynamic_bucket import (
-                read_hash_index_file,
-                write_hash_index_file,
-            )
-
-            newh = pdf.loc[pdf["__kn"] == 1, "__h"]
-            if len(newh):
-                new = np.unique(newh.to_numpy(dtype=np.int32))
-                old_name = dyn_old_files.get((_json.dumps(pvals), bucket))
-                if old_name is not None:
-                    old = read_hash_index_file(
-                        os.path.join(table_path, "index", old_name)
-                    )
-                    merged = np.concatenate([old, np.setdiff1d(new, old)])
-                else:
-                    merged = new
-                idx_file = f"index-{uuid.uuid4().hex}-0"
-                os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
-                idx_size = write_hash_index_file(
-                    os.path.join(table_path, "index", idx_file), merged
-                )
-                idx_rows = len(merged)
-
-        if n == 0:
-            return pd.DataFrame(
-                columns=[f.name for f in meta_schema.fields]
-            )
-        # target-file-size ROLLING (real Paimon's rolling writer): a
-        # group whose Arrow batch exceeds the target splits into
-        # consecutive row chunks, one data file each — a partition's
-        # compaction at scale must not fold into one multi-GB file.
-        # Chunks preserve the sort above, so per-file key ranges stay
-        # disjoint and per-file min/max stats stay tight.
-        n_files = 1
-        if n > 1 and target_bytes and table.nbytes > target_bytes:
-            n_files = min(n, -(-table.nbytes // target_bytes))
-        rows_per = -(-n // n_files)
-        out_rows = []
-        for ci in range(n_files):
-            lo = ci * rows_per
-            hi = min(n, lo + rows_per)
-            if lo >= hi:
-                continue
-            sub_tbl = table.slice(lo, hi - lo)
-            sub_pdf = pdf.iloc[lo:hi]
-            name = f"{file_prefix}-{uuid.uuid4()}-{ci}.{fmt}"
-            fpath = os.path.join(ddir, name)
-            _write_fixture_data_file(sub_tbl, fpath, fmt)
-            cl_name, cl_size = None, 0
-            if changelog:
-                # changelog-producer=input: the commit's input rows
-                # double as the changelog; a SEPARATE physical file
-                # (real Paimon's shape) so compaction can fold the data
-                # file while the changelog stays for streaming readers.
-                # Executor-local byte copy — same task, no extra pass.
-                import shutil as _shutil
-
-                cl_name = f"changelog-{uuid.uuid4()}-{ci}.{fmt}"
-                _shutil.copyfile(fpath, os.path.join(ddir, cl_name))
-                cl_size = os.path.getsize(os.path.join(ddir, cl_name))
-            if trimmed:
-                kmin = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[0], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-                kmax = encode_binary_row(
-                    [
-                        logical(sub_pdf[k].iloc[-1], t)
-                        for k, t in zip(trimmed, trimmed_types)
-                    ],
-                    trimmed_types,
-                )
-            else:
-                kmin = kmax = b""
-            stats = _value_stats_for(sub_tbl, schema_info)
-            emb = _embedded_index_payload(
-                sub_pdf,
-                bloom_cols,
-                bloom_spec,
-                bloom_dtypes,
-                bitmap_cols,
-                bitmap_kinds,
-                bsi_cols,
-                bsi_kinds,
-            )
-            emb, extra_idx = _split_standalone_index(
-                emb, schema_info, ddir, name
-            )
-            sub_seqs = seqs[lo:hi] if kv else None
-            out_rows.append(
-                {
-                    "file_name": name,
-                    "part_json": _json.dumps(pvals),
-                    "bucket": bucket,
-                    "rows": hi - lo,
-                    "size": os.path.getsize(fpath),
-                    "min_seq": (
-                        (min(sub_seqs) if sub_seqs else seq_base) if kv else 0
-                    ),
-                    "max_seq": (
-                        (max(sub_seqs) if sub_seqs else seq_base)
-                        if kv
-                        else hi - lo
-                    ),
-                    "min_key": kmin,
-                    "max_key": kmax,
-                    "stats_min": stats["_MIN_VALUES"],
-                    "stats_max": stats["_MAX_VALUES"],
-                    "null_counts": stats["_NULL_COUNTS"],
-                    "cl_name": cl_name,
-                    "cl_size": cl_size,
-                    "emb_idx": emb,
-                    "extra_idx": extra_idx,
-                    # the group's rewritten HASH index rides the first
-                    # chunk's row (one index file per group, not per file)
-                    "idx_file": idx_file if ci == 0 else None,
-                    "idx_size": idx_size if ci == 0 else 0,
-                    "idx_rows": idx_rows if ci == 0 else 0,
-                }
-            )
-        return pd.DataFrame(out_rows)
+        return pd.DataFrame(rows, columns=meta_schema.fieldNames())
 
     # pin the group-write's width: the routed rows shuffle only KBs at
     # gate scale, so AQE's byte-coalescing would fold every (partition,
@@ -3461,71 +3577,23 @@ def _distributed_lake_write(
     _w = pinned_width(sdf.sparkSession, max_groups=_bound)
     if _w > 1:
         sdf = sdf.repartition(_w, *gcols)
-    meta = sdf.groupBy(*gcols).applyInPandas(_write_group, meta_schema).collect()
+    meta = [
+        r.asDict()
+        for r in sdf.groupBy(*gcols)
+        .applyInPandas(_write_group, meta_schema)
+        .collect()
+    ]
     if dyn_assigner is not None:
         dyn_assigner.release()
     if dyn_old_files is not None:
-        for r in meta:
-            if r["idx_file"]:
-                pv = _json.loads(r["part_json"])
-                dyn_index_out.append(
-                    {
-                        "part_json": r["part_json"],
-                        "part_values": [pv[k] for k in part_keys],
-                        "bucket": int(r["bucket"]),
-                        "file": r["idx_file"],
-                        "size": int(r["idx_size"]),
-                        "rows": int(r["idx_rows"]),
-                    }
-                )
-
-    def _entry(r, file_name, file_size, with_extra=False):
-        pj = _json.loads(r["part_json"])
-        return {
-            "_VERSION": 2,
-            "_KIND": 0,
-            "_PARTITION": encode_binary_row(
-                [pj[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": int(r["bucket"]),
-            "_TOTAL_BUCKETS": num_buckets,
-            "_FILE": _spec_file_meta(
-                file_name,
-                int(file_size),
-                int(r["rows"]),
-                schema_id=schema_id,
-                value_stats={
-                    "_MIN_VALUES": bytes(r["stats_min"] or b""),
-                    "_MAX_VALUES": bytes(r["stats_max"] or b""),
-                    "_NULL_COUNTS": (
-                        list(r["null_counts"])
-                        if r["null_counts"] is not None
-                        else None
-                    ),
-                },
-                min_key=bytes(r["min_key"] or b""),
-                max_key=bytes(r["max_key"] or b""),
-                min_seq=int(r["min_seq"]),
-                max_seq=int(r["max_seq"]),
-                level=level,
-                embedded_index=(
-                    bytes(r["emb_idx"]) if r["emb_idx"] is not None else None
-                ),
-                extra_files=(
-                    [r["extra_idx"]]
-                    if with_extra and r["extra_idx"] is not None
-                    else None
-                ),
-            ),
-        }
-
-    man_entries = [
-        _entry(r, r["file_name"], r["size"], with_extra=True) for r in meta
-    ]
+        dyn_index_out.extend(
+            _json.loads(r["index_meta"]) for r in meta if r["index_meta"]
+        )
+    man_entries = [lake_add_entry(info, r, num_buckets, level) for r in meta]
     n_rows = sum(int(r["rows"]) for r in meta)
     if changelog:
         cl_entries = [
-            _entry(r, r["cl_name"], r["cl_size"])
+            lake_add_entry(info, r, num_buckets, level, changelog=True)
             for r in meta
             if r["cl_name"] is not None
         ]
@@ -3615,11 +3683,7 @@ def write_lake_pk_append(
                 "but no HASH index — key routing would be unsound; run "
                 "compact_lake() to rebuild the index from the merged state"
             )
-    bucket_cols = [
-        c.strip()
-        for c in info.options.get("bucket-key", "").split(",")
-        if c.strip()
-    ] or None
+    bucket_cols = _check_bucket_key(info)
     rk_field = info.options.get("rowkind.field")
     if row_kind_col is None and rk_field:
         # rowkind.field table option (Paimon's RowKindGenerator): the
@@ -3735,9 +3799,7 @@ def write_lake_pk_append(
             # only those file groups — a 10-row CDC commit into a
             # 100-TB lake merges a handful of buckets, not the lake.
             part_keys_l = list(info.partition_keys)
-            bcols_l = list(bucket_cols or [
-                k for k in info.primary_keys if k not in part_keys_l
-            ])
+            bcols_l = bucket_cols
             key_types_l = [info.spark_schema[c].dataType for c in bcols_l]
             # cast to the DECLARED types first — the write path casts
             # before routing, and the collected partition values must
@@ -3755,26 +3817,16 @@ def write_lake_pk_append(
                 <= _LOOKUP_POINT_KEY_CAP
             )
             probe_cols = list(dict.fromkeys(part_keys_l + keys + bcols_l))
-            if dynamic:
-                bfn = None
-            else:
+            if not dynamic:
                 # JVM-native bucket routing for the probe (same
-                # expression as the write path; pandas-UDF fallback
-                # only for unsupported key types)
+                # expression as the write path)
                 from paimon_python_spark.paimon_import import (
                     binary_row_bucket_expr,
                 )
 
-                _pexpr = binary_row_bucket_expr(
-                    bcols_l, key_types_l, num_buckets
+                bucket_col = F.expr(
+                    binary_row_bucket_expr(bcols_l, key_types_l, num_buckets)
                 )
-                if _pexpr is not None:
-                    _pcol = F.expr(_pexpr)
-                    bfn = lambda *_cols: _pcol  # noqa: E731
-                else:
-                    bfn = F.pandas_udf(
-                        _make_lake_bucket_fn(key_types_l, num_buckets), "int"
-                    )
             typed = []
             if small:
                 typed_keys = batch.select(
@@ -3801,7 +3853,7 @@ def write_lake_pk_append(
                 else:
                     probe_assigner = None
                     typed_keys = typed_keys.withColumn(
-                        "__b", bfn(*[F.col(c) for c in bcols_l])
+                        "__b", bucket_col
                     ).withColumn("__kn", F.lit(0))
                 typed = typed_keys.limit(_LOOKUP_POINT_KEY_CAP + 1).collect()
                 if probe_assigner is not None:
@@ -3867,9 +3919,7 @@ def write_lake_pk_append(
                     )
                 else:
                     probe_assigner = None
-                    routed = narrow.withColumn(
-                        "__b", bfn(*[F.col(c) for c in bcols_l])
-                    )
+                    routed = narrow.withColumn("__b", bucket_col)
                 touched_rows = (
                     routed.select(*part_keys_l, "__b").distinct().collect()
                 )
@@ -4037,6 +4087,18 @@ def create_lake_table(
     for k in pks + parts:
         if k not in names:
             raise ValueError(f"create_lake_table: key column {k!r} not in schema")
+    bucket_cols = _lake_bucket_cols(options or {}, pks, parts) if pks else []
+    if bucket_cols:
+        # refuse an unhashable bucket key now, not in the first write
+        from paimon_python_spark.paimon_import import (
+            binary_row_hash_expr,
+            parse_paimon_type,
+        )
+
+        types = dict(fields)
+        binary_row_hash_expr(
+            bucket_cols, [parse_paimon_type(types[c])[0] for c in bucket_cols]
+        )
     if options:
         from paimon_python_spark.tags import validate_auto_tag_options
 
@@ -5022,10 +5084,10 @@ def fast_forward_lake_branch(table_path: str, name: str) -> int:
     snap["deltaRecordCount"] = (
         int(head.get("totalRecordCount") or 0) - prev_total
     )
+    from paimon_python_spark.metadata import _exclusive_write
+
     spath = os.path.join(table_path, "snapshot", f"snapshot-{new_id}")
-    fd = os.open(spath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-    with os.fdopen(fd, "w") as f:
-        json.dump(snap, f)
+    _exclusive_write(spath, json.dumps(snap))
     write_hint_atomic(os.path.join(table_path, "snapshot", "LATEST"), new_id)
     return new_id
 
@@ -5303,10 +5365,7 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
     nothing matched — real Paimon's drop of a missing partition is a
     no-op, not an error)."""
     from paimon_python_spark.paimon_import import (
-        _spec_file_meta,
-        encode_binary_row,
         plan_paimon_files,
-        read_dv_index_entry,
         read_paimon_snapshot,
     )
 
@@ -5333,40 +5392,10 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
             "files_dropped": 0,
             "rows_dropped": 0,
         }
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
-    delete_entries = [
-        {
-            "_VERSION": 2,
-            "_KIND": 1,
-            "_PARTITION": encode_binary_row(
-                [e.partition[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": e.bucket,
-            "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-            "_FILE": _spec_file_meta(
-                e.file_name,
-                e.file_size,
-                e.row_count,
-                schema_id=e.schema_id,
-                max_seq=e.max_seq,
-                level=e.level,
-            ),
-        }
-        for e in doomed
-    ]
+    delete_entries = [lake_delete_entry(info, e) for e in doomed]
     # DV marks on surviving files re-commit; dropped files' marks go
     # (same survival rule as partition-scoped compaction)
-    dropped_names = {e.file_name for e in doomed}
-    surviving: dict = {}
-    for r in plan_paimon_dv(table_path):
-        if r.data_file_name not in dropped_names:
-            import numpy as _np
-
-            pos = read_dv_index_entry(r.index_path, r.offset, r.length)
-            cur = surviving.get(r.data_file_name)
-            surviving[r.data_file_name] = (
-                _np.union1d(cur, pos) if cur is not None else pos
-            )
+    surviving = _surviving_dv_marks(table_path, {e.file_name for e in doomed})
     im_name = (
         _write_dv_index_manifest(table_path, info, surviving, before)
         if surviving
@@ -5691,13 +5720,7 @@ def compact_lake(
     bit-interleave (operators/clustering.py); the only full-data cost
     is the one ``repartitionByRange`` shuffle a global re-cluster
     fundamentally requires."""
-    from paimon_python_spark.paimon_import import (
-        _spec_file_meta,
-        encode_binary_row,
-        plan_paimon_dv,
-        plan_paimon_files,
-        read_dv_index_entry,
-    )
+    from paimon_python_spark.paimon_import import plan_paimon_files
 
     info = read_paimon_schema(table_path)
     if order_by:
@@ -5719,7 +5742,6 @@ def compact_lake(
     if fmt not in ("parquet", "orc", "avro"):
         raise NotImplementedError(f"compact_lake: file.format={fmt!r} not supported")
     part_keys = list(info.partition_keys)
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
 
     if partition_filter is not None:
         ppred = partition_filter.keep_only_fields(set(part_keys))
@@ -5768,11 +5790,7 @@ def compact_lake(
         # key is already in the HASH index, so the assigner routes each
         # merged row straight back to its own bucket (no new entries)
         dyn_out = [] if num_buckets < 1 else None
-        bucket_cols = [
-            c.strip()
-            for c in info.options.get("bucket-key", "").split(",")
-            if c.strip()
-        ] or None
+        bucket_cols = _check_bucket_key(info)
         max_level = int(info.options.get("num-levels", "6")) - 1
         seq_base = max((e.max_seq for e in before), default=-1) + 1
         # changelog-producer=full-compaction: diff the merged state
@@ -5855,40 +5873,11 @@ def compact_lake(
             table_path, info, df, fmt, kv=False, single_file_per_group=True
         )
 
-    delete_entries = [
-        {
-            "_VERSION": 2,
-            "_KIND": 1,
-            "_PARTITION": encode_binary_row(
-                [e.partition[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": e.bucket,
-            "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-            "_FILE": _spec_file_meta(
-                e.file_name,
-                e.file_size,
-                e.row_count,
-                schema_id=e.schema_id,
-                max_seq=e.max_seq,
-                level=e.level,
-            ),
-        }
-        for e in before
-    ]
+    delete_entries = [lake_delete_entry(info, e) for e in before]
     # DV marks on UNTOUCHED files must survive a scoped compaction:
     # re-commit them in a fresh index manifest (rewritten files' marks
     # drop — those rows are physically gone from the new bytes)
-    rewritten = {e.file_name for e in before}
-    surviving: dict = {}
-    for r in plan_paimon_dv(table_path):
-        if r.data_file_name not in rewritten:
-            import numpy as _np
-
-            pos = read_dv_index_entry(r.index_path, r.offset, r.length)
-            cur = surviving.get(r.data_file_name)
-            surviving[r.data_file_name] = (
-                _np.union1d(cur, pos) if cur is not None else pos
-            )
+    surviving = _surviving_dv_marks(table_path, {e.file_name for e in before})
     im_name = (
         _write_dv_index_manifest(
             table_path,
@@ -6077,11 +6066,7 @@ def overwrite_lake(table_path: str, df) -> int:
     key-value files with a fresh sequence range (an overwrite is still
     an LSM table — later appends must win); append lakes write one file
     per (partition, task). Returns the new snapshot id."""
-    from paimon_python_spark.paimon_import import (
-        _spec_file_meta,
-        encode_binary_row,
-        plan_paimon_files,
-    )
+    from paimon_python_spark.paimon_import import plan_paimon_files
 
     info = read_paimon_schema(table_path)
     fmt = info.options.get("file.format", "parquet")
@@ -6089,7 +6074,6 @@ def overwrite_lake(table_path: str, df) -> int:
         raise NotImplementedError(f"overwrite_lake: file.format={fmt!r} not supported")
     before = plan_paimon_files(table_path)
     part_keys = list(info.partition_keys)
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
     dyn_out: Optional[list] = None
     if info.primary_keys:
         num_buckets = int(info.options.get("bucket", "-1"))
@@ -6108,11 +6092,7 @@ def overwrite_lake(table_path: str, df) -> int:
             from paimon_python_spark.dynamic_bucket import arrival_dedup
 
             df = arrival_dedup(df, list(info.primary_keys)).drop("__kind")
-        bucket_cols = [
-            c.strip()
-            for c in info.options.get("bucket-key", "").split(",")
-            if c.strip()
-        ] or None
+        bucket_cols = _check_bucket_key(info)
         seq_base = max((e.max_seq for e in before), default=-1) + 1
         add_entries, n_rows = _distributed_lake_write(
             table_path,
@@ -6130,26 +6110,7 @@ def overwrite_lake(table_path: str, df) -> int:
         add_entries, n_rows = _distributed_lake_write(
             table_path, info, df, fmt, kv=False
         )
-    delete_entries = [
-        {
-            "_VERSION": 2,
-            "_KIND": 1,
-            "_PARTITION": encode_binary_row(
-                [e.partition[k] for k in part_keys], part_types
-            ),
-            "_BUCKET": e.bucket,
-            "_TOTAL_BUCKETS": int(info.options.get("bucket", "1")),
-            "_FILE": _spec_file_meta(
-                e.file_name,
-                e.file_size,
-                e.row_count,
-                schema_id=e.schema_id,
-                max_seq=e.max_seq,
-                level=e.level,
-            ),
-        }
-        for e in before
-    ]
+    delete_entries = [lake_delete_entry(info, e) for e in before]
     index_manifest = None
     if dyn_out:
         # the overwrite's own key→bucket assignments are the entire
@@ -6531,6 +6492,7 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
 
     im_name = _write_dv_index_manifest(table_path, info, marked, entries)
     tag = uuid.uuid4().hex[:12]
+    from paimon_python_spark.metadata import SnapshotConflictError, _exclusive_write
     from paimon_python_spark.paimon_import import (
         MANIFEST_LIST_SCHEMA,
         read_manifest_list_entries,
@@ -6585,13 +6547,12 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
             changelogRecordCount=0,
             changelogManifestList=None,
         )
-        spath = os.path.join(sdir, f"snapshot-{new_id}")
         try:
-            fd = os.open(spath, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        except FileExistsError:
+            _exclusive_write(
+                os.path.join(sdir, f"snapshot-{new_id}"), json.dumps(snap)
+            )
+        except SnapshotConflictError:
             continue
-        with os.fdopen(fd, "w") as f:
-            json.dump(snap, f)
         write_hint_atomic(os.path.join(sdir, "LATEST"), new_id)
         return new_id
     raise RuntimeError("delete_lake_rows: lost the snapshot race 20 times")

@@ -79,6 +79,23 @@ def _brh_gen(dt, rnd):
     if isinstance(dt, T.BinaryType):
         n = rnd.choice([0, 2, 7, 8, 13, 32])
         return bytes(rnd.getrandbits(8) for _ in range(n))
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        # signed zeros, NaN, infinities, subnormals of both widths and
+        # arbitrary doubles (FLOAT keys round like struct '<f')
+        tiny = 1e-45 if isinstance(dt, T.FloatType) else 5e-324
+        return rnd.choice(
+            [
+                0.0,
+                -0.0,
+                float("nan"),
+                float("inf"),
+                -float("inf"),
+                tiny,
+                -tiny,
+                rnd.randint(-(2**20), 2**20) / 64.0,
+                rnd.uniform(-1e30, 1e30),
+            ]
+        )
     raise AssertionError(dt)
 
 
@@ -95,6 +112,9 @@ BRH_COMBOS = [
     [T.LongType(), T.StringType(), T.StringType()],
     [T.StringType(), T.BinaryType(), T.IntegerType(), T.BooleanType()],
     [T.DateType(), T.StringType(), T.ShortType()],
+    [T.FloatType()],
+    [T.DoubleType()],
+    [T.DoubleType(), T.StringType(), T.FloatType()],
 ]
 
 
@@ -107,6 +127,7 @@ def test_binary_row_hash_expr_matches_python_oracle(spark, dtypes):
         binary_row_hash_expr,
         encode_binary_row,
         fixed_bucket,
+        logical_value,
         murmur_hash_words,
     )
 
@@ -120,26 +141,63 @@ def test_binary_row_hash_expr_matches_python_oracle(spark, dtypes):
     assert hx is not None and bx is not None
     got = df.select(F.expr(hx).alias("h"), F.expr(bx).alias("b")).collect()
 
-    def logical(v, dt):
-        if v is None:
-            return None
-        if isinstance(dt, T.DateType):
-            return (v - datetime.date(1970, 1, 1)).days
-        return v
-
     for row, g in zip(rows, got):
-        lrow = [logical(v, dt) for v, dt in zip(row, dtypes)]
+        # the shared normalizer: DATE as epoch days, NaN routes as NULL
+        lrow = [logical_value(v, dt) for v, dt in zip(row, dtypes)]
         assert g["h"] == murmur_hash_words(encode_binary_row(lrow, dtypes)[4:]), row
         assert g["b"] == fixed_bucket(lrow, dtypes, 7), row
 
 
-def test_binary_row_hash_expr_unsupported_types_fall_back():
+def test_binary_row_hash_expr_refuses_unhashable_types():
+    """The expression is the one definition of a hashable bucket key:
+    every other key shape raises, naming the column."""
     from paimon_python_spark.paimon_import import binary_row_hash_expr
 
-    assert binary_row_hash_expr(["c0"], [T.DoubleType()]) is None
-    assert binary_row_hash_expr(["c0"], [T.FloatType()]) is None
-    assert binary_row_hash_expr(["c0"], [T.DecimalType(10, 2)]) is None
-    assert binary_row_hash_expr([], []) is None
+    for dt in (T.DecimalType(10, 2), T.TimestampType(), T.ArrayType(T.LongType())):
+        with pytest.raises(ValueError, match="bucket key column 'c1'"):
+            binary_row_hash_expr(["c0", "c1"], [T.LongType(), dt])
+    wide = [f"c{i}" for i in range(56)]
+    with pytest.raises(ValueError, match="'c55'"):
+        binary_row_hash_expr(wide, [T.IntegerType()] * 56)
+    with pytest.raises(ValueError):
+        binary_row_hash_expr([], [])
+
+
+@pytest.mark.parametrize(
+    "ktype,literal",
+    [
+        ("TIMESTAMP(6) WITH LOCAL TIME ZONE", "TIMESTAMP'2024-01-01 00:00:00'"),
+        ("DECIMAL(10, 2)", "CAST(1.5 AS DECIMAL(10, 2))"),
+    ],
+    ids=["timestamp", "decimal"],
+)
+def test_unhashable_bucket_key_refused_on_driver(spark, tmp_path, ktype, literal):
+    """A bucket key routing cannot hash fails on the driver with a
+    ValueError naming the column — at create_lake_table, and at the
+    write entry points of a lake another writer created — instead of
+    inside a Python worker once the write job runs."""
+    from paimon_python_spark.lake_datasource import PaimonLakeBatchWriter
+    from paimon_python_spark.paimon_import import write_paimon_table_fixture
+    from paimon_python_spark.paimon_lake import (
+        create_lake_table,
+        write_lake_pk_append,
+    )
+
+    fields = [("kx", f"{ktype} NOT NULL"), ("v", "STRING")]
+    with pytest.raises(ValueError, match="bucket key column 'kx'"):
+        create_lake_table(
+            str(tmp_path / "new"),
+            fields,
+            primary_keys=["kx"],
+            options={"bucket": "2"},
+        )
+    d = str(tmp_path / "foreign")
+    write_paimon_table_fixture(d, fields, [], ["kx"], [], options={"bucket": "2"})
+    df = spark.sql(f"SELECT {literal} AS kx, 'a' AS v")
+    with pytest.raises(ValueError, match="bucket key column 'kx'"):
+        write_lake_pk_append(d, df)
+    with pytest.raises(ValueError, match="bucket key column 'kx'"):
+        PaimonLakeBatchWriter(d, overwrite=False)
 
 
 def test_binary_row_hash_expr_plan_is_pure_jvm(spark):
@@ -147,12 +205,21 @@ def test_binary_row_hash_expr_plan_is_pure_jvm(spark):
     the per-commit Python-worker round trip is the point."""
     from paimon_python_spark.paimon_import import binary_row_bucket_expr
 
-    df = spark.range(10).selectExpr("id AS k", "cast(id as string) AS s")
-    bx = binary_row_bucket_expr(["s", "k"], [T.StringType(), T.LongType()], 4)
-    plan = (
-        df.withColumn("__bucket", F.expr(bx))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    df = spark.range(10).selectExpr(
+        "id AS k",
+        "cast(id as string) AS s",
+        "cast(id / 3 as float) AS f",
+        "id / 7 AS d",
     )
+    bx = binary_row_bucket_expr(
+        ["s", "k", "f", "d"],
+        [T.StringType(), T.LongType(), T.FloatType(), T.DoubleType()],
+        4,
+    )
+    qe = df.withColumn("__bucket", F.expr(bx))._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    # deterministic, so the routing shuffle is not indeterminate on
+    # retry; and the projection stays inside whole-stage codegen
+    assert qe.analyzed().projectList().last().deterministic()
+    assert plan.startswith("*(1) Project")

@@ -651,6 +651,82 @@ def test_lake_datasource_write_empty_append_is_noop(tmp_path, spark):
     assert latest_paimon_snapshot_id(p) == 1  # no empty snapshot
 
 
+@pytest.mark.parametrize("pk", [False, True], ids=["append", "fixed_pk"])
+def test_lake_format_write_stores_exact_values(tmp_path, spark, pk):
+    """df.write.format("paimon_lake") stores each value as Spark hands
+    it over: a BIGINT past 2^53 beside a NULL stays exact, a NaN stays
+    apart from NULL, and a year-2300 timestamp (past pandas' nanosecond
+    range) is written. The TIMESTAMP column leaves the other columns'
+    value stats in place, so a k filter still prunes append files."""
+    import datetime
+    import math
+    import os
+
+    import pyarrow.parquet as pq
+
+    from paimon_python_spark.lake_datasource import register_lake
+    from paimon_python_spark.paimon_import import plan_paimon_files
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        _pruned_entries,
+        create_lake_table,
+        read_paimon_schema,
+    )
+
+    register_lake(spark)
+    p = str(tmp_path / "exact")
+    create_lake_table(
+        p,
+        [
+            ("id", "INT NOT NULL"),
+            ("k", "BIGINT"),
+            ("d", "DOUBLE"),
+            ("t", "TIMESTAMP(6) WITH LOCAL TIME ZONE"),
+        ],
+        primary_keys=["id"] if pk else None,
+        options={"bucket": "2"} if pk else None,
+    )
+    big = 2**53 + 1
+    utc = datetime.timezone.utc
+    far = datetime.datetime(2300, 1, 1, 12, 30, 0, 123456)
+    schema = "id int, k bigint, d double, t timestamp"
+    rows = [
+        (1, big, float("nan"), far.replace(tzinfo=utc)),
+        (2, None, None, None),
+        (3, 5, 1.5, datetime.datetime(2024, 1, 1, tzinfo=utc)),
+    ]
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        for batch in (rows, [(7, -1, 2.0, datetime.datetime(2024, 1, 2, tzinfo=utc))]):
+            spark.createDataFrame(batch, schema).coalesce(1).write.format(
+                "paimon_lake"
+            ).option("path", p).mode("append").save()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+    stored = {}
+    for e in plan_paimon_files(p):
+        path = next(
+            os.path.join(d, e.file_name)
+            for d, _, names in os.walk(p)
+            if e.file_name in names
+        )
+        for r in pq.read_table(path, columns=["id", "k", "d", "t"]).to_pylist():
+            stored[r["id"]] = r
+    assert stored[1]["k"] == big and math.isnan(stored[1]["d"])
+    assert stored[1]["t"] == far
+    assert stored[2] == {"id": 2, "k": None, "d": None, "t": None}
+    assert (stored[3]["k"], stored[3]["d"]) == (5, 1.5)
+
+    files = plan_paimon_files(p)
+    assert len(files) > 1 and all(e.stats_raw[0] for e in files)
+    if not pk:  # a PK lake prunes on key stats only
+        rb = PaimonLakeTable(p).new_read_builder()
+        rb.with_filter(rb.new_predicate_builder().equal("k", -1))
+        assert len(_pruned_entries(p, read_paimon_schema(p), rb)) == 1
+
+
 def test_lake_datasource_streaming_survives_expired_history(tmp_path, spark):
     """Inline expiration trims old snapshots; a FRESH stream bootstraps
     from the earliest surviving snapshot's FULL state (no silent data
@@ -2183,6 +2259,30 @@ def test_lake_format_write_dynamic_bucket(spark, tmp_path):
         ).option("path", d2).mode("append").save()
 
 
+def test_lake_format_dynamic_index_copy_limit(spark, tmp_path, monkeypatch):
+    """A dynamic-bucket front-door write routes against a serialized
+    copy of the HASH index, so above the copy limit it refuses, pointing
+    at the builder's distributed routing."""
+    import paimon_python_spark.lake_datasource as lds
+    from paimon_python_spark.paimon_lake import (
+        create_lake_table,
+        write_lake_pk_append,
+    )
+
+    d = str(tmp_path / "dyn_cap")
+    create_lake_table(
+        d,
+        [("k", "BIGINT NOT NULL"), ("v", "STRING")],
+        primary_keys=["k"],
+        options={"bucket": "-1"},
+    )
+    write_lake_pk_append(d, spark.createDataFrame([(1, "a")], "k bigint, v string"))
+    lds.PaimonLakeBatchWriter(d, overwrite=False)  # 4 bytes: within the limit
+    monkeypatch.setattr(lds, "_DYN_INDEX_COPY_LIMIT_BYTES", 1)
+    with pytest.raises(RuntimeError, match=r"HASH index is 4 bytes \(limit 1\)"):
+        lds.PaimonLakeBatchWriter(d, overwrite=False)
+
+
 def test_lake_format_write_dynamic_overwrite_rebuilds_index(spark, tmp_path):
     """Dynamic-bucket INSERT OVERWRITE through the front door rebuilds
     the HASH index from the new data alone — a later write must not
@@ -2222,56 +2322,172 @@ def test_lake_format_write_dynamic_overwrite_rebuilds_index(spark, tmp_path):
     assert len(out) == 10 and out[7] == "after7" and out[14] == "ow14"
 
 
-def test_lake_format_write_avro_and_orc(spark, tmp_path):
-    """r12: avro/orc lakes write through the front door via the engine
-    codecs (APPEND and fixed-bucket PK), with in-task value stats."""
+def _live_file_fields(d):
+    """Every manifest field of each live data file except its name, size
+    and path: (partition, bucket, total buckets, rows, min/max key,
+    sequence range, level, decoded min/max value stats and null counts
+    of the non-partition columns, file-index presence), sorted."""
+    import os
+
+    from paimon_python_spark.avro_codec import read_avro_records
+    from paimon_python_spark.paimon_import import (
+        decode_binary_row,
+        read_manifest_list,
+        read_paimon_schema,
+        read_paimon_snapshot,
+    )
+
+    info = read_paimon_schema(d)
+    types = [f.dataType for f in info.spark_schema.fields]
+    keep = [
+        i
+        for i, f in enumerate(info.spark_schema.fields)
+        if f.name not in info.partition_keys
+    ]
+
+    def stats(raw):
+        return [decode_binary_row(bytes(raw), types)[i] for i in keep] if raw else None
+
+    snap = read_paimon_snapshot(d)
+    live = {}
+    for lst in (snap["baseManifestList"], snap["deltaManifestList"]):
+        for m in read_manifest_list(d, lst):
+            with open(os.path.join(d, "manifest", m), "rb") as f:
+                for r in read_avro_records(f.read())[1]:
+                    fm = r["_FILE"]
+                    if r["_KIND"] == 1:
+                        live.pop(fm["_FILE_NAME"])
+                        continue
+                    vs = fm["_VALUE_STATS"]
+                    nulls = vs["_NULL_COUNTS"]
+                    live[fm["_FILE_NAME"]] = (
+                        bytes(r["_PARTITION"]),
+                        r["_BUCKET"],
+                        r["_TOTAL_BUCKETS"],
+                        fm["_ROW_COUNT"],
+                        bytes(fm["_MIN_KEY"]),
+                        bytes(fm["_MAX_KEY"]),
+                        fm["_MIN_SEQUENCE_NUMBER"],
+                        fm["_MAX_SEQUENCE_NUMBER"],
+                        fm["_LEVEL"],
+                        stats(vs["_MIN_VALUES"]),
+                        stats(vs["_MAX_VALUES"]),
+                        [nulls[i] for i in keep] if nulls is not None else None,
+                        fm["_EMBEDDED_FILE_INDEX"] is not None
+                        or bool(fm["_EXTRA_FILES"]),
+                    )
+    return sorted(live.values(), key=repr)
+
+
+@pytest.mark.parametrize("mode", ["append", "fixed_pk", "dynamic_pk"])
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "avro"])
+def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
+    """The two write front doors are one lake file writer: the same rows
+    written into twin lakes — once through the builder, once through
+    df.write.format("paimon_lake") — read back identically and leave
+    identical manifest entries apart from file names, sizes and paths,
+    for every data-file format and table kind. The batch mixes NULL
+    values, an update of a seeded key and, on PK lakes, a rowkind.field
+    -D then re-insert of one key, sequenced by a TIMESTAMP
+    sequence.field under a non-UTC session time zone (a BIGINT one on
+    avro, whose data files hold no timestamps here)."""
+    import datetime
+
     from paimon_python_spark.lake_datasource import register_lake
-    from paimon_python_spark.paimon_lake import PaimonLakeTable, create_lake_table
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        write_lake_append,
+    )
     from paimon_python_spark.paimon_import import plan_paimon_files
 
     register_lake(spark)
-    for fmt in ("avro", "orc"):
-        d = str(tmp_path / f"fd_{fmt}")
-        create_lake_table(
-            d,
-            [("k", "BIGINT NOT NULL"), ("v", "STRING")],
-            options={"file.format": fmt},
+    pk = mode != "append"
+    ts_type = "BIGINT" if fmt == "avro" else "TIMESTAMP(6) WITH LOCAL TIME ZONE"
+    fields = [("p", "INT NOT NULL"), ("k", "BIGINT NOT NULL"), ("v", "STRING")]
+    options = {"file.format": fmt, "file-index.bloom-filter.columns": "v"}
+    if pk:
+        fields += [("ts", ts_type), ("op", "STRING")]
+        options.update(
+            {
+                "bucket": "2" if mode == "fixed_pk" else "-1",
+                "sequence.field": "ts",
+                "rowkind.field": "op",
+            }
         )
-        df = spark.createDataFrame(
-            [(i, f"x{i}") for i in range(10)], "k bigint, v string"
-        )
-        df.write.format("paimon_lake").option("path", d).mode("append").save()
-        ents = plan_paimon_files(d)
-        assert ents and all(e.file_name.endswith(f".{fmt}") for e in ents)
-        out = sorted(
-            (r.k, r.v)
-            for r in PaimonLakeTable(d).new_read_builder().new_read().to_df().collect()
-        )
-        assert out == [(i, f"x{i}") for i in range(10)]
-        # front-door read agrees
-        fd = sorted(
-            (r.k, r.v)
-            for r in spark.read.format("paimon_lake").option("path", d).load().collect()
-        )
-        assert fd == out
+    t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
 
-        # PK twin
-        dp = str(tmp_path / f"fd_{fmt}_pk")
-        create_lake_table(
-            dp,
-            [("k", "BIGINT NOT NULL"), ("v", "STRING")],
-            primary_keys=["k"],
-            options={"file.format": fmt, "bucket": "2"},
+    def frame(rows):
+        if not pk:
+            rows = [r[:3] for r in rows]
+        ddl = "p int, k bigint, v string"
+        if pk:
+            ts = "bigint" if fmt == "avro" else "timestamp"
+            ddl += f", ts {ts}, op string"
+        # one input task: the front door writes one file per group it sees
+        return spark.createDataFrame(rows, ddl).coalesce(1)
+
+    def at(s):
+        if fmt == "avro":
+            return 1_709_294_400_000 + 1000 * s
+        return t0 + datetime.timedelta(seconds=s)
+
+    seed = [(k % 2 + 1, k, f"s{k}", at(k), "+I") for k in range(6)]
+    batch = [
+        (1, 10, None, at(100), "+I"),
+        (2, 3, "u3", at(101), "+I"),
+        (1, 4, "x4", at(102), "+I"),
+        (1, 4, None, at(103), "-D"),
+        (1, 4, "re4", at(104), "+I"),
+        (2, 11, "n11", at(105), "+I"),
+        (1, 12, None, at(106), "+I"),
+    ]
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        lakes = {}
+        for door in ("builder", "format"):
+            d = str(tmp_path / door)
+            create_lake_table(
+                d,
+                fields,
+                partition_keys=["p"],
+                primary_keys=["p", "k"] if pk else None,
+                options=options,
+            )
+            write_lake_append(d, frame(seed))
+            if door == "builder":
+                write_lake_append(d, frame(batch))
+            else:
+                frame(batch).write.format("paimon_lake").option(
+                    "path", d
+                ).mode("append").save()
+            lakes[door] = d
+
+        def merged(d):
+            df = PaimonLakeTable(d).new_read_builder().new_read().to_df()
+            return sorted((tuple(r) for r in df.collect()), key=repr)
+
+        out = merged(lakes["builder"])
+        assert out == merged(lakes["format"])
+        # the front-door read agrees too (timestamps aside: that reader
+        # renders them in another zone under a non-UTC session)
+        fd = spark.read.format("paimon_lake").option("path", lakes["format"]).load()
+        fd_rows = [tuple(r) for r in fd.select("p", "k", "v").collect()]
+        assert sorted(fd_rows, key=repr) == sorted((r[:3] for r in out), key=repr)
+        got = {r[1]: r[2] for r in out}
+        if pk:
+            assert len(out) == 9 and got[4] == "re4" and got[3] == "u3"
+        else:
+            assert len(out) == 13
+        assert got[10] is None and got[12] is None
+        for d in lakes.values():
+            assert all(e.file_name.endswith(f".{fmt}") for e in plan_paimon_files(d))
+        assert _live_file_fields(lakes["builder"]) == _live_file_fields(
+            lakes["format"]
         )
-        df.write.format("paimon_lake").option("path", dp).mode("append").save()
-        spark.createDataFrame([(3, "UP3")], "k bigint, v string").write.format(
-            "paimon_lake"
-        ).option("path", dp).mode("append").save()
-        pk_out = {
-            r.k: r.v
-            for r in PaimonLakeTable(dp).new_read_builder().new_read().to_df().collect()
-        }
-        assert len(pk_out) == 10 and pk_out[3] == "UP3"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
 def test_stream_latest_full_pk_bootstrap(spark, tmp_path):

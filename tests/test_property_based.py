@@ -312,7 +312,7 @@ def _key_column(vals, dt, typed):
     typed=st.booleans(),
 )
 @settings(**SETTINGS)
-def test_vectorized_bucket_matches_scalar_oracle(rows, nb, typed):
+def test_vectorized_bucket_matches_scalar_oracle(spark, rows, nb, typed):
     """The numpy-vectorized lake bucket router must agree with the
     scalar spec implementation (fixed_bucket over encode_binary_row)
     for ANY key values of EVERY key type it accepts — each type alone
@@ -320,12 +320,17 @@ def test_vectorized_bucket_matches_scalar_oracle(rows, nb, typed):
     columns, with NULLs, negatives, unicode strings and binaries of
     every inline/var length, and dates outside the datetime64[ns] range
     — so a vectorization bug can never route a row to the wrong bucket
-    (there is no scalar fallback behind it)."""
-    from paimon_python_spark.paimon_import import fixed_bucket
-    from paimon_python_spark.paimon_lake import (
-        _lake_bucket_key_logical,
-        _vectorized_fixed_buckets,
+    (there is no scalar fallback behind it). The JVM expression router
+    must agree on the float and double keys too (signed zeros,
+    infinities, subnormals)."""
+    from pyspark.sql import functions as F
+
+    from paimon_python_spark.paimon_import import (
+        binary_row_bucket_expr,
+        fixed_bucket,
+        logical_value,
     )
+    from paimon_python_spark.paimon_lake import _vectorized_fixed_buckets
 
     types = [dt for dt, _ in _KEY_TYPES]
     cols = [
@@ -336,7 +341,7 @@ def test_vectorized_bucket_matches_scalar_oracle(rows, nb, typed):
         return [
             fixed_bucket(
                 [
-                    None if v is None else _lake_bucket_key_logical(v, dt)
+                    None if v is None else logical_value(v, dt)
                     for v, dt in zip(r, key_types)
                 ],
                 key_types,
@@ -350,6 +355,15 @@ def test_vectorized_bucket_matches_scalar_oracle(rows, nb, typed):
         assert got == oracle([(r[i],) for r in rows], [dt]), dt
     got = list(_vectorized_fixed_buckets(tuple(cols), types, nb))
     assert got == oracle(rows, types)
+    for i, dt in enumerate(types):
+        if not isinstance(dt, (T.FloatType, T.DoubleType)):
+            continue
+        df = spark.createDataFrame(
+            [(r[i],) for r in rows], T.StructType([T.StructField("c0", dt)])
+        )
+        bx = binary_row_bucket_expr(["c0"], [dt], nb)
+        got = [x.b for x in df.select(F.expr(bx).alias("b")).collect()]
+        assert got == oracle([(r[i],) for r in rows], [dt]), dt
 
 
 @given(
@@ -382,14 +396,13 @@ def test_bloom_never_false_negative(values):
     assert pb.is_in("u", list(values)[:5]).test_by_stats(st_) is True
 
 
-def test_bucket_router_has_no_scalar_fallback(monkeypatch):
-    """The router is the vectorized encoder alone: it routes like the
-    scalar spec oracle, and an encoder failure surfaces instead of
+def test_bucket_router_has_no_scalar_fallback(monkeypatch, tmp_path):
+    """The in-task router is the vectorized encoder alone: it routes
+    like the scalar spec oracle, refuses a key type it cannot encode,
+    and an encoder failure inside a front-door task surfaces instead of
     silently re-hashing row by row through a second implementation."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     import paimon_python_spark.paimon_lake as pl
+    from paimon_python_spark.lake_datasource import PaimonLakeBatchWriter
     from paimon_python_spark.paimon_import import fixed_bucket
 
     keys = pd.Series([1, None, 7, 42, -9])
@@ -397,12 +410,25 @@ def test_bucket_router_has_no_scalar_fallback(monkeypatch):
     want = [
         fixed_bucket([None if pd.isna(v) else int(v)], types, 8) for v in keys
     ]
-    fn = pl._make_lake_bucket_fn(types, 8)
-    assert list(fn(keys)) == want  # vector path
+    assert list(pl._vectorized_fixed_buckets((keys,), types, 8)) == want
+    with pytest.raises(ValueError, match="unsupported key type"):
+        pl._vectorized_fixed_buckets((keys,), [T.DecimalType(10, 2)], 8)
+
+    d = str(tmp_path / "lake")
+    pl.create_lake_table(
+        d,
+        [("k", "BIGINT NOT NULL"), ("v", "STRING")],
+        primary_keys=["k"],
+        options={"bucket": "8"},
+    )
+    writer = PaimonLakeBatchWriter(d, overwrite=False)
+    batch = pa.record_batch(
+        {"k": pa.array([1, 7], pa.int64()), "v": pa.array(["a", "b"])}
+    )
 
     def boom(*a, **k):
         raise RuntimeError("forced")
 
     monkeypatch.setattr(pl, "_vectorized_fixed_buckets", boom)
     with pytest.raises(RuntimeError, match="forced"):
-        pl._make_lake_bucket_fn(types, 8)(keys)
+        writer.write(iter([batch]))
