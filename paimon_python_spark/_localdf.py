@@ -33,7 +33,8 @@ from __future__ import annotations
 
 def pinned_width(spark, max_groups: int | None = None) -> int:
     """Explicit partition count for compute-bearing group stages
-    (``applyInPandas`` group writes, per-file bitmap folds) whose
+    (the lake write tasks' ``mapInArrow`` group writes, per-file
+    bitmap folds) whose
     shuffled BYTES are tiny but whose per-group work is real (a parquet
     file write, a bitmap serialize). AQE's byte-based coalescing sees
     KBs and folds the exchange to ONE partition, serializing every

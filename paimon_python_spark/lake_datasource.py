@@ -21,8 +21,8 @@ on the same driver-side planner every lake read uses.
   PK lakes (fixed and dynamic bucket), ``mode("append")`` /
   ``mode("overwrite")`` — executors route rows (PK: the same murmur
   bucket hash the builder uses) and hand each (partition, bucket)
-  group to the builder's lake file writer
-  (``paimon_lake.write_lake_group``); the driver commits one spec
+  group to the builder's lake write task
+  (``paimon_lake.write_lake_task``); the driver commits one spec
   snapshot (an OVERWRITE commit DELETEs every previously-visible
   file, like overwrite_lake). See ``PaimonLakeBatchWriter`` for the
   refusals (cross-partition lakes, changelog-producing PK appends).
@@ -714,7 +714,7 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
 
 class _LakeWrittenFiles(WriterCommitMessage):
     def __init__(self, files, new_hashes=None):
-        #: the task's per-file meta rows (paimon_lake.write_lake_group)
+        #: the task's per-file meta rows (paimon_lake.write_lake_task)
         self.files = files
         #: dynamic-bucket only: {(part_json, bucket): [new key hashcodes]}
         #: — the commit unions them into the buckets' HASH index files
@@ -735,27 +735,25 @@ class PaimonLakeBatchWriter(DataSourceArrowWriter):
     and ``mode("overwrite")`` (whole-table INSERT OVERWRITE, like
     overwrite_lake).
 
-    Executor side (``write``): each task turns its Arrow batches into
-    one table in the naive session-local form ``applyInPandas``
-    delivers, plus a pandas view of it, and keeps only what is specific
-    to this door — routing
-    (PK lakes: ``abs(murmur(BinaryRow(bucket key))) % num_buckets``,
-    the FixedBucketRowKeyExtractor routing write_lake_pk_append uses;
-    dynamic lakes: the plan-time HASH index below), grouping by
-    (partition, bucket), an ``__input_order`` column and ``__row_kind``
-    from ``rowkind.field``. Each group then goes to
-    ``paimon_lake.write_lake_group``, the same lake file writer the
-    builder's tasks run, which stores the table's exact values: data
-    files land directly in the lake's
-    ``<k>=<v>/bucket-<b>/`` layout with the builder's key columns,
-    sequence numbers (plan-time base past every live file's max, or
-    ``sequence.field``), value stats and file indexes. Driver side
-    (``commit``): only when every task succeeded, one spec snapshot
-    commits atomically, its entries built by the builder's
-    ``lake_add_entry`` (OVERWRITE also commits ``lake_delete_entry``
-    for every previously-visible file and drops the DV index, exactly
-    like overwrite_lake); ``abort`` removes the orphan files — readers
-    only ever see committed snapshots either way.
+    Executor side (``write``): each task keeps only what is specific
+    to this door — routing (PK lakes: ``abs(murmur(BinaryRow(bucket
+    key))) % num_buckets``, the FixedBucketRowKeyExtractor routing
+    write_lake_pk_append uses; dynamic lakes: the plan-time HASH index
+    below), an ``__input_order`` column and ``__row_kind`` from
+    ``rowkind.field``, all added to its Arrow table. Then it runs
+    ``paimon_lake.write_lake_task``, the same lake write task the
+    builder's ``mapInArrow`` tasks run: it groups the rows by
+    (partition, bucket) and writes each group's exact Arrow values as
+    data files directly in the lake's ``<k>=<v>/bucket-<b>/`` layout,
+    with the builder's key columns, sequence numbers (plan-time base
+    past every live file's max, or ``sequence.field``), value stats
+    and file indexes. Driver side (``commit``): only when every task
+    succeeded, one spec snapshot commits atomically, its entries built
+    by the builder's ``lake_add_entry`` (OVERWRITE also commits
+    ``lake_delete_entry`` for every previously-visible file and drops
+    the DV index, exactly like overwrite_lake); ``abort`` removes the
+    orphan files — readers only ever see committed snapshots either
+    way.
 
     DYNAMIC-BUCKET lakes (``'bucket' = '-1'``): existing keys route
     against a size-capped plan-time copy of the spec HASH index, new
@@ -924,7 +922,7 @@ class PaimonLakeBatchWriter(DataSourceArrowWriter):
         )
         self._dyn_mod = max(1, int(init))
 
-    def _route_dynamic(self, pdf, hashes):
+    def _route_dynamic(self, tbl, hashes):
         """Route a task's rows against the plan-time HASH index
         snapshot: existing hashcodes keep their bucket (binary search
         per partition); new ones assign |hash| % initial-buckets —
@@ -940,7 +938,7 @@ class PaimonLakeBatchWriter(DataSourceArrowWriter):
         info = self.info
         part_keys = list(info.partition_keys)
         part_types = [info.spark_schema[k].dataType for k in part_keys]
-        part_cols = [pdf[k].tolist() for k in part_keys]
+        part_cols = [tbl.column(k).to_pylist() for k in part_keys]
         pjs = np.array(
             [
                 json.dumps(
@@ -949,11 +947,11 @@ class PaimonLakeBatchWriter(DataSourceArrowWriter):
                         for k, c, t in zip(part_keys, part_cols, part_types)
                     }
                 )
-                for i in range(len(pdf))
+                for i in range(tbl.num_rows)
             ],
             dtype=object,
         )
-        buckets = np.empty(len(pdf), dtype=np.int64)
+        buckets = np.empty(tbl.num_rows, dtype=np.int64)
         new_by_group: dict = {}
         for pj in set(pjs.tolist()):
             mask = pjs == pj
@@ -983,83 +981,68 @@ class PaimonLakeBatchWriter(DataSourceArrowWriter):
         return buckets, new_by_group
 
     def write(self, iterator) -> _LakeWrittenFiles:
-        """Executor-side task write: route, group, and hand each
-        (partition, bucket) group to ``paimon_lake.write_lake_group``.
-        Parallel tasks share the plan-time sequence base — same-key
-        collisions across tasks tie-break by file order at read,
-        exactly like real Paimon's per-writer sequence generators."""
+        """Executor-side task write: route the task's rows, then run
+        ``paimon_lake.write_lake_task``, which writes one set of files
+        per (partition, bucket) group. Parallel tasks share the
+        plan-time sequence base — same-key collisions across tasks
+        tie-break by file order at read, exactly like real Paimon's
+        per-writer sequence generators."""
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         from paimon_python_spark.datasource import _decode_rowkind
         from paimon_python_spark.paimon_lake import (
             _vectorized_fixed_buckets,
-            write_lake_group,
+            lake_task_table,
+            write_lake_task,
         )
-        from paimon_python_spark.types import spark_type_to_pa
 
         info = self.info
-        batches = [b for b in iterator if b.num_rows]
-        if not batches:
-            return _LakeWrittenFiles([])
-        tbl = pa.Table.from_batches(batches)
-        cols = []
-        for f in info.spark_schema.fields:
-            col = tbl.column(f.name)
-            if pa.types.is_timestamp(col.type) and col.type.tz is not None:
-                # applyInPandas' form, which the builder's writer sees:
-                # the wall clock in the batch's (session) time zone
-                col = pc.local_timestamp(col)
-            cols.append(col.cast(spark_type_to_pa(f.dataType)))
-        tbl = pa.table(cols, names=info.spark_schema.names)
-        # routing, grouping and sorting read pandas; the writer takes
-        # the stored values from ``tbl`` itself (values=), exactly
-        pdf = tbl.to_pandas(date_as_object=True, integer_object_nulls=True)
+        tbl = lake_task_table(iterator, info)
         new_hashes = None
-        gcols = list(info.partition_keys)
-        if self.is_pk:
-            keys = [pdf[c] for c in self.bucket_cols]
+        if tbl is not None and self.is_pk:
+            keys = [
+                tbl.column(c).to_pandas(
+                    date_as_object=True, integer_object_nulls=True
+                )
+                for c in self.bucket_cols
+            ]
             key_types = [
                 info.spark_schema[c].dataType for c in self.bucket_cols
             ]
             if self.dynamic:
-                pdf["__bucket"], new_hashes = self._route_dynamic(
-                    pdf, _vectorized_fixed_buckets(keys, key_types, None)
+                buckets, new_hashes = self._route_dynamic(
+                    tbl, _vectorized_fixed_buckets(keys, key_types, None)
                 )
             else:
-                pdf["__bucket"] = _vectorized_fixed_buckets(
+                buckets = _vectorized_fixed_buckets(
                     keys, key_types, self.num_buckets
                 )
+            tbl = tbl.append_column("__bucket", pa.array(buckets, pa.int32()))
             # same-key events sequence in arrival order, as the
             # builder's monotonic id orders them
-            pdf["__input_order"] = np.arange(len(pdf))
+            tbl = tbl.append_column(
+                "__input_order", pa.array(np.arange(tbl.num_rows))
+            )
             if self.rk_field:
-                if self.rk_field not in pdf.columns:
+                if self.rk_field not in tbl.column_names:
                     raise ValueError(
                         f"rowkind.field {self.rk_field!r} is not a table column"
                     )
-                pdf["__row_kind"] = [
-                    _decode_rowkind(v) for v in pdf[self.rk_field]
+                kinds = [
+                    _decode_rowkind(v)
+                    for v in tbl.column(self.rk_field).to_pylist()
                 ]
-            gcols.append("__bucket")
-        groups = (
-            pdf.groupby(gcols, sort=False, dropna=False) if gcols else [(None, pdf)]
+                tbl = tbl.append_column("__row_kind", pa.array(kinds, pa.int32()))
+        files = write_lake_task(
+            tbl,
+            self.table_path,
+            info,
+            self.fmt,
+            self.is_pk,
+            seq_base=self.seq_base,
+            sequence_field=self.seq_field,
         )
-        files = []
-        for _, group in groups:
-            files.extend(
-                write_lake_group(
-                    group,
-                    self.table_path,
-                    info,
-                    self.fmt,
-                    self.is_pk,
-                    seq_base=self.seq_base,
-                    sequence_field=self.seq_field,
-                    values=tbl,
-                )
-            )
         return _LakeWrittenFiles(files, new_hashes=new_hashes or None)
 
     def commit(self, messages) -> None:

@@ -1988,91 +1988,6 @@ def _lake_system_buckets(table_path: str, snapshot_id: "Optional[int]" = None):
     return _lake_system_df(table_path, "buckets", snapshot_id)
 
 
-def _parquet_footer_value_stats(md, info):
-    """Manifest ``_VALUE_STATS`` from a parquet footer — ZERO extra IO:
-    the adopter already reads the footer for ``num_rows``. Column-chunk
-    min/max fold across row groups; strings truncate to sound bounds
-    (prefix min / incremented-prefix max, the repo-wide rule); columns
-    with absent, non-foldable, or non-encodable stats contribute NULL
-    min/max (test_by_stats then never prunes on them). Returns None —
-    empty stats, no pruning — when any null count is unknown, because a
-    wrong null count could mis-prune. Before this, plain parquet
-    appends committed stats-less manifests and every scan planned every
-    file; at 100 TB the manifest min/max IS the planner's file skipping."""
-    import datetime
-    import math
-
-    from pyspark.sql import types as T
-
-    from paimon_python_spark.paimon_import import encode_binary_row
-    from paimon_python_spark.write import _truncate_max, _truncate_min
-
-    ncols = md.num_columns
-    names = {md.schema.column(i).name: i for i in range(ncols)}
-    types = [f.dataType for f in info.spark_schema.fields]
-    encodable = (
-        T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.BooleanType,
-        T.FloatType, T.DoubleType, T.DateType, T.StringType,
-    )
-    mins, maxs, nulls = [], [], []
-    for f in info.spark_schema.fields:
-        ci = names.get(f.name)
-        if ci is None:
-            # partition column: hive-layout files don't carry it
-            mins.append(None)
-            maxs.append(None)
-            nulls.append(md.num_rows)
-            continue
-        mn = mx = None
-        nc = 0
-        bounded = True
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is None or st.null_count is None:
-                return None  # unknown null count: stats could mis-prune
-            nc += st.null_count
-            n_vals = st.num_values
-            if n_vals is not None and n_vals == 0:
-                continue  # all-NULL chunk bounds nothing
-            if not st.has_min_max:
-                bounded = False  # values exist but no bounds: unprunable
-                continue
-            try:
-                lo, hi = st.min, st.max
-            except Exception:
-                bounded = False
-                continue
-            mn = lo if mn is None or lo < mn else mn
-            mx = hi if mx is None or hi > mx else mx
-        if not bounded or not isinstance(f.dataType, encodable):
-            mn = mx = None
-        if isinstance(f.dataType, T.DateType):
-            epoch = datetime.date(1970, 1, 1)
-            mn = (mn - epoch).days if isinstance(mn, datetime.date) else mn
-            mx = (mx - epoch).days if isinstance(mx, datetime.date) else mx
-        if isinstance(f.dataType, T.StringType):
-            if isinstance(mn, bytes) or isinstance(mx, bytes):
-                try:
-                    mn = mn.decode() if mn is not None else None
-                    mx = mx.decode() if mx is not None else None
-                except UnicodeDecodeError:
-                    mn = mx = None
-            mn, mx = _truncate_min(mn), _truncate_max(mx)
-        if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
-            mn = mx = None  # parquet NaN stats are unreliable bounds
-        mins.append(mn)
-        maxs.append(mx)
-        nulls.append(int(nc))
-    try:
-        return {
-            "_MIN_VALUES": encode_binary_row(mins, types),
-            "_MAX_VALUES": encode_binary_row(maxs, types),
-            "_NULL_COUNTS": nulls,
-        }
-    except Exception:
-        return None
-
-
 def _derive_lake_watermark(info, df, watermark) -> Optional[int]:
     """Normalize an explicit commit watermark, else derive one from a
     declared ``tag.watermark-column`` as a single-column max over the
@@ -2093,43 +2008,22 @@ def _derive_lake_watermark(info, df, watermark) -> Optional[int]:
 
 def write_lake_append(table_path: str, df, watermark=None) -> int:
     """Commit an APPEND to a REAL Paimon lake — this engine as a lake
-    PARTICIPANT, not just a reader: data files are written DISTRIBUTED
-    by Spark (hive-style ``partitionBy`` into a staging dir, then moved
-    into the lake's ``<k>=<v>/bucket-0/`` layout), and the spec-format
-    metadata commit (manifest avro + manifest lists + snapshot N+1,
-    BinaryRow partition values) is a driver-side metadata write, the
-    same cost class as any Paimon committer. Returns the new snapshot
-    id.
+    PARTICIPANT, not just a reader. Each input task writes its rows as
+    spec data files straight into the lake's ``<k>=<v>/bucket-0/``
+    layout, one set of files per partition it sees, through
+    :func:`_distributed_lake_write` (no shuffle: the lake file writer
+    runs once per (partition, input task) group, on Arrow values).
+    Each file carries its value stats and any declared file indexes.
+    The spec-format metadata commit (manifest avro + manifest lists +
+    snapshot N+1, BinaryRow partition values) is a driver-side
+    metadata write, the same cost class as any Paimon committer.
+    Returns the new snapshot id.
 
     PK lakes dispatch to :func:`write_lake_pk_append` (fixed-bucket
-    hash + level-0 key-value files); avro lakes write through the
-    engine's own codec executor-side. Concurrency: the snapshot file is
-    created with
-    O_EXCL, so a concurrent committer loses exactly one of the two —
-    retry on ``FileExistsError`` (real Paimon's rename-based commit has
-    the same winner-takes-the-id semantics)."""
-    import datetime
-    import json
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    import pyarrow.parquet as _pq
-
-    from pyspark.sql import functions as F
-
-    from paimon_python_spark.paimon_import import (
-        DEFAULT_PARTITION_NAME,
-        MANIFEST_LIST_SCHEMA,
-        MANIFEST_SCHEMA,
-        _EMPTY_STATS,
-        latest_paimon_snapshot_id,
-        read_manifest_list,
-        read_paimon_snapshot,
-    )
-    from paimon_python_spark.avro_codec import write_avro_records
-
+    hash + level-0 key-value files). Concurrency: the snapshot file is
+    created with O_EXCL, so a concurrent committer loses exactly one of
+    the two — retry on ``FileExistsError`` (real Paimon's rename-based
+    commit has the same winner-takes-the-id semantics)."""
     info = read_paimon_schema(table_path)
     if info.primary_keys:
         # PK lakes route through Paimon's fixed-bucket hash + level-0
@@ -2137,143 +2031,18 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
         return write_lake_pk_append(table_path, df, watermark=watermark)
     watermark = _derive_lake_watermark(info, df, watermark)
     fmt = info.options.get("file.format", "parquet")
-    bloom_cols, _spec, _dt, bitmap_cols, _bk, bsi_cols, _bsk = _bloom_option_cols(info)
-    if fmt == "avro" or bloom_cols or bitmap_cols or bsi_cols:
-        # avro: no spark-avro in this stack — the engine codec writes
-        # executor-side through the shared distributed group writer.
-        # Declared file indexes (bloom/bitmap columns) route the same
-        # way: the group writer builds each file's index payload
-        # EXECUTOR-side over the batch it just wrote; the staging-adopt
-        # path below never sees the rows, so it cannot index them.
-        man_entries, n_rows = _distributed_lake_write(
-            table_path, info, df, fmt, kv=False
-        )
-        if not man_entries:
-            raise ValueError("write_lake_append: empty input — nothing to commit")
-        return _commit_lake_snapshot(
-            table_path, info, man_entries, n_rows, watermark=watermark
-        )
-    if fmt not in ("parquet", "orc"):
+    if fmt not in ("parquet", "orc", "avro"):
         raise NotImplementedError(
             f"write_lake_append: file.format={fmt!r} not supported"
         )
-    part_keys = info.partition_keys
-    part_types = [info.spark_schema[k].dataType for k in part_keys]
-    default_name = info.options.get("partition.default-name", DEFAULT_PARTITION_NAME)
-
-    # schema check + cast to the table's declared types
-    df = df.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in info.spark_schema.fields
-        ]
+    man_entries, n_rows = _distributed_lake_write(
+        table_path, info, df, fmt, kv=False
     )
-
-    stage = tempfile.mkdtemp(prefix="lake_append_")
-    try:
-        writer = df.write.mode("overwrite").format(fmt)
-        if part_keys:
-            writer = writer.partitionBy(*part_keys)
-        writer.save(stage)
-
-        def parse_part(dirname: str, dt):
-            from urllib.parse import unquote
-
-            from pyspark.sql import types as T
-
-            k, _, raw = dirname.partition("=")
-            if raw == "__HIVE_DEFAULT_PARTITION__":
-                return None
-            # Spark hive-escapes special chars in partition dir names
-            # (space -> %20 etc.); decode back to the logical value
-            raw = unquote(raw)
-            if isinstance(dt, T.DateType):
-                return (
-                    datetime.date.fromisoformat(raw) - datetime.date(1970, 1, 1)
-                ).days
-            if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
-                return int(raw)
-            if isinstance(dt, T.BooleanType):
-                return raw == "true"
-            return raw
-
-        entries = []
-
-        def adopt(src_dir: str, pvals: dict, rel_parts: list):
-            for name in sorted(os.listdir(src_dir)):
-                if not name.endswith(f".{fmt}"):
-                    continue
-                src_f = os.path.join(src_dir, name)
-                vstats = None
-                if fmt == "parquet":
-                    md = _pq.ParquetFile(src_f).metadata
-                    rows = md.num_rows
-                    vstats = _parquet_footer_value_stats(md, info)
-                else:
-                    from paimon_python_spark.session import get_spark
-
-                    rows = get_spark().read.format(fmt).load(src_f).count()
-                if rows == 0:
-                    # Spark writes an empty part file per idle task;
-                    # adopting it would pad the manifest with 0-row
-                    # entries every scan must still plan
-                    continue
-                new_name = f"data-{uuid.uuid4()}-0.{fmt}"
-                ddir = os.path.join(table_path, *rel_parts, "bucket-0")
-                os.makedirs(ddir, exist_ok=True)
-                shutil.move(src_f, os.path.join(ddir, new_name))
-                dest = os.path.join(ddir, new_name)
-                vstats = vstats or _EMPTY_STATS
-                entries.append(
-                    lake_add_entry(
-                        info,
-                        {
-                            "file_name": new_name,
-                            "part_json": json.dumps(pvals),
-                            "bucket": 0,
-                            "rows": rows,
-                            "size": os.path.getsize(dest),
-                            "min_seq": 0,
-                            "max_seq": rows,
-                            "stats_min": vstats["_MIN_VALUES"],
-                            "stats_max": vstats["_MAX_VALUES"],
-                            "null_counts": vstats["_NULL_COUNTS"],
-                        },
-                        num_buckets=1,
-                    )
-                )
-
-        def walk(cur: str, keys_left: list, pvals: dict, rel_parts: list):
-            if not keys_left:
-                adopt(cur, pvals, rel_parts)
-                return
-            k, dt = keys_left[0], part_types[len(pvals)]
-            for d in sorted(os.listdir(cur)):
-                if not d.startswith(f"{k}="):
-                    continue
-                v = parse_part(d, dt)
-                from paimon_python_spark.paimon_import import (
-                    format_partition_segment,
-                )
-
-                seg = f"{k}={format_partition_segment(v, dt, default_name)}"
-                walk(
-                    os.path.join(cur, d),
-                    keys_left[1:],
-                    {**pvals, k: v},
-                    rel_parts + [seg],
-                )
-
-        walk(stage, list(part_keys), {}, [])
-        if not entries:
-            raise ValueError("write_lake_append: empty input — nothing to commit")
-
-        n_rows = sum(e["_FILE"]["_ROW_COUNT"] for e in entries)
-        return _commit_lake_snapshot(
-            table_path, info, entries, n_rows, watermark=watermark
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    if not man_entries:
+        raise ValueError("write_lake_append: empty input — nothing to commit")
+    return _commit_lake_snapshot(
+        table_path, info, man_entries, n_rows, watermark=watermark
+    )
 
 
 #: sentinel: carry the previous snapshot's indexManifest forward
@@ -2729,7 +2498,7 @@ def _split_standalone_index(emb, info, ddir, data_name):
 
 
 def _embedded_index_payload(
-    pdf,
+    tbl,
     bloom_cols,
     bloom_spec,
     bloom_dtypes,
@@ -2739,7 +2508,7 @@ def _embedded_index_payload(
     bsi_kinds=None,
 ):
     """Per-file embedded file-index payload (bloom/bitmap/bsi) over
-    a written group's pandas batch; returns bytes or None.
+    the Arrow table of one written file; returns bytes or None.
 
     file-index.format=spec (or any bitmap column) opts into the
     spec-format container (JVM readers parse it and probe with their
@@ -2756,8 +2525,8 @@ def _embedded_index_payload(
 
         idx = {}
         for c in bloom_cols:
-            if c in pdf.columns:
-                vals = [v for v in pdf[c].tolist() if v is not None]
+            if c in tbl.column_names:
+                vals = [v for v in tbl.column(c).to_pylist() if v is not None]
                 if vals:
                     params = bloom_dtypes.get(c) or {}
                     if not isinstance(params, dict):
@@ -2772,28 +2541,22 @@ def _embedded_index_payload(
                         ).encode()
                     )
         for c in bitmap_cols:
-            if c in pdf.columns:
+            if c in tbl.column_names:
                 try:
                     idx.setdefault(c, {})[fic.BITMAP_INDEX_TYPE] = (
                         fic.build_spec_bitmap(
-                            [
-                                None if _pd_isna(v) else v
-                                for v in pdf[c].tolist()
-                            ],
+                            tbl.column(c).to_pylist(),
                             (bitmap_kinds or {}).get(c),
                         )
                     )
                 except ValueError:
                     pass  # unencodable shape: no index, never wrong
         for c in bsi_cols:
-            if c in pdf.columns:
+            if c in tbl.column_names:
                 try:
                     idx.setdefault(c, {})[fic.BSI_INDEX_TYPE] = (
                         fic.build_spec_bsi(
-                            [
-                                None if _pd_isna(v) else v
-                                for v in pdf[c].tolist()
-                            ],
+                            tbl.column(c).to_pylist(),
                             (bsi_kinds or {}).get(c),
                         )
                     )
@@ -2804,8 +2567,8 @@ def _embedded_index_payload(
 
     blooms = {}
     for c in bloom_cols:
-        if c in pdf.columns:
-            hx = build_hex(pdf[c])
+        if c in tbl.column_names:
+            hx = build_hex(tbl.column(c).to_pylist())
             if hx:
                 blooms[c] = hx
     if not blooms:
@@ -2813,12 +2576,6 @@ def _embedded_index_payload(
     return _json.dumps({"format": _EMB_BLOOM_FORMAT, "columns": blooms}).encode(
         "utf-8"
     )
-
-
-def _pd_isna(v) -> bool:
-    import pandas as pd
-
-    return v is None or (not isinstance(v, (bytes, str)) and pd.isna(v))
 
 
 def _murmur_words_batch(words, num_buckets: int):
@@ -3038,8 +2795,111 @@ def lake_group_dir(table_path: str, info, pvals: dict, bucket: int) -> str:
     return os.path.join(table_path, *rel, f"bucket-{bucket}")
 
 
+def lake_task_table(batches, info) -> "Optional[pa.Table]":
+    """A write task's Arrow batches as one table, in the form
+    :func:`write_lake_task` takes: the table's columns cast to their
+    declared types, zoned timestamps as the naive session-local wall
+    clock (``pc.local_timestamp``, the form stored values and
+    ``sequence.field`` numbers are taken from), every other column
+    (routing, order and sort columns) as it arrives. The session time
+    zone rides in the schema metadata (``_SESSION_TZ``) for the ORC
+    file writer. None when the task has no rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from paimon_python_spark.types import spark_type_to_pa
+
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return None
+    tbl = pa.Table.from_batches(batches)
+    declared = {f.name: f.dataType for f in info.spark_schema.fields}
+    cols = []
+    tz = None
+    for name in tbl.column_names:
+        col = tbl.column(name)
+        if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+            tz = col.type.tz
+            col = pc.local_timestamp(col)
+        if name in declared:
+            col = col.cast(spark_type_to_pa(declared[name]))
+        cols.append(col)
+    out = pa.table(cols, names=tbl.column_names)
+    return out.replace_schema_metadata({_SESSION_TZ: tz}) if tz else out
+
+
+#: schema-metadata key of a :func:`lake_task_table`'s session time zone
+_SESSION_TZ = b"session_time_zone"
+
+
+def _orc_instants(table, info, tz: "Optional[bytes]"):
+    """``table`` with its TIMESTAMP WITH LOCAL TIME ZONE columns turned
+    from the session-local wall clock back into the UTC instant, the
+    form Spark's ORC writer stores and its ORC reader expects. Parquet
+    and avro files keep the wall clock (a parquet reader takes it in
+    the session zone)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    if not tz:
+        return table
+    for f in info.spark_schema.fields:
+        if not isinstance(f.dataType, T.TimestampType):
+            continue
+        for name in (f.name, f"_KEY_{f.name}"):
+            i = table.schema.get_field_index(name)
+            if i < 0:
+                continue
+            utc = pc.assume_timezone(
+                table.column(i),
+                tz.decode(),
+                ambiguous="earliest",
+                nonexistent="earliest",
+            ).cast(pa.timestamp("us"))
+            table = table.set_column(i, name, utc)
+    return table
+
+
+def write_lake_task(tbl, table_path: str, info, fmt: str, kv: bool, **group_kw):
+    """The one lake write task: split a task's rows (a
+    :func:`lake_task_table`) into groups by partition values, and by
+    ``__bucket`` on key-value tables, and run :func:`write_lake_group`
+    once per group. Returns every written file's meta row. Both front
+    doors run it: the builder's ``mapInArrow`` tasks
+    (:func:`_distributed_lake_write`) and ``df.write.format
+    ("paimon_lake")`` tasks (``PaimonLakeBatchWriter.write``)."""
+    import numpy as np
+    import pyarrow as pa
+
+    if tbl is None:
+        return []
+    n = tbl.num_rows
+    gcols = list(info.partition_keys) + (["__bucket"] if kv else [])
+    if gcols:
+        keyed = tbl.select(gcols).append_column(
+            "__i", pa.array(np.arange(n, dtype=np.int64))
+        )
+        lists = (
+            keyed.group_by(gcols, use_threads=False)
+            .aggregate([("__i", "list")])
+            .column("__i_list")
+            .combine_chunks()
+        )
+        offs = lists.offsets.to_numpy()
+        flat = lists.values.to_numpy()
+        groups = [np.sort(flat[offs[i] : offs[i + 1]]) for i in range(len(lists))]
+    else:
+        groups = [None]
+    rows = []
+    for idx in groups:
+        sub = tbl if idx is None or len(idx) == n else tbl.take(idx)
+        rows.extend(write_lake_group(sub, table_path, info, fmt, kv, **group_kw))
+    return rows
+
+
 def write_lake_group(
-    pdf: "pd.DataFrame",
+    tbl: "pa.Table",
     table_path: str,
     info,
     fmt: str,
@@ -3050,18 +2910,17 @@ def write_lake_group(
     file_prefix: str = "data",
     sequence_field: Optional[str] = None,
     dyn_old_files: Optional[dict] = None,
-    values: Optional["pa.Table"] = None,
 ) -> List[dict]:
     """The lake file writer: write ONE (partition, bucket) group as
     spec data files in the lake's final layout and return their
     per-file meta rows (:func:`_lake_meta_schema`). Every lake data
-    file goes through here — the builder's ``applyInPandas`` tasks
-    (:func:`_distributed_lake_write`: writes, compaction, overwrite)
-    and ``df.write.format("paimon_lake")`` tasks alike.
+    file goes through here, called by :func:`write_lake_task`.
 
-    ``pdf`` carries the table's columns in the naive session-local
-    form ``applyInPandas`` delivers, plus ``__bucket`` (``kv``), an
-    optional ``__row_kind`` (0=+I, 1=-U, 2=+U, 3=-D) and an optional
+    ``tbl`` is a :func:`lake_task_table`: the table's columns in their
+    declared Arrow types and naive session-local timestamps, written
+    exactly as they are (a BIGINT beside a NULL stays an int, a NaN
+    stays apart from NULL), plus ``__bucket`` (``kv``), an optional
+    ``__row_kind`` (0=+I, 1=-U, 2=+U, 3=-D) and an optional
     ``__input_order`` (arrival order). ``kv=True`` writes Paimon
     key-value files: ``_KEY_*`` system columns, per-row
     ``_SEQUENCE_NUMBER`` from ``seq_base`` (or ``sequence_field``),
@@ -3070,15 +2929,14 @@ def write_lake_group(
     target file size. ``dyn_old_files`` ({(part_json, bucket): index
     file}) fuses dynamic-bucket index upkeep into the write: the
     group's new key hashcodes (``__kn`` = 1 rows' ``__h``) extend its
-    bucket's HASH index file. ``values`` (an arrow table of the
-    table's columns, positionally aligned with ``pdf``'s index) supplies
-    the written values exactly, past pandas' NULL rules: a BIGINT
-    beside a NULL stays an int, a NaN stays apart from NULL."""
+    bucket's HASH index file."""
     import json as _json
     import os
     import uuid
 
+    import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from paimon_python_spark.paimon_import import (
         _value_stats_for,
@@ -3086,7 +2944,6 @@ def write_lake_group(
         encode_binary_row,
         logical_value,
     )
-    from paimon_python_spark.types import spark_type_to_pa
 
     part_keys = list(info.partition_keys)
     trimmed = [k for k in info.primary_keys if k not in part_keys] if kv else []
@@ -3106,82 +2963,71 @@ def write_lake_group(
     ) = _bloom_option_cols(info)
     target_bytes = _target_file_size(info)
 
-    bucket = int(pdf["__bucket"].iloc[0]) if kv else 0
+    names = tbl.column_names
+    session_tz = (tbl.schema.metadata or {}).get(_SESSION_TZ)
+    bucket = tbl.column("__bucket")[0].as_py() if kv else 0
     pvals = {
-        k: logical_value(pdf[k].iloc[0], info.spark_schema[k].dataType)
+        k: logical_value(tbl.column(k)[0].as_py(), info.spark_schema[k].dataType)
         for k in part_keys
     }
+    order = None
     if trimmed:
-        if "__input_order" in pdf.columns:
+        if "__input_order" in names:
             # same-key events sequence in ARRIVAL order (see the
             # __input_order comment in _distributed_lake_write)
-            ks = trimmed + ["__input_order"]
+            order = trimmed + ["__input_order"]
         else:
             # changelog-diff writers: one logical event per key; a
             # full-compaction changelog carries (-U, +U) pairs and
             # the -U (kind 1) must precede the +U (kind 2) in
             # sequence order for streaming consumers
-            ks = trimmed + (
-                ["__row_kind"] if "__row_kind" in pdf.columns else []
-            )
-        pdf = pdf.sort_values(ks, kind="mergesort")
+            order = trimmed + (["__row_kind"] if "__row_kind" in names else [])
     elif sort_cols:
         # intra-file clustering order (sort compaction): file-level
         # min/max don't care, but parquet page stats do
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-    if values is not None:
-        values = values.take(pdf.index.to_numpy())
-    pdf = pdf.reset_index(drop=True)
-    n = len(pdf)
-
-    def column(name, dt):
-        if values is not None:
-            return values.column(name)
-        return pa.array(pdf[name], type=spark_type_to_pa(dt))
+        order = sort_cols
+    if order:
+        tbl = tbl.take(
+            pc.sort_indices(tbl, sort_keys=[(c, "ascending") for c in order])
+        )
+    n = tbl.num_rows
 
     arrays = {}
     if kv:
-        for k, t in zip(trimmed, trimmed_types):
-            arrays[f"_KEY_{k}"] = column(k, t)
+        for k in trimmed:
+            arrays[f"_KEY_{k}"] = tbl.column(k)
         if sequence_field is not None:
             # Paimon's sequence.field: a USER column drives the
             # sequence, so out-of-order CDC events merge by event
             # time instead of arrival order (a stale update loses
-            # to the newer row already in the lake)
-            import datetime as _sdt
-
-            import pandas as pd
-
-            sv = pdf[sequence_field]
-            if len(sv) and isinstance(
-                sv.iloc[0], (_sdt.datetime, pd.Timestamp)
-            ):
-                seqs = [int(pd.Timestamp(x).value // 1_000_000) for x in sv]
+            # to the newer row already in the lake); a TIMESTAMP
+            # counts its session-local wall clock in epoch millis
+            sv = tbl.column(sequence_field)
+            if pa.types.is_timestamp(sv.type):
+                seqs = np.floor_divide(sv.cast(pa.int64()).to_numpy(), 1000)
             else:
-                seqs = [int(x) for x in sv]
-            arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
+                seqs = pc.cast(sv, pa.int64(), safe=False).to_numpy()
         else:
-            seqs = list(range(seq_base, seq_base + n))
-            arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
-        arrays["_VALUE_KIND"] = pa.array(
-            [int(x) for x in pdf["__row_kind"]]
-            if "__row_kind" in pdf.columns
-            else [0] * n,
-            pa.int32(),
+            seqs = np.arange(seq_base, seq_base + n, dtype=np.int64)
+        arrays["_SEQUENCE_NUMBER"] = pa.array(seqs, pa.int64())
+        arrays["_VALUE_KIND"] = (
+            tbl.column("__row_kind").cast(pa.int32())
+            if "__row_kind" in names
+            else pa.array(np.zeros(n, np.int32))
         )
     for f in info.spark_schema.fields:
-        arrays[f.name] = column(f.name, f.dataType)
+        arrays[f.name] = tbl.column(f.name)
     table = pa.table(arrays)
     ddir = lake_group_dir(table_path, info, pvals, bucket)
     os.makedirs(ddir, exist_ok=True)
     part_json = _json.dumps(pvals)
     index_meta = None
-    if dyn_old_files is not None and "__kn" in pdf.columns:
+    if dyn_old_files is not None and "__kn" in names:
         # dynamic-bucket index upkeep, fused into the write task:
         # this group's NEW key hashcodes extend its bucket's index
         # file (a hash already present stays — a collision with an
         # existing key routes here by design, same as real Paimon)
-        newh = pdf.loc[pdf["__kn"] == 1, "__h"]
+        newh = pc.filter(tbl.column("__h"), pc.equal(tbl.column("__kn"), 1))
         if len(newh):
             from paimon_python_spark.dynamic_bucket import union_hash_index
 
@@ -3212,10 +3058,13 @@ def write_lake_group(
         if lo >= hi:
             continue
         sub_tbl = table.slice(lo, hi - lo)
-        sub_pdf = pdf.iloc[lo:hi]
         name = f"{file_prefix}-{uuid.uuid4()}-{ci}.{fmt}"
         fpath = os.path.join(ddir, name)
-        _write_fixture_data_file(sub_tbl, fpath, fmt)
+        _write_fixture_data_file(
+            _orc_instants(sub_tbl, info, session_tz) if fmt == "orc" else sub_tbl,
+            fpath,
+            fmt,
+        )
         cl_name, cl_size = None, 0
         if changelog:
             # changelog-producer=input: the commit's input rows
@@ -3231,14 +3080,14 @@ def write_lake_group(
         if trimmed:
             kmin = encode_binary_row(
                 [
-                    logical_value(sub_pdf[k].iloc[0], t)
+                    logical_value(sub_tbl.column(f"_KEY_{k}")[0].as_py(), t)
                     for k, t in zip(trimmed, trimmed_types)
                 ],
                 trimmed_types,
             )
             kmax = encode_binary_row(
                 [
-                    logical_value(sub_pdf[k].iloc[-1], t)
+                    logical_value(sub_tbl.column(f"_KEY_{k}")[-1].as_py(), t)
                     for k, t in zip(trimmed, trimmed_types)
                 ],
                 trimmed_types,
@@ -3247,7 +3096,7 @@ def write_lake_group(
             kmin = kmax = b""
         stats = _value_stats_for(sub_tbl, info)
         emb = _embedded_index_payload(
-            sub_pdf,
+            sub_tbl,
             bloom_cols,
             bloom_spec,
             bloom_dtypes,
@@ -3265,14 +3114,8 @@ def write_lake_group(
                 "bucket": bucket,
                 "rows": hi - lo,
                 "size": os.path.getsize(fpath),
-                "min_seq": (
-                    (min(sub_seqs) if sub_seqs else seq_base) if kv else 0
-                ),
-                "max_seq": (
-                    (max(sub_seqs) if sub_seqs else seq_base)
-                    if kv
-                    else hi - lo
-                ),
+                "min_seq": int(sub_seqs.min()) if kv else 0,
+                "max_seq": int(sub_seqs.max()) if kv else hi - lo,
                 "min_key": kmin,
                 "max_key": kmax,
                 "stats_min": stats["_MIN_VALUES"],
@@ -3415,24 +3258,31 @@ def _distributed_lake_write(
     dyn_fresh: bool = False,
 ):
     """EXECUTOR-SIDE data-file write into a real lake's final layout,
-    the builder's front end to :func:`write_lake_group`: casts ``df``
-    to the table schema, routes rows to (partition, bucket) groups
-    (``kv``) or (partition, input task) groups (append tables have no
-    bucket routing), and runs the group writer once per group via
-    ``applyInPandas`` — Arrow-batched, no driver materialization, no
-    staging-dir move. Only KB-scale per-file metadata returns to the
-    driver, which turns it into manifest ADD entries with
+    the builder's front end to :func:`write_lake_task`: casts ``df``
+    to the table schema, routes rows (``kv``: a bucket per key) and
+    runs the one lake write task over each Spark task's Arrow batches
+    through ``mapInArrow`` — no driver materialization, no staging
+    dir. Key-value writes and append compaction first repartition on
+    their group keys, so each (partition, bucket) group, or each
+    partition, reaches exactly one task and becomes one set of files.
+    Plain appends do not shuffle: their groups are (partition, input
+    task). Only KB-scale per-file metadata returns to the driver,
+    which turns it into manifest ADD entries with
     :func:`lake_add_entry`. Returns (manifest ADD entries, total
     rows), plus the changelog entries when ``changelog``."""
     import json as _json
 
-    import pandas as pd
     from pyspark.sql import functions as F
 
     part_keys = list(info.partition_keys)
     trimmed = [k for k in info.primary_keys if k not in part_keys] if kv else []
 
-    from paimon_python_spark._localdf import cast_select_sql, quote_ident
+    from paimon_python_spark._localdf import (
+        cast_select_sql,
+        pinned_width,
+        quote_ident,
+    )
+    from paimon_python_spark.types import spark_schema_to_pa
 
     schema_names = {f.name for f in info.spark_schema.fields}
     extra_sort = [c for c in (sort_cols or []) if c not in schema_names]
@@ -3460,8 +3310,8 @@ def _distributed_lake_write(
         # order they ARRIVED, not by RowKind value — a delete-then-
         # reinsert batch nets to the re-insert. The monotonic id is
         # captured BEFORE the (partition, bucket) shuffle, so each
-        # group's pandas frame can be restored to input order even
-        # though applyInPandas delivers rows in shuffle order.
+        # group can be restored to input order even though its task
+        # receives rows in shuffle order.
         # Changelog-diff writers pass arrival_order=False: their input
         # has at most one logical event per key and the (-U, +U) pair
         # order is the kind order.
@@ -3535,17 +3385,34 @@ def _distributed_lake_write(
         # parallelism, one output file per (partition, task) — except
         # compaction, whose whole point is folding a partition's files
         # into one
-        sdf = sdf.withColumn(
-            "__task",
-            F.lit(0) if single_file_per_group else F.spark_partition_id(),
+        gcols = part_keys if single_file_per_group else None
+
+    if gcols is not None:
+        # every group must reach exactly ONE task, and the group
+        # write's width stays pinned: the routed rows shuffle only KBs
+        # at gate scale, so AQE's byte-coalescing would fold every
+        # (partition, bucket) group's file write onto ONE core
+        # (profiled: 1-task jobs of 150-250 ms per commit while 31
+        # cores idled). An explicit repartition is never coalesced.
+        # Known group-count bound: an UNPARTITIONED fixed-bucket PK
+        # table has at most num_buckets groups — cap the pinned width
+        # so a tiny commit into a session with a huge configured
+        # shuffle width does not fan into hundreds of empty Python
+        # tasks
+        _bound = (
+            num_buckets if (kv and num_buckets >= 1 and not part_keys) else None
         )
-        gcols = part_keys + ["__task"]
+        _w = pinned_width(sdf.sparkSession, max_groups=_bound)
+        sdf = sdf.repartition(_w, *gcols) if gcols else sdf.repartition(1)
 
     meta_schema = _lake_meta_schema()
+    meta_arrow = spark_schema_to_pa(meta_schema)
 
-    def _write_group(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        rows = write_lake_group(
-            pdf,
+    def _write_task(batches):
+        import pyarrow as pa
+
+        rows = write_lake_task(
+            lake_task_table(batches, info),
             table_path,
             info,
             fmt,
@@ -3557,32 +3424,10 @@ def _distributed_lake_write(
             sequence_field=sequence_field,
             dyn_old_files=dyn_old_files,
         )
-        return pd.DataFrame(rows, columns=meta_schema.fieldNames())
+        if rows:
+            yield pa.RecordBatch.from_pylist(rows, schema=meta_arrow)
 
-    # pin the group-write's width: the routed rows shuffle only KBs at
-    # gate scale, so AQE's byte-coalescing would fold every (partition,
-    # bucket) group's file write onto ONE core (profiled: 1-task jobs of
-    # 150-250 ms per commit while 31 cores idled). An explicit
-    # repartition on the group keys is never coalesced and satisfies
-    # applyInPandas' ClusteredDistribution, so no second exchange.
-    from paimon_python_spark._localdf import pinned_width
-
-    # known group-count bound: an UNPARTITIONED fixed-bucket PK table
-    # has at most num_buckets groups — cap the pinned width so a tiny
-    # commit into a session with a huge configured shuffle width does
-    # not fan into hundreds of empty Python tasks (r12 ADVICE)
-    _bound = (
-        num_buckets if (kv and num_buckets >= 1 and not part_keys) else None
-    )
-    _w = pinned_width(sdf.sparkSession, max_groups=_bound)
-    if _w > 1:
-        sdf = sdf.repartition(_w, *gcols)
-    meta = [
-        r.asDict()
-        for r in sdf.groupBy(*gcols)
-        .applyInPandas(_write_group, meta_schema)
-        .collect()
-    ]
+    meta = [r.asDict() for r in sdf.mapInArrow(_write_task, meta_schema).collect()]
     if dyn_assigner is not None:
         dyn_assigner.release()
     if dyn_old_files is not None:

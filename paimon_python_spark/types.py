@@ -137,7 +137,7 @@ def spark_type_to_pa(dt: T.DataType) -> pa.DataType:
         return pa.binary()
     if isinstance(dt, T.DateType):
         return pa.date32()
-    if isinstance(dt, T.TimestampType):
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         return pa.timestamp("us")
     if isinstance(dt, T.DecimalType):
         return pa.decimal128(dt.precision, dt.scale)

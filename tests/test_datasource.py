@@ -651,13 +651,26 @@ def test_lake_datasource_write_empty_append_is_noop(tmp_path, spark):
     assert latest_paimon_snapshot_id(p) == 1  # no empty snapshot
 
 
-@pytest.mark.parametrize("pk", [False, True], ids=["append", "fixed_pk"])
-def test_lake_format_write_stores_exact_values(tmp_path, spark, pk):
-    """df.write.format("paimon_lake") stores each value as Spark hands
-    it over: a BIGINT past 2^53 beside a NULL stays exact, a NaN stays
-    apart from NULL, and a year-2300 timestamp (past pandas' nanosecond
-    range) is written. The TIMESTAMP column leaves the other columns'
-    value stats in place, so a k filter still prunes append files."""
+@pytest.mark.parametrize(
+    "front,pk",
+    [
+        ("format", False),
+        ("format", True),
+        ("builder", False),
+        ("builder", True),
+    ],
+    ids=["append", "fixed_pk", "builder-append", "builder-fixed_pk"],
+)
+def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk):
+    """Both write front doors — df.write.format("paimon_lake") and the
+    builder's write_lake_append / write_lake_pk_append — store each
+    value as Spark hands it over: a BIGINT past 2^53 beside a NULL
+    stays exact, a NaN stays apart from NULL, and a year-2300 timestamp
+    (past pandas' nanosecond range) is written. The TIMESTAMP column
+    leaves the other columns' value stats in place, so a k filter still
+    prunes append files. On append lakes a spec bloom index on k is
+    built from the exact values too, so k == 5 and k == 2^53 + 1 each
+    find their row."""
     import datetime
     import math
     import os
@@ -671,10 +684,19 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, pk):
         _pruned_entries,
         create_lake_table,
         read_paimon_schema,
+        write_lake_append,
+        write_lake_pk_append,
     )
 
     register_lake(spark)
     p = str(tmp_path / "exact")
+    if pk:
+        options = {"bucket": "2"}
+    else:
+        options = {
+            "file-index.format": "spec",
+            "file-index.bloom-filter.columns": "k",
+        }
     create_lake_table(
         p,
         [
@@ -684,7 +706,7 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, pk):
             ("t", "TIMESTAMP(6) WITH LOCAL TIME ZONE"),
         ],
         primary_keys=["id"] if pk else None,
-        options={"bucket": "2"} if pk else None,
+        options=options,
     )
     big = 2**53 + 1
     utc = datetime.timezone.utc
@@ -699,9 +721,15 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, pk):
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         for batch in (rows, [(7, -1, 2.0, datetime.datetime(2024, 1, 2, tzinfo=utc))]):
-            spark.createDataFrame(batch, schema).coalesce(1).write.format(
-                "paimon_lake"
-            ).option("path", p).mode("append").save()
+            df = spark.createDataFrame(batch, schema).coalesce(1)
+            if front == "format":
+                df.write.format("paimon_lake").option("path", p).mode(
+                    "append"
+                ).save()
+            elif pk:
+                write_lake_pk_append(p, df)
+            else:
+                write_lake_append(p, df)
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
 
@@ -725,6 +753,11 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, pk):
         rb = PaimonLakeTable(p).new_read_builder()
         rb.with_filter(rb.new_predicate_builder().equal("k", -1))
         assert len(_pruned_entries(p, read_paimon_schema(p), rb)) == 1
+    for k, want in ((5, 3), (big, 1)):
+        rb = PaimonLakeTable(p).new_read_builder()
+        rb.with_filter(rb.new_predicate_builder().equal("k", k))
+        got = rb.with_projection(["id", "k"]).new_read().to_pandas()
+        assert list(got.id) == [want] and int(got.k.iloc[0]) == k
 
 
 def test_lake_datasource_streaming_survives_expired_history(tmp_path, spark):
@@ -2379,8 +2412,16 @@ def _live_file_fields(d):
     return sorted(live.values(), key=repr)
 
 
-@pytest.mark.parametrize("mode", ["append", "fixed_pk", "dynamic_pk"])
-@pytest.mark.parametrize("fmt", ["parquet", "orc", "avro"])
+_FORMAT_MODES = [
+    (fmt, mode)
+    for fmt in ("parquet", "orc", "avro")
+    for mode in ("append", "fixed_pk", "dynamic_pk")
+] + [("parquet", "plain"), ("orc", "plain")]
+
+
+@pytest.mark.parametrize(
+    "fmt,mode", _FORMAT_MODES, ids=[f"{f}-{m}" for f, m in _FORMAT_MODES]
+)
 def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
     """The two write front doors are one lake file writer: the same rows
     written into twin lakes — once through the builder, once through
@@ -2390,7 +2431,9 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
     values, an update of a seeded key and, on PK lakes, a rowkind.field
     -D then re-insert of one key, sequenced by a TIMESTAMP
     sequence.field under a non-UTC session time zone (a BIGINT one on
-    avro, whose data files hold no timestamps here)."""
+    avro, whose data files hold no timestamps here). ``plain`` append
+    lakes declare no file index and carry a TIMESTAMP column, which
+    reads back equal to the input on both doors."""
     import datetime
 
     from paimon_python_spark.lake_datasource import register_lake
@@ -2402,10 +2445,14 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
     from paimon_python_spark.paimon_import import plan_paimon_files
 
     register_lake(spark)
-    pk = mode != "append"
+    pk = mode.endswith("_pk")
     ts_type = "BIGINT" if fmt == "avro" else "TIMESTAMP(6) WITH LOCAL TIME ZONE"
+    plain = mode == "plain"
     fields = [("p", "INT NOT NULL"), ("k", "BIGINT NOT NULL"), ("v", "STRING")]
     options = {"file.format": fmt, "file-index.bloom-filter.columns": "v"}
+    if plain:
+        fields.append(("ts", ts_type))
+        options = {"file.format": fmt}
     if pk:
         fields += [("ts", ts_type), ("op", "STRING")]
         options.update(
@@ -2418,6 +2465,10 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
     t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
 
     def frame(rows):
+        if plain:
+            return spark.createDataFrame(
+                [r[:4] for r in rows], "p int, k bigint, v string, ts timestamp"
+            ).coalesce(1)
         if not pk:
             rows = [r[:3] for r in rows]
         ddl = "p int, k bigint, v string"
@@ -2480,6 +2531,8 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
             assert len(out) == 9 and got[4] == "re4" and got[3] == "u3"
         else:
             assert len(out) == 13
+        if plain:
+            assert out == sorted((r[:4] for r in seed + batch), key=repr)
         assert got[10] is None and got[12] is None
         for d in lakes.values():
             assert all(e.file_name.endswith(f".{fmt}") for e in plan_paimon_files(d))

@@ -181,12 +181,16 @@ def test_pinned_width_tracks_session_confs(spark):
 
 def test_group_write_keeps_width(spark):
     """The lake group writer's exchange is a user repartition on the
-    group keys, so AQE cannot coalesce the applyInPandas stage to one
-    task even when the shuffled bytes are tiny. The width is OBSERVED
-    via the status tracker (r12 ADVICE: row count + one-file-per-bucket
-    also pass with a single coalesced task, so they guard nothing):
-    the post-exchange stage must run exactly pinned_width tasks — a
-    width the input's own partitioning cannot produce by accident."""
+    group keys, so AQE cannot coalesce the mapInArrow write stage to
+    one task even when the shuffled bytes are tiny. The width is
+    OBSERVED via the status tracker (row count and
+    one-file-per-bucket also pass with a single coalesced task, so they
+    guard nothing): the post-exchange stage must run exactly
+    pinned_width tasks — a width the input's own partitioning cannot
+    produce by accident. The same repartition closes each group on one
+    task: a multi-task PK commit writes exactly one level-0 file per
+    (partition, bucket) it touches, and an append-lake compaction over
+    a multi-task input writes exactly one file per partition."""
     import shutil
     import tempfile
     import time
@@ -194,9 +198,12 @@ def test_group_write_keeps_width(spark):
     from pyspark.sql import functions as F
 
     from paimon_python_spark._localdf import pinned_width
+    from paimon_python_spark.paimon_import import plan_paimon_files
     from paimon_python_spark.paimon_lake import (
         PaimonLakeTable,
+        compact_lake,
         create_lake_table,
+        write_lake_append,
         write_lake_pk_append,
     )
 
@@ -253,6 +260,46 @@ def test_group_write_keeps_width(spark):
             d for d in os.listdir(path) if d.startswith("bucket-")
         }
         assert buckets == {"bucket-0", "bucket-1", "bucket-2", "bucket-3"}
+
+        # a partitioned PK commit from 4 input tasks: one level-0 file
+        # per touched (partition, bucket) group
+        pk_path = wh + "/pk"
+        create_lake_table(
+            pk_path,
+            [("p", "INT NOT NULL"), ("k", "BIGINT NOT NULL"), ("v", "DOUBLE")],
+            partition_keys=["p"],
+            primary_keys=["p", "k"],
+            options={"bucket": "2"},
+        )
+        multi = spark.range(2000, numPartitions=4).select(
+            (F.col("id") % 3).cast("int").alias("p"),
+            F.col("id").alias("k"),
+            (F.col("id") * 1.5).alias("v"),
+        )
+        write_lake_pk_append(pk_path, multi)
+        files = plan_paimon_files(pk_path)
+        groups = {(e.partition["p"], e.bucket) for e in files}
+        assert len(groups) == 6 and len(files) == 6
+        assert all(e.level == 0 for e in files)
+
+        # an append lake written from 4 input tasks holds one file per
+        # (partition, input task); its compaction folds each partition
+        # into ONE file although the compaction input spans many tasks
+        ap = wh + "/append"
+        create_lake_table(
+            ap, [("p", "INT NOT NULL"), ("v", "BIGINT")], partition_keys=["p"]
+        )
+        write_lake_append(
+            ap,
+            spark.range(400, numPartitions=4).select(
+                (F.col("id") % 2).cast("int").alias("p"), F.col("id").alias("v")
+            ),
+        )
+        assert len(plan_paimon_files(ap)) == 8
+        compact_lake(ap)
+        after = plan_paimon_files(ap)
+        assert sorted(e.partition["p"] for e in after) == [0, 1]
+        assert PaimonLakeTable(ap).new_read_builder().new_read().to_df().count() == 400
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         shutil.rmtree(wh, ignore_errors=True)

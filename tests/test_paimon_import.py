@@ -4001,11 +4001,12 @@ def test_stream_lake_snapshots_start_modes(tmp_path, spark):
     assert got3 == [(5, [5])]
 
 
-def test_lake_parquet_append_writes_footer_stats(tmp_path, spark):
-    """Plain parquet appends harvest manifest _VALUE_STATS from the
-    parquet footers the adopter already opens — so stats-based file
-    skipping works on append-only lakes this engine writes (before,
-    those manifests were stats-less and every scan planned every
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_lake_parquet_append_writes_footer_stats(tmp_path, spark, fmt):
+    """Plain parquet and ORC appends commit manifest _VALUE_STATS,
+    computed by the lake write task over the Arrow values it writes —
+    so stats-based file skipping works on append-only lakes this
+    engine writes (a stats-less manifest makes every scan plan every
     file). String bounds truncate; pruning is sound and effective."""
     from paimon_python_spark.paimon_import import decode_entry_stats
     from paimon_python_spark.paimon_lake import (
@@ -4020,7 +4021,9 @@ def test_lake_parquet_append_writes_footer_stats(tmp_path, spark):
     set_spark(spark)
     p = str(tmp_path / "pq_stats_lake")
     create_lake_table(
-        p, [("k", "INT NOT NULL"), ("s", "STRING"), ("d", "DOUBLE")]
+        p,
+        [("k", "INT NOT NULL"), ("s", "STRING"), ("d", "DOUBLE")],
+        options={"file.format": fmt},
     )
     # two commits with disjoint k ranges → two files, prunable apart
     write_lake_append(
