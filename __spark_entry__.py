@@ -4381,12 +4381,12 @@ ORDER BY c_custkey
 def paimon_lake_bucket_local_merge_roundtrip(spark, sf_dir):
     """NO-SHUFFLE PK merge read — real Paimon's own execution shape on
     Spark: fixed-bucket routing makes the merge closed per (partition,
-    bucket) group, so eligible reads plan scan → mapInPandas with ZERO
+    bucket) group, so the read plans scan → MapInArrow, one Arrow lake
+    read task (``paimon_import.read_lake_task``) per group, with ZERO
     Exchange nodes (asserted on the executed plan) instead of
     shuffling every scanned byte through a key window — the dominant
-    cost of PK reads at 100 TB (measured 2.1× at 400k rows locally;
-    the structural win grows with data). Two upsert commits; oracle
-    replays last-write-wins in SQL."""
+    cost of PK reads at 100 TB. Two upsert commits; oracle replays
+    last-write-wins in SQL."""
     from paimon_python_spark.paimon_lake import (
         PaimonLakeTable,
         create_lake_table,

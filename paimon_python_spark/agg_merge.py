@@ -768,15 +768,23 @@ def _rank_series(pdf: pd.DataFrame, cols: list) -> pd.Series:
 
 
 def order_rank(*cols):
-    """Strict merge order over numpy columns (first = primary, all
-    ascending): each row's 0-based rank, with row position breaking
-    full ties — the ``ord_col`` :func:`merge_group` takes."""
+    """Strict merge order over Arrow columns (first = primary, all
+    ascending, NULLs first): each row's 0-based rank as an int64 Arrow
+    array, with row position breaking full ties (``sort_indices`` is
+    stable) — the ``ord_col`` :func:`merge_group` takes."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    order = np.lexsort(cols[::-1])
+    names = [f"c{i}" for i in range(len(cols))]
+    order = pc.sort_indices(
+        pa.table(list(cols), names=names),
+        sort_keys=[(n, "ascending") for n in names],
+        null_placement="at_start",
+    ).to_numpy()
     rank = np.empty(len(order), dtype=np.int64)
     rank[order] = np.arange(len(order))
-    return rank
+    return pa.array(rank)
 
 
 def _pandas_scalar_agg(
@@ -1003,47 +1011,102 @@ def pandas_partial_update_merge(
     return out[merge_keys + list(value_cols)]
 
 
-def merge_group(pdf: pd.DataFrame, schema, keys, ord_col, kind_col) -> pd.DataFrame:
+def _is_add(kind):
+    """Arrow mask of the rows whose kind is an add (``+I``/``+U``)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return pc.is_in(kind, value_set=pa.array(ADD_KINDS, kind.type))
+
+
+def _key_run_edges(tbl, keys, last: bool):
+    """Mask of the last (or first) row of each key run in a key-sorted
+    Arrow table. NULLs equal NULLs and NaNs equal NaNs, as in pandas'
+    ``drop_duplicates``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    if n < 2:
+        return pa.array(np.ones(n, dtype=bool))
+    change = np.zeros(n - 1, dtype=bool)
+    for k in keys:
+        a, b = tbl[k].slice(0, n - 1), tbl[k].slice(1)
+        both_missing = pc.and_(
+            pc.is_null(a, nan_is_null=True), pc.is_null(b, nan_is_null=True)
+        )
+        differs = pc.and_not(pc.fill_null(pc.not_equal(a, b), True), both_missing)
+        change |= differs.to_numpy(zero_copy_only=False)
+    mask = np.ones(n, dtype=bool)
+    if last:
+        mask[:-1] = change
+    else:
+        mask[1:] = change
+    return pa.array(mask)
+
+
+def merge_group(tbl, schema, keys, ord_col, kind_col):
     """THE in-task primary-key merge of one (partition, bucket) group —
-    the pandas counterpart of the reference's ``SortMergeReader`` with
+    the Arrow counterpart of the reference's ``SortMergeReader`` with
     a pluggable merge function, shared by every executor-local read
-    (lake and engine builders' bucket-local paths, both ``format(...)``
-    data sources). ``ord_col`` is a STRICT merge order the caller
-    derives from its own tie-break (commit sequence first); ``keys``
-    are the group's key columns as stored. ``ignore-delete`` drops
-    retracts before the merge, then the merge-engine option picks the
-    fold:
+    (the lake read task ``paimon_import.read_lake_task``, the engine
+    builder's bucket-local path and the ``format("paimon_spark")``
+    data source). Takes and returns a ``pyarrow.Table``. ``ord_col``
+    is a STRICT merge order the caller derives from its own tie-break
+    (:func:`order_rank`, commit sequence first); ``keys`` are the
+    group's key columns as stored. ``ignore-delete`` drops retracts
+    before the merge, then the merge-engine option picks the fold:
 
     - ``deduplicate``: the max-``ord_col`` row per key, dropped when it
       is a retract (``-D``/``-U``);
-    - ``first-row``: the min-``ord_col`` row per key, same drop;
+    - ``first-row``: the min-``ord_col`` row per key, same drop. Both
+      are one ``sort_indices`` over keys plus ``ord_col`` and a take
+      of each key run's last or first row;
     - ``partial-update`` / ``aggregation``: the full pandas twins
       :func:`pandas_partial_update_merge` / :func:`pandas_agg_merge`
-      over every value column the frame carries.
+      over every value column the table carries, behind one
+      Arrow→pandas→Arrow conversion (ArrowDtype columns, so nulls and
+      wide integers stay exact into the fold).
 
-    Returns the merged frame (dedup / first-row keep every input
+    Returns the merged table (dedup / first-row keep every input
     column; the folds return keys + value columns)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     opts = schema.options
     if opts.get("ignore-delete", "false").lower() == "true":
         # retracts drop BEFORE the merge: a -D must never shadow the
         # standing row (merge_on_read's pre-merge filter)
-        pdf = pdf[pdf[kind_col].isin(ADD_KINDS)]
+        tbl = tbl.filter(_is_add(tbl[kind_col]))
     engine = opts.get("merge-engine", "deduplicate")
     if engine in ("deduplicate", "first-row"):
-        pdf = pdf.sort_values(list(keys) + [ord_col], kind="mergesort")
-        pdf = pdf.drop_duplicates(
-            subset=list(keys),
-            keep="last" if engine == "deduplicate" else "first",
+        order = pc.sort_indices(
+            tbl, sort_keys=[(c, "ascending") for c in [*keys, ord_col]]
         )
-        return pdf[pdf[kind_col].isin(ADD_KINDS)]
+        tbl = tbl.take(order)
+        tbl = tbl.filter(_key_run_edges(tbl, keys, engine == "deduplicate"))
+        return tbl.filter(_is_add(tbl[kind_col]))
     value_cols = [
         f.name
         for f in schema.spark_schema.fields
-        if f.name not in keys and f.name in pdf.columns
+        if f.name not in keys and f.name in tbl.column_names
     ]
     fold = (
         pandas_partial_update_merge
         if engine == "partial-update"
         else pandas_agg_merge
     )
-    return fold(pdf, schema, list(keys), value_cols, ord_col, kind_col)
+    out = fold(
+        tbl.to_pandas(types_mapper=pd.ArrowDtype),
+        schema,
+        list(keys),
+        value_cols,
+        ord_col,
+        kind_col,
+    )
+    return pa.Table.from_pandas(
+        out,
+        schema=pa.schema([tbl.schema.field(c) for c in out.columns]),
+        preserve_index=False,
+    )

@@ -485,9 +485,8 @@ class PaimonBatchReader(DataSourceReader):
             # were refused at plan time by _check_ds_merge_supported).
             # A declared sequence.field (possibly multi-field) orders
             # before the arrival sequence, via a composite rank.
-            from paimon_python_spark.agg_merge import _rank_series, merge_group
+            from paimon_python_spark.agg_merge import merge_group, order_rank
 
-            pdf = tbl.to_pandas()
             keys = list(
                 dict.fromkeys(schema.partition_keys + schema.primary_keys)
             )
@@ -496,13 +495,11 @@ class PaimonBatchReader(DataSourceReader):
                 for c in schema.options.get("sequence.field", "").split(",")
                 if c.strip()
             ]
-            pdf["__ord"] = _rank_series(pdf, seq_fields + [SEQ_COL])
-            pdf = merge_group(pdf, schema, keys, "__ord", KIND_COL)
-            tbl = pa.Table.from_pandas(
-                pdf[[f.name for f in schema.spark_schema.fields]],
-                schema=logical_pa,
-                preserve_index=False,
+            tbl = tbl.append_column(
+                "__ord", order_rank(*[tbl[c] for c in seq_fields + [SEQ_COL]])
             )
+            tbl = merge_group(tbl, schema, keys, "__ord", KIND_COL)
+            tbl = tbl.select(logical_pa.names).cast(logical_pa)
         yield from tbl.to_batches(max_chunksize=4096)
 
 

@@ -5,18 +5,21 @@ front door onto a Flink/Spark-JVM-written (or engine-written) lake,
 on the same driver-side planner every lake read uses.
 
 - batch: one ``InputPartition`` per (partition, bucket) group for PK
-  lakes (the merge unit — the executor-local merge needs no shuffle:
-  ``paimon_import.merge_lake_group``, the shared frame reader feeding
-  ``agg_merge.merge_group``, the one in-task merge kernel) and one per
-  file for append lakes; pushed filters re-enter the engine predicate tree
-  so partition pruning, manifest-stats skipping, bloom probes, and PK
+  lakes (the merge unit — the executor-local merge needs no shuffle)
+  and one per file for append lakes, each carrying a spec of
+  ``paimon_import.lake_read_specs``; executors run
+  ``paimon_import.read_lake_task``, the lake read task the builder's
+  bucket-local ``mapInArrow`` merge runs too, and yield its Arrow
+  batches. Pushed filters re-enter the engine predicate tree so
+  partition pruning, manifest-stats skipping, bloom probes, and PK
   bucket pruning all fire before partitions exist.
 - streaming: snapshot-id offsets; each micro-batch plans one
   ``InputPartition`` per delta file of the commits in ``(start, end]``
   (COMPACT rewrites skipped — the engine incremental contract) and
-  executors read the files directly (``DataSourceStreamReader`` —
-  micro-batch rows never pass through the driver, so a high-rate
-  source scales with the cluster, not the driver).
+  executors read the files directly through the same task
+  (``DataSourceStreamReader`` — micro-batch rows never pass through
+  the driver, so a high-rate source scales with the cluster, not the
+  driver).
 - write: ``df.write.format("paimon_lake")`` on append lakes AND
   PK lakes (fixed and dynamic bucket), ``mode("append")`` /
   ``mode("overwrite")`` — executors route rows (PK: the same murmur
@@ -28,11 +31,13 @@ on the same driver-side planner every lake read uses.
   refusals (cross-partition lakes, changelog-producing PK appends).
 
 Deletion-vector lakes read transparently: each file's (index, offset,
-length) triple rides its partition spec and the executor decodes the
+length) triple rides its partition spec and the task decodes the
 roaring bitmap and drops marked positions before the merge. Field-id
 schema evolution reads transparently too: pre-evolution files read by
 their own column names (precomputed per-schema column maps ride the
 specs) and remap to the current schema, NULL-filling dropped ids.
+Stored timestamps read back in the session zone of the reading job,
+as Spark's own file readers take them.
 
 Scope guards (clear refusals, not wrong answers): a (partition,
 bucket) group over the bucket-local byte budget
@@ -122,11 +127,6 @@ class PaimonLakeBatchReader(DataSourceReader):
                 yield from (f for f, _ in supported)
         yield from unsupported
 
-    def _colmap(self, schema_id: int):
-        from paimon_python_spark.paimon_import import field_id_colmap
-
-        return field_id_colmap(self.table_path, self.info, schema_id)
-
     def partitions(self):
         from paimon_python_spark import paimon_import as pi
         from paimon_python_spark.paimon_import import plan_paimon_dv
@@ -153,15 +153,12 @@ class PaimonLakeBatchReader(DataSourceReader):
         # contract — apply_lake_dv — without its driver-side join plan).
         # Planned under the SAME snapshot as the file set: a time-travel
         # read must see that snapshot's marks, not today's.
-        dv_by_file = (
-            {}  # audit shows stored rows: DV marks are NOT applied
+        dv_ranges = (
+            []  # audit shows stored rows: DV marks are NOT applied
             if self._audit
-            else {
-                r.data_file_name: [r.index_path, r.offset, r.length]
-                for r in plan_paimon_dv(
-                    self.table_path, b._snapshot_id, snapshot=b._snapshot_dict()
-                )
-            }
+            else plan_paimon_dv(
+                self.table_path, b._snapshot_id, snapshot=b._snapshot_dict()
+            )
         )
         predicate, self._predicate = self._predicate, None  # consume
         if predicate is not None:
@@ -176,8 +173,6 @@ class PaimonLakeBatchReader(DataSourceReader):
                 self.table_path, e.rel_path(info.partition_keys, part_types, **kw)
             )
 
-        fmt = info.options.get("file.format", "parquet")
-        parts: List[_LakeGroupPartition] = []
         if info.primary_keys:
             budget = pi._BUCKET_LOCAL_MAX_GROUP_BYTES
             if pi.max_group_bytes(entries) > budget:
@@ -193,120 +188,26 @@ class PaimonLakeBatchReader(DataSourceReader):
                     "PaimonLakeTable(path).new_read_builder() (exact "
                     "key-window merge, spills instead of OOMing)"
                 )
-            for es in pi.bucket_groups(entries):
-                parts.append(
-                    _LakeGroupPartition(
-                        json.dumps(
-                            {
-                                "kv": True,
-                                "fmt": fmt,
-                                "files": [
-                                    [
-                                        i,
-                                        src(e),
-                                        e.level,
-                                        self._colmap(e.schema_id),
-                                        dv_by_file.get(e.file_name),
-                                    ]
-                                    for i, e in es
-                                ],
-                                "partition": pi.json_safe_partition(
-                                    info, es[0][1].partition
-                                ),
-                            }
-                        ),
-                        predicate,
-                    )
-                )
-        else:
-            for e in entries:
-                parts.append(
-                    _LakeGroupPartition(
-                        json.dumps(
-                            {
-                                "kv": False,
-                                "fmt": fmt,
-                                "files": [
-                                    [
-                                        0,
-                                        src(e),
-                                        e.level,
-                                        self._colmap(e.schema_id),
-                                        dv_by_file.get(e.file_name),
-                                    ]
-                                ],
-                                "partition": pi.json_safe_partition(
-                                    info, e.partition
-                                ),
-                            }
-                        ),
-                        predicate,
-                    )
-                )
-        return parts or [
-            _LakeGroupPartition(
-                json.dumps(
-                    {"kv": False, "fmt": fmt, "files": [], "partition": {}}
-                )
-            )
+        # audit: every STORED row, merge-free, with its row kind
+        audit = {"merge": False, "row_kind": "rowkind"} if self._audit else {}
+        specs = pi.lake_read_specs(
+            self.table_path, info, entries, src, dv_ranges, **audit
+        )
+        return [_LakeGroupPartition(json.dumps(s), predicate) for s in specs] or [
+            _LakeGroupPartition(json.dumps({"files": []}))
         ]
 
     def read(self, partition: _LakeGroupPartition) -> Iterator:
-        import pyarrow as pa
+        from paimon_python_spark.paimon_import import read_lake_task
 
-        from paimon_python_spark import paimon_import as pi
-        from paimon_python_spark.types import spark_schema_to_pa
-
-        info = self.info
         spec = json.loads(partition.spec)
         if not spec["files"]:
             return
-        part_keys = list(info.partition_keys)
-        value_names = [
-            f.name for f in info.spark_schema.fields if f.name not in part_keys
-        ]
-        key_cols = [f"_KEY_{k}" for k in info.primary_keys if k not in part_keys]
-        sys_cols = (
-            key_cols + ["_SEQUENCE_NUMBER", "_VALUE_KIND"] if spec["kv"] else []
-        )
-        if spec["kv"] and not self._audit:
-            # the shared frame reader (field-id colmaps, DV position
-            # drops, NULL-fill) feeding the one in-task merge kernel;
-            # engines it cannot express were refused at plan time. Lake
-            # writers bake a declared sequence.field into
-            # _SEQUENCE_NUMBER, so its order already carries event time.
-            g = pi.merge_lake_group(
-                info, spec["files"], spec["fmt"], sys_cols + value_names
-            )
-        else:
-            g = pi.read_group_frame(
-                [(path, colmap, dv) for _, path, _, colmap, dv in spec["files"]],
-                spec["fmt"],
-                sys_cols + value_names,
-                info,
-            )
-        out = pi.group_output(g, info.spark_schema.fields, info, spec["partition"])
-        out_schema = info.spark_schema
+        # engines the task cannot express were refused at plan time
+        tbl = read_lake_task(spec, self.info)
         if self._audit:
-            # $audit_log: merge-free, rowkind decoded from _VALUE_KIND
-            kinds = "+I"
-            if spec["kv"]:
-                kinds = (
-                    g["_VALUE_KIND"]
-                    .astype("int64")
-                    .map({0: "+I", 1: "-U", 2: "+U", 3: "-D"})
-                    .astype(object)
-                )
-            out.insert(0, "rowkind", kinds)
-            out_schema = T.StructType(
-                [T.StructField("rowkind", T.StringType(), False)]
-                + list(info.spark_schema.fields)
-            )
-        tbl = pa.Table.from_pandas(
-            out,
-            schema=spark_schema_to_pa(out_schema),
-            preserve_index=False,
-        )
+            # $audit_log: the row kind leads
+            tbl = tbl.select(["rowkind", *tbl.column_names[:-1]])
         if partition.predicate is not None and not spec["kv"]:
             # append lakes: we CLAIMED these filters, so apply row-level
             import pyarrow.dataset as ds
@@ -521,25 +422,25 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
         except FileNotFoundError:
             return {"snapshot": 0}
 
-    def _colmap(self, schema_id: int):
-        from paimon_python_spark.paimon_import import field_id_colmap
-
-        return field_id_colmap(self.table_path, self.info, schema_id)
-
     def partitions(self, start: dict, end: dict):
         from paimon_python_spark.paimon_import import (
-            json_safe_partition,
+            lake_read_specs,
             plan_paimon_changelog,
             plan_paimon_delta,
             plan_paimon_files,
-            read_paimon_snapshot,
         )
 
         info = self.info
         part_keys = list(info.partition_keys)
         part_types = [info.spark_schema[k].dataType for k in part_keys]
         default_name = info.options.get("partition.default-name", None)
-        fmt = info.options.get("file.format", "parquet")
+
+        def src(e):
+            kw = {"default_name": default_name} if default_name else {}
+            return os.path.join(
+                self.table_path, e.rel_path(part_keys, part_types, **kw)
+            )
+
         parts: List[_LakeGroupPartition] = []
         bootstrap = start.get("bootstrap")
         delta_from = start["snapshot"]
@@ -557,13 +458,11 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
                 snapshot_id=int(bootstrap),
             )
             for p in br.partitions():
-                spec2 = json.loads(p.spec)
-                if spec2.get("files"):
-                    parts.append(
-                        _LakeGroupPartition(
-                            json.dumps(dict(spec2, bootstrap_full=True))
-                        )
-                    )
+                spec = json.loads(p.spec)
+                if spec["files"]:
+                    # merged rows are inserts in changelog terms
+                    spec["row_kind"] = "_row_kind"
+                    parts.append(_LakeGroupPartition(json.dumps(spec)))
             delta_from = int(bootstrap)
         elif bootstrap is not None:
             # first batch after expired history: the earliest surviving
@@ -624,92 +523,27 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
                 (e, sid)
                 for e in (cl if cl else plan_paimon_delta(self.table_path, sid))
             )
-        kv = bool(info.primary_keys)
-        for e, _sid in entries:
-            kw = {"default_name": default_name} if default_name else {}
-            path = os.path.join(
-                self.table_path, e.rel_path(part_keys, part_types, **kw)
-            )
-            parts.append(
-                _LakeGroupPartition(
-                    json.dumps(
-                        {
-                            "fmt": fmt,
-                            "path": path,
-                            "kv": kv,
-                            "colmap": self._colmap(e.schema_id),
-                            "partition": json_safe_partition(info, e.partition),
-                        }
-                    )
-                )
-            )
+        specs = lake_read_specs(
+            self.table_path,
+            info,
+            [e for e, _sid in entries],
+            src,
+            grouped=False,
+            merge=False,
+            row_kind="_row_kind" if self.changelog else None,
+        )
+        parts.extend(_LakeGroupPartition(json.dumps(s)) for s in specs)
         # Spark requires ≥1 partition per batch even when every commit
         # in the range was a COMPACT rewrite (no new rows)
-        return parts or [
-            _LakeGroupPartition(json.dumps({"fmt": fmt, "path": None}))
-        ]
+        return parts or [_LakeGroupPartition(json.dumps({"files": []}))]
 
     def read(self, partition: _LakeGroupPartition):
+        from paimon_python_spark.paimon_import import read_lake_task
+
         spec = json.loads(partition.spec)
-        if spec.get("bootstrap_full"):
-            # latest-full PK bootstrap group: the batch reader's
-            # executor-local merge (engine dispatch, DV drops, schema
-            # evolution) produces the merged state; every row is an
-            # insert in changelog terms
-            br = PaimonLakeBatchReader(self.table_path, claim_filters=False)
-            names = [f.name for f in self.info.spark_schema.fields]
-            for b in br.read(partition):
-                for row in b.to_pylist():
-                    yield tuple(row[n] for n in names) + ("+I",)
-            return
-        if not spec["path"]:
-            return
-        from paimon_python_spark.paimon_import import (
-            partition_value,
-            read_data_file,
-        )
-
-        info = self.info
-        part_keys = list(info.partition_keys)
-        names = [f.name for f in info.spark_schema.fields]
-        value_names = [n for n in names if n not in part_keys]
-        colmap = spec.get("colmap")
-        if colmap:
-            src_cols = [colmap[c] for c in value_names if colmap.get(c)]
-        else:
-            src_cols = list(value_names)
-        kv = bool(spec.get("kv")) and self.changelog
-        if kv:
-            src_cols = src_cols + ["_VALUE_KIND"]
-        tbl = read_data_file(spec["path"], spec["fmt"], src_cols)
-        cols = {}
-        for n in names:
-            if n in part_keys:
-                cols[n] = [
-                    partition_value(info, n, spec["partition"].get(n))
-                ] * tbl.num_rows
-            else:
-                src = colmap.get(n) if colmap else n
-                cols[n] = (
-                    tbl.column(src).to_pylist()
-                    if src and src in tbl.column_names
-                    else [None] * tbl.num_rows
-                )
-        out = [cols[n] for n in names]
-        if self.changelog:
-            kind_names = {0: "+I", 1: "-U", 2: "+U", 3: "-D"}
-            kinds = (
-                [
-                    kind_names.get(int(k), "+I")
-                    for k in tbl.column("_VALUE_KIND").to_pylist()
-                ]
-                if kv and "_VALUE_KIND" in tbl.column_names
-                else ["+I"] * tbl.num_rows
-            )
-            out = out + [kinds]
-        yield from zip(*out)
-
-
+        if spec["files"]:
+            tbl = read_lake_task(spec, self.info)
+            yield from tbl.to_batches(max_chunksize=4096)
 
 
 class _LakeWrittenFiles(WriterCommitMessage):

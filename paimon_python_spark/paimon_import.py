@@ -2421,15 +2421,8 @@ def _load_lake_entries(
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-#: value dtypes the bucket-local merges (lake and engine) keep exact
-#: through the arrow→pandas→arrow roundtrip (others take the window path)
-_BUCKET_LOCAL_TYPES = (
-    T.IntegerType, T.LongType, T.ShortType, T.ByteType, T.BooleanType,
-    T.FloatType, T.DoubleType, T.StringType, T.DateType,
-)
-
 #: per-(partition, bucket) on-disk byte budget of the bucket-local
-#: merges. One group merges whole in a single task's pandas memory, so
+#: merges. One group merges whole in a single task's Arrow memory, so
 #: a misconfigured table (bucket=1, or a skewed bucket key) must NOT
 #: take that path: above the budget the read builders fall back to the
 #: exact key-window merge, whose shuffle spills instead of OOMing, and
@@ -2460,21 +2453,23 @@ def max_group_bytes(entries) -> int:
     return max(sizes.values(), default=0)
 
 
-def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries, fmt: str, dv_ranges) -> bool:
-    """Eligibility for the NO-SHUFFLE bucket-local PK merge: fixed
-    bucket geometry consistent across entries, single schema version
-    (no field-id remap needed in the task), parquet files, deduplicate
-    engine without sequence.field, no deletion vectors, value dtypes
-    the pandas roundtrip keeps exact, and — the scale guard — no
-    (partition, bucket) group larger than
+def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries) -> bool:
+    """Eligibility for the NO-SHUFFLE bucket-local PK merge, which runs
+    :func:`read_lake_task` once per (partition, bucket) group. The task
+    reads every column type, drops DV marks, remaps field-id schema
+    evolution and orders by ``_SEQUENCE_NUMBER`` (lake writers bake a
+    declared ``sequence.field`` into it), so only four things send a
+    read to the exact key-window path: a merge engine other than
+    deduplicate or first-row, groups that are not merge-closed
+    (cross-partition keys), mixed bucket geometry, and — the scale
+    guard — a (partition, bucket) group larger than
     ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk (a whole group merges in
-    ONE task's memory; an oversized group falls back to the exact
-    key-window path, which shuffles but spills instead of OOMing)."""
-    if fmt not in ("parquet", "orc") or dv_ranges:
-        return False
-    if info.options.get("merge-engine", "deduplicate") != "deduplicate":
-        return False
-    if info.options.get("sequence.field"):
+    ONE task's memory; the key-window path shuffles but spills instead
+    of OOMing)."""
+    if info.options.get("merge-engine", "deduplicate") not in (
+        "deduplicate",
+        "first-row",
+    ):
         return False
     nb = int(info.options.get("bucket", "-1"))
     if nb < 1:
@@ -2486,16 +2481,13 @@ def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries, fmt: str, dv_ranges)
             set(info.partition_keys) <= set(info.primary_keys)
         ):
             return False
-    if any(e.schema_id != info.id for e in entries):
+    if any(
+        e.total_buckets not in (None, nb) or 0 < nb <= e.bucket for e in entries
+    ):
+        # mixed geometry (pre-rescale history, or files in a bucket the
+        # declared count does not have): stay exact
         return False
-    if any(e.total_buckets not in (None, nb) for e in entries):
-        return False  # mixed geometry (pre-rescale history): stay exact
-    if max_group_bytes(entries) > _BUCKET_LOCAL_MAX_GROUP_BYTES:
-        return False  # one task would hold the whole group: stay exact
-    return all(
-        isinstance(f.dataType, _BUCKET_LOCAL_TYPES)
-        for f in info.spark_schema.fields
-    )
+    return max_group_bytes(entries) <= _BUCKET_LOCAL_MAX_GROUP_BYTES
 
 
 def read_data_file(path: str, fmt: str, cols, arrow_filter=None, filter_fields=()):
@@ -2546,32 +2538,47 @@ def kv_column_pa_type(schema, col: str):
     return pa.null()
 
 
-def read_group_frame(files, fmt: str, cols, schema, key_predicate=None):
-    """THE pyarrow read of one merge group's files into one pandas
-    frame holding exactly ``cols`` plus ``__file`` (each row's index
-    in ``files``), shared by both builders' bucket-local merges and the
-    ``format("paimon_lake")`` data source.
+def read_group_frame(files, fmt: str, cols, schema, key_predicate=None, tz=None):
+    """THE pyarrow read of one merge group's files into one Arrow table
+    holding exactly ``cols``, each cast to its :func:`kv_column_pa_type`,
+    plus ``__file`` (each row's index in ``files``), shared by
+    :func:`read_lake_task` and the engine builder's bucket-local merge.
+    ``tz`` (lake files, whose writers store the session wall clock)
+    turns each file's stored timestamps into Spark's form first
+    (:func:`_spark_timestamps`); Spark-written engine files need none.
 
     ``files`` holds ``(path, colmap, dv)`` triples. ``colmap`` (field-id
     schema evolution) maps current column names to a pre-evolution
     file's own names; a None entry is a dropped field id, and names
     outside the map (system columns) read as they are. ``dv`` is a
     deletion vector's (index path, offset, length): its marked row
-    positions drop before anything else sees the rows. Columns a file
-    lacks NULL-fill with their :func:`kv_column_pa_type`.
+    positions drop (an Arrow mask) before anything else sees the rows.
+    Columns a file lacks NULL-fill with their type.
     ``key_predicate`` (parquet, DV-free files) filters rows at the read
     — exact BEFORE a merge, because every version of a key shares its
     key values — so a point lookup reads only the row groups whose
-    stats admit the key. ArrowDtype keeps null ints and longs past
-    2^53 exact through the pandas merge."""
+    stats admit the key."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    arrow_filter = None
+    arrow_filter, filter_fields = None, ()
     if key_predicate is not None and fmt == "parquet":
         arrow_filter = key_predicate.to_arrow()
         filter_fields = sorted(key_predicate.fields())
-    frames = []
+    types = {c: kv_column_pa_type(schema, c) for c in cols}
+
+    def typed(c, col):
+        typ = types[c]
+        if tz and pa.types.is_timestamp(col.type):
+            base = c[5:] if c.startswith("_KEY_") else c
+            col = _spark_timestamps(col, schema.spark_schema[base].dataType, fmt, tz)
+        if col.type == typ:
+            return col
+        if pa.types.is_date32(typ) and pa.types.is_integer(col.type):
+            col = col.cast(pa.int32())  # avro files hold DATE as int days
+        return col.cast(typ)
+
+    tables = []
     for fi, (path, colmap, dv) in enumerate(files):
         stored = {c: colmap.get(c) if colmap and c in colmap else c for c in cols}
         t = read_data_file(
@@ -2579,59 +2586,128 @@ def read_group_frame(files, fmt: str, cols, schema, key_predicate=None):
             fmt,
             [s for s in stored.values() if s],
             None if dv else arrow_filter,
-            filter_fields if arrow_filter is not None else (),
+            filter_fields,
         )
-        f = t.to_pandas(types_mapper=pd.ArrowDtype)
         if dv:
             pos = read_dv_index_entry(str(dv[0]), int(dv[1]), int(dv[2]))
-            keep = np.setdiff1d(
-                np.arange(len(f), dtype=np.int64), pos.astype(np.int64)
-            )
-            f = f.iloc[keep].reset_index(drop=True)
-        renamed = {s: c for c, s in stored.items() if s and s != c}
-        if renamed:
-            f = f.rename(columns=renamed)
-        for c in cols:
-            if c not in f.columns:
-                # dtype-explicit filler: an object all-NA column would
-                # make pd.concat's result dtype depend on pandas version
-                f[c] = pd.Series(
-                    pd.NA,
-                    index=f.index,
-                    dtype=pd.ArrowDtype(kv_column_pa_type(schema, c)),
-                )
-        f["__file"] = fi
-        frames.append(f)
-    return pd.concat(frames, ignore_index=True)
+            keep = np.ones(t.num_rows, dtype=bool)
+            pos = pos.astype(np.int64)
+            keep[pos[pos < t.num_rows]] = False
+            t = t.filter(pa.array(keep))
+        n = t.num_rows
+        arrays = [
+            typed(c, t[stored[c]])
+            if stored[c] in t.column_names
+            else pa.nulls(n, types[c])
+            for c in cols
+        ]
+        arrays.append(pa.array(np.full(n, fi, dtype=np.int32)))
+        tables.append(pa.table(arrays, names=[*cols, "__file"]))
+    return pa.concat_tables(tables)
 
 
-def merge_lake_group(info: PaimonSchemaInfo, files, fmt: str, cols, key_predicate=None):
-    """Read and merge one lake (partition, bucket) group. ``files``
-    rows are ``[manifest entry index, path, level, colmap, dv]``;
-    ``cols`` are the kv columns to read (``_KEY_*``, sequence, kind and
-    values). The merge order is the lake tie-break: max
-    ``_SEQUENCE_NUMBER``, then the lower LSM level (the newer run),
-    then the later manifest entry — the reference's sort-merge input
-    order."""
+def session_time_zone() -> str:
+    """The Spark session time zone inside a task: the zone Spark ships
+    with each SQL job's local properties. A session that never set it
+    keeps the JVM default, taken here as UTC."""
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    return (tc and tc.getLocalProperty("spark.sql.session.timeZone")) or "UTC"
+
+
+def _spark_timestamps(col, dt, fmt: str, tz: str):
+    """A stored lake timestamp column in the form Spark takes from
+    Arrow — UTC instants for TIMESTAMP WITH LOCAL TIME ZONE, the wall
+    clock for TIMESTAMP — the inverse of the write task's forms: parquet
+    and avro files hold the session-local wall clock for both kinds
+    (``paimon_lake.lake_task_table``), ORC files the UTC instant of it
+    for both (``paimon_lake._orc_instants``, the form Spark's ORC reader
+    takes). Like Spark's own readers, it takes the wall clock in the
+    reading session's zone ``tz``, and a column stored as a UTC-adjusted
+    instant (JVM writers) as it is."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if col.type.tz is not None or tz == "UTC":
+        return col
+    if isinstance(dt, T.TimestampType) and fmt != "orc":
+        return pc.assume_timezone(col, tz, ambiguous="earliest", nonexistent="earliest")
+    if isinstance(dt, T.TimestampNTZType) and fmt == "orc":
+        return pc.local_timestamp(col.cast(pa.timestamp(col.type.unit, tz=tz)))
+    return col
+
+
+def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
+    """THE lake read task, the read-side mirror of
+    ``paimon_lake.write_lake_task``: one spec of :func:`lake_read_specs`
+    in, one ``pyarrow.Table`` of the declared columns out, with no
+    pandas between the files and Spark. It reads the spec's files with
+    :func:`read_group_frame`; merges a key-value group
+    (``spec["merge"]``) with ``agg_merge.merge_group`` in the lake
+    order — max ``_SEQUENCE_NUMBER``, then the lower LSM level (the
+    newer run), then the later manifest entry, the reference's
+    sort-merge input order; and adds the partition constants. Stored
+    timestamps read in ``spec["tz"]``, else the task's session zone
+    (:func:`_spark_timestamps`).
+
+    ``spec["columns"]`` prunes the read to those declared columns (all
+    when None). ``spec["row_kind"]`` names a trailing string column of
+    row kinds: +I/-U/+U/-D from ``_VALUE_KIND`` on unmerged key-value
+    rows, +I on append files and merged rows. ``key_predicate`` filters
+    ``_KEY_*`` columns at the read (see :func:`read_group_frame`).
+    Runs in the builder's ``mapInArrow`` tasks and in both
+    ``format("paimon_lake")`` readers."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from paimon_python_spark.agg_merge import merge_group, order_rank
+    from paimon_python_spark.types import spark_type_to_pa
 
+    part_keys = info.partition_keys
+    columns = spec.get("columns")
+    fields = [
+        f for f in info.spark_schema.fields if columns is None or f.name in columns
+    ]
+    keys = [f"_KEY_{k}" for k in info.primary_keys if k not in part_keys]
+    kv_cols = keys + ["_SEQUENCE_NUMBER", "_VALUE_KIND"] if spec["kv"] else []
+    files = spec["files"]
     g = read_group_frame(
         [(path, colmap, dv) for _, path, _, colmap, dv in files],
-        fmt,
-        cols,
+        spec["fmt"],
+        kv_cols + [f.name for f in fields if f.name not in part_keys],
         info,
         key_predicate,
+        spec.get("tz") or session_time_zone(),
     )
-    fi = g["__file"].to_numpy()
-    g["__ord"] = order_rank(
-        g["_SEQUENCE_NUMBER"].to_numpy(dtype="int64"),
-        -np.asarray([f[2] for f in files], dtype=np.int64)[fi],
-        np.asarray([f[0] for f in files], dtype=np.int64)[fi],
-    )
-    keys = [f"_KEY_{k}" for k in info.primary_keys if k not in info.partition_keys]
-    return merge_group(g, info, keys, "__ord", "_VALUE_KIND")
+    if spec["merge"]:
+        fi = g["__file"].to_numpy()
+        g = g.append_column(
+            "__ord",
+            order_rank(
+                g["_SEQUENCE_NUMBER"],
+                pa.array(-np.asarray([f[2] for f in files], dtype=np.int64)[fi]),
+                pa.array(np.asarray([f[0] for f in files], dtype=np.int64)[fi]),
+            ),
+        )
+        g = merge_group(g, info, keys, "__ord", "_VALUE_KIND")
+    out = {}
+    for f in fields:
+        if f.name in part_keys:
+            v = partition_value(info, f.name, spec["partition"].get(f.name))
+            out[f.name] = pa.repeat(
+                pa.scalar(v, spark_type_to_pa(f.dataType)), g.num_rows
+            )
+        else:
+            out[f.name] = g[f.name]
+    if spec.get("row_kind"):
+        out[spec["row_kind"]] = (
+            pc.take(pa.array(["+I", "-U", "+U", "-D"]), g["_VALUE_KIND"])
+            if spec["kv"] and not spec["merge"]
+            else pa.repeat(pa.scalar("+I"), g.num_rows)
+        )
+    return pa.table(out)
 
 
 def json_safe_partition(info: PaimonSchemaInfo, partition: dict) -> dict:
@@ -2655,24 +2731,49 @@ def partition_value(info: PaimonSchemaInfo, name: str, v):
     return v
 
 
-def group_output(g, fields, info=None, partition=None):
-    """A merged group frame → the plain-object pandas columns of
-    ``fields``: Spark's arrow serializer rejects chunk-backed ArrowDtype
-    columns, and object scalars stay EXACT (null ints never detour
-    through float64). With ``partition`` (lake groups, whose data files
-    do not carry the partition columns) the partition values of
-    ``info`` are injected as constants."""
-    import pandas as pd
-
-    out = pd.DataFrame(index=g.index)
-    for f in fields:
-        if partition is not None and f.name in info.partition_keys:
-            v = partition_value(info, f.name, partition.get(f.name))
-            out[f.name] = pd.Series([v] * len(g), index=g.index, dtype=object)
-        else:
-            col = g[f.name]
-            out[f.name] = col.astype(object).where(col.notna(), None)
-    return out
+def lake_read_specs(
+    table_path, info: PaimonSchemaInfo, entries, src, dv_ranges=(), grouped=True, **spec_kw
+) -> list:
+    """THE spec builder of :func:`read_lake_task`, shared by the
+    builder's bucket-local merge and both ``format("paimon_lake")``
+    readers: one spec per (partition, bucket) group on key-value lakes
+    (the merge unit; ``grouped=False`` plans one per file, the stream
+    reader's delta shape) and one per file on append lakes. Each file
+    rides as ``[manifest entry index, path, level, field-id colmap, DV
+    (index path, offset, length)]``; ``src`` maps an entry to its path,
+    and ``spec_kw`` adds or overrides the per-caller keys (``merge``,
+    ``columns``, ``tz``, ``row_kind``). Specs are JSON-safe."""
+    kv = bool(info.primary_keys)
+    dv_by_file = {
+        r.data_file_name: [r.index_path, r.offset, r.length] for r in dv_ranges
+    }
+    groups = (
+        bucket_groups(entries)
+        if kv and grouped
+        else [[(i, e)] for i, e in enumerate(entries)]
+    )
+    return [
+        {
+            "fmt": info.options.get("file.format", "parquet"),
+            "kv": kv,
+            "merge": kv,
+            "files": [
+                [
+                    i,
+                    src(e),
+                    e.level,
+                    field_id_colmap(table_path, info, e.schema_id)
+                    if table_path
+                    else None,
+                    dv_by_file.get(e.file_name),
+                ]
+                for i, e in es
+            ],
+            "partition": json_safe_partition(info, es[0][1].partition),
+            **spec_kw,
+        }
+        for es in groups
+    ]
 
 
 def merge_pk_entries_bucket_local(
@@ -2681,67 +2782,57 @@ def merge_pk_entries_bucket_local(
     entries,
     src,
     needed_cols=None,
-    fmt="parquet",
     key_predicate=None,
+    dv_ranges=(),
+    table_path: "str | None" = None,
 ):
-    """NO-SHUFFLE merge of a fixed-bucket PK lake — real Paimon's own
+    """NO-SHUFFLE merge of a bucket-closed PK lake — real Paimon's own
     execution shape: a key lives in exactly ONE (partition, bucket)
     group, so the merge is closed per group and needs no cross-task
-    key clustering. One task per group reads its files and merges them
-    with :func:`merge_lake_group` (the shared frame reader plus
-    ``agg_merge.merge_group``, the one in-task merge kernel), then
-    emits the group's visible rows. The key-window path this replaces
-    shuffles EVERY scanned byte by key — at 100 TB that exchange is the
-    dominant cost of every PK read, while per-group state is bounded by
-    bucket sizing exactly as in Paimon's own per-bucket merge. Plan
-    shape: scan → mapInPandas, zero Exchange nodes (asserted by the
-    gated roundtrip)."""
-    import json as _json
-
-    part_keys = list(info.partition_keys)
+    key clustering. One task per group runs :func:`read_lake_task` on
+    its spec (files, DV marks, field-id colmaps, the session zone) and
+    emits the group's visible rows as Arrow batches. The key-window
+    path this replaces shuffles EVERY scanned byte by key — at 100 TB
+    that exchange is the dominant cost of every PK read, while
+    per-group state is bounded by bucket sizing exactly as in Paimon's
+    own per-bucket merge. Plan shape: scan → MapInArrow, zero Exchange
+    nodes (asserted by the gated roundtrip)."""
     # COLUMN PRUNING pushed into the per-group pyarrow reads — the
     # bucket-local path has no Catalyst scan to prune for it, so the
     # caller passes projection ∪ predicate columns (keys always read:
     # the merge needs them)
+    fields = list(info.spark_schema.fields)
     if needed_cols is not None:
-        keep = set(needed_cols) | set(info.primary_keys) | set(part_keys)
-        value_fields = [f for f in info.spark_schema.fields if f.name in keep]
-    else:
-        value_fields = list(info.spark_schema.fields)
+        keep = set(needed_cols) | set(info.primary_keys) | set(info.partition_keys)
+        fields = [f for f in fields if f.name in keep]
     specs = [
-        (
-            _json.dumps(
-                {
-                    "files": [[i, src(e), e.level, None, None] for i, e in es],
-                    "partition": json_safe_partition(info, es[0][1].partition),
-                }
-            ),
+        (json.dumps(spec),)
+        for spec in lake_read_specs(
+            table_path,
+            info,
+            entries,
+            src,
+            dv_ranges,
+            columns=[f.name for f in fields],
+            tz=spark.conf.get("spark.sql.session.timeZone"),
         )
-        for es in bucket_groups(entries)
     ]
-    read_cols = (
-        [f"_KEY_{k}" for k in info.primary_keys if k not in part_keys]
-        + ["_SEQUENCE_NUMBER", "_VALUE_KIND"]
-        + [f.name for f in value_fields if f.name not in part_keys]
-    )
 
-    def _merge_groups(batches):
-        for pdf_in in batches:
-            for spec_s in pdf_in["spec"]:
-                spec = _json.loads(spec_s)
-                g = merge_lake_group(
-                    info, spec["files"], fmt, read_cols, key_predicate
-                )
-                yield group_output(g, value_fields, info, spec["partition"])
+    def _read_groups(batches):
+        for b in batches:
+            for spec in b.column("spec").to_pylist():
+                yield from read_lake_task(
+                    json.loads(spec), info, key_predicate
+                ).to_batches()
 
     # one spec row per task partition via parallelize(numSlices=n): each
     # group merges alone and the plan carries ZERO Exchange nodes — the
     # spec strings are the only driver→executor payload (KB-scale)
-    n = max(1, len(specs))
     plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(specs, numSlices=n), "spec string"
+        spark.sparkContext.parallelize(specs, numSlices=max(1, len(specs))),
+        "spec string",
     )
-    return plan_df.mapInPandas(_merge_groups, T.StructType(value_fields))
+    return plan_df.mapInArrow(_read_groups, T.StructType(fields))
 
 
 def merge_paimon_pk_entries(
@@ -2778,8 +2869,8 @@ def merge_paimon_pk_entries(
     if not entries:
         return local_df(spark, [], info.spark_schema)
     dv_ranges = _relevant_dv(dv_ranges, entries)
-    if _bucket_local_merge_ok(info, entries, fmt, dv_ranges):
-        # fixed-bucket geometry makes the merge closed per (partition,
+    if _bucket_local_merge_ok(info, entries):
+        # bucket-closed geometry makes the merge closed per (partition,
         # bucket) group: take the NO-SHUFFLE per-group path (real
         # Paimon's own execution shape) instead of the key-window
         # exchange below
@@ -2789,8 +2880,9 @@ def merge_paimon_pk_entries(
             entries,
             src,
             needed_cols=needed_cols,
-            fmt=fmt,
             key_predicate=key_predicate,
+            dv_ranges=dv_ranges,
+            table_path=table_path,
         )
     raw = _load_lake_entries(
         spark,

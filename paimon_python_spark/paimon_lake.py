@@ -25,17 +25,21 @@ partition pruning BEFORE the scan (predicate evaluated against each
 entry's decoded BinaryRow partition) and the full residual filter after
 it, so Catalyst still sees a declarative plan (parquet pushdown +
 column pruning apply per file). PK tables run the same distributed
-merge recipe as the importer (``merge_paimon_pk_entries`` — window
-dedup on max sequence number with the deterministic level/entry-order
-tie-break), which shuffles once on (partition, key).
+merge recipe as the importer (``merge_paimon_pk_entries``): a
+bucket-closed deduplicate or first-row lake runs one Arrow read task
+(``paimon_import.read_lake_task``) per (partition, bucket) group with
+no shuffle; other lakes take the window dedup on max sequence number
+with the deterministic level/entry-order tie-break, which shuffles
+once on (partition, key).
 
 Deletion-vector tables read transparently: the snapshot's index
 manifest is planned driver-side (``plan_paimon_dv`` — KB-scale
-metadata), the roaring bitmaps decode DISTRIBUTED (mapInPandas over
-the range list), and marked (file, position) pairs anti-join out of
-the scan — broadcast below ~2M decoded marks (cardinality from the
-index manifest, never compressed bytes), so the data never shuffles
-for the delete filter.
+metadata). The bucket-local read task drops each file's marked
+positions itself; elsewhere the roaring bitmaps decode DISTRIBUTED
+(mapInPandas over the range list), and marked (file, position) pairs
+anti-join out of the scan — broadcast below ~2M decoded marks
+(cardinality from the index manifest, never compressed bytes), so the
+data never shuffles for the delete filter.
 """
 
 from __future__ import annotations
@@ -1138,9 +1142,9 @@ class PaimonLakeRead:
         return self.to_df().toPandas()
 
     def to_arrow(self):
-        import pyarrow as pa
+        from paimon_python_spark.read import df_to_arrow
 
-        return pa.Table.from_pandas(self.to_pandas(), preserve_index=False)
+        return df_to_arrow(self.to_df())
 
     def to_arrow_batch_reader(self, batch_size: int = 1024):
         import pyarrow as pa
@@ -2802,11 +2806,13 @@ def lake_task_table(batches, info) -> "Optional[pa.Table]":
     clock (``pc.local_timestamp``, the form stored values and
     ``sequence.field`` numbers are taken from), every other column
     (routing, order and sort columns) as it arrives. The session time
-    zone rides in the schema metadata (``_SESSION_TZ``) for the ORC
-    file writer. None when the task has no rows."""
+    zone (a zoned column's, else the task's) rides in the schema
+    metadata (``_SESSION_TZ``) for the ORC file writer. None when the
+    task has no rows."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from paimon_python_spark.paimon_import import session_time_zone
     from paimon_python_spark.types import spark_type_to_pa
 
     batches = [b for b in batches if b.num_rows]
@@ -2825,7 +2831,7 @@ def lake_task_table(batches, info) -> "Optional[pa.Table]":
             col = col.cast(spark_type_to_pa(declared[name]))
         cols.append(col)
     out = pa.table(cols, names=tbl.column_names)
-    return out.replace_schema_metadata({_SESSION_TZ: tz}) if tz else out
+    return out.replace_schema_metadata({_SESSION_TZ: tz or session_time_zone()})
 
 
 #: schema-metadata key of a :func:`lake_task_table`'s session time zone
@@ -2833,9 +2839,12 @@ _SESSION_TZ = b"session_time_zone"
 
 
 def _orc_instants(table, info, tz: "Optional[bytes]"):
-    """``table`` with its TIMESTAMP WITH LOCAL TIME ZONE columns turned
-    from the session-local wall clock back into the UTC instant, the
-    form Spark's ORC writer stores and its ORC reader expects. Parquet
+    """``table`` with its TIMESTAMP columns, both kinds, turned from the
+    session-local wall clock into the UTC instant: the form Spark's ORC
+    writer stores for TIMESTAMP WITH LOCAL TIME ZONE, and the one its
+    ORC reader turns back into the same wall clock for TIMESTAMP (it
+    reads an ORC timestamp as an instant and casts it to the session
+    zone). ``paimon_import._spark_timestamps`` is the inverse. Parquet
     and avro files keep the wall clock (a parquet reader takes it in
     the session zone)."""
     import pyarrow as pa
@@ -2845,7 +2854,7 @@ def _orc_instants(table, info, tz: "Optional[bytes]"):
     if not tz:
         return table
     for f in info.spark_schema.fields:
-        if not isinstance(f.dataType, T.TimestampType):
+        if not isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)):
             continue
         for name in (f.name, f"_KEY_{f.name}"):
             i = table.schema.get_field_index(name)

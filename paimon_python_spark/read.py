@@ -216,10 +216,10 @@ def _engine_bucket_local_ok(schema, splits) -> bool:
     """Eligibility for the NO-SHUFFLE engine PK merge — the lake gate
     (paimon_import._bucket_local_merge_ok) applied to engine splits:
     parquet/orc files, plain deduplicate engine without sequence.field
-    or salt, exact-roundtrip value dtypes, and — the scale guard — no
-    split larger than ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk. PK
-    splits are already one (partition, bucket) group each
-    (scan._group), which is what closes the merge per task."""
+    or salt, and — the scale guard — no split larger than
+    ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk. PK splits are already
+    one (partition, bucket) group each (scan._group), which is what
+    closes the merge per task."""
     from paimon_python_spark import paimon_import as pi
 
     if schema.file_format() not in ("parquet", "orc"):
@@ -232,12 +232,7 @@ def _engine_bucket_local_ok(schema, splits) -> bool:
         return False
     if int(schema.options.get("bucket-shuffle.salt", "0")) > 1:
         return False
-    if any(s.file_size() > pi._BUCKET_LOCAL_MAX_GROUP_BYTES for s in splits):
-        return False  # one task would hold the whole group: stay exact
-    return all(
-        isinstance(f.dataType, pi._BUCKET_LOCAL_TYPES)
-        for f in schema.spark_schema.fields
-    )
+    return all(s.file_size() <= pi._BUCKET_LOCAL_MAX_GROUP_BYTES for s in splits)
 
 
 def merge_on_read_bucket_local(
@@ -246,16 +241,16 @@ def merge_on_read_bucket_local(
     """NO-SHUFFLE merge-on-read for fixed-bucket engine PK tables —
     the same execution shape as the lake path
     (paimon_import.merge_pk_entries_bucket_local): each planned split
-    is one merge-closed (partition, bucket) group, so one task reads
-    the group's files with the shared frame reader
+    is one merge-closed (partition, bucket) group, so one Arrow task
+    reads the group's files with the shared reader
     (paimon_import.read_group_frame: pruned to projection ∪ predicate
     columns + keys, key predicate applied at the read) and merges them
-    with ``agg_merge.merge_group``, the one in-task merge kernel. The
-    window formulation this replaces exchanges every scanned byte on
-    the merge key — the dominant PK-read cost at 100 TB. Ties beyond
-    the sequence number break by manifest file order then in-file
-    position (a superset of the window path's seq-only contract, fully
-    deterministic)."""
+    with ``agg_merge.merge_group``, the one in-task merge kernel. Plan
+    shape: scan → MapInArrow. The window formulation this replaces
+    exchanges every scanned byte on the merge key — the dominant
+    PK-read cost at 100 TB. Ties beyond the sequence number break by
+    manifest file order then in-file position (a superset of the
+    window path's seq-only contract, fully deterministic)."""
     import json as _json
 
     merge_keys = list(dict.fromkeys(schema.partition_keys + schema.primary_keys))
@@ -273,32 +268,26 @@ def merge_on_read_bucket_local(
 
     def _merge(batches):
         from paimon_python_spark.agg_merge import merge_group, order_rank
-        from paimon_python_spark.paimon_import import (
-            group_output,
-            read_group_frame,
-        )
+        from paimon_python_spark.paimon_import import read_group_frame
 
-        for pdf_in in batches:
-            for spec_s in pdf_in["spec"]:
-                files = _json.loads(spec_s)["files"]
+        for b in batches:
+            for spec in b.column("spec").to_pylist():
                 g = read_group_frame(
-                    [(path, None, None) for path in files],
+                    [(path, None, None) for path in _json.loads(spec)["files"]],
                     fmt,
                     read_cols,
                     schema,
                     key_predicate,
                 )
-                g["__ord"] = order_rank(
-                    g[SEQ_COL].to_numpy(dtype="int64"), g["__file"].to_numpy()
-                )
+                g = g.append_column("__ord", order_rank(g[SEQ_COL], g["__file"]))
                 g = merge_group(g, schema, merge_keys, "__ord", KIND_COL)
-                yield group_output(g, fields)
+                yield from g.select([f.name for f in fields]).to_batches()
 
     n = max(1, len(specs))
     plan_df = spark.createDataFrame(
         spark.sparkContext.parallelize(specs, numSlices=n), "spec string"
     )
-    return plan_df.mapInPandas(_merge, T.StructType(fields))
+    return plan_df.mapInArrow(_merge, T.StructType(fields))
 
 
 def merge_on_read(
@@ -591,6 +580,23 @@ def merge_on_read(
 ROWKIND_STRINGS = {0: "+I", 1: "-U", 2: "+U", 3: "-D"}
 
 
+def df_to_arrow(df: DataFrame) -> pa.Table:
+    """A read's DataFrame as an Arrow table of its declared types —
+    ``toArrow`` keeps NULL, NaN and wide integers apart, unlike a
+    pandas hop. Shared by the engine's and the lake's ``to_arrow``."""
+    from paimon_python_spark.types import spark_schema_to_pa
+
+    tbl = df.toArrow()
+    # normalize to the declared schema types (Spark may widen)
+    target = pa.schema(
+        [spark_schema_to_pa(T.StructType([df.schema[n]]))[0] for n in df.columns]
+    ) if df.columns else tbl.schema
+    try:
+        return tbl.cast(target)
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        return tbl
+
+
 def audit_log_df(table, snapshot_id: Optional[int] = None) -> DataFrame:
     """Paimon's ``table$audit_log`` system table: every STORED row (no
     merge, no drop-delete) with a leading ``rowkind`` string column.
@@ -781,7 +787,7 @@ class TableRead:
         order = [k for k in merge_keys if k in df.columns]
         if order:
             df = df.orderBy(*order)
-        return self._df_to_arrow(df)
+        return df_to_arrow(df)
 
     def _arrow_append(self, splits: List[Split]) -> pa.Table:
         import pyarrow.dataset as ds
@@ -794,7 +800,7 @@ class TableRead:
             # nested projection: route through the Spark recipe (struct
             # rebuild + Catalyst nested-schema pruning) instead of the
             # flat pyarrow column list
-            return self._df_to_arrow(self.to_df(splits))
+            return df_to_arrow(self.to_df(splits))
         pred = self.read_builder._predicate
         pa_schema = spark_schema_to_pa(self.schema.spark_schema)
         cols = (
@@ -831,19 +837,6 @@ class TableRead:
             dataset = ds.dataset(paths, format=fmt, schema=pa_schema)
         filt = pred.to_arrow() if pred is not None else None
         return dataset.to_table(columns=list(cols), filter=filt)
-
-    def _df_to_arrow(self, df: DataFrame) -> pa.Table:
-        from paimon_python_spark.types import spark_schema_to_pa
-
-        tbl = df.toArrow()
-        # normalize to the declared schema types (Spark may widen)
-        target = pa.schema(
-            [spark_schema_to_pa(T.StructType([df.schema[n]]))[0] for n in df.columns]
-        ) if df.columns else tbl.schema
-        try:
-            return tbl.cast(target)
-        except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
-            return tbl
 
     def to_arrow_batch_reader(
         self, splits: Optional[List[Split]] = None, batch_size: int = 1024

@@ -530,11 +530,12 @@ def test_lake_datasource_streaming_partition_planned(tmp_path, spark):
     rdr = PaimonLakeStreamReader(p)
     parts = rdr.partitions({"snapshot": 0}, {"snapshot": 1})
     assert len(parts) >= 2, "one InputPartition per delta file"
-    spec0 = _json.loads(parts[0].spec)
-    assert spec0["path"], "partition spec must carry the file path"
+    # each spec file rides as [entry index, path, level, colmap, DV]
+    (file0,) = _json.loads(parts[0].spec)["files"]
+    assert file0[1], "partition spec must carry the file path"
     # pre-evolution files carry a field-id colmap remapping v→val
     both = [
-        _json.loads(pt.spec).get("colmap")
+        _json.loads(pt.spec)["files"][0][3]
         for pt in rdr.partitions({"snapshot": 0}, {"snapshot": 2})
     ]
     assert any(cm and cm.get("val") == "v" for cm in both)
@@ -651,17 +652,25 @@ def test_lake_datasource_write_empty_append_is_noop(tmp_path, spark):
     assert latest_paimon_snapshot_id(p) == 1  # no empty snapshot
 
 
+_EXACT_CASES = [
+    (front, pk, ts)
+    for ts in (True, False)
+    for front in ("format", "builder")
+    for pk in (False, True)
+]
+
+
 @pytest.mark.parametrize(
-    "front,pk",
-    [
-        ("format", False),
-        ("format", True),
-        ("builder", False),
-        ("builder", True),
+    "front,pk,ts",
+    _EXACT_CASES,
+    ids=[
+        ("builder-" if front == "builder" else "")
+        + ("fixed_pk" if pk else "append")
+        + ("" if ts else "-no_ts")
+        for front, pk, ts in _EXACT_CASES
     ],
-    ids=["append", "fixed_pk", "builder-append", "builder-fixed_pk"],
 )
-def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk):
+def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk, ts):
     """Both write front doors — df.write.format("paimon_lake") and the
     builder's write_lake_append / write_lake_pk_append — store each
     value as Spark hands it over: a BIGINT past 2^53 beside a NULL
@@ -670,7 +679,10 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk):
     leaves the other columns' value stats in place, so a k filter still
     prunes append files. On append lakes a spec bloom index on k is
     built from the exact values too, so k == 5 and k == 2^53 + 1 each
-    find their row."""
+    find their row. Every read door — to_df(), format("paimon_lake")
+    and new_read().to_arrow() — returns the same exact values, with
+    and without the TIMESTAMP column (on a PK lake the column once
+    decided which merge path the builder read took)."""
     import datetime
     import math
     import os
@@ -697,14 +709,12 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk):
             "file-index.format": "spec",
             "file-index.bloom-filter.columns": "k",
         }
+    fields = [("id", "INT NOT NULL"), ("k", "BIGINT"), ("d", "DOUBLE")]
+    if ts:
+        fields.append(("t", "TIMESTAMP(6) WITH LOCAL TIME ZONE"))
     create_lake_table(
         p,
-        [
-            ("id", "INT NOT NULL"),
-            ("k", "BIGINT"),
-            ("d", "DOUBLE"),
-            ("t", "TIMESTAMP(6) WITH LOCAL TIME ZONE"),
-        ],
+        fields,
         primary_keys=["id"] if pk else None,
         options=options,
     )
@@ -717,11 +727,12 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk):
         (2, None, None, None),
         (3, 5, 1.5, datetime.datetime(2024, 1, 1, tzinfo=utc)),
     ]
+    cols = [name for name, _ in fields]
     tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         for batch in (rows, [(7, -1, 2.0, datetime.datetime(2024, 1, 2, tzinfo=utc))]):
-            df = spark.createDataFrame(batch, schema).coalesce(1)
+            df = spark.createDataFrame(batch, schema).select(*cols).coalesce(1)
             if front == "format":
                 df.write.format("paimon_lake").option("path", p).mode(
                     "append"
@@ -740,11 +751,14 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk):
             for d, _, names in os.walk(p)
             if e.file_name in names
         )
-        for r in pq.read_table(path, columns=["id", "k", "d", "t"]).to_pylist():
+        for r in pq.read_table(path, columns=cols).to_pylist():
             stored[r["id"]] = r
     assert stored[1]["k"] == big and math.isnan(stored[1]["d"])
-    assert stored[1]["t"] == far
-    assert stored[2] == {"id": 2, "k": None, "d": None, "t": None}
+    if ts:
+        assert stored[1]["t"] == far
+        assert stored[2] == {"id": 2, "k": None, "d": None, "t": None}
+    else:
+        assert stored[2] == {"id": 2, "k": None, "d": None}
     assert (stored[3]["k"], stored[3]["d"]) == (5, 1.5)
 
     files = plan_paimon_files(p)
@@ -758,6 +772,23 @@ def test_lake_format_write_stores_exact_values(tmp_path, spark, front, pk):
         rb.with_filter(rb.new_predicate_builder().equal("k", k))
         got = rb.with_projection(["id", "k"]).new_read().to_pandas()
         assert list(got.id) == [want] and int(got.k.iloc[0]) == k
+
+    read = PaimonLakeTable(p).new_read_builder().new_read()
+    doors = {
+        "to_df": [r.asDict() for r in read.to_df().collect()],
+        "format": [
+            r.asDict()
+            for r in spark.read.format("paimon_lake").option("path", p).load().collect()
+        ],
+        "to_arrow": read.to_arrow().to_pylist(),
+    }
+    for door, got_rows in doors.items():
+        by_id = {r["id"]: r for r in got_rows}
+        assert sorted(by_id) == [1, 2, 3, 7], door
+        assert by_id[1]["k"] == big and math.isnan(by_id[1]["d"]), (door, by_id[1])
+        assert by_id[2] == dict.fromkeys(cols) | {"id": 2}, (door, by_id[2])
+        if ts:
+            assert by_id[1]["t"] == far, (door, by_id[1])
 
 
 def test_lake_datasource_streaming_survives_expired_history(tmp_path, spark):
@@ -788,7 +819,9 @@ def test_lake_datasource_streaming_survives_expired_history(tmp_path, spark):
     assert start.get("bootstrap") == 4  # earliest surviving snapshot
     end = rdr.latestOffset()
     parts = rdr.partitions(start, end)
-    rows = sorted(r[0] for pt in parts for r in rdr.read(pt))
+    rows = sorted(
+        k for pt in parts for b in rdr.read(pt) for k in b.column("k").to_pylist()
+    )
     assert rows == [0, 1, 2, 3, 4]  # full earliest state + delta — nothing lost
     with _pytest.raises(RuntimeError, match="expired"):
         rdr.partitions({"snapshot": 0}, end)
@@ -2433,7 +2466,10 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
     sequence.field under a non-UTC session time zone (a BIGINT one on
     avro, whose data files hold no timestamps here). ``plain`` append
     lakes declare no file index and carry a TIMESTAMP column, which
-    reads back equal to the input on both doors."""
+    reads back equal to the input on both doors. Parquet and ORC lakes
+    also carry a TIMESTAMP (no time zone) column. The
+    format("paimon_lake") read agrees with to_df() on every column, and
+    both return the stored timestamps as they went in."""
     import datetime
 
     from paimon_python_spark.lake_datasource import register_lake
@@ -2448,6 +2484,7 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
     pk = mode.endswith("_pk")
     ts_type = "BIGINT" if fmt == "avro" else "TIMESTAMP(6) WITH LOCAL TIME ZONE"
     plain = mode == "plain"
+    ntz = fmt != "avro"
     fields = [("p", "INT NOT NULL"), ("k", "BIGINT NOT NULL"), ("v", "STRING")]
     options = {"file.format": fmt, "file-index.bloom-filter.columns": "v"}
     if plain:
@@ -2462,36 +2499,46 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
                 "rowkind.field": "op",
             }
         )
+    if ntz:
+        fields.append(("ntz", "TIMESTAMP(6)"))
     t0 = datetime.datetime(2024, 3, 1, 12, 0, 0)
+    # row tuples are (p, k, v, ts, op, ntz); a lake takes its own columns
+    pos = {"p": 0, "k": 1, "v": 2, "ts": 3, "op": 4, "ntz": 5}
+    ddl_types = {
+        "p": "int",
+        "k": "bigint",
+        "v": "string",
+        "ts": "bigint" if fmt == "avro" else "timestamp",
+        "op": "string",
+        "ntz": "timestamp_ntz",
+    }
+    cols = [name for name, _ in fields]
+
+    def project(rows):
+        return [tuple(r[pos[c]] for c in cols) for r in rows]
 
     def frame(rows):
-        if plain:
-            return spark.createDataFrame(
-                [r[:4] for r in rows], "p int, k bigint, v string, ts timestamp"
-            ).coalesce(1)
-        if not pk:
-            rows = [r[:3] for r in rows]
-        ddl = "p int, k bigint, v string"
-        if pk:
-            ts = "bigint" if fmt == "avro" else "timestamp"
-            ddl += f", ts {ts}, op string"
+        ddl = ", ".join(f"{c} {ddl_types[c]}" for c in cols)
         # one input task: the front door writes one file per group it sees
-        return spark.createDataFrame(rows, ddl).coalesce(1)
+        return spark.createDataFrame(project(rows), ddl).coalesce(1)
 
     def at(s):
         if fmt == "avro":
             return 1_709_294_400_000 + 1000 * s
         return t0 + datetime.timedelta(seconds=s)
 
-    seed = [(k % 2 + 1, k, f"s{k}", at(k), "+I") for k in range(6)]
+    def wall(s):
+        return t0 + datetime.timedelta(minutes=s)
+
+    seed = [(k % 2 + 1, k, f"s{k}", at(k), "+I", wall(k)) for k in range(6)]
     batch = [
-        (1, 10, None, at(100), "+I"),
-        (2, 3, "u3", at(101), "+I"),
-        (1, 4, "x4", at(102), "+I"),
-        (1, 4, None, at(103), "-D"),
-        (1, 4, "re4", at(104), "+I"),
-        (2, 11, "n11", at(105), "+I"),
-        (1, 12, None, at(106), "+I"),
+        (1, 10, None, at(100), "+I", wall(100)),
+        (2, 3, "u3", at(101), "+I", None),
+        (1, 4, "x4", at(102), "+I", wall(102)),
+        (1, 4, None, at(103), "-D", wall(103)),
+        (1, 4, "re4", at(104), "+I", wall(104)),
+        (2, 11, "n11", at(105), "+I", wall(105)),
+        (1, 12, None, at(106), "+I", wall(106)),
     ]
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
@@ -2521,18 +2568,18 @@ def test_lake_format_write_avro_and_orc(spark, tmp_path, fmt, mode):
 
         out = merged(lakes["builder"])
         assert out == merged(lakes["format"])
-        # the front-door read agrees too (timestamps aside: that reader
-        # renders them in another zone under a non-UTC session)
+        # the front-door read agrees too, timestamps included
         fd = spark.read.format("paimon_lake").option("path", lakes["format"]).load()
-        fd_rows = [tuple(r) for r in fd.select("p", "k", "v").collect()]
-        assert sorted(fd_rows, key=repr) == sorted((r[:3] for r in out), key=repr)
+        assert sorted((tuple(r) for r in fd.collect()), key=repr) == out
         got = {r[1]: r[2] for r in out}
         if pk:
             assert len(out) == 9 and got[4] == "re4" and got[3] == "u3"
         else:
             assert len(out) == 13
         if plain:
-            assert out == sorted((r[:4] for r in seed + batch), key=repr)
+            assert out == sorted(project(seed + batch), key=repr)
+        if ntz:
+            assert {r[-1] for r in out} <= {r[5] for r in seed + batch}
         assert got[10] is None and got[12] is None
         for d in lakes.values():
             assert all(e.file_name.endswith(f".{fmt}") for e in plan_paimon_files(d))

@@ -4485,15 +4485,37 @@ def test_compact_lake_auto_with_fullcompaction_changelog(tmp_path, spark):
     assert set(cl._row_kind) == {"+I"}
 
 
-def test_bucket_local_merge_no_shuffle(tmp_path, spark):
-    """Eligible PK-lake reads take the bucket-closed merge: ZERO
+_NO_SHUFFLE_LAKES = [
+    "plain",
+    "timestamp",
+    "decimal",
+    "sequence_field",
+    "dv",
+    "two_schemas",
+    "first_row",
+]
+
+
+@pytest.mark.parametrize("lake", _NO_SHUFFLE_LAKES)
+def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
+    """Bucket-closed PK-lake reads take the bucket-local merge: ZERO
     Exchange in the physical plan (the key-window path shuffles every
-    scanned byte — the dominant 100 TB read cost); ineligible shapes
-    (DVs attached) fall back to the exact window path; results match
-    the window path bit-for-bit either way."""
-    from paimon_python_spark.paimon_import import attach_paimon_dv_fixture
+    scanned byte — the dominant 100 TB read cost), whatever the column
+    types, with a sequence.field, deletion vectors, files under two
+    schema ids, or the first-row engine. Each answer matches the exact
+    key-window read (forced by a group byte budget of 1) row for
+    row."""
+    import datetime
+    import decimal
+
+    from paimon_python_spark import paimon_import
+    from paimon_python_spark.paimon_import import (
+        attach_paimon_dv_fixture,
+        plan_paimon_files,
+    )
     from paimon_python_spark.paimon_lake import (
         PaimonLakeTable,
+        alter_lake_schema,
         create_lake_table,
         write_lake_pk_append,
     )
@@ -4501,38 +4523,94 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark):
 
     set_spark(spark)
     p = str(tmp_path / "nshuffle_lake")
-    create_lake_table(
-        p,
-        [("k", "INT NOT NULL"), ("v", "STRING")],
-        primary_keys=["k"],
-        options={"bucket": "4"},
-    )
-    write_lake_pk_append(
-        p, spark.createDataFrame([(i, f"a{i}") for i in range(200)], "k int, v string")
-    )
+    fields = [("k", "INT NOT NULL"), ("v", "STRING")]
+    options = {"bucket": "4"}
+    ddl = "k int, v string"
+
+    def extra(i):
+        return ()
+
+    if lake == "timestamp":
+        fields.append(("t", "TIMESTAMP(6) WITH LOCAL TIME ZONE"))
+        ddl += ", t timestamp"
+
+        def extra(i):
+            return (datetime.datetime(2024, 1, 1) + datetime.timedelta(seconds=i),)
+
+    elif lake == "decimal":
+        fields.append(("d", "DECIMAL(20, 4)"))
+        ddl += ", d decimal(20, 4)"
+
+        def extra(i):
+            return (decimal.Decimal(i * 7919) / 1000,)
+
+    elif lake == "sequence_field":
+        # the second commit carries LOWER event times for every third
+        # key: its rows lose to the seeded ones on those keys
+        fields.append(("s", "BIGINT"))
+        options["sequence.field"] = "s"
+        ddl += ", s bigint"
+
+        def extra(i):
+            return (1000 - i,)
+
+    elif lake == "first_row":
+        options["merge-engine"] = "first-row"
+    create_lake_table(p, fields, primary_keys=["k"], options=options)
     write_lake_pk_append(
         p,
         spark.createDataFrame(
-            [(i, f"b{i}") for i in range(0, 200, 3)], "k int, v string"
+            [(i, f"a{i}", *extra(i)) for i in range(200)], ddl
         ),
     )
-    df = PaimonLakeTable(p).new_read_builder().new_read().to_df()
+    if lake == "two_schemas":
+        alter_lake_schema(p, add_columns=[("note", "STRING")])
+        ddl += ", note string"
+
+        def extra(i):
+            return (f"n{i}",)
+
+    if lake == "sequence_field":
+        # every third key updates: odd keys with a LOWER event time (the
+        # update loses), even keys with a higher one (it wins)
+        def extra(i):
+            return (1000 - i - (1 if i % 2 else -1),)
+
+    write_lake_pk_append(
+        p,
+        spark.createDataFrame(
+            [(i, f"b{i}", *extra(i)) for i in range(0, 200, 3)], ddl
+        ),
+    )
+    if lake == "dv":
+        victim = next(e for e in plan_paimon_files(p) if e.bucket == 0)
+        attach_paimon_dv_fixture(p, {victim.file_name: [0]})  # one row deleted
+
+    def read():
+        return PaimonLakeTable(p).new_read_builder().new_read().to_df()
+
+    df = read()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, f"bucket-local merge must not shuffle:\n{plan[:800]}"
-    got = {r["k"]: r["v"] for r in df.collect()}
+    rows = sorted((tuple(r) for r in df.collect()), key=repr)
+    with monkeypatch.context() as m:
+        m.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
+        win = read()
+        assert "Exchange" in win._jdf.queryExecution().executedPlan().toString()
+        assert rows == sorted((tuple(r) for r in win.collect()), key=repr)
+    got = {r[0]: r[1] for r in rows}
+    if lake == "dv":
+        assert len(got) == 199
+        return
     assert len(got) == 200
-    assert got[3] == "b3" and got[1] == "a1" and got[199] == "a199"
-    # DV attach → ineligible → exact window fallback, same answer
-    from paimon_python_spark.paimon_import import plan_paimon_files
-
-    victim = next(
-        e for e in plan_paimon_files(p) if e.bucket == 0
-    )
-    attach_paimon_dv_fixture(
-        p, {victim.file_name: [0]}
-    )  # mark one row deleted
-    df2 = PaimonLakeTable(p).new_read_builder().new_read().to_df()
-    assert df2.count() == 199
+    assert got[1] == "a1" and got[199] == "a199"
+    if lake == "first_row":
+        assert got[3] == "a3"
+    elif lake == "sequence_field":
+        # odd keys' updates carry a lower event time and lose
+        assert got[3] == "a3" and got[6] == "b6"
+    else:
+        assert got[3] == "b3"
 
 
 def test_bucket_local_merge_size_guard(tmp_path, spark, monkeypatch):
@@ -5106,7 +5184,8 @@ def test_lake_ignore_delete_all_merge_paths(
 
     def builder_paths(read):
         """(bucket-local, key-window) reads; the group-size guard forces
-        the window fallback. Only deduplicate is bucket-local-eligible."""
+        the window fallback. Deduplicate and first-row lakes are
+        bucket-local-eligible."""
         bl = read()
         with monkeypatch.context() as m:
             m.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
@@ -5138,8 +5217,9 @@ def test_lake_ignore_delete_all_merge_paths(
     )
     assert bl == win == ds, (bl, win, ds)
     assert "Exchange" in win_plan
-    if engine == "deduplicate":
+    if engine in ("deduplicate", "first-row"):
         assert "Exchange" not in bl_plan
+    if engine == "deduplicate":
         # equal sequences: the later manifest entry wins
         assert (6, "g", None) in bl
     if ignore_delete == "true":

@@ -144,7 +144,7 @@ def test_lake_pk_read_prunes_unprojected_columns(tmp_path, spark):
         # projection ∪ predicate set is pushed into the per-group
         # pyarrow reads, so the merge OUTPUT schema itself excludes
         # the unprojected column
-        assert "MapInPandas" in plan, plan[:600]
+        assert "MapInArrow" in plan, plan[:600]
         assert "wide" not in [f.name for f in df.schema.fields]
     assert sorted(df.toPandas().v) == ["a", "b"]
 
