@@ -2845,8 +2845,9 @@ ORDER BY c_custkey
 def paimon_lake_dv_roundtrip(spark, sf_dir):
     """DELETION-VECTOR lake read (reference reads DV tables
     transparently via the JVM plan, py4j java_implementation.py:154-205;
-    here the snapshot's index manifest + spec-format roaring bitmaps
-    decode distributed and anti-join by (file, position)): a PK lake
+    here the snapshot's index manifest is planned on the driver and
+    each marked file's read task decodes its spec-format roaring bitmap
+    and drops the marked positions in place): a PK lake
     gets a base commit, an upsert commit, and a DV index that marks
     BOTH the superseded even-key versions in the base file (what
     Paimon's lookup compaction writes) AND a row-level delete of every
@@ -3281,7 +3282,9 @@ def paimon_lake_delete_roundtrip(spark, sf_dir):
     """Row-level DELETE on a real lake committed as spec deletion
     vectors (paimon_lake.delete_lake_rows): customer rows in a fixture
     lake, delete every third key and one whole segment partition, read
-    the union of the before/after states tagged. The oracle replays
+    the union of the before/after states tagged. The delete takes each
+    row's file position and partition values from the lake read task,
+    and the after-read drops the marks inside that task. The oracle replays
     both states with plain SQL filters — the gate proves no surviving
     row is lost and no deleted row resurrects, with zero data-file
     rewrites."""

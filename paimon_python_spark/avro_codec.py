@@ -9,10 +9,13 @@ Wire format follows the Avro 1.11 spec (magic ``Obj\\x01``, metadata
 map, sync-marker-delimited blocks, zigzag-varint longs).
 
 Scale shape: the codec itself is single-file, but both directions run
-INSIDE Spark tasks — writes via ``mapInPandas`` after the engine's
-layout repartition, reads via the ``binaryFile`` source + ``mapInPandas``
-decode — so Avro tables distribute exactly like parquet ones, just
-without the vectorized fast path.
+INSIDE Spark tasks, so Avro tables distribute exactly like parquet
+ones, just without the vectorized fast path. Lake avro files read
+inside the Arrow lake read task (``paimon_import.read_data_file`` under
+``read_lake_task``, in ``mapInArrow`` plans); the engine's own avro
+tables write via ``mapInPandas`` after the layout repartition and read
+via the ``binaryFile`` source + ``mapInPandas`` decode
+(``read._read_avro_df``).
 """
 
 from __future__ import annotations

@@ -149,8 +149,8 @@ class PaimonLakeBatchReader(DataSourceReader):
             b = b.with_timestamp(self._tt_timestamp)
         # DV lakes: per-file (index file, offset, length) triples ride
         # the partition specs; executors decode the roaring bitmaps and
-        # drop marked positions BEFORE the merge (the builder path's
-        # contract — apply_lake_dv — without its driver-side join plan).
+        # drop marked positions BEFORE the merge, in the same read task
+        # every builder read runs.
         # Planned under the SAME snapshot as the file set: a time-travel
         # read must see that snapshot's marks, not today's.
         dv_ranges = (

@@ -1011,8 +1011,8 @@ def plan_paimon_files(
     snapshot/tag dict) takes precedence over ``snapshot_id``.
 
     Deletion-vector tables plan the same way; read paths must ALSO call
-    :func:`plan_paimon_dv` and anti-join the marked (file, position)
-    pairs — the lake reader and importer both do.
+    :func:`plan_paimon_dv` and drop the marked (file, position) pairs —
+    the lake reader and importer both pass the ranges to the read task.
 
     A freshly-created lake (schema only, no commits yet) plans as the
     empty file set; an EXPLICIT snapshot id that does not exist still
@@ -1075,10 +1075,10 @@ def plan_paimon_files(
 #   where data = int32 magic 1581511376 | portable roaring bitmap
 # The index manifest entry's ranges map data-file-name -> (offset of the
 # size int, size). The reference reads these transparently via the JVM
-# (py4j java_implementation.py plans DV tables); here the decode is a
-# distributed mapInPandas over the ranges and the application is a
-# (file, position) anti-join — below 64 MB of index the positions side
-# broadcasts, so the data never shuffles.
+# (py4j java_implementation.py plans DV tables); here each file's
+# (index path, offset, length) rides its read spec and the read task
+# (:func:`read_lake_task`) decodes the bitmap and drops the marked
+# positions from that file's rows — no join, no shuffle.
 
 DV_MAGIC = 1581511376
 DV_INDEX_VERSION = 1
@@ -1087,10 +1087,6 @@ DELETION_VECTORS_INDEX = "DELETION_VECTORS"
 #: spec "Hash Index": the index file stores the int32 hashcodes of
 #: every primary key routed into its bucket)
 HASH_INDEX = "HASH"
-#: broadcast the decoded (file, position) side below this many marked
-#: rows (~64 MB of hashed-relation at ~32 B/row); above it the
-#: anti-join degrades to a shuffle instead of an executor OOM
-DV_BROADCAST_ROWS = 2_000_000
 
 INDEX_MANIFEST_SCHEMA = {
     "type": "record",
@@ -1136,13 +1132,6 @@ class PaimonDvRange:
     data_file_name: str
     offset: int
     length: int
-    #: estimated DECODED positions in this range (the owning index
-    #: manifest entry's ``_ROW_COUNT`` split across its ranges; None
-    #: when the entry omitted it). Broadcast decisions must use this,
-    #: not ``length``: roaring bitmap containers expand up to 8
-    #: positions per byte and run containers far more, so a 64 MB
-    #: compressed index can decode to >500M rows.
-    est_rows: Optional[float] = None
 
 
 def write_dv_index_file(path: str, dv_map: dict) -> dict:
@@ -1287,12 +1276,6 @@ def plan_paimon_dv(
             or r.get("_DELETION_VECTORS_RANGES")
             or []
         )
-        entry_rows = r.get("_ROW_COUNT")
-        per_range = (
-            float(entry_rows) / len(ranges)
-            if entry_rows is not None and ranges
-            else None
-        )
         for item in ranges:
             data_file = item.get("f0", item.get("dataFileName"))
             off = item.get("f1", item.get("offset"))
@@ -1303,69 +1286,9 @@ def plan_paimon_dv(
                     str(data_file),
                     int(off),
                     int(ln),
-                    est_rows=per_range,
                 )
             )
     return out
-
-
-def apply_lake_dv(
-    spark,
-    df,
-    ranges: List[PaimonDvRange],
-    file_name_col: str = "__file_name",
-    pos_col: str = "__row_pos",
-):
-    """Drop DV-marked rows: decode the bitmaps DISTRIBUTED (mapInPandas
-    over the range list — the driver only ever sees metadata) and
-    anti-join on (file name, row position). Below 64 MB of total index
-    the positions side broadcasts (map-side filter, the data frame never
-    shuffles); above it the anti-join degrades to a shuffle instead of
-    a driver OOM."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    if not ranges:
-        return df
-    rows = [(r.index_path, r.data_file_name, r.offset, r.length) for r in ranges]
-
-    # fan_out: the mapInPandas below reads one DV index slice per row
-    rdf = local_df(
-        spark, rows, "idx string, fname string, off long, len long", fan_out=True
-    )
-    out_schema = f"{file_name_col} string, {pos_col} long"
-
-    def decode(batches):
-        for pdf in batches:
-            names, poss = [], []
-            for idx, fn, off, ln in zip(
-                pdf["idx"], pdf["fname"], pdf["off"], pdf["len"]
-            ):
-                pos = read_dv_index_entry(str(idx), int(off), int(ln))
-                if len(pos):
-                    names.append(np.full(len(pos), fn, dtype=object))
-                    poss.append(pos.astype(np.int64))
-            if names:
-                yield pd.DataFrame(
-                    {
-                        file_name_col: np.concatenate(names),
-                        pos_col: np.concatenate(poss),
-                    }
-                )
-
-    n_parts = max(1, min(len(rows), int(spark.sparkContext.defaultParallelism)))
-    pos_df = rdf.repartition(n_parts).mapInPandas(decode, out_schema)
-    # broadcast by DECODED cardinality (index manifest _ROW_COUNT), not
-    # compressed bytes: bitmap containers expand 8 positions/byte and
-    # run containers far more, so byte-sized thresholds OOM executors.
-    # Entries lacking _ROW_COUNT count as worst-case bitmap expansion.
-    est_total = sum(
-        r.est_rows if r.est_rows is not None else 8.0 * r.length for r in ranges
-    )
-    if est_total <= DV_BROADCAST_ROWS:
-        pos_df = F.broadcast(pos_df)
-    return df.join(pos_df, [file_name_col, pos_col], "left_anti")
 
 
 def paimon_type_string(field: "T.StructField") -> str:
@@ -2216,72 +2139,6 @@ def paimon_kv_schema(info: PaimonSchemaInfo) -> T.StructType:
     return T.StructType(fields)
 
 
-def _load_lake_files(
-    spark,
-    paths: List[str],
-    fmt: str,
-    physical: T.StructType,
-    file_name_col: "str | None" = None,
-    row_pos_col: "str | None" = None,
-):
-    """Load Paimon data files of any supported format as one DataFrame.
-
-    parquet/orc use Spark's native vectorized readers with
-    ``mergeSchema`` so files written under older schema versions surface
-    missing columns as NULL (Paimon's schema-evolution read contract)
-    instead of failing; avro goes through the engine's distributed codec
-    (``binaryFile`` + mapInPandas — no spark-avro dependency), which
-    needs the explicit physical schema.
-
-    ``file_name_col`` appends each row's source file name. The avro
-    path tags rows inside the codec — ``input_file_name()`` on top of
-    ``mapInPandas`` misattributes provenance when one task decodes
-    several files into a concatenated batch, so callers that need
-    per-file tie-breaking must request the column here.
-
-    ``row_pos_col`` appends the row's 0-based position within its file
-    (deletion vectors mark (file, position) pairs): parquet via the
-    ``_metadata.row_index`` metadata column, avro via the engine codec,
-    orc via the pyarrow.orc codec path (Spark's native orc reader has
-    no row-index metadata column)."""
-    from pyspark.sql import functions as F
-
-    if fmt == "avro":
-        from paimon_python_spark.read import _read_avro_df
-
-        return _read_avro_df(
-            spark,
-            paths,
-            physical,
-            file_name_col=file_name_col,
-            row_pos_col=row_pos_col,
-        )
-    if fmt == "orc" and row_pos_col:
-        # Spark's native orc reader has no _metadata.row_index — DV
-        # reads over orc route through the pyarrow.orc codec path,
-        # which numbers rows per file like the avro codec does
-        from paimon_python_spark.read import _read_orc_df
-
-        return _read_orc_df(
-            spark,
-            paths,
-            physical,
-            file_name_col=file_name_col,
-            row_pos_col=row_pos_col,
-        )
-    df = spark.read.format(fmt).option("mergeSchema", "true").load(paths)
-    if row_pos_col:
-        df = df.withColumn(row_pos_col, F.col("_metadata.row_index"))
-    if file_name_col:
-        # _metadata.file_name, NOT input_file_name(): the metadata
-        # struct resolves AT the scan, so data-column predicates above
-        # it still push into the parquet reader — a projection over the
-        # non-deterministic input_file_name() blocks PushedFilters
-        # entirely (caught by test_lake_read_residual_filter_pushes_to_scan)
-        df = df.withColumn(file_name_col, F.col("_metadata.file_name"))
-    return df
-
-
 #: (table_path, old schema id, current schema id) → colmap; schema
 #: files are immutable per id, so entries never invalidate
 _COLMAP_CACHE: "dict[tuple, Optional[dict]]" = {}
@@ -2369,26 +2226,73 @@ def _load_lake_entries(
     entries,
     src,
     fmt: str,
-    kv: bool,
     table_path: "str | None" = None,
+    dv_ranges=(),
     file_name_col: "str | None" = None,
     row_pos_col: "str | None" = None,
-    skip_cols=(),
 ):
-    """Load planned entries honoring FIELD-ID schema evolution: files
-    group by the ``_SCHEMA_ID`` they were written under, each group
-    loads with its own physical schema, projects to the current schema
-    via :func:`_mapped_select`, and the groups union by name. By-name
-    ``mergeSchema`` alone silently misreads renamed/reordered columns
-    (a renamed column would surface NULL); the id mapping is exact."""
+    """Unmerged rows of planned lake files: on key-value files the
+    stored ``_KEY_*``, ``_SEQUENCE_NUMBER`` and ``_VALUE_KIND``, then
+    every declared column (partition columns from the manifest
+    entries, not the file bytes), then ``file_name_col`` (each row's
+    file name) and ``row_pos_col`` (its 0-based position in the file)
+    when asked. Rows marked by ``dv_ranges`` drop.
+
+    Spark's native vectorized scan reads DV-free parquet and orc files
+    without row positions, so Catalyst filters still push into it:
+    files group by the ``_SCHEMA_ID`` they were written under, each
+    group projects to the current schema BY FIELD ID
+    (:func:`_mapped_select`; by-name ``mergeSchema`` alone would read a
+    renamed column as NULL), and the groups union by name. Every other
+    read — avro files, deletion-vector marks, row positions — runs
+    :func:`read_lake_task` once per file through :func:`arrow_task_df`:
+    the task remaps field ids, drops marked rows in place and keeps
+    every value exact."""
     from functools import reduce
 
+    from pyspark.sql import functions as F
+
+    from paimon_python_spark._localdf import quote_ident
+
+    kv = bool(info.primary_keys)
+    schema = T.StructType(
+        [
+            *(paimon_kv_schema(info) if kv else info.spark_schema).fields,
+            *[
+                T.StructField(c, t)
+                for c, t in (
+                    (file_name_col, T.StringType()),
+                    (row_pos_col, T.LongType()),
+                )
+                if c
+            ],
+        ]
+    )
+    dv_ranges = _relevant_dv(dv_ranges, entries)
+    if fmt == "avro" or dv_ranges or row_pos_col:
+        specs = lake_read_specs(
+            table_path,
+            info,
+            entries,
+            src,
+            dv_ranges,
+            grouped=False,
+            merge=False,
+            kv_cols=True,
+            file_name=file_name_col,
+            row_pos=row_pos_col,
+            tz=spark.conf.get("spark.sql.session.timeZone"),
+        )
+        return arrow_task_df(spark, specs, schema, lambda s: read_lake_task(s, info))
+    # append files need not carry their partition columns (hive-style
+    # layouts): they join back from a broadcast (file -> values) map
+    skip = () if kv else tuple(info.partition_keys)
+    fn = (file_name_col or "__file_name") if skip else file_name_col
     groups: dict[int, list] = {}
     for e in entries:
         groups.setdefault(e.schema_id, []).append(e)
     parts = []
     for sid in sorted(groups):
-        es = groups[sid]
         if sid == info.id:
             oinfo = info
         elif table_path is None:
@@ -2398,27 +2302,41 @@ def _load_lake_entries(
             )
         else:
             oinfo = read_paimon_schema(table_path, sid)
-        physical = (
-            paimon_kv_schema(oinfo)
-            if kv
-            else T.StructType(
-                [f for f in oinfo.spark_schema.fields if f.name not in skip_cols]
-            )
+        df = (
+            spark.read.format(fmt)
+            .option("mergeSchema", "true")
+            .load([src(e) for e in groups[sid]])
         )
-        df = _load_lake_files(
+        if fn:
+            # _metadata.file_name, NOT input_file_name(): the metadata
+            # struct resolves AT the scan, so data-column predicates
+            # above it still push into the parquet reader — a
+            # projection over the non-deterministic input_file_name()
+            # blocks PushedFilters entirely (caught by
+            # test_lake_read_residual_filter_pushes_to_scan)
+            df = df.withColumn(fn, F.col("_metadata.file_name"))
+        sel = _mapped_select(oinfo, info, kv=kv, skip=skip)
+        parts.append(df.selectExpr(*sel, *([quote_ident(fn)] if fn else [])))
+    df = reduce(lambda a, b: a.unionByName(b), parts)
+    if skip:
+        rows = {}
+        for e in entries:
+            pv = logical_partition_values(info, e.partition)
+            rows[e.file_name] = (e.file_name, *[pv[k] for k in skip])
+        pmap = local_df(
             spark,
-            [src(e) for e in es],
-            fmt,
-            physical,
-            file_name_col=file_name_col,
-            row_pos_col=row_pos_col,
+            list(rows.values()),
+            T.StructType(
+                [T.StructField(fn, T.StringType(), False)]
+                + [
+                    T.StructField(k, info.spark_schema[k].dataType, True)
+                    for k in info.partition_keys
+                ]
+            ),
+            max_slices=1,
         )
-        sel = _mapped_select(oinfo, info, kv=kv, skip=skip_cols)
-        from paimon_python_spark._localdf import quote_ident
-
-        extra = [quote_ident(c) for c in (file_name_col, row_pos_col) if c]
-        parts.append(df.selectExpr(*sel, *extra))
-    return reduce(lambda a, b: a.unionByName(b), parts)
+        df = df.join(F.broadcast(pmap), fn)
+    return df.select(*schema.fieldNames())
 
 
 #: per-(partition, bucket) on-disk byte budget of the bucket-local
@@ -2538,10 +2456,13 @@ def kv_column_pa_type(schema, col: str):
     return pa.null()
 
 
-def read_group_frame(files, fmt: str, cols, schema, key_predicate=None, tz=None):
+def read_group_frame(
+    files, fmt: str, cols, schema, key_predicate=None, tz=None, row_pos=False
+):
     """THE pyarrow read of one merge group's files into one Arrow table
     holding exactly ``cols``, each cast to its :func:`kv_column_pa_type`,
-    plus ``__file`` (each row's index in ``files``), shared by
+    plus ``__file`` (each row's index in ``files``) and, with
+    ``row_pos``, ``__pos`` (its position in its file), shared by
     :func:`read_lake_task` and the engine builder's bucket-local merge.
     ``tz`` (lake files, whose writers store the session wall clock)
     turns each file's stored timestamps into Spark's form first
@@ -2554,10 +2475,10 @@ def read_group_frame(files, fmt: str, cols, schema, key_predicate=None, tz=None)
     deletion vector's (index path, offset, length): its marked row
     positions drop (an Arrow mask) before anything else sees the rows.
     Columns a file lacks NULL-fill with their type.
-    ``key_predicate`` (parquet, DV-free files) filters rows at the read
-    — exact BEFORE a merge, because every version of a key shares its
-    key values — so a point lookup reads only the row groups whose
-    stats admit the key."""
+    ``key_predicate`` (parquet, DV-free files, no ``row_pos``) filters
+    rows at the read — exact BEFORE a merge, because every version of a
+    key shares its key values — so a point lookup reads only the row
+    groups whose stats admit the key."""
     import numpy as np
     import pyarrow as pa
 
@@ -2585,7 +2506,7 @@ def read_group_frame(files, fmt: str, cols, schema, key_predicate=None, tz=None)
             path,
             fmt,
             [s for s in stored.values() if s],
-            None if dv else arrow_filter,
+            None if dv or row_pos else arrow_filter,
             filter_fields,
         )
         if dv:
@@ -2602,7 +2523,11 @@ def read_group_frame(files, fmt: str, cols, schema, key_predicate=None, tz=None)
             for c in cols
         ]
         arrays.append(pa.array(np.full(n, fi, dtype=np.int32)))
-        tables.append(pa.table(arrays, names=[*cols, "__file"]))
+        if row_pos:
+            # positions in the file, counted before the DV mask
+            arrays.append(pa.array(np.flatnonzero(keep) if dv else np.arange(n)))
+        names = [*cols, "__file", *(["__pos"] if row_pos else [])]
+        tables.append(pa.table(arrays, names=names))
     return pa.concat_tables(tables)
 
 
@@ -2652,11 +2577,15 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
     (:func:`_spark_timestamps`).
 
     ``spec["columns"]`` prunes the read to those declared columns (all
-    when None). ``spec["row_kind"]`` names a trailing string column of
-    row kinds: +I/-U/+U/-D from ``_VALUE_KIND`` on unmerged key-value
-    rows, +I on append files and merged rows. ``key_predicate`` filters
-    ``_KEY_*`` columns at the read (see :func:`read_group_frame`).
-    Runs in the builder's ``mapInArrow`` tasks and in both
+    when None). ``spec["kv_cols"]`` leads an unmerged key-value read
+    with the stored ``_KEY_*``, ``_SEQUENCE_NUMBER`` and
+    ``_VALUE_KIND``. Trailing columns follow when their spec key names
+    them: ``row_kind`` (+I/-U/+U/-D from ``_VALUE_KIND`` on unmerged
+    key-value rows, +I on append files and merged rows), ``file_name``
+    (each row's file name) and ``row_pos`` (its position in its file,
+    counted before DV marks drop). ``key_predicate`` filters ``_KEY_*``
+    columns at the read (see :func:`read_group_frame`). Runs in the
+    builder's :func:`arrow_task_df` plans and in both
     ``format("paimon_lake")`` readers."""
     import numpy as np
     import pyarrow as pa
@@ -2680,6 +2609,7 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
         info,
         key_predicate,
         spec.get("tz") or session_time_zone(),
+        row_pos=bool(spec.get("row_pos")),
     )
     if spec["merge"]:
         fi = g["__file"].to_numpy()
@@ -2692,7 +2622,7 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
             ),
         )
         g = merge_group(g, info, keys, "__ord", "_VALUE_KIND")
-    out = {}
+    out = {c: g[c] for c in kv_cols} if spec.get("kv_cols") else {}
     for f in fields:
         if f.name in part_keys:
             v = partition_value(info, f.name, spec["partition"].get(f.name))
@@ -2707,6 +2637,11 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
             if spec["kv"] and not spec["merge"]
             else pa.repeat(pa.scalar("+I"), g.num_rows)
         )
+    if spec.get("file_name"):
+        names = pa.array([os.path.basename(f[1]) for f in files])
+        out[spec["file_name"]] = pc.take(names, g["__file"])
+    if spec.get("row_pos"):
+        out[spec["row_pos"]] = g["__pos"]
     return pa.table(out)
 
 
@@ -2735,14 +2670,16 @@ def lake_read_specs(
     table_path, info: PaimonSchemaInfo, entries, src, dv_ranges=(), grouped=True, **spec_kw
 ) -> list:
     """THE spec builder of :func:`read_lake_task`, shared by the
-    builder's bucket-local merge and both ``format("paimon_lake")``
+    builder's bucket-local merge, its unmerged reads
+    (:func:`_load_lake_entries`) and both ``format("paimon_lake")``
     readers: one spec per (partition, bucket) group on key-value lakes
-    (the merge unit; ``grouped=False`` plans one per file, the stream
-    reader's delta shape) and one per file on append lakes. Each file
-    rides as ``[manifest entry index, path, level, field-id colmap, DV
-    (index path, offset, length)]``; ``src`` maps an entry to its path,
-    and ``spec_kw`` adds or overrides the per-caller keys (``merge``,
-    ``columns``, ``tz``, ``row_kind``). Specs are JSON-safe."""
+    (the merge unit; ``grouped=False`` plans one per file, the shape of
+    unmerged reads) and one per file on append lakes. Each file rides
+    as ``[manifest entry index, path, level, field-id colmap, DV (index
+    path, offset, length)]``; ``src`` maps an entry to its path, and
+    ``spec_kw`` adds or overrides the per-caller keys (``merge``,
+    ``columns``, ``tz``, ``kv_cols``, ``row_kind``, ``file_name``,
+    ``row_pos``). Specs are JSON-safe."""
     kv = bool(info.primary_keys)
     dv_by_file = {
         r.data_file_name: [r.index_path, r.offset, r.length] for r in dv_ranges
@@ -2776,6 +2713,32 @@ def lake_read_specs(
     ]
 
 
+def arrow_task_df(spark, specs, schema: T.StructType, task):
+    """THE plan of every in-task read: ``specs`` (JSON-safe dicts) ride
+    as strings through ``parallelize`` into at most
+    ``_localdf.pinned_width`` slices, and ``mapInArrow`` runs
+    ``task(spec) -> pyarrow.Table`` on each spec of a slice in turn,
+    yielding ``schema``'s columns. Packing matters: every Python task
+    pays a fixed start-up cost, so 16 groups in 16 tasks take several
+    times as long as the same groups in 4. The plan carries no
+    Exchange; the spec strings are the only driver-to-executor
+    payload."""
+    from paimon_python_spark._localdf import pinned_width
+
+    rows = [(json.dumps(s),) for s in specs]
+    n = max(1, min(len(rows), pinned_width(spark)))
+    plan = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, numSlices=n), "spec string"
+    )
+
+    def run(batches):
+        for b in batches:
+            for spec in b.column("spec").to_pylist():
+                yield from task(json.loads(spec)).to_batches()
+
+    return plan.mapInArrow(run, schema)
+
+
 def merge_pk_entries_bucket_local(
     spark,
     info: PaimonSchemaInfo,
@@ -2789,9 +2752,10 @@ def merge_pk_entries_bucket_local(
     """NO-SHUFFLE merge of a bucket-closed PK lake — real Paimon's own
     execution shape: a key lives in exactly ONE (partition, bucket)
     group, so the merge is closed per group and needs no cross-task
-    key clustering. One task per group runs :func:`read_lake_task` on
-    its spec (files, DV marks, field-id colmaps, the session zone) and
-    emits the group's visible rows as Arrow batches. The key-window
+    key clustering. :func:`read_lake_task` runs once per group on its
+    spec (files, DV marks, field-id colmaps, the session zone) and
+    emits the group's visible rows as Arrow batches; the groups pack
+    into :func:`arrow_task_df`'s slices. The key-window
     path this replaces shuffles EVERY scanned byte by key — at 100 TB
     that exchange is the dominant cost of every PK read, while
     per-group state is bounded by bucket sizing exactly as in Paimon's
@@ -2805,34 +2769,21 @@ def merge_pk_entries_bucket_local(
     if needed_cols is not None:
         keep = set(needed_cols) | set(info.primary_keys) | set(info.partition_keys)
         fields = [f for f in fields if f.name in keep]
-    specs = [
-        (json.dumps(spec),)
-        for spec in lake_read_specs(
-            table_path,
-            info,
-            entries,
-            src,
-            dv_ranges,
-            columns=[f.name for f in fields],
-            tz=spark.conf.get("spark.sql.session.timeZone"),
-        )
-    ]
-
-    def _read_groups(batches):
-        for b in batches:
-            for spec in b.column("spec").to_pylist():
-                yield from read_lake_task(
-                    json.loads(spec), info, key_predicate
-                ).to_batches()
-
-    # one spec row per task partition via parallelize(numSlices=n): each
-    # group merges alone and the plan carries ZERO Exchange nodes — the
-    # spec strings are the only driver→executor payload (KB-scale)
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(specs, numSlices=max(1, len(specs))),
-        "spec string",
+    specs = lake_read_specs(
+        table_path,
+        info,
+        entries,
+        src,
+        dv_ranges,
+        columns=[f.name for f in fields],
+        tz=spark.conf.get("spark.sql.session.timeZone"),
     )
-    return plan_df.mapInArrow(_read_groups, T.StructType(fields))
+    return arrow_task_df(
+        spark,
+        specs,
+        T.StructType(fields),
+        lambda spec: read_lake_task(spec, info, key_predicate),
+    )
 
 
 def merge_paimon_pk_entries(
@@ -2854,11 +2805,11 @@ def merge_paimon_pk_entries(
     manifest entry order (later commit wins — the reference's
     sort-merge input-order convention); ``-D``/``-U`` kinds dropped.
 
-    ``dv_ranges`` (deletion-vector tables): marked (file, position)
-    pairs are anti-joined out BEFORE the merge window — DV mode's
-    whole point is that superseded versions are already marked, but
-    running the merge afterwards anyway is idempotent and keeps the
-    result exact even on partially-marked lakes.
+    ``dv_ranges`` (deletion-vector tables): each marked file's read
+    task drops its marked positions BEFORE the merge — DV mode's whole
+    point is that superseded versions are already marked, but running
+    the merge afterwards anyway is idempotent and keeps the result
+    exact even on partially-marked lakes.
 
     ``src`` maps a :class:`PaimonFileEntry` to its absolute path.
     Returns a DataFrame with exactly the declared schema columns."""
@@ -2890,13 +2841,10 @@ def merge_paimon_pk_entries(
         entries,
         src,
         fmt,
-        kv=True,
         table_path=table_path,
+        dv_ranges=dv_ranges,
         file_name_col="__file_name",
-        row_pos_col="__row_pos" if dv_ranges else None,
     )
-    if dv_ranges:
-        raw = apply_lake_dv(spark, raw, dv_ranges, "__file_name", "__row_pos")
     if key_predicate is not None:
         # key predicates are version-invariant (every version of a key
         # shares its _KEY_* values), so filtering BEFORE the merge
@@ -2966,89 +2914,22 @@ def read_paimon_append_entries(
     dv_ranges=None,
     table_path: "str | None" = None,
 ):
-    """Read an append table's live files in place. Partition columns
-    that are not physically present in the data files (hive-style
-    layouts) are injected per partition group from the decoded manifest
-    BinaryRow values; files that do carry them load in one scan.
-
-    All loads route through :func:`_load_lake_entries` so the
-    codec-based avro path (no spark-avro dependency) and FIELD-ID
-    schema evolution (rename/reorder, added columns NULL-filled) apply
-    to append tables exactly as they do to PK tables.
-    ``dv_ranges``: row-level deletes on append tables (Paimon's
-    DELETE-FROM support) anti-join out by (file, position)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
+    """Read an append table's live files in place, as the declared
+    columns. Partition values come AUTHORITATIVELY from the manifest
+    entries' BinaryRow, never from the file bytes: hive-style files do
+    not carry the columns at all, and a mixed-provenance lake (JVM
+    files that do, engine appends that do not) must read the same
+    either way. :func:`_load_lake_entries` does the read, so avro
+    files and FIELD-ID schema evolution (rename/reorder, added columns
+    NULL-filled) apply to append tables exactly as they do to PK
+    tables. ``dv_ranges``: row-level deletes on append tables
+    (Paimon's DELETE-FROM support) drop inside each marked file's read
+    task."""
     if not entries:
         return local_df(spark, [], info.spark_schema)
-    dv_ranges = _relevant_dv(dv_ranges, entries)
-    pos_col = "__row_pos" if dv_ranges else None
-    cast_cols = [
-        F.col(f.name).cast(f.dataType).alias(f.name)
-        for f in info.spark_schema.fields
-    ]
-    if not info.partition_keys:
-        df = _load_lake_entries(
-            spark,
-            info,
-            entries,
-            src,
-            fmt,
-            kv=False,
-            table_path=table_path,
-            file_name_col="__file_name" if dv_ranges else None,
-            row_pos_col=pos_col,
-        )
-        if dv_ranges:
-            df = apply_lake_dv(spark, df, dv_ranges, "__file_name", pos_col)
-        return df.select(*cast_cols)
-    # Partition values come AUTHORITATIVELY from the manifest entry's
-    # BinaryRow, never from the file bytes: hive-style files don't carry
-    # the columns at all, and a mixed-provenance lake (fixture/JVM files
-    # that do + engine appends that don't) used to silently NULL-fill
-    # whichever layout a single sampled file didn't match. ONE scan with
-    # the partition columns skipped, then a broadcast (file -> partition
-    # values) map joins them back — no per-partition union (a
-    # 10k-partition lake would otherwise plan a 10k-way union), no
-    # sample file open at plan time.
-    fn = "__file_name"
-    df = _load_lake_entries(
-        spark,
-        info,
-        entries,
-        src,
-        fmt,
-        kv=False,
-        table_path=table_path,
-        file_name_col=fn,
-        row_pos_col=pos_col,
-        skip_cols=tuple(info.partition_keys),
+    return _load_lake_entries(
+        spark, info, entries, src, fmt, table_path=table_path, dv_ranges=dv_ranges
     )
-    if dv_ranges:
-        df = apply_lake_dv(spark, df, dv_ranges, fn, pos_col)
-    rows, seen = [], set()
-    for e in entries:
-        if e.file_name in seen:
-            continue
-        seen.add(e.file_name)
-        pv = logical_partition_values(info, e.partition)
-        rows.append((e.file_name, *[pv[k] for k in info.partition_keys]))
-
-    pmap = local_df(
-        spark,
-        rows,
-        T.StructType(
-            [T.StructField(fn, T.StringType(), False)]
-            + [
-                T.StructField(k, info.spark_schema[k].dataType, True)
-                for k in info.partition_keys
-            ]
-        ),
-        max_slices=1,
-    )
-    return df.join(F.broadcast(pmap), fn).select(*cast_cols)
 
 
 # ---- import ----
@@ -3207,13 +3088,7 @@ def _import_with_history(
         writer, committer = wb.new_write(), wb.new_commit()
         if info.primary_keys:
             raw = _load_lake_entries(
-                spark,
-                info,
-                delta,
-                src,
-                fmt,
-                kv=True,
-                table_path=paimon_table_path,
+                spark, info, delta, src, fmt, table_path=paimon_table_path
             )
             value_cols = [f.name for f in info.spark_schema.fields]
             # original sequence order keeps intra-commit version order

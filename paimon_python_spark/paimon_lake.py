@@ -19,27 +19,27 @@ catalog table for a lake path without touching query code::
             .new_read().to_df())
 
 Scale shape: planning is a driver-side metadata walk (manifest avro,
-KB-sized — same cost class as the reference's JVM plan call); the data
-read is a plain distributed Spark scan over the planned files, with
-partition pruning BEFORE the scan (predicate evaluated against each
-entry's decoded BinaryRow partition) and the full residual filter after
-it, so Catalyst still sees a declarative plan (parquet pushdown +
-column pruning apply per file). PK tables run the same distributed
+KB-sized — same cost class as the reference's JVM plan call), with
+partition pruning BEFORE any file opens (predicate evaluated against
+each entry's decoded BinaryRow partition) and the full residual filter
+after the read. DV-free parquet and orc files read through Spark's
+native scan, so Catalyst still sees a declarative plan (parquet
+pushdown + column pruning apply per file); avro files and files with
+deletion-vector marks read through the Arrow read task
+(``paimon_import.read_lake_task``). PK tables run the same distributed
 merge recipe as the importer (``merge_paimon_pk_entries``): a
-bucket-closed deduplicate or first-row lake runs one Arrow read task
-(``paimon_import.read_lake_task``) per (partition, bucket) group with
-no shuffle; other lakes take the window dedup on max sequence number
+bucket-closed deduplicate or first-row lake runs the Arrow read task
+(``paimon_import.read_lake_task``) once per (partition, bucket) group
+with no shuffle; other lakes take the window dedup on max sequence number
 with the deterministic level/entry-order tie-break, which shuffles
 once on (partition, key).
 
 Deletion-vector tables read transparently: the snapshot's index
 manifest is planned driver-side (``plan_paimon_dv`` — KB-scale
-metadata). The bucket-local read task drops each file's marked
-positions itself; elsewhere the roaring bitmaps decode DISTRIBUTED
-(mapInPandas over the range list), and marked (file, position) pairs
-anti-join out of the scan — broadcast below ~2M decoded marks
-(cardinality from the index manifest, never compressed bytes), so the
-data never shuffles for the delete filter.
+metadata), each marked file's (index file, offset, length) rides its
+read spec, and the read task decodes the roaring bitmap and drops the
+marked positions from that file's rows — no join, and the data never
+shuffles for the delete filter.
 """
 
 from __future__ import annotations
@@ -280,7 +280,7 @@ class PaimonLakeReadBuilder:
         max-level files — the latest full-compaction result — with no
         merge window at all (level-0 upserts committed since the last
         compaction are NOT visible; that staleness-for-speed trade is
-        the feature's contract). Deletion vectors still anti-join.
+        the feature's contract). Deletion-vector marks still drop.
         Append lakes are unaffected."""
         self._read_optimized = True
         return self
@@ -528,7 +528,7 @@ class PaimonLakeSplit:
         """Raw data-file paths. On a deletion-vector table these alone
         RESURRECT deleted rows — check :meth:`has_deletion_vectors` and
         apply :meth:`deletion_vectors` (or read via ``new_read()``,
-        which anti-joins the marks for you)."""
+        which drops the marks for you)."""
         return list(self._paths)
 
     def has_deletion_vectors(self) -> bool:
@@ -1064,33 +1064,23 @@ class PaimonLakeRead:
         if info.primary_keys and b._read_optimized:
             # $ro scan: only max-level files (the last full compaction's
             # output — non-overlapping by construction), no merge window;
-            # DV marks still anti-join out
-            from paimon_python_spark.paimon_import import (
-                _load_lake_entries,
-                _relevant_dv,
-                apply_lake_dv,
-            )
+            # DV marks still drop
+            from paimon_python_spark.paimon_import import _load_lake_entries
 
             max_level = int(info.options.get("num-levels", "6")) - 1
             ro_entries = [e for e in entries if e.level == max_level]
             if not ro_entries:
                 df = local_df(spark, [], info.spark_schema)
             else:
-                rodv = _relevant_dv(dv, ro_entries)
                 df = _load_lake_entries(
                     spark,
                     info,
                     ro_entries,
                     src,
                     fmt,
-                    kv=True,
                     table_path=table_path,
-                    file_name_col="__file_name" if rodv else None,
-                    row_pos_col="__row_pos" if rodv else None,
-                )
-                if rodv:
-                    df = apply_lake_dv(spark, df, rodv, "__file_name", "__row_pos")
-                df = df.select(*[f.name for f in info.spark_schema.fields])
+                    dv_ranges=dv,
+                ).select(*[f.name for f in info.spark_schema.fields])
         elif info.primary_keys:
             needed = None
             if b._projection is not None:
@@ -1321,9 +1311,7 @@ def read_lake_incremental(
             spark, info, entries, src, fmt, table_path=table_path
         )
     raw = (
-        _load_lake_entries(
-            spark, info, entries, src, fmt, kv=True, table_path=table_path
-        )
+        _load_lake_entries(spark, info, entries, src, fmt, table_path=table_path)
         if entries
         else None
     )
@@ -1942,9 +1930,7 @@ def _lake_audit_log(table_path: str, snapshot_id: "Optional[int]" = None):
         )
         cols = [f.name for f in info.spark_schema.fields]
         return df.select(F.lit("+I").alias("rowkind"), *cols)
-    raw = _load_lake_entries(
-        spark, info, entries, src, fmt, kv=True, table_path=table_path
-    )
+    raw = _load_lake_entries(spark, info, entries, src, fmt, table_path=table_path)
     kind = F.col("_VALUE_KIND")
     # RowKind int → short string (row_kind.py:22-57); +I is the 0/default
     expr = (
@@ -5546,8 +5532,8 @@ def compact_lake(
       reads the old files — nothing is unlinked), and
       ``totalRecordCount`` is the rewritten world's exact row count.
 
-    The read side is the engine's distributed lake scan (DV anti-join,
-    field-id schema evolution to the LATEST schema — compaction
+    The read side is the engine's distributed lake scan (DV marks
+    dropped, field-id schema evolution to the LATEST schema — compaction
     upgrades old-schema files, as Paimon's does) and the write side is
     the executor-side group writer; only KB-scale per-file metadata
     crosses the driver. A concurrent APPEND that wins the snapshot race
@@ -6164,22 +6150,15 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
     resolves); append tables take the DV path below. DV deletes are
     selective by nature; for rewrite-scale deletions use a filtered
     copy instead."""
-    import json
     import os
-    import uuid
-
-    from pyspark.sql import functions as F
 
     from paimon_python_spark.paimon_import import (
         _load_lake_entries,
         _relevant_dv,
-        latest_paimon_snapshot_id,
         plan_paimon_dv,
         plan_paimon_files,
         read_dv_index_entry,
-        read_paimon_snapshot,
     )
-    from paimon_python_spark.avro_codec import write_avro_records
     from paimon_python_spark.session import get_spark
 
     spark = get_spark()
@@ -6224,8 +6203,9 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
         )
 
     prev_dv = _relevant_dv(plan_paimon_dv(table_path), entries)
-    # hive-style partition columns aren't in the files; evaluate the
-    # partition part of the predicate per entry and the residual on rows
+    # prune whole files by the partition part of the predicate; the
+    # full predicate then evaluates on rows, whose partition columns
+    # the read task fills from the manifest entries
     part_pred = (
         predicate.keep_only_fields(set(info.partition_keys))
         if info.partition_keys
@@ -6241,55 +6221,17 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
         ]
     marked: dict = {}
     if cand:
-        # hive-style layouts don't physically carry partition columns:
-        # detect once (like the append reader) and inject them from a
-        # broadcast (file -> partition values) map so the FULL predicate
-        # evaluates on rows
-        if fmt == "avro":
-            from paimon_python_spark.avro_codec import read_avro_columns
-
-            with open(src(cand[0]), "rb") as f:
-                sample_cols = set(read_avro_columns(f.read())[0])
-        else:
-            sample_cols = set(
-                spark.read.format(fmt).load(src(cand[0])).schema.fieldNames()
-            )
-        missing = [k for k in info.partition_keys if k not in sample_cols]
         raw = _load_lake_entries(
             spark,
             info,
             cand,
             src,
             fmt,
-            kv=False,
             table_path=table_path,
+            dv_ranges=prev_dv,
             file_name_col="__file_name",
             row_pos_col="__row_pos",
-            skip_cols=tuple(missing),
         )
-        if missing:
-            from pyspark.sql import types as T
-
-            rows = [
-                (
-                    e.file_name,
-                    *[
-                        _logical_partition_values(info, e.partition)[k]
-                        for k in missing
-                    ],
-                )
-                for e in cand
-            ]
-            pschema = T.StructType(
-                [T.StructField("__file_name", T.StringType())]
-                + [
-                    T.StructField(k, info.spark_schema[k].dataType)
-                    for k in missing
-                ]
-            )
-
-            pmap = F.broadcast(local_df(spark, rows, pschema, max_slices=1))
-            raw = raw.join(pmap, "__file_name")
         pending = raw.filter(predicate.to_column())
         # EXECUTOR-SIDE bitmap build: each matched file's positions
         # collapse to one serialized roaring bitmap inside its task, so
@@ -6345,68 +6287,6 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
         )
 
     im_name = _write_dv_index_manifest(table_path, info, marked, entries)
-    tag = uuid.uuid4().hex[:12]
-    from paimon_python_spark.metadata import SnapshotConflictError, _exclusive_write
-    from paimon_python_spark.paimon_import import (
-        MANIFEST_LIST_SCHEMA,
-        read_manifest_list_entries,
-    )
-
-    for attempt in range(20):
-        if attempt:
-            import random as _random
-            import time as _time
-
-            _time.sleep(_random.uniform(0, 0.02 * attempt))
-        sdir = os.path.join(table_path, "snapshot")
-        ids = [
-            int(n.split("-")[1]) for n in os.listdir(sdir) if n.startswith("snapshot-")
-        ]
-        prev_id = max(latest_paimon_snapshot_id(table_path), max(ids) if ids else 0)
-        prev = read_paimon_snapshot(table_path, prev_id)
-        new_id = prev_id + 1
-        # a DV-only commit changes NO data files: fold prev's manifests
-        # into the base list (ORIGINAL records — partition stats
-        # survive) and publish an EMPTY delta, so incremental consumers
-        # of (prev, new] correctly see zero new rows
-        prior: list = []
-        for lst in (prev.get("baseManifestList"), prev.get("deltaManifestList")):
-            if lst:
-                prior.extend(read_manifest_list_entries(table_path, lst))
-
-        blname = f"manifest-list-{tag}-{attempt}-base.avro"
-        dlname = f"manifest-list-{tag}-{attempt}-delta.avro"
-        write_avro_records(
-            os.path.join(table_path, "manifest", blname),
-            MANIFEST_LIST_SCHEMA,
-            prior,
-        )
-        write_avro_records(
-            os.path.join(table_path, "manifest", dlname),
-            MANIFEST_LIST_SCHEMA,
-            [],
-        )
-        snap = dict(
-            prev,
-            id=new_id,
-            baseManifestList=blname,
-            deltaManifestList=dlname,
-            indexManifest=im_name,
-            commitUser="paimon_python_spark",
-            commitIdentifier=new_id,
-            # explicit: dict(prev, ...) would inherit whatever kind the
-            # previous committer used (e.g. COMPACT / OVERWRITE)
-            commitKind="APPEND",
-            deltaRecordCount=0,
-            changelogRecordCount=0,
-            changelogManifestList=None,
-        )
-        try:
-            _exclusive_write(
-                os.path.join(sdir, f"snapshot-{new_id}"), json.dumps(snap)
-            )
-        except SnapshotConflictError:
-            continue
-        write_hint_atomic(os.path.join(sdir, "LATEST"), new_id)
-        return new_id
-    raise RuntimeError("delete_lake_rows: lost the snapshot race 20 times")
+    # a DV-only commit changes NO data files: an empty delta, so
+    # incremental consumers of (prev, new] see zero new rows
+    return _commit_lake_snapshot(table_path, info, [], 0, index_manifest=im_name)

@@ -47,121 +47,42 @@ from paimon_python_spark.write import (
 )
 
 
-def _read_avro_df(
-    spark,
-    paths: List[str],
-    physical: T.StructType,
-    file_name_col: str | None = None,
-    row_pos_col: str | None = None,
-) -> DataFrame:
-    """Distributed Avro scan without the spark-avro DataSource: the
-    ``binaryFile`` source parallelizes over files, each task decodes its
-    files with the engine codec and emits Arrow batches via
-    ``mapInPandas``. Not vectorized like parquet, but fully distributed
-    and schema-checked at the tool-call layer.
-
-    ``file_name_col`` appends each row's source FILE NAME (last path
-    segment) — mapInPandas severs ``input_file_name()`` provenance, and
-    merge tie-breaking needs it. ``row_pos_col`` appends the row's
-    0-based position within its file (the avro analogue of parquet's
-    ``_metadata.row_index``) — deletion vectors mark (file, position)
-    pairs."""
-    import os as _os
-
+def _read_avro_df(spark, paths: List[str], physical: T.StructType) -> DataFrame:
+    """Distributed Avro scan of the engine's own avro tables, without
+    the spark-avro DataSource: the ``binaryFile`` source parallelizes
+    over files, each task decodes its files with the engine codec and
+    emits the rows via ``mapInPandas``. Not vectorized like parquet,
+    but fully distributed and schema-checked at the tool-call layer.
+    (Lake avro files read through ``paimon_import.read_lake_task``.)"""
     import pandas as pd
 
     from paimon_python_spark.avro_codec import read_avro_columns
 
     names = [f.name for f in physical.fields]
-    extra = []
-    if file_name_col:
-        extra.append(T.StructField(file_name_col, T.StringType()))
-    if row_pos_col:
-        extra.append(T.StructField(row_pos_col, T.LongType()))
-    out_schema = T.StructType([*physical.fields, *extra]) if extra else physical
 
     def decode(batches):
-        import numpy as _np
-
         for pdf in batches:
             frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
+            for content in pdf["content"]:
                 # columnar decode (numpy-vectorized for numeric blocks)
                 # straight into the frame — no row-tuple detour
                 fnames, cols = read_avro_columns(bytes(content))
                 by_name = dict(zip(fnames, cols))
                 n_rows = len(cols[0]) if cols else 0
-                frame = pd.DataFrame(
-                    {
-                        # schema evolution: fill columns the old file lacks
-                        n: by_name.get(n, [None] * n_rows)
-                        for n in names
-                    }
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            # schema evolution: fill columns the old file lacks
+                            n: by_name.get(n, [None] * n_rows)
+                            for n in names
+                        }
+                    )
                 )
-                if file_name_col:
-                    frame[file_name_col] = _os.path.basename(str(path))
-                if row_pos_col:
-                    frame[row_pos_col] = _np.arange(n_rows, dtype=_np.int64)
-                frames.append(frame)
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-    binary = spark.read.format("binaryFile").load(paths).select("path", "content")
-    return binary.mapInPandas(decode, out_schema)
-
-
-def _read_orc_df(
-    spark,
-    paths: List[str],
-    physical: T.StructType,
-    file_name_col: str | None = None,
-    row_pos_col: str | None = None,
-) -> DataFrame:
-    """Distributed ORC scan through the binaryFile + mapInPandas codec
-    path (pyarrow.orc). Exists ONLY for reads that need per-row file
-    positions (deletion vectors) — Spark's native orc reader has no
-    ``_metadata.row_index``; plain orc reads keep the native vectorized
-    reader."""
-    import os as _os
-
-    import pandas as pd
-
-    names = [f.name for f in physical.fields]
-    extra = []
-    if file_name_col:
-        extra.append(T.StructField(file_name_col, T.StringType()))
-    if row_pos_col:
-        extra.append(T.StructField(row_pos_col, T.LongType()))
-    out_schema = T.StructType([*physical.fields, *extra]) if extra else physical
-
-    def decode(batches):
-        import numpy as _np
-        import pyarrow as _pa
-        import pyarrow.orc as _po
-
-        for pdf in batches:
-            frames = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                tbl = _po.ORCFile(_pa.BufferReader(bytes(content))).read()
-                n_rows = tbl.num_rows
-                cols = {}
-                for n in names:
-                    # schema evolution: fill columns the old file lacks
-                    if n in tbl.column_names:
-                        cols[n] = tbl[n].to_pandas()
-                    else:
-                        cols[n] = pd.Series([None] * n_rows)
-                frame = pd.DataFrame(cols)
-                if file_name_col:
-                    frame[file_name_col] = _os.path.basename(str(path))
-                if row_pos_col:
-                    frame[row_pos_col] = _np.arange(n_rows, dtype=_np.int64)
-                frames.append(frame)
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    binary = spark.read.format("binaryFile").load(paths).select("path", "content")
-    return binary.mapInPandas(decode, out_schema)
+    binary = spark.read.format("binaryFile").load(paths).select("content")
+    return binary.mapInPandas(decode, physical)
 
 
 def projection_columns(paths: List[List[str]]) -> List:
@@ -241,18 +162,17 @@ def merge_on_read_bucket_local(
     """NO-SHUFFLE merge-on-read for fixed-bucket engine PK tables —
     the same execution shape as the lake path
     (paimon_import.merge_pk_entries_bucket_local): each planned split
-    is one merge-closed (partition, bucket) group, so one Arrow task
+    is one merge-closed (partition, bucket) group, so an Arrow task
     reads the group's files with the shared reader
     (paimon_import.read_group_frame: pruned to projection ∪ predicate
     columns + keys, key predicate applied at the read) and merges them
-    with ``agg_merge.merge_group``, the one in-task merge kernel. Plan
+    with ``agg_merge.merge_group``, the one in-task merge kernel; the
+    groups pack into ``paimon_import.arrow_task_df``'s slices. Plan
     shape: scan → MapInArrow. The window formulation this replaces
     exchanges every scanned byte on the merge key — the dominant
     PK-read cost at 100 TB. Ties beyond the sequence number break by
     manifest file order then in-file position (a superset of the
     window path's seq-only contract, fully deterministic)."""
-    import json as _json
-
     merge_keys = list(dict.fromkeys(schema.partition_keys + schema.primary_keys))
     fields = list(schema.spark_schema.fields)
     if needed_cols is not None:
@@ -261,33 +181,27 @@ def merge_on_read_bucket_local(
     read_cols = list(
         dict.fromkeys([*merge_keys, *[f.name for f in fields], SEQ_COL, KIND_COL])
     )
-    fmt = schema.file_format()
-    specs = [
-        (_json.dumps({"files": list(s.file_paths())}),) for s in splits
-    ]
+    from paimon_python_spark.paimon_import import arrow_task_df
 
-    def _merge(batches):
+    fmt = schema.file_format()
+
+    def _merge(spec):
         from paimon_python_spark.agg_merge import merge_group, order_rank
         from paimon_python_spark.paimon_import import read_group_frame
 
-        for b in batches:
-            for spec in b.column("spec").to_pylist():
-                g = read_group_frame(
-                    [(path, None, None) for path in _json.loads(spec)["files"]],
-                    fmt,
-                    read_cols,
-                    schema,
-                    key_predicate,
-                )
-                g = g.append_column("__ord", order_rank(g[SEQ_COL], g["__file"]))
-                g = merge_group(g, schema, merge_keys, "__ord", KIND_COL)
-                yield from g.select([f.name for f in fields]).to_batches()
+        g = read_group_frame(
+            [(path, None, None) for path in spec["files"]],
+            fmt,
+            read_cols,
+            schema,
+            key_predicate,
+        )
+        g = g.append_column("__ord", order_rank(g[SEQ_COL], g["__file"]))
+        g = merge_group(g, schema, merge_keys, "__ord", KIND_COL)
+        return g.select([f.name for f in fields])
 
-    n = max(1, len(specs))
-    plan_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(specs, numSlices=n), "spec string"
-    )
-    return plan_df.mapInArrow(_merge, T.StructType(fields))
+    specs = [{"files": list(s.file_paths())} for s in splits]
+    return arrow_task_df(spark, specs, T.StructType(fields), _merge)
 
 
 def merge_on_read(

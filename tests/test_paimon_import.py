@@ -520,12 +520,13 @@ def test_lake_read_residual_filter_pushes_to_scan(append_fixture, spark):
 
 
 def test_lake_avro_provenance_multi_file_single_task(tmp_path, spark):
-    """Regression (r5 advisor, high): mapInPandas severs input_file_name
-    provenance — when one task decodes several avro files into one
-    concatenated batch, tagging via input_file_name() stamps every row
-    with a single file, breaking the entry-order/level tie-break join.
-    The codec must tag each row with its TRUE source file name."""
-    from paimon_python_spark.paimon_import import _load_lake_files, paimon_kv_schema, read_paimon_schema
+    """Regression (r5 advisor, high): a Python-side read severs
+    input_file_name() provenance — when one task decodes several avro
+    files into one concatenated batch, tagging via input_file_name()
+    stamps every row with a single file, breaking the entry-order/level
+    tie-break join. The read must tag each row with its TRUE source
+    file name."""
+    from paimon_python_spark.paimon_import import _load_lake_entries, read_paimon_schema
     from paimon_python_spark.session import set_spark
 
     set_spark(spark)
@@ -558,16 +559,15 @@ def test_lake_avro_provenance_multi_file_single_task(tmp_path, spark):
         options={"bucket": "1", "file.format": "avro"},
     )
     info = read_paimon_schema(p)
-    paths = sorted(
-        os.path.join(p, "bucket-0", n)
-        for n in os.listdir(os.path.join(p, "bucket-0"))
-    )
-    assert len(paths) == 2
+    entries = plan_paimon_files(p)
+    assert len(entries) == 2
     # per-row provenance must be exact even when one task decodes both
-    # files (binaryFile packs small files into a single partition)
+    # files (the read packs small specs into shared tasks)
     rows = (
-        _load_lake_files(spark, paths, "avro", paimon_kv_schema(info),
-                         file_name_col="__f")
+        _load_lake_entries(spark, info, entries,
+                           lambda e: os.path.join(p, "bucket-0", e.file_name),
+                           "avro", table_path=p, file_name_col="__f")
+        .coalesce(1)
         .select("v", "__f")
         .toPandas()
         .sort_values("v")
@@ -5258,3 +5258,121 @@ def test_lake_ignore_delete_all_merge_paths(
     assert ebl == ewin == eds, (ebl, ewin, eds)
     if ignore_delete == "true":
         assert {1, 2} <= {r[0] for r in ebl}
+
+
+_EXACT_READ_CASES = [
+    (fmt, path)
+    for fmt in ("parquet", "orc", "avro")
+    for path in ("append", "append_dv", "pk_key_window")
+]
+
+
+@pytest.mark.parametrize(
+    "fmt,path", _EXACT_READ_CASES, ids=[f"{f}-{p}" for f, p in _EXACT_READ_CASES]
+)
+def test_lake_builder_reads_exact_values(tmp_path, spark, monkeypatch, fmt, path):
+    """Every builder read path returns stored values exactly, whatever
+    the file format: an append read, an append read after a DV delete
+    of another row, and the exact key-window PK merge. A BIGINT past
+    2^53 stays exact, a NaN DOUBLE stays apart from NULL, and an
+    all-NULL row stays all NULL. Avro lakes also read exactly through
+    ``$audit_log`` and ``read_lake_incremental``. Reads that decode
+    files in Python (avro, DV marks) plan one ``MapInArrow`` task, with
+    no ``MapInPandas`` and no anti-join; the DV commit adds no rows for
+    incremental readers."""
+    import math
+
+    from paimon_python_spark import paimon_import
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        delete_lake_rows,
+        read_lake_incremental,
+        write_lake_append,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    p = str(tmp_path / f"exact_{fmt}_{path}")
+    pk = path == "pk_key_window"
+    create_lake_table(
+        p,
+        [("p", "STRING NOT NULL"), ("id", "INT NOT NULL"), ("k", "BIGINT"),
+         ("d", "DOUBLE")],
+        partition_keys=["p"],
+        primary_keys=["p", "id"] if pk else None,
+        options={"file.format": fmt, **({"bucket": "2"} if pk else {})},
+    )
+    big = 2**53 + 1
+    df = spark.createDataFrame(
+        [("x", 1, big, float("nan")), ("x", 2, None, None), ("y", 3, 5, 1.5)],
+        "p string, id int, k bigint, d double",
+    )
+    (write_lake_pk_append if pk else write_lake_append)(p, df)
+    t = PaimonLakeTable(p)
+    if path == "append_dv":
+        pb = t.new_read_builder().new_predicate_builder()
+        sid = delete_lake_rows(p, pb.equal("id", 3))
+        assert read_lake_incremental(p, sid - 1, sid).count() == 0
+    if pk:
+        monkeypatch.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
+
+    def check(rows, n):
+        by_id = {r["id"]: r for r in rows}
+        assert len(by_id) == n, rows
+        assert by_id[1]["k"] == big and math.isnan(by_id[1]["d"])
+        assert by_id[2]["k"] is None and by_id[2]["d"] is None
+        assert by_id[1]["p"] == by_id[2]["p"] == "x"
+
+    out = t.new_read_builder().new_read().to_df()
+    check(out.collect(), 2 if path == "append_dv" else 3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "Anti" not in plan, plan[:800]
+    if path == "append_dv" or fmt == "avro":
+        assert "MapInArrow" in plan, plan[:800]
+    if fmt == "avro":
+        check(t.audit_log().collect(), 3)
+        check(read_lake_incremental(p, 0).collect(), 3)
+
+
+def test_lake_read_task_plan_width(tmp_path, spark):
+    """Spec reads pack their specs into at most ``pinned_width`` Python
+    tasks: a full read of a 16-group PK lake (8 partitions x 2 buckets)
+    runs min(16, pinned_width) partitions, and a one-group lookup runs
+    one."""
+    from paimon_python_spark._localdf import pinned_width
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    p = str(tmp_path / "width_lake")
+    create_lake_table(
+        p,
+        [("p", "INT NOT NULL"), ("k", "INT NOT NULL"), ("v", "STRING")],
+        partition_keys=["p"],
+        primary_keys=["p", "k"],
+        options={"bucket": "2"},
+    )
+    write_lake_pk_append(
+        p,
+        spark.createDataFrame(
+            [(i % 8, i, f"v{i}") for i in range(400)], "p int, k int, v string"
+        ),
+    )
+    rb = PaimonLakeTable(p).new_read_builder()
+    full = rb.new_read().to_df()
+    assert full.rdd.getNumPartitions() == min(16, pinned_width(spark))
+    assert full.count() == 400
+    pb = rb.new_predicate_builder()
+    one = (
+        rb.with_filter(pb.and_predicates([pb.equal("p", 3), pb.equal("k", 11)]))
+        .new_read()
+        .to_df()
+    )
+    assert one.rdd.getNumPartitions() == 1
+    assert [tuple(r) for r in one.collect()] == [(3, 11, "v11")]
