@@ -68,7 +68,6 @@ __all__ = [
     "DynamicBucketAssigner",
     "read_hash_index_file",
     "write_hash_index_file",
-    "write_merged_index_manifest",
 ]
 
 #: batches with at most this many distinct keys prune the cross-
@@ -112,8 +111,8 @@ def union_hash_index(
     bucket) group of ``new_by_group``, write a fresh index file holding
     the group's old hashcodes (``old_files`` maps the group to its
     current file; absent = none) followed by the new ones not already
-    in it. Returns the pending index metas, in group order, for
-    :func:`write_merged_index_manifest` / :func:`pending_to_entries`."""
+    in it. Returns the pending index metas, in group order — the
+    ``hash_index`` a lake commit takes (:func:`pending_to_entries`)."""
     import numpy as np
 
     os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
@@ -547,53 +546,6 @@ def pending_to_entries(info, pending: list):
             }
         )
     return entries, replaced
-
-
-def write_index_manifest(table_path: str, entries: list) -> str:
-    """Write ``entries`` as one avro index manifest under
-    ``manifest/``; returns the file name."""
-    from paimon_python_spark.avro_codec import write_avro_records
-    from paimon_python_spark.paimon_import import INDEX_MANIFEST_SCHEMA
-
-    name = f"index-manifest-{uuid.uuid4().hex[:12]}.avro"
-    write_avro_records(
-        os.path.join(table_path, "manifest", name),
-        INDEX_MANIFEST_SCHEMA,
-        entries,
-    )
-    return name
-
-
-def write_merged_index_manifest(table_path: str, info, pending: list) -> Optional[str]:
-    """Write the commit's FULL index manifest: every index entry live
-    in the previous snapshot (deletion vectors included) carried
-    forward verbatim, minus the HASH entries of buckets ``pending``
-    replaces, plus the new HASH entries. Returns the manifest file
-    name, or None when there is nothing to change (caller inherits the
-    previous manifest)."""
-    if not pending:
-        return None
-
-    from paimon_python_spark.paimon_import import HASH_INDEX, live_index_entries
-
-    new_entries, replaced = pending_to_entries(info, pending)
-    try:
-        prev = live_index_entries(table_path)
-    except FileNotFoundError:
-        prev = []
-    carried = [
-        r
-        for r in prev
-        if not (
-            r.get("_INDEX_TYPE") == HASH_INDEX
-            and (
-                bytes(r.get("_PARTITION") or b""),
-                int(r.get("_BUCKET") or 0),
-            )
-            in replaced
-        )
-    ]
-    return write_index_manifest(table_path, carried + new_entries)
 
 
 def arrival_dedup(sdf, keys: List[str], kind_col: Optional[str] = None):

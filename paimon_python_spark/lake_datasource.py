@@ -164,15 +164,7 @@ class PaimonLakeBatchReader(DataSourceReader):
         if predicate is not None:
             b = b.with_filter(predicate)
         entries = _pruned_entries(self.table_path, info, b)
-        part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
-        default_name = info.options.get("partition.default-name", None)
-
-        def src(e):
-            kw = {"default_name": default_name} if default_name else {}
-            return os.path.join(
-                self.table_path, e.rel_path(info.partition_keys, part_types, **kw)
-            )
-
+        src = pi.lake_file_src(self.table_path, info)
         if info.primary_keys:
             budget = pi._BUCKET_LOCAL_MAX_GROUP_BYTES
             if pi.max_group_bytes(entries) > budget:
@@ -424,6 +416,7 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         from paimon_python_spark.paimon_import import (
+            lake_file_src,
             lake_read_specs,
             plan_paimon_changelog,
             plan_paimon_delta,
@@ -431,16 +424,7 @@ class PaimonLakeStreamReader(DataSourceStreamReader):
         )
 
         info = self.info
-        part_keys = list(info.partition_keys)
-        part_types = [info.spark_schema[k].dataType for k in part_keys]
-        default_name = info.options.get("partition.default-name", None)
-
-        def src(e):
-            kw = {"default_name": default_name} if default_name else {}
-            return os.path.join(
-                self.table_path, e.rel_path(part_keys, part_types, **kw)
-            )
-
+        src = lake_file_src(self.table_path, info)
         parts: List[_LakeGroupPartition] = []
         bootstrap = start.get("bootstrap")
         delta_from = start["snapshot"]
@@ -882,14 +866,12 @@ class PaimonLakeBatchWriter(DataSourceArrowWriter):
     def commit(self, messages) -> None:
         from paimon_python_spark.dynamic_bucket import union_hash_index
         from paimon_python_spark.paimon_lake import (
-            _INHERIT_INDEX,
             _commit_lake_snapshot,
             lake_add_entry,
             lake_delete_entry,
         )
 
         info = self.info
-        part_keys = list(info.partition_keys)
         metas = [r for m in messages if m is not None for r in m.files]
         entries = [lake_add_entry(info, r, self.num_buckets) for r in metas]
         n_rows = sum(int(r["rows"]) for r in metas)
@@ -898,67 +880,33 @@ class PaimonLakeBatchWriter(DataSourceArrowWriter):
             if m is not None and m.new_hashes:
                 for k, hs in m.new_hashes.items():
                     dyn_new.setdefault(tuple(k), []).extend(hs)
-        if self.overwrite:
-            # whole-table INSERT OVERWRITE (overwrite_lake semantics):
-            # DELETE every file visible at plan time, drop the DV index
-            # (nothing it marked survives), explicit new total — even an
-            # empty df commits (it replaces the table with nothing)
-            delete_entries = [lake_delete_entry(info, e) for e in self.before]
-            overwrite_index = None
-            if self.dynamic and dyn_new:
-                # dynamic overwrite REBUILDS the HASH index from the new
-                # data alone — dropping it would let a later write
-                # re-assign an existing key to a different bucket
-                # (key split across buckets = wrong merge); carrying the
-                # old entries would resurrect deleted keys' assignments
-                from paimon_python_spark.dynamic_bucket import (
-                    pending_to_entries,
-                    write_index_manifest,
-                )
-
-                pending = union_hash_index(
-                    self.table_path, part_keys, dyn_new, {}
-                )
-                fresh, _replaced = pending_to_entries(info, pending)
-                overwrite_index = write_index_manifest(
-                    self.table_path, fresh
-                )
-            _commit_lake_snapshot(
-                self.table_path,
-                info,
-                delete_entries + entries,
-                n_rows,
-                commit_kind="OVERWRITE",
-                index_manifest=overwrite_index,
-                total_record_count=n_rows,
-            )
-            return
-        if not entries:
+        if not entries and not self.overwrite:
             return  # empty append is a successful no-op, like every
             # standard Spark sink (parquet/JDBC) — no snapshot commits
-        index_manifest = _INHERIT_INDEX
-        if self.dynamic and dyn_new:
-            # union each touched bucket's NEW key hashcodes into a fresh
-            # index file; the merged index manifest carries every other
-            # entry (DVs included) forward verbatim
-            from paimon_python_spark.dynamic_bucket import (
-                write_merged_index_manifest,
+        # union each touched bucket's NEW key hashcodes into a fresh
+        # index file; an overwrite's HASH index restarts from the new
+        # data alone (the commit drops its partitions' old entries)
+        hash_index = (
+            union_hash_index(
+                self.table_path,
+                list(info.partition_keys),
+                dyn_new,
+                {} if self.overwrite else self._dyn_old_files,
             )
-
-            pending = union_hash_index(
-                self.table_path, part_keys, dyn_new, self._dyn_old_files
-            )
-            name = write_merged_index_manifest(
-                self.table_path, info, pending
-            )
-            if name is not None:
-                index_manifest = name
+            if self.dynamic and dyn_new
+            else None
+        )
+        # whole-table INSERT OVERWRITE (overwrite_lake semantics):
+        # DELETE every file visible at plan time, explicit new total —
+        # even an empty df commits (it replaces the table with nothing)
         _commit_lake_snapshot(
             self.table_path,
             info,
-            entries,
+            [lake_delete_entry(info, e) for e in self.before or []] + entries,
             n_rows,
-            index_manifest=index_manifest,
+            commit_kind="OVERWRITE" if self.overwrite else "APPEND",
+            hash_index=hash_index,
+            total_record_count=n_rows if self.overwrite else None,
         )
 
     def abort(self, messages) -> None:

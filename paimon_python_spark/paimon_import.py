@@ -767,6 +767,20 @@ class PaimonFileEntry:
         return os.path.join(*parts, f"bucket-{self.bucket}", self.file_name) if parts else os.path.join(f"bucket-{self.bucket}", self.file_name)
 
 
+def lake_file_src(table_path: str, info):
+    """``entry -> absolute data-file path`` for a lake's planned
+    entries: ``rel_path`` under the table's partition types and
+    ``partition.default-name``, joined to ``table_path``."""
+    part_keys = list(info.partition_keys)
+    part_types = [info.spark_schema[k].dataType for k in part_keys]
+    default_name = info.options.get("partition.default-name", DEFAULT_PARTITION_NAME)
+
+    def src(e: PaimonFileEntry) -> str:
+        return os.path.join(table_path, e.rel_path(part_keys, part_types, default_name))
+
+    return src
+
+
 def read_manifest_list(table_path: str, name: str) -> List[str]:
     return [
         r["_FILE_NAME"] for r in read_manifest_list_entries(table_path, name)
@@ -1240,6 +1254,22 @@ def live_index_entries(
     return list(live.values())
 
 
+def _indexed_snapshot(
+    table_path: str, snapshot_id: Optional[int], snapshot: Optional[dict]
+) -> Optional[dict]:
+    """The snapshot to plan index entries from, or None when it names
+    no index manifest — a lake without deletion vectors or dynamic
+    buckets never calls :func:`live_index_entries`."""
+    if snapshot is None:
+        try:
+            snapshot = read_paimon_snapshot(table_path, snapshot_id)
+        except FileNotFoundError:
+            if snapshot_id is not None:
+                raise
+            return None  # freshly-created lake: no commits, no index
+    return snapshot if snapshot.get("indexManifest") else None
+
+
 def plan_paimon_hash_index(
     table_path: str,
     snapshot_id: Optional[int] = None,
@@ -1248,9 +1278,24 @@ def plan_paimon_hash_index(
     """Live ``HASH`` (dynamic-bucket) index entries of a snapshot —
     one per (partition, bucket), each naming the ``index/`` file that
     holds the bucket's key hashcodes (spec tableindex: Hash Index)."""
-    return live_index_entries(
-        table_path, snapshot_id, snapshot, index_type=HASH_INDEX
-    )
+    snap = _indexed_snapshot(table_path, snapshot_id, snapshot)
+    if snap is None:
+        return []
+    return live_index_entries(table_path, snapshot=snap, index_type=HASH_INDEX)
+
+
+def dv_entry_ranges(r: dict):
+    """(data file, offset, length) of every vector a DELETION_VECTORS
+    index entry names. Lenient on the two range field spellings real
+    Paimon versions use."""
+    for item in (
+        r.get("_DELETIONS_VECTORS_RANGES") or r.get("_DELETION_VECTORS_RANGES") or []
+    ):
+        yield (
+            str(item.get("f0", item.get("dataFileName"))),
+            int(item.get("f1", item.get("offset"))),
+            int(item.get("f2", item.get("length"))),
+        )
 
 
 def plan_paimon_dv(
@@ -1261,34 +1306,19 @@ def plan_paimon_dv(
     """Driver-side metadata walk of the snapshot's index manifest:
     fold ADD/DELETE index entries, keep DELETION_VECTORS types, return
     every (index file, data file, offset, length) range. Empty list if
-    the snapshot carries no index manifest. Lenient on the two range
-    field spellings real Paimon versions use."""
-    live = {
-        (bytes(r.get("_PARTITION") or b""), int(r.get("_BUCKET") or 0), r["_FILE_NAME"]): r
+    the snapshot carries no index manifest."""
+    snap = _indexed_snapshot(table_path, snapshot_id, snapshot)
+    if snap is None:
+        return []
+    return [
+        PaimonDvRange(
+            os.path.join(table_path, "index", r["_FILE_NAME"]), data_file, off, ln
+        )
         for r in live_index_entries(
-            table_path, snapshot_id, snapshot, index_type=DELETION_VECTORS_INDEX
+            table_path, snapshot=snap, index_type=DELETION_VECTORS_INDEX
         )
-    }
-    out: List[PaimonDvRange] = []
-    for (_pb, _bk, fname), r in live.items():
-        ranges = (
-            r.get("_DELETIONS_VECTORS_RANGES")
-            or r.get("_DELETION_VECTORS_RANGES")
-            or []
-        )
-        for item in ranges:
-            data_file = item.get("f0", item.get("dataFileName"))
-            off = item.get("f1", item.get("offset"))
-            ln = item.get("f2", item.get("length"))
-            out.append(
-                PaimonDvRange(
-                    os.path.join(table_path, "index", fname),
-                    str(data_file),
-                    int(off),
-                    int(ln),
-                )
-            )
-    return out
+        for data_file, off, ln in dv_entry_ranges(r)
+    ]
 
 
 def paimon_type_string(field: "T.StructField") -> str:
@@ -3157,14 +3187,10 @@ def import_paimon_table(
         False,
     )
     table = catalog.get_table(identifier)
-    part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
-    default_name = info.options.get("partition.default-name", DEFAULT_PARTITION_NAME)
+    lake_src = lake_file_src(paimon_table_path, info)
 
     def src(e: PaimonFileEntry) -> str:
-        p = os.path.join(
-            paimon_table_path,
-            e.rel_path(info.partition_keys, part_types, default_name),
-        )
+        p = lake_src(e)
         if not os.path.exists(p):
             raise FileNotFoundError(
                 f"paimon_import: planned data file not found at {p!r} — the "

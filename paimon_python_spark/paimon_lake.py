@@ -51,6 +51,7 @@ from paimon_python_spark._localdf import local_df
 from paimon_python_spark.paimon_import import (
     PaimonFileEntry,
     PaimonSchemaInfo,
+    lake_file_src,
     logical_partition_values as _logical_partition_values,
     merge_paimon_pk_entries,
     plan_paimon_dv,
@@ -1034,8 +1035,6 @@ class PaimonLakeRead:
         pruned partitions are never opened); the predicate is then
         applied IN FULL as a residual on the scan/merge output, so the
         result is row-exact regardless of how much pruning helped."""
-        import os
-
         from paimon_python_spark.session import get_spark
 
         spark = get_spark()
@@ -1044,22 +1043,7 @@ class PaimonLakeRead:
         info = read_paimon_schema(table_path)
         entries = _limited_entries(_pruned_entries(table_path, info, b), b._limit)
         fmt = info.options.get("file.format", "parquet")
-        part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
-        default_name = info.options.get("partition.default-name", None)
-
-        def src(e: PaimonFileEntry) -> str:
-            kw = {"default_name": default_name} if default_name else {}
-            p = os.path.join(
-                table_path, e.rel_path(info.partition_keys, part_types, **kw)
-            )
-            if not os.path.exists(p):
-                raise FileNotFoundError(
-                    f"paimon_lake: planned data file not found at {p!r} — "
-                    "partition directory naming may not match this table's "
-                    "layout (partition.default-name / date formatting)"
-                )
-            return p
-
+        src = lake_file_src(table_path, info)
         dv = plan_paimon_dv(table_path, b._snapshot_id, snapshot=b._snapshot_dict())
         if info.primary_keys and b._read_optimized:
             # $ro scan: only max-level files (the last full compaction's
@@ -1250,8 +1234,6 @@ def read_lake_incremental(
     changelog-producer stores the -U/+U pairs of updates there, which
     deltas alone cannot reconstruct); snapshots without a changelog
     fall back to their delta files."""
-    import os
-
     from pyspark.sql import functions as F
 
     from paimon_python_spark.paimon_import import (
@@ -1297,15 +1279,7 @@ def read_lake_incremental(
             continue
         entries.extend(cl if cl else plan_paimon_delta(table_path, sid))
     fmt = info.options.get("file.format", "parquet")
-    part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
-    default_name = info.options.get("partition.default-name", None)
-
-    def src(e: PaimonFileEntry) -> str:
-        kw = {"default_name": default_name} if default_name else {}
-        return os.path.join(
-            table_path, e.rel_path(info.partition_keys, part_types, **kw)
-        )
-
+    src = lake_file_src(table_path, info)
     if not info.primary_keys:
         return read_paimon_append_entries(
             spark, info, entries, src, fmt, table_path=table_path
@@ -1894,8 +1868,6 @@ def _lake_audit_log(table_path: str, snapshot_id: "Optional[int]" = None):
     carry the FULL row, partition columns included, so no injection is
     needed); append lakes are all ``+I``. Deletion-vector marks are NOT
     applied: audit shows what the files hold."""
-    import os
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -1905,16 +1877,8 @@ def _lake_audit_log(table_path: str, snapshot_id: "Optional[int]" = None):
     spark = get_spark()
     info = read_paimon_schema(table_path)
     entries = plan_paimon_files(table_path, snapshot_id)
-    part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
-    default_name = info.options.get("partition.default-name", None)
     fmt = info.options.get("file.format", "parquet")
-
-    def src(e):
-        kw = {"default_name": default_name} if default_name else {}
-        return os.path.join(
-            table_path, e.rel_path(info.partition_keys, part_types, **kw)
-        )
-
+    src = lake_file_src(table_path, info)
     out_fields = [T.StructField("rowkind", T.StringType(), False)] + list(
         info.spark_schema.fields
     )
@@ -2035,9 +1999,6 @@ def write_lake_append(table_path: str, df, watermark=None) -> int:
     )
 
 
-#: sentinel: carry the previous snapshot's indexManifest forward
-_INHERIT_INDEX = object()
-
 #: target live entries per consolidated manifest (proxy for Paimon's
 #: manifest.target-file-size — entry records are ~KB-scale, so 4096
 #: entries ≈ a few MB of avro, the size real manifests converge to)
@@ -2117,13 +2078,145 @@ def _merge_manifests(table_path: str, info, prior: list, tag: str) -> list:
     return out
 
 
+def _next_index_manifest(
+    table_path: str,
+    info,
+    prev: dict,
+    entries: list,
+    commit_kind: str,
+    dv_marks: Optional[dict],
+    hash_index: Optional[list],
+) -> Optional[str]:
+    """The ``indexManifest`` of the snapshot a commit attempt publishes
+    on its head ``prev``. The commit states only what it changes:
+    ``dv_marks`` ({data file name: positions}), unioned with the file's
+    marks at the head, and ``hash_index``, the dynamic-bucket HASH metas
+    its write staged, each replacing its (partition, bucket) entry. The
+    rest follows from ``entries``: a file the commit DELETEs loses its
+    marks, and an OVERWRITE drops every index entry of the partitions
+    it deletes from or adds to (as Paimon's overwrite does). A commit
+    that changes none of this copies the head's name without reading
+    it. Otherwise each touched (partition, bucket) group's vectors are
+    rewritten into one index file and every other entry carries over
+    verbatim."""
+    import os
+    import uuid
+
+    import numpy as np
+
+    from paimon_python_spark.avro_codec import write_avro_records
+    from paimon_python_spark.dynamic_bucket import pending_to_entries
+    from paimon_python_spark.metadata import SnapshotConflictError
+    from paimon_python_spark.paimon_import import (
+        DELETION_VECTORS_INDEX,
+        HASH_INDEX,
+        INDEX_MANIFEST_SCHEMA,
+        dv_entry_ranges,
+        encode_binary_row,
+        live_index_entries,
+        read_dv_index_entry,
+        write_dv_index_file,
+    )
+
+    head_im = prev.get("indexManifest")
+    deleted = {e["_FILE"]["_FILE_NAME"] for e in entries if e["_KIND"] == 1}
+    rewritten = (
+        {bytes(e["_PARTITION"]) for e in entries}
+        if commit_kind == "OVERWRITE"
+        else set()
+    )
+    if not (dv_marks or hash_index or (head_im and (deleted or rewritten))):
+        return head_im
+    new_hash, replaced = pending_to_entries(info, hash_index or [])
+    # (partition bytes, bucket) -> {data file: positions}: the groups
+    # whose vectors this commit rewrites; home: a marked file's group
+    marks: dict = {}
+    home: dict = {}
+    if dv_marks:
+        part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
+        live = {e.file_name: e for e in plan_paimon_files(table_path, snapshot=prev)}
+        for fname, pos in dv_marks.items():
+            e = live.get(fname)
+            if e is None:
+                raise SnapshotConflictError(
+                    f"lake commit: data file {fname!r} is no longer live — a "
+                    "concurrent commit rewrote it; re-run the delete"
+                )
+            part = encode_binary_row(
+                [e.partition[k] for k in info.partition_keys], part_types
+            )
+            home[fname] = (part, e.bucket)
+            marks.setdefault(home[fname], {})[fname] = np.asarray(pos)
+    head = live_index_entries(table_path, snapshot=prev) if head_im else []
+    carried: list = []
+    dv_head: dict = {}
+    for r in head:
+        part = bytes(r.get("_PARTITION") or b"")
+        grp = (part, int(r.get("_BUCKET") or 0))
+        if part in rewritten or (r["_INDEX_TYPE"] == HASH_INDEX and grp in replaced):
+            continue
+        if r["_INDEX_TYPE"] == DELETION_VECTORS_INDEX:
+            dv_head.setdefault(grp, []).append(r)
+        else:
+            carried.append(r)
+    for grp, rs in dv_head.items():
+        vecs = [(r["_FILE_NAME"], *v) for r in rs for v in dv_entry_ranges(r)]
+        if grp not in marks and not any(
+            v[1] in deleted or v[1] in home for v in vecs
+        ):
+            carried.extend(rs)
+            continue
+        marks.setdefault(grp, {})
+        for idx_name, fname, off, ln in vecs:
+            if fname not in deleted:
+                group = marks[home.get(fname, grp)]
+                pos = read_dv_index_entry(
+                    os.path.join(table_path, "index", idx_name), off, ln
+                )
+                group[fname] = np.union1d(group[fname], pos) if fname in group else pos
+    if not new_hash and not marks and len(carried) == len(head):
+        return head_im
+    tag = uuid.uuid4().hex[:12]
+    os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
+    for gi, ((part, bucket), group) in enumerate(sorted(marks.items())):
+        if not group:
+            continue  # every marked file of the group was deleted
+        idx_name = f"index-{tag}-{gi}"
+        idx_path = os.path.join(table_path, "index", idx_name)
+        ranges = write_dv_index_file(idx_path, dict(sorted(group.items())))
+        carried.append(
+            {
+                "_VERSION": 1,
+                "_KIND": 0,
+                "_PARTITION": part,
+                "_BUCKET": bucket,
+                "_INDEX_TYPE": DELETION_VECTORS_INDEX,
+                "_FILE_NAME": idx_name,
+                "_FILE_SIZE": os.path.getsize(idx_path),
+                "_ROW_COUNT": int(sum(len(p) for p in group.values())),
+                "_DELETIONS_VECTORS_RANGES": [
+                    {"f0": n, "f1": o, "f2": ln} for n, (o, ln) in ranges.items()
+                ],
+            }
+        )
+    carried.extend(new_hash)
+    if not carried:
+        return None
+    im_name = f"index-manifest-{tag}.avro"
+    write_avro_records(
+        os.path.join(table_path, "manifest", im_name), INDEX_MANIFEST_SCHEMA, carried
+    )
+    return im_name
+
+
 def _commit_lake_snapshot(
     table_path: str,
     info,
     entries: list,
     n_rows: int,
     commit_kind: str = "APPEND",
-    index_manifest=_INHERIT_INDEX,
+    dv_marks: Optional[dict] = None,
+    hash_index: Optional[list] = None,
     total_record_count: Optional[int] = None,
     changelog_entries: Optional[list] = None,
     statistics: Optional[str] = None,
@@ -2138,11 +2231,12 @@ def _commit_lake_snapshot(
     the KB-scale manifest metadata against the new head — the same
     winner-takes-the-id semantics as real Paimon's rename-based
     commit. Shared by the append, PK-write, and compaction paths.
-    ``index_manifest``: default inherits the previous snapshot's DV
-    index; pass ``None`` to drop it (compaction physically applied the
-    marks). ``total_record_count``: explicit new total (compaction
-    rewrites the world); default adds ``n_rows`` to the previous
-    total. ``changelog_entries``: ADD records for this commit's
+    ``dv_marks`` / ``hash_index``: the index state this commit changes;
+    each attempt builds its index manifest against the head it
+    publishes on (:func:`_next_index_manifest`).
+    ``total_record_count``: explicit new total (compaction rewrites the
+    world); default adds ``n_rows`` to the previous total.
+    ``changelog_entries``: ADD records for this commit's
     changelog files (changelog-producer=input) — written as their own
     manifest + manifest list and referenced from the snapshot's
     ``changelogManifestList``, the shape streaming readers scan.
@@ -2273,15 +2367,10 @@ def _commit_lake_snapshot(
                 "baseManifestList": blname,
                 "deltaManifestList": dlname,
                 "changelogManifestList": clname,
-                # CARRY THE DV INDEX FORWARD by default: an append does
-                # not touch the deletion vectors, but a snapshot without
-                # indexManifest would silently resurrect every
-                # DV-deleted row. Compaction passes None — the marks
-                # were physically applied to the rewritten files.
-                "indexManifest": (
-                    prev.get("indexManifest")
-                    if index_manifest is _INHERIT_INDEX
-                    else index_manifest
+                # built against THIS attempt's head: a retry after a
+                # lost race keeps the winner's marks and HASH entries
+                "indexManifest": _next_index_manifest(
+                    table_path, info, prev, entries, commit_kind, dv_marks, hash_index
                 ),
                 "commitUser": "paimon_python_spark",
                 "commitIdentifier": new_id,
@@ -3213,25 +3302,6 @@ def lake_delete_entry(info, e: PaimonFileEntry) -> dict:
     }
 
 
-def _surviving_dv_marks(table_path: str, removed: set) -> dict:
-    """{data file: deleted positions} of the DV marks on files NOT in
-    ``removed`` — marks on removed files drop with their rows, marks on
-    kept files must re-commit in the new index manifest."""
-    import numpy as np
-
-    from paimon_python_spark.paimon_import import read_dv_index_entry
-
-    surviving: dict = {}
-    for r in plan_paimon_dv(table_path):
-        if r.data_file_name not in removed:
-            pos = read_dv_index_entry(r.index_path, r.offset, r.length)
-            cur = surviving.get(r.data_file_name)
-            surviving[r.data_file_name] = (
-                np.union1d(cur, pos) if cur is not None else pos
-            )
-    return surviving
-
-
 def _distributed_lake_write(
     table_path: str,
     info,
@@ -3322,7 +3392,7 @@ def _distributed_lake_write(
             # join their recorded bucket, new keys capacity-fill, and
             # the touched buckets' index files rewrite executor-side.
             # Callers stage the new index metas via dyn_index_out and
-            # commit them in the merged index manifest; a caller that
+            # pass them to the commit as ``hash_index``; a caller that
             # doesn't pass it keeps the reference's refusal.
             if dyn_index_out is None:
                 raise TypeError(
@@ -3853,25 +3923,13 @@ def write_lake_pk_append(
             raise ValueError(
                 "write_lake_pk_append: empty input — nothing to commit"
             )
-        index_manifest = _INHERIT_INDEX
-        if dyn_out:
-            # dynamic-bucket commit: new key→bucket assignments become the
-            # commit's merged index manifest (previous HASH + DV entries
-            # carried forward, touched HASH buckets replaced)
-            from paimon_python_spark.dynamic_bucket import (
-                write_merged_index_manifest,
-            )
-
-            name = write_merged_index_manifest(table_path, info, dyn_out)
-            if name is not None:
-                index_manifest = name
         sid = _commit_lake_snapshot(
             table_path,
             info,
             man_entries,
             n_rows,
             changelog_entries=cl_entries,
-            index_manifest=index_manifest,
+            hash_index=dyn_out,
             watermark=watermark,
         )
         if xp_router is not None and xp_location_cache is not None:
@@ -5198,9 +5256,9 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
     partition matches ``predicate`` (partition columns only) DELETEs in
     ONE spec OVERWRITE snapshot — a pure metadata commit, no data
     rewrite, no shuffle; the bytes stay on disk for time travel until
-    snapshot expiry reclaims them, exactly like real Paimon. DV marks
-    on dropped files drop with them; marks on kept files re-commit in
-    a fresh index manifest. Returns ``{"snapshot_id", "partitions_
+    snapshot expiry reclaims them, exactly like real Paimon. The dropped
+    partitions' index entries (DV marks, HASH buckets) drop with them;
+    every other partition's stay. Returns ``{"snapshot_id", "partitions_
     dropped", "files_dropped", "rows_dropped"}`` (snapshot_id None when
     nothing matched — real Paimon's drop of a missing partition is a
     no-op, not an error)."""
@@ -5233,14 +5291,6 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
             "rows_dropped": 0,
         }
     delete_entries = [lake_delete_entry(info, e) for e in doomed]
-    # DV marks on surviving files re-commit; dropped files' marks go
-    # (same survival rule as partition-scoped compaction)
-    surviving = _surviving_dv_marks(table_path, {e.file_name for e in doomed})
-    im_name = (
-        _write_dv_index_manifest(table_path, info, surviving, before)
-        if surviving
-        else None
-    )
     rows_dropped = sum(e.row_count for e in doomed)
     prev_total = int(read_paimon_snapshot(table_path).get("totalRecordCount") or 0)
     sid = _commit_lake_snapshot(
@@ -5249,7 +5299,6 @@ def drop_lake_partitions(table_path: str, predicate: Predicate) -> dict:
         delete_entries,
         0,
         commit_kind="OVERWRITE",
-        index_manifest=im_name,
         total_record_count=prev_total - rows_dropped,
     )
     return {
@@ -5520,8 +5569,8 @@ def compact_lake(
 
     - **append lake**: every live data file per (partition, bucket) is
       folded into one file per group, with DELETION VECTORS physically
-      applied (marked rows gone from the bytes) and the snapshot's
-      ``indexManifest`` dropped;
+      applied (marked rows gone from the bytes) and the rewritten
+      files' marks dropped from the index;
     - **PK lake**: the LSM merge is materialized — max sequence per key
       wins, ``-D`` rows drop — and each (partition, bucket) writes one
       max-level key-value file with a fresh sequence range past every
@@ -5543,9 +5592,8 @@ def compact_lake(
     ``partition_filter`` (a partition-column predicate) scopes the
     rewrite — the 100 TB production form: only matching partitions'
     files fold; untouched files keep their manifest entries AND their
-    deletion-vector marks (the surviving marks re-commit in a fresh
-    index manifest; only rewritten files' marks drop, since those rows
-    are physically gone).
+    deletion-vector marks (only rewritten files' marks drop, since
+    those rows are physically gone).
 
     ``order_by`` turns the rewrite into Paimon's SORT COMPACTION
     (``--order_strategy order|zorder|hilbert --order_by a,b`` on the
@@ -5714,47 +5762,7 @@ def compact_lake(
         )
 
     delete_entries = [lake_delete_entry(info, e) for e in before]
-    # DV marks on UNTOUCHED files must survive a scoped compaction:
-    # re-commit them in a fresh index manifest (rewritten files' marks
-    # drop — those rows are physically gone from the new bytes)
-    surviving = _surviving_dv_marks(table_path, {e.file_name for e in before})
-    im_name = (
-        _write_dv_index_manifest(
-            table_path,
-            info,
-            surviving,
-            plan_paimon_files(table_path),
-            pending=dyn_out,
-        )
-        if surviving
-        else None
-    )
-    if im_name is None:
-        # dynamic-bucket lakes: the HASH key index must survive the
-        # compaction even when every DV folded away (plus any self-heal
-        # assignments the rewrite staged in dyn_out)
-        from paimon_python_spark.dynamic_bucket import (
-            pending_to_entries,
-            write_index_manifest,
-        )
-        from paimon_python_spark.paimon_import import (
-            HASH_INDEX,
-            live_index_entries,
-        )
 
-        new_hash, replaced = pending_to_entries(info, dyn_out or [])
-        hash_keep = [
-            r
-            for r in live_index_entries(table_path)
-            if r.get("_INDEX_TYPE") == HASH_INDEX
-            and (
-                bytes(r.get("_PARTITION") or b""),
-                int(r.get("_BUCKET") or 0),
-            )
-            not in replaced
-        ] + new_hash
-        if hash_keep:
-            im_name = write_index_manifest(table_path, hash_keep)
     from paimon_python_spark.paimon_import import read_paimon_snapshot
 
     prev_total = int(
@@ -5766,7 +5774,7 @@ def compact_lake(
         delete_entries + add_entries,
         n_rows,
         commit_kind="COMPACT",
-        index_manifest=im_name,
+        hash_index=dyn_out,
         total_record_count=prev_total - sum(e.row_count for e in before) + n_rows,
         changelog_entries=cl_entries,
     )
@@ -5900,8 +5908,9 @@ def sort_compact_lake(
 def overwrite_lake(table_path: str, df) -> int:
     """INSERT OVERWRITE a REAL Paimon lake: replace the whole visible
     table with ``df`` in one spec OVERWRITE commit — the delta manifest
-    DELETEs every live file and ADDs the new ones, the DV index drops
-    (nothing it marked survives), and time travel to prior snapshots
+    DELETEs every live file and ADDs the new ones, the index entries of
+    every partition it rewrites drop (a dynamic-bucket HASH index
+    restarts from the new data's keys), and time travel to prior snapshots
     still reads the replaced files. PK lakes write fixed-bucket
     key-value files with a fresh sequence range (an overwrite is still
     an LSM table — later appends must win); append lakes write one file
@@ -5951,24 +5960,13 @@ def overwrite_lake(table_path: str, df) -> int:
             table_path, info, df, fmt, kv=False
         )
     delete_entries = [lake_delete_entry(info, e) for e in before]
-    index_manifest = None
-    if dyn_out:
-        # the overwrite's own key→bucket assignments are the entire
-        # index now (DV entries drop with the replaced files)
-        from paimon_python_spark.dynamic_bucket import (
-            pending_to_entries,
-            write_index_manifest,
-        )
-
-        ents, _replaced = pending_to_entries(info, dyn_out)
-        index_manifest = write_index_manifest(table_path, ents)
     return _commit_lake_snapshot(
         table_path,
         info,
         delete_entries + add_entries,
         n_rows,
         commit_kind="OVERWRITE",
-        index_manifest=index_manifest,
+        hash_index=dyn_out,
         total_record_count=n_rows,
     )
 
@@ -5983,103 +5981,6 @@ def register_lake_sql_view(spark, table_path: str, name: str):
     df = PaimonLakeTable(table_path).new_read_builder().new_read().to_df()
     df.createOrReplaceTempView(name)
     return df
-
-
-def _write_dv_index_manifest(
-    table_path: str, info, marked: dict, entries, pending: Optional[list] = None
-) -> str:
-    """Write the deletion-vector index file(s) + index manifest for
-    ``marked`` ({data_file_name: sorted positions}) — one index file +
-    manifest entry per (partition, bucket), carrying the REAL BinaryRow
-    partition (a JVM Paimon reader decodes entry partitions with the
-    table's partition row type, so a single empty-partition entry would
-    break interop on partitioned lakes). ``entries`` maps file names to
-    their (partition, bucket). ``pending``: dynamic-bucket index metas
-    staged by the caller's own write (a compaction rewrite / self-heal)
-    — they replace the carried-forward HASH entries of their buckets,
-    exactly like write_merged_index_manifest. Returns the manifest file
-    name."""
-    import os
-    import uuid
-
-    from paimon_python_spark.avro_codec import write_avro_records
-    from paimon_python_spark.paimon_import import (
-        DELETION_VECTORS_INDEX,
-        INDEX_MANIFEST_SCHEMA,
-        encode_binary_row,
-        write_dv_index_file,
-    )
-
-    part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
-    by_file = {e.file_name: e for e in entries}
-    groups: dict = {}
-    for fname in sorted(marked):
-        e = by_file.get(fname)
-        gkey = (
-            (tuple(sorted(e.partition.items())), e.bucket)
-            if e is not None
-            else ((), 0)
-        )
-        groups.setdefault(gkey, []).append(fname)
-    os.makedirs(os.path.join(table_path, "index"), exist_ok=True)
-    tag = uuid.uuid4().hex[:12]
-    index_entries = []
-    for gi, ((pitems, bucket), fnames) in enumerate(sorted(groups.items())):
-        idx_name = f"index-{tag}-{gi}"
-        ranges = write_dv_index_file(
-            os.path.join(table_path, "index", idx_name),
-            {n: marked[n] for n in fnames},
-        )
-        pdict = dict(pitems)
-        index_entries.append(
-            {
-                "_VERSION": 1,
-                "_KIND": 0,
-                "_PARTITION": encode_binary_row(
-                    [pdict.get(k) for k in info.partition_keys], part_types
-                ),
-                "_BUCKET": int(bucket),
-                "_INDEX_TYPE": DELETION_VECTORS_INDEX,
-                "_FILE_NAME": idx_name,
-                "_FILE_SIZE": os.path.getsize(
-                    os.path.join(table_path, "index", idx_name)
-                ),
-                "_ROW_COUNT": int(sum(len(marked[n]) for n in fnames)),
-                "_DELETIONS_VECTORS_RANGES": [
-                    {"f0": n, "f1": o, "f2": ln} for n, (o, ln) in ranges.items()
-                ],
-            }
-        )
-    # a dynamic-bucket lake's HASH key index is live state too — carry
-    # it forward (this manifest REPLACES the previous one), with any
-    # ``pending`` staged assignments superseding their buckets' old
-    # entries (dropping them would discard a compaction's re-route /
-    # self-heal and leave the lake's routing stale or unsound)
-    from paimon_python_spark.dynamic_bucket import pending_to_entries
-    from paimon_python_spark.paimon_import import (
-        HASH_INDEX,
-        live_index_entries,
-    )
-
-    new_hash, replaced = pending_to_entries(info, pending or [])
-    index_entries.extend(
-        r
-        for r in live_index_entries(table_path)
-        if r.get("_INDEX_TYPE") == HASH_INDEX
-        and (
-            bytes(r.get("_PARTITION") or b""),
-            int(r.get("_BUCKET") or 0),
-        )
-        not in replaced
-    )
-    index_entries.extend(new_hash)
-    im_name = f"index-manifest-{tag}.avro"
-    write_avro_records(
-        os.path.join(table_path, "manifest", im_name),
-        INDEX_MANIFEST_SCHEMA,
-        index_entries,
-    )
-    return im_name
 
 
 def update_lake_rows(
@@ -6142,23 +6043,16 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
     become roaring bitmaps in a new index file + index manifest, and
     snapshot N+1 carries the SAME data manifests with the new index —
     no data file is rewritten, which is exactly Paimon's DV delete
-    shape. Existing marks merge in (a second delete unions with the
-    first). Returns the new snapshot id.
+    shape. The commit unions the new marks with the ones live at the
+    snapshot it publishes on (a second delete, or a concurrent one,
+    keeps the first's). Returns the new snapshot id.
 
     PK lakes instead commit the matched keys as ``-D`` kind records in
     a level-0 key-value file (the LSM delete shape every Paimon reader
     resolves); append tables take the DV path below. DV deletes are
     selective by nature; for rewrite-scale deletions use a filtered
     copy instead."""
-    import os
-
-    from paimon_python_spark.paimon_import import (
-        _load_lake_entries,
-        _relevant_dv,
-        plan_paimon_dv,
-        plan_paimon_files,
-        read_dv_index_entry,
-    )
+    from paimon_python_spark.paimon_import import _load_lake_entries, _relevant_dv
     from paimon_python_spark.session import get_spark
 
     spark = get_spark()
@@ -6193,15 +6087,6 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
             )
     entries = plan_paimon_files(table_path)
     fmt = info.options.get("file.format", "parquet")
-    part_types = [info.spark_schema[k].dataType for k in info.partition_keys]
-    default_name = info.options.get("partition.default-name", None)
-
-    def src(e: PaimonFileEntry) -> str:
-        kw = {"default_name": default_name} if default_name else {}
-        return os.path.join(
-            table_path, e.rel_path(info.partition_keys, part_types, **kw)
-        )
-
     prev_dv = _relevant_dv(plan_paimon_dv(table_path), entries)
     # prune whole files by the partition part of the predicate; the
     # full predicate then evaluates on rows, whose partition columns
@@ -6225,7 +6110,7 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
             spark,
             info,
             cand,
-            src,
+            lake_file_src(table_path, info),
             fmt,
             table_path=table_path,
             dv_ranges=prev_dv,
@@ -6276,17 +6161,7 @@ def delete_lake_rows(table_path: str, predicate: Predicate) -> int:
             marked[r["file_name"]] = deserialize_roaring32(bytes(r["bitmap"]))
     if not marked:
         raise ValueError("delete_lake_rows: predicate matched no rows")
-    # merge existing marks forward (per-file union, transient arrays)
-    import numpy as _np
-
-    for r in prev_dv:
-        prev_pos = read_dv_index_entry(r.index_path, r.offset, r.length)
-        cur = marked.get(r.data_file_name)
-        marked[r.data_file_name] = (
-            _np.union1d(cur, prev_pos) if cur is not None else prev_pos
-        )
-
-    im_name = _write_dv_index_manifest(table_path, info, marked, entries)
     # a DV-only commit changes NO data files: an empty delta, so
-    # incremental consumers of (prev, new] see zero new rows
-    return _commit_lake_snapshot(table_path, info, [], 0, index_manifest=im_name)
+    # incremental consumers of (prev, new] see zero new rows; the
+    # commit unions the marks with the ones live at its head
+    return _commit_lake_snapshot(table_path, info, [], 0, dv_marks=marked)

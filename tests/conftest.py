@@ -1,3 +1,4 @@
+import os
 import shutil
 import tempfile
 import warnings
@@ -38,3 +39,35 @@ def catalog(warehouse):
     cat = Catalog.create({"warehouse": warehouse})
     cat.create_database("default", True)
     return cat
+
+
+@pytest.fixture()
+def racing_commit(monkeypatch):
+    """``racing_commit(table_path, commit)``: run ``commit()`` — a
+    concurrent writer's whole call — once, just before the next call
+    first publishes a ``snapshot-N`` of ``table_path``. ``commit()``
+    takes snapshot N, so the call under test loses the CAS and retries
+    on the new head. Works by wrapping ``metadata._exclusive_write``
+    (the create-if-absent every lake snapshot publish goes through)."""
+    from paimon_python_spark import metadata
+
+    real = metadata._exclusive_write
+
+    def arm(table_path: str, commit) -> None:
+        snap_dir = os.path.join(table_path, "snapshot")
+        fired = []
+
+        def racing_write(path: str, text: str) -> None:
+            if (
+                not fired
+                and os.path.dirname(path) == snap_dir
+                and os.path.basename(path).startswith("snapshot-")
+            ):
+                fired.append(path)
+                monkeypatch.setattr(metadata, "_exclusive_write", real)
+                commit()
+            real(path, text)
+
+        monkeypatch.setattr(metadata, "_exclusive_write", racing_write)
+
+    return arm

@@ -146,6 +146,55 @@ def test_dynamic_partitioned_independent_bucket_spaces(tmp_path, spark):
     assert got[("d1", 3)] == "patched" and got[("d2", 3)] == "d2-3"
 
 
+def test_drop_partition_keeps_other_partitions_hash_index(tmp_path, spark):
+    """Dropping one partition of a dynamic-bucket lake with no DV marks
+    drops that partition's HASH entries and keeps every other one. The
+    drop used to commit ``indexManifest = null``: the whole HASH index
+    was lost, and the next write into the kept partition refused with
+    "has data files but no HASH index"."""
+    from paimon_python_spark.paimon_import import decode_binary_row
+    from paimon_python_spark.paimon_lake import drop_lake_partitions
+
+    schema = T.StructType(
+        [
+            T.StructField("dt", T.StringType(), False),
+            T.StructField("id", T.LongType(), False),
+            T.StructField("v", T.StringType()),
+        ]
+    )
+    tp = _mk(
+        tmp_path, partition_keys=["dt"], schema=schema, pks=["dt", "id"]
+    )
+    rows = [(d, i, f"{d}-{i}") for d in ("d1", "d2") for i in range(15)]
+    write_lake_pk_append(tp, spark.createDataFrame(rows, schema))
+
+    def hash_files(dt):
+        return sorted(
+            e["_FILE_NAME"]
+            for e in plan_paimon_hash_index(tp)
+            if decode_binary_row(bytes(e["_PARTITION"]), [T.StringType()])
+            == [dt]
+        )
+
+    kept = hash_files("d2")
+    assert len(kept) >= 2 and len(hash_files("d1")) >= 2
+    pb = PaimonLakeTable(tp).new_read_builder().new_predicate_builder()
+    drop_lake_partitions(tp, pb.equal("dt", "d1"))
+    assert hash_files("d1") == [] and hash_files("d2") == kept
+    write_lake_pk_append(
+        tp,
+        spark.createDataFrame([("d2", 3, "patched"), ("d2", 20, "new")], schema),
+    )
+    got = {
+        (r["dt"], r["id"]): r["v"]
+        for r in PaimonLakeTable(tp).new_read_builder().new_read().to_df().collect()
+    }
+    want = {("d2", i): f"d2-{i}" for i in range(15)}
+    want.update({("d2", 3): "patched", ("d2", 20): "new"})
+    assert got == want
+    assert sum(e["_ROW_COUNT"] for e in plan_paimon_hash_index(tp)) == 16
+
+
 def test_dynamic_cross_partition_now_creatable(tmp_path, spark):
     """CROSS_PARTITION (PK ⊉ partition keys) lakes create and write —
     the full surface lives in the test_cross_partition_* cases below;
@@ -951,20 +1000,21 @@ def test_cross_lookup_one_ranking_no_double_pin(tmp_path, spark):
 
 
 def test_dv_index_manifest_applies_pending_hash(tmp_path, spark):
-    """_write_dv_index_manifest (the surviving-DV compaction path) must
-    apply staged dynamic-bucket assignments, not carry the old HASH
-    entries verbatim — dropping them would discard a scoped
-    compaction's re-route / self-heal and leave the lake's routing
-    stale while the commit claims success."""
+    """A lake commit carrying DV marks AND staged dynamic-bucket
+    assignments (a compaction's rewrite) must apply the staged metas,
+    not carry the old HASH entries verbatim — dropping them would
+    discard a scoped compaction's re-route / self-heal and leave the
+    lake's routing stale while the commit claims success."""
     from paimon_python_spark.avro_codec import read_avro_records
     from paimon_python_spark.dynamic_bucket import write_hash_index_file
     from paimon_python_spark.paimon_import import (
         DELETION_VECTORS_INDEX,
         HASH_INDEX,
         live_index_entries,
+        read_paimon_snapshot,
     )
     from paimon_python_spark.paimon_lake import (
-        _write_dv_index_manifest,
+        _commit_lake_snapshot,
         read_paimon_schema,
     )
 
@@ -998,9 +1048,10 @@ def test_dv_index_manifest_applies_pending_hash(tmp_path, spark):
         }
     ]
     files = plan_paimon_files(tp)
-    im = _write_dv_index_manifest(
-        tp, info, {files[0].file_name: [0]}, files, pending=pending
+    sid = _commit_lake_snapshot(
+        tp, info, [], 0, dv_marks={files[0].file_name: [0]}, hash_index=pending
     )
+    im = read_paimon_snapshot(tp, sid)["indexManifest"]
     with open(os.path.join(tp, "manifest", im), "rb") as f:
         _, entries = read_avro_records(f.read())
     hash_by_bucket = {
