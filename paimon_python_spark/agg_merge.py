@@ -316,12 +316,8 @@ def partial_update_agg_expr(schema, c, fn, order, seq_col, kind_col):
     """Aggregate expression for a partial-update column that declares
     ``fields.<c>.aggregate-function`` (Paimon's sequence-group
     aggregation): the column folds with the aggregate instead of
-    last-non-null. Only the scalar function set applies here."""
-    if fn not in SCALAR_AGG_FUNCTIONS:
-        raise ValueError(
-            f"aggregate-function {fn!r} for field {c!r} is not usable with "
-            f"merge-engine partial-update; one of {sorted(SCALAR_AGG_FUNCTIONS)}"
-        )
+    last-non-null. Only the scalar function set applies here
+    (:func:`check_merge_options` refuses the rest)."""
     add_k = F.col(kind_col).isin(*ADD_KINDS)
     ret_k = F.col(kind_col).isin(*RETRACT_KINDS)
     ignore_ret = (
@@ -351,11 +347,6 @@ def field_agg_plan(schema, value_cols, seq_col, kind_col):
         fn = schema.options.get(
             f"fields.{c}.aggregate-function", "last_non_null_value"
         )
-        if fn not in AGG_FUNCTIONS:
-            raise ValueError(
-                f"unknown aggregate-function {fn!r} for field {c!r}; "
-                f"one of {AGG_FUNCTIONS}"
-            )
         ignore_ret = (
             schema.options.get(f"fields.{c}.ignore-retract", "false").lower()
             == "true"
@@ -382,16 +373,6 @@ def field_agg_plan(schema, value_cols, seq_col, kind_col):
         elif fn == "nested_update":
             keys_opt = schema.options.get(f"fields.{c}.nested-key", "")
             keys = [k.strip() for k in keys_opt.split(",") if k.strip()]
-            if not keys:
-                raise ValueError(
-                    f"nested_update field {c!r} requires fields.{c}.nested-key"
-                )
-            elem = dtype.elementType
-            missing = [k for k in keys if k not in elem.fieldNames()]
-            if missing:
-                raise ValueError(
-                    f"nested-key columns {missing} not in element type of {c!r}"
-                )
             expr = F.expr(
                 _nested_update_expr(c, ddl, keys, ignore_ret, seq_col, kind_col)
             )
@@ -462,8 +443,9 @@ def hll_sketch_fields(schema, value_cols) -> list:
     hll_sketch`` — the ONE function the in-task pandas fold cannot
     express (the union is Spark's JVM ``hll_union_agg``; this engine
     does not re-implement the DataSketches HLL wire merge in Python).
-    Data sources refuse tables with such fields at plan time and point
-    at the builder path."""
+    The lake builder merges tables with such fields on the key-window
+    (``paimon_import._bucket_local_merge_ok``); the data sources refuse
+    them at plan time and point at the builder path."""
     return [
         c
         for c in value_cols
@@ -520,16 +502,11 @@ def pandas_agg_merge(
     non-retractable fields raise on a live retracted value unless
     ``fields.<c>.ignore-retract``; every scalar keeps its declared
     dtype via the caller's arrow-schema conversion. ``hll_sketch``
-    fields are refused at plan time (:func:`hll_sketch_fields`)."""
+    fields never reach it (:func:`hll_sketch_fields`), and the options
+    were checked on the driver (:func:`check_merge_options`)."""
     import numpy as np
 
     opts = schema.options
-    bad = hll_sketch_fields(schema, value_cols)
-    if bad:
-        raise ValueError(
-            f"hll_sketch fields {bad} cannot merge in-task; "
-            f"use the read-builder path"
-        )
 
     pdf = pdf.sort_values(seq_col, kind="mergesort").reset_index(drop=True)
     add_mask = pdf[kind_col].isin(ADD_KINDS)
@@ -552,11 +529,6 @@ def pandas_agg_merge(
 
     for c in value_cols:
         fn = opts.get(f"fields.{c}.aggregate-function", "last_non_null_value")
-        if fn not in AGG_FUNCTIONS:
-            raise ValueError(
-                f"unknown aggregate-function {fn!r} for field {c!r}; "
-                f"one of {AGG_FUNCTIONS}"
-            )
         ignore_ret = (
             opts.get(f"fields.{c}.ignore-retract", "false").lower() == "true"
         )
@@ -636,10 +608,6 @@ def pandas_agg_merge(
                 for k in opts.get(f"fields.{c}.nested-key", "").split(",")
                 if k.strip()
             ]
-            if fn == "nested_update" and not nkeys:
-                raise ValueError(
-                    f"nested_update field {c!r} requires fields.{c}.nested-key"
-                )
 
             def _fold(sub, _fn=fn, _distinct=distinct, _nkeys=nkeys):
                 # NULL-accumulator parity: stays NULL until any row
@@ -867,35 +835,15 @@ def pandas_partial_update_merge(
     builder. Semantics pinned by the equivalence pytest matrix
     (front-door read vs builder read) and the shared SQL oracles.
     The caller applies ignore-delete BEFORE this fold, exactly like
-    merge_on_read."""
+    merge_on_read, and has run :func:`check_merge_options` on the
+    driver."""
     opts = schema.options
-    groups: dict = {}
-    for opt, val in opts.items():
-        if opt.startswith("fields.") and opt.endswith(".sequence-group"):
-            gname = opt[len("fields.") : -len(".sequence-group")]
-            cols = [c.strip() for c in val.split(",") if c.strip()]
-            missing = [c for c in [gname, *cols] if c not in value_cols]
-            if missing:
-                raise ValueError(
-                    f"sequence-group {gname!r}: not value columns: {missing}"
-                )
-            groups[gname] = cols
+    groups = sequence_groups(opts)
     col_group = {c: gname for gname, cs in groups.items() for c in cs}
     remove_on_delete = (
         opts.get("partial-update.remove-record-on-delete", "false").lower()
         == "true"
     )
-    has_fn = any(
-        opts.get(f"fields.{c}.aggregate-function") is not None
-        for c in value_cols
-    )
-    if remove_on_delete and (groups or has_fn):
-        raise ValueError(
-            "partial-update.remove-record-on-delete cannot combine "
-            "with sequence-groups or fields.<c>.aggregate-function "
-            "(their folds are not restartable after a delete); use "
-            "sequence-group retraction or ignore-delete instead"
-        )
 
     pdf = pdf.sort_values(seq_col, kind="mergesort").reset_index(drop=True)
     add_mask = pdf[kind_col].isin(ADD_KINDS)
@@ -949,12 +897,6 @@ def pandas_partial_update_merge(
                 pdf.groupby(merge_keys, sort=False, dropna=False)[c].max(),
             )
         elif fn is not None:
-            if fn not in SCALAR_AGG_FUNCTIONS:
-                raise ValueError(
-                    f"aggregate-function {fn!r} for field {c!r} is not "
-                    f"usable with merge-engine partial-update; one of "
-                    f"{sorted(SCALAR_AGG_FUNCTIONS)}"
-                )
             rank = (
                 _rank_series(pdf, [col_group[c], seq_col])
                 if c in col_group
@@ -1046,15 +988,138 @@ def _key_run_edges(tbl, keys, last: bool):
     return pa.array(mask)
 
 
+def sequence_fields(opts) -> list:
+    """The ``sequence.field`` columns in order (Paimon's
+    comma-separated multi-field form); they rank a key's versions
+    before ``_SEQUENCE_NUMBER`` does."""
+    return [c.strip() for c in opts.get("sequence.field", "").split(",") if c.strip()]
+
+
+def sequence_groups(opts) -> dict:
+    """``fields.<g>.sequence-group = c1,c2`` declarations as
+    ``{g: [c1, c2]}``: columns c1, c2 take their value from the row
+    with the greatest ``g``."""
+    return {
+        opt[len("fields.") : -len(".sequence-group")]: [
+            c.strip() for c in val.split(",") if c.strip()
+        ]
+        for opt, val in opts.items()
+        if opt.startswith("fields.") and opt.endswith(".sequence-group")
+    }
+
+
+def merge_input_cols(schema) -> list:
+    """The value columns a merge reads whatever the projection: the
+    ``sequence.field`` columns and every column a sequence-group
+    declaration names (its version field and its members)."""
+    cols = sequence_fields(schema.options)
+    for g, members in sequence_groups(schema.options).items():
+        cols += [g, *members]
+    return list(dict.fromkeys(cols))
+
+
+def check_merge_options(schema) -> None:
+    """The merge's plan-time option check, run on the driver by every
+    door into :func:`merge_group` (``paimon_import.
+    merge_paimon_pk_entries`` and both ``format(...)`` data sources)
+    and by ``read.merge_on_read``: a bad ``sequence.field``,
+    sequence-group, partial-update or aggregate-function option raises
+    ``ValueError`` here, never inside a task."""
+    if not schema.primary_keys:
+        return
+    opts = schema.options
+    engine = opts.get("merge-engine", "deduplicate")
+    keys = set(schema.partition_keys) | set(schema.primary_keys)
+    value_cols = [f.name for f in schema.spark_schema.fields if f.name not in keys]
+    fns = {
+        c: opts[f"fields.{c}.aggregate-function"]
+        for c in value_cols
+        if opts.get(f"fields.{c}.aggregate-function") is not None
+    }
+    seq_fields = sequence_fields(opts)
+    missing = [c for c in seq_fields if c not in value_cols]
+    if missing:
+        raise ValueError(
+            f"sequence.field: not value columns: {missing} "
+            f"(primary-key and partition columns cannot be sequence "
+            f"fields)"
+        )
+    if engine == "aggregation":
+        if seq_fields:
+            raise ValueError(
+                "sequence.field with merge-engine=aggregation is not "
+                "supported: aggregation folds in sequence order already; "
+                "order per-field with fields.<g>.sequence-group instead"
+            )
+        dtypes = {f.name: f.dataType for f in schema.spark_schema.fields}
+        for c, fn in fns.items():
+            if fn not in AGG_FUNCTIONS:
+                raise ValueError(
+                    f"unknown aggregate-function {fn!r} for field {c!r}; "
+                    f"one of {AGG_FUNCTIONS}"
+                )
+            if fn != "nested_update":
+                continue
+            nkeys = [
+                k.strip()
+                for k in opts.get(f"fields.{c}.nested-key", "").split(",")
+                if k.strip()
+            ]
+            if not nkeys:
+                raise ValueError(
+                    f"nested_update field {c!r} requires fields.{c}.nested-key"
+                )
+            missing = [
+                k for k in nkeys if k not in dtypes[c].elementType.fieldNames()
+            ]
+            if missing:
+                raise ValueError(
+                    f"nested-key columns {missing} not in element type of {c!r}"
+                )
+    if engine != "partial-update":
+        return
+    if seq_fields and fns:
+        raise ValueError(
+            "sequence.field with fields.<c>.aggregate-function "
+            "columns is not supported; use fields.<g>.sequence-group "
+            "ordering instead"
+        )
+    groups = sequence_groups(opts)
+    for g, cols in groups.items():
+        missing = [c for c in [g, *cols] if c not in value_cols]
+        if missing:
+            raise ValueError(f"sequence-group {g!r}: not value columns: {missing}")
+    if (groups or fns) and (
+        opts.get("partial-update.remove-record-on-delete", "false").lower()
+        == "true"
+    ):
+        raise ValueError(
+            "partial-update.remove-record-on-delete cannot combine "
+            "with sequence-groups or fields.<c>.aggregate-function "
+            "(their folds are not restartable after a delete); use "
+            "sequence-group retraction or ignore-delete instead"
+        )
+    for c, fn in fns.items():
+        if fn not in SCALAR_AGG_FUNCTIONS:
+            raise ValueError(
+                f"aggregate-function {fn!r} for field {c!r} is not usable with "
+                f"merge-engine partial-update; one of {sorted(SCALAR_AGG_FUNCTIONS)}"
+            )
+
+
 def merge_group(tbl, schema, keys, ord_col, kind_col):
     """THE in-task primary-key merge of one (partition, bucket) group —
     the Arrow counterpart of the reference's ``SortMergeReader`` with
-    a pluggable merge function, shared by every executor-local read
-    (the lake read task ``paimon_import.read_lake_task``, the engine
-    builder's bucket-local path and the ``format("paimon_spark")``
-    data source). Takes and returns a ``pyarrow.Table``. ``ord_col``
-    is a STRICT merge order the caller derives from its own tie-break
-    (:func:`order_rank`, commit sequence first); ``keys`` are the
+    a pluggable merge function, shared by every executor-local read:
+    the lake read task ``paimon_import.read_lake_task`` (every lake PK
+    read but the two shapes ``paimon_import._bucket_local_merge_ok``
+    keeps on the key-window), the engine builder's bucket-local path
+    and the ``format("paimon_spark")`` data source. Takes and returns
+    a ``pyarrow.Table``. ``ord_col`` is a STRICT merge order the caller
+    derives from its own tie-break (:func:`order_rank`: the
+    ``sequence.field`` columns, then the commit sequence, first);
+    options were checked on the driver (:func:`check_merge_options`);
+    ``keys`` are the
     group's key columns as stored. ``ignore-delete`` drops retracts
     before the merge, then the merge-engine option picks the fold:
 

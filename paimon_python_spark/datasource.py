@@ -235,84 +235,28 @@ def _parse_scan_start(options):
 
 
 def _check_ds_merge_supported(schema, fmt: str) -> None:
-    """Driver-side guard shared by both data sources: their PK merges
-    run in-task through ``agg_merge.merge_group``, which expresses
-    every merge engine; refuse at plan time, with a pointer to the
-    builder, only what it cannot (hll_sketch aggregation fields) and
-    the option combinations merge_on_read refuses too, instead of
-    failing mid-task or merging with the wrong semantics."""
-    is_pk = (
-        schema.is_primary_key_table()
-        if hasattr(schema, "is_primary_key_table")
-        else bool(schema.primary_keys)
-    )
-    if not is_pk:
-        return
-    opts = schema.options
-    builder = (
-        "Table.new_read_builder()"
-        if fmt == "paimon_spark"
-        else "PaimonLakeTable.new_read_builder()"
-    )
-    engine = opts.get("merge-engine", "deduplicate")
-    seq_fields = [
-        c.strip()
-        for c in opts.get("sequence.field", "").split(",")
-        if c.strip()
-    ]
-    if seq_fields:
-        # same validation merge_on_read performs — without it a missing
-        # column dies as an executor-side pandas KeyError mid-task
-        keys = set(schema.partition_keys) | set(schema.primary_keys)
-        value_cols = [
-            f.name for f in schema.spark_schema.fields if f.name not in keys
-        ]
-        missing = [c for c in seq_fields if c not in value_cols]
-        if missing:
-            raise ValueError(
-                f"sequence.field: not value columns: {missing} "
-                f"(primary-key and partition columns cannot be sequence "
-                f"fields)"
-            )
-        if engine == "partial-update" and any(
-            opts.get(f"fields.{c}.aggregate-function") is not None
-            for c in value_cols
-        ):
-            # merge_on_read's contract, mirrored at plan time
-            raise ValueError(
-                "sequence.field with fields.<c>.aggregate-function "
-                "columns is not supported; use fields.<g>.sequence-group "
-                "ordering instead"
-            )
-    if engine == "aggregation":
-        # full in-task dispatch via agg_merge.pandas_agg_merge — one
-        # task holds every run of its (partition, bucket), so the fold
-        # is executor-local. The ONE refusal left: hll_sketch fields
-        # (the union is Spark's JVM hll_union_agg; no Python re-impl
-        # of the DataSketches HLL wire merge).
-        from paimon_python_spark.agg_merge import hll_sketch_fields
+    """Driver-side guard of both data sources: the merge's option
+    check (``agg_merge.check_merge_options``), then the one shape
+    their in-task merge cannot fold — ``hll_sketch`` aggregation
+    fields, whose union is the JVM's ``hll_union_agg`` — refused with a
+    pointer to the builder, whose key-window merge folds it."""
+    from paimon_python_spark.agg_merge import check_merge_options, hll_sketch_fields
 
-        if seq_fields:
-            raise ValueError(
-                "sequence.field with merge-engine=aggregation is not "
-                "supported: aggregation folds in sequence order already; "
-                "order per-field with fields.<g>.sequence-group instead"
-            )
-        keys = set(schema.partition_keys) | set(schema.primary_keys)
-        value_cols = [
-            f.name for f in schema.spark_schema.fields if f.name not in keys
-        ]
-        bad = hll_sketch_fields(schema, value_cols)
-        if bad:
-            raise RuntimeError(
-                f"{fmt}: merge-engine=aggregation with hll_sketch "
-                f"fields {bad} is not supported through the data source "
-                f"(the union is a JVM aggregate); use {builder}"
-            )
-    # partial-update reads fully in-task since r12 — sequence groups,
-    # per-field scalar aggregates, and remove-record-on-delete run in
-    # agg_merge.pandas_partial_update_merge (equivalence pinned against
-    # the builder's merge_on_read by the pytest matrix)
+    check_merge_options(schema)
+    if not schema.primary_keys or schema.options.get("merge-engine") != "aggregation":
+        return
+    bad = hll_sketch_fields(schema, [f.name for f in schema.spark_schema.fields])
+    if bad:
+        builder = (
+            "Table.new_read_builder()"
+            if fmt == "paimon_spark"
+            else "PaimonLakeTable.new_read_builder()"
+        )
+        raise RuntimeError(
+            f"{fmt}: merge-engine=aggregation with hll_sketch "
+            f"fields {bad} is not supported through the data source "
+            f"(the union is a JVM aggregate); use {builder}"
+        )
 
 
 class PaimonBatchReader(DataSourceReader):
@@ -485,16 +429,16 @@ class PaimonBatchReader(DataSourceReader):
             # were refused at plan time by _check_ds_merge_supported).
             # A declared sequence.field (possibly multi-field) orders
             # before the arrival sequence, via a composite rank.
-            from paimon_python_spark.agg_merge import merge_group, order_rank
+            from paimon_python_spark.agg_merge import (
+                merge_group,
+                order_rank,
+                sequence_fields,
+            )
 
             keys = list(
                 dict.fromkeys(schema.partition_keys + schema.primary_keys)
             )
-            seq_fields = [
-                c.strip()
-                for c in schema.options.get("sequence.field", "").split(",")
-                if c.strip()
-            ]
+            seq_fields = sequence_fields(schema.options)
             tbl = tbl.append_column(
                 "__ord", order_rank(*[tbl[c] for c in seq_fields + [SEQ_COL]])
             )

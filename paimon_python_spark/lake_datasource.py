@@ -4,13 +4,15 @@
 front door onto a Flink/Spark-JVM-written (or engine-written) lake,
 on the same driver-side planner every lake read uses.
 
-- batch: one ``InputPartition`` per (partition, bucket) group for PK
-  lakes (the merge unit — the executor-local merge needs no shuffle)
-  and one per file for append lakes, each carrying a spec of
-  ``paimon_import.lake_read_specs``; executors run
+- batch: one ``InputPartition`` per merge group for PK lakes (a
+  (partition, bucket), or a whole partition written under two bucket
+  counts — ``paimon_import.bucket_groups``; the executor-local merge
+  needs no shuffle) and one per file for append lakes, each carrying a
+  spec of ``paimon_import.lake_read_specs``; executors run
   ``paimon_import.read_lake_task``, the lake read task the builder's
-  bucket-local ``mapInArrow`` merge runs too, and yield its Arrow
-  batches. Pushed filters re-enter the engine predicate tree so
+  ``mapInArrow`` merge runs too, and yield its Arrow batches. Every
+  merge engine, cross-partition and dynamic-bucket lakes and
+  ``sequence.field`` ordering merge there exactly as in the builder. Pushed filters re-enter the engine predicate tree so
   partition pruning, manifest-stats skipping, bloom probes, and PK
   bucket pruning all fire before partitions exist.
 - streaming: snapshot-id offsets; each micro-batch plans one
@@ -39,13 +41,15 @@ specs) and remap to the current schema, NULL-filling dropped ids.
 Stored timestamps read back in the session zone of the reading job,
 as Spark's own file readers take them.
 
-Scope guards (clear refusals, not wrong answers): a (partition,
-bucket) group over the bucket-local byte budget
-(``paimon_import._BUCKET_LOCAL_MAX_GROUP_BYTES``) refuses with a
-pointer to ``PaimonLakeTable`` reads (exact key-window merge — the
-data source has no shuffle plan to fall back to); PK-lake streaming
-points at ``stream_lake_snapshots`` (changelog semantics don't fit a
-plain row stream).
+Scope guards (clear refusals, not wrong answers): the two shapes the
+builder sends to its key-window merge refuse here with a pointer to
+``PaimonLakeTable`` reads, since the data source has no shuffle plan to
+fall back to — a merge group over the in-task byte budget
+(``paimon_import._BUCKET_LOCAL_MAX_GROUP_BYTES``) and ``hll_sketch``
+aggregation fields (``datasource._check_ds_merge_supported``). Option
+errors (``agg_merge.check_merge_options``) raise on the driver. PK-lake
+streaming points at ``stream_lake_snapshots`` (changelog semantics
+don't fit a plain row stream).
 
 Reference parity: the reference exposes lakes only through its own
 builder API (java_implementation.py); a native Spark ``format(...)``
@@ -168,11 +172,11 @@ class PaimonLakeBatchReader(DataSourceReader):
         if info.primary_keys:
             budget = pi._BUCKET_LOCAL_MAX_GROUP_BYTES
             if pi.max_group_bytes(entries) > budget:
-                # one (partition, bucket) group would merge in a single
-                # task's memory — same scale guard as the builder path,
-                # which falls back to its exact key-window merge; the
-                # data source has no window plan to fall back to, so it
-                # refuses rather than OOM a task
+                # one merge group would merge in a single task's memory
+                # — same scale guard as the builder path, which falls
+                # back to its exact key-window merge; the data source
+                # has no window plan to fall back to, so it refuses
+                # rather than OOM a task
                 raise RuntimeError(
                     "paimon_lake data source: a (partition, bucket) group "
                     "exceeds the max-group-bytes budget of the "

@@ -49,7 +49,6 @@ import json
 import os
 import re
 import struct
-import dataclasses
 from dataclasses import dataclass, field
 from typing import Any, List, Optional
 
@@ -2369,71 +2368,68 @@ def _load_lake_entries(
     return df.select(*schema.fieldNames())
 
 
-#: per-(partition, bucket) on-disk byte budget of the bucket-local
-#: merges. One group merges whole in a single task's Arrow memory, so
-#: a misconfigured table (bucket=1, or a skewed bucket key) must NOT
-#: take that path: above the budget the read builders fall back to the
-#: exact key-window merge, whose shuffle spills instead of OOMing, and
-#: the ``format("paimon_lake")`` data source refuses. 1 GiB on disk ≈ a
-#: few GiB decoded — comfortably inside one executor task at default
-#: sizing.
+#: on-disk byte budget of one in-task merge group (:func:`bucket_groups`).
+#: A group merges whole in a single task's Arrow memory, so a
+#: misconfigured table (bucket=1, or a skewed bucket key) must NOT take
+#: that path: above the budget the builder falls back to the exact
+#: key-window merge, whose shuffle spills instead of OOMing, and the
+#: ``format("paimon_lake")`` data source refuses. The engine builder's
+#: per-split gate (``read._engine_bucket_local_ok``) shares it. 1 GiB
+#: on disk ≈ a few GiB decoded — comfortably inside one executor task
+#: at default sizing.
 _BUCKET_LOCAL_MAX_GROUP_BYTES = 1 << 30
 
 
 def bucket_groups(entries) -> list:
-    """Entries grouped by (partition, bucket) — the unit a key's
-    versions are closed in — as ``[(manifest entry index, entry)]``
-    lists, in a stable group order."""
+    """Entries grouped into the units a key's versions are closed in,
+    as ``[(manifest entry index, entry)]`` lists in a stable group
+    order: one group per (partition, bucket) when every file of the
+    partition carries the same ``total_buckets`` and sits in a bucket
+    that count has (one geometry routes each key to one bucket), else
+    one group for the whole partition (files written under two bucket
+    counts, or hand-placed in a stray bucket)."""
+    geometry: dict = {}
+    for e in entries:
+        nb = e.total_buckets
+        stray = nb is not None and 0 < nb <= e.bucket
+        geometry.setdefault(tuple(sorted(e.partition.items())), set()).add(
+            "stray" if stray else nb
+        )
     groups: dict = {}
     for i, e in enumerate(entries):
-        key = (tuple(sorted(e.partition.items())), e.bucket)
-        groups.setdefault(key, []).append((i, e))
+        part = tuple(sorted(e.partition.items()))
+        closed = len(geometry[part]) == 1 and "stray" not in geometry[part]
+        groups.setdefault((part, e.bucket if closed else None), []).append((i, e))
     return [groups[k] for k in sorted(groups)]
 
 
 def max_group_bytes(entries) -> int:
-    """Largest per-(partition, bucket) sum of on-disk file sizes —
-    the single-task memory proxy the bucket-local merge is gated on."""
-    sizes: dict = {}
-    for e in entries:
-        key = (tuple(sorted(e.partition.items())), e.bucket)
-        sizes[key] = sizes.get(key, 0) + int(e.file_size or 0)
-    return max(sizes.values(), default=0)
+    """Largest on-disk size of a :func:`bucket_groups` group — the
+    single-task memory proxy the in-task merge is gated on."""
+    return max(
+        (sum(int(e.file_size or 0) for _, e in g) for g in bucket_groups(entries)),
+        default=0,
+    )
 
 
 def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries) -> bool:
-    """Eligibility for the NO-SHUFFLE bucket-local PK merge, which runs
-    :func:`read_lake_task` once per (partition, bucket) group. The task
-    reads every column type, drops DV marks, remaps field-id schema
-    evolution and orders by ``_SEQUENCE_NUMBER`` (lake writers bake a
-    declared ``sequence.field`` into it), so only four things send a
-    read to the exact key-window path: a merge engine other than
-    deduplicate or first-row, groups that are not merge-closed
-    (cross-partition keys), mixed bucket geometry, and — the scale
-    guard — a (partition, bucket) group larger than
-    ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk (a whole group merges in
-    ONE task's memory; the key-window path shuffles but spills instead
-    of OOMing)."""
-    if info.options.get("merge-engine", "deduplicate") not in (
-        "deduplicate",
-        "first-row",
-    ):
-        return False
-    nb = int(info.options.get("bucket", "-1"))
-    if nb < 1:
-        # DYNAMIC (HASH_DYNAMIC) lakes are bucket-closed too: the hash
-        # index pins every key to exactly one bucket, so the per-group
-        # merge stays exact. CROSS_PARTITION (PK without the partition
-        # keys) has no such pin — stay on the exact key-window path.
-        if info.partition_keys and not (
-            set(info.partition_keys) <= set(info.primary_keys)
-        ):
-            return False
-    if any(
-        e.total_buckets not in (None, nb) or 0 < nb <= e.bucket for e in entries
-    ):
-        # mixed geometry (pre-rescale history, or files in a bucket the
-        # declared count does not have): stay exact
+    """Whether a lake PK read merges in-task: :func:`read_lake_task`
+    once per :func:`bucket_groups` group, with no shuffle. Every merge
+    engine, dynamic and cross-partition bucketing, deletion vectors,
+    schema evolution and time travel across a rescale merge there.
+    Exactly two shapes take ``read.merge_on_read``'s key-window
+    instead:
+
+    - a table with ``hll_sketch`` aggregation fields: the union is the
+      JVM's ``hll_union_agg``, which the in-task fold does not have;
+    - any group larger than ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk:
+      a group merges whole in one task's memory, while the key-window's
+      shuffle spills instead of OOMing.
+
+    Reads manifest metadata and options only."""
+    from paimon_python_spark.agg_merge import hll_sketch_fields
+
+    if hll_sketch_fields(info, [f.name for f in info.spark_schema.fields]):
         return False
     return max_group_bytes(entries) <= _BUCKET_LOCAL_MAX_GROUP_BYTES
 
@@ -2599,17 +2595,19 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
     in, one ``pyarrow.Table`` of the declared columns out, with no
     pandas between the files and Spark. It reads the spec's files with
     :func:`read_group_frame`; merges a key-value group
-    (``spec["merge"]``) with ``agg_merge.merge_group`` in the lake
-    order — max ``_SEQUENCE_NUMBER``, then the lower LSM level (the
-    newer run), then the later manifest entry, the reference's
-    sort-merge input order; and adds the partition constants. Stored
-    timestamps read in ``spec["tz"]``, else the task's session zone
-    (:func:`_spark_timestamps`).
+    (``spec["merge"]``) with ``agg_merge.merge_group`` in THE lake
+    merge order — the ``sequence.field`` columns, then
+    ``_SEQUENCE_NUMBER`` (Paimon's ``UserDefinedSeqComparator``), then
+    the lower LSM level (the newer run), then the later manifest
+    entry, the reference's sort-merge input order; and adds the
+    partition constants. Stored timestamps read in ``spec["tz"]``, else
+    the task's session zone (:func:`_spark_timestamps`).
 
-    ``spec["columns"]`` prunes the read to those declared columns (all
-    when None). ``spec["kv_cols"]`` leads an unmerged key-value read
-    with the stored ``_KEY_*``, ``_SEQUENCE_NUMBER`` and
-    ``_VALUE_KIND``. Trailing columns follow when their spec key names
+    ``spec["columns"]`` prunes the output to those declared columns
+    (all when None); a merge still reads the columns it orders and
+    folds by (``agg_merge.merge_input_cols``). ``spec["kv_cols"]``
+    leads an unmerged key-value read with the stored ``_KEY_*``,
+    ``_SEQUENCE_NUMBER`` and ``_VALUE_KIND``. Trailing columns follow when their spec key names
     them: ``row_kind`` (+I/-U/+U/-D from ``_VALUE_KIND`` on unmerged
     key-value rows, +I on append files and merged rows), ``file_name``
     (each row's file name) and ``row_pos`` (its position in its file,
@@ -2621,7 +2619,12 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from paimon_python_spark.agg_merge import merge_group, order_rank
+    from paimon_python_spark.agg_merge import (
+        merge_group,
+        merge_input_cols,
+        order_rank,
+        sequence_fields,
+    )
     from paimon_python_spark.types import spark_type_to_pa
 
     part_keys = info.partition_keys
@@ -2629,13 +2632,21 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
     fields = [
         f for f in info.spark_schema.fields if columns is None or f.name in columns
     ]
+    read = {f.name for f in fields}
+    if spec["merge"]:
+        read |= set(merge_input_cols(info))
     keys = [f"_KEY_{k}" for k in info.primary_keys if k not in part_keys]
     kv_cols = keys + ["_SEQUENCE_NUMBER", "_VALUE_KIND"] if spec["kv"] else []
     files = spec["files"]
     g = read_group_frame(
         [(path, colmap, dv) for _, path, _, colmap, dv in files],
         spec["fmt"],
-        kv_cols + [f.name for f in fields if f.name not in part_keys],
+        kv_cols
+        + [
+            f.name
+            for f in info.spark_schema.fields
+            if f.name in read and f.name not in part_keys
+        ],
         info,
         key_predicate,
         spec.get("tz") or session_time_zone(),
@@ -2646,6 +2657,7 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
         g = g.append_column(
             "__ord",
             order_rank(
+                *[g[c] for c in sequence_fields(info.options)],
                 g["_SEQUENCE_NUMBER"],
                 pa.array(-np.asarray([f[2] for f in files], dtype=np.int64)[fi]),
                 pa.array(np.asarray([f[0] for f in files], dtype=np.int64)[fi]),
@@ -2700,16 +2712,16 @@ def lake_read_specs(
     table_path, info: PaimonSchemaInfo, entries, src, dv_ranges=(), grouped=True, **spec_kw
 ) -> list:
     """THE spec builder of :func:`read_lake_task`, shared by the
-    builder's bucket-local merge, its unmerged reads
+    builder's in-task merge, its unmerged reads
     (:func:`_load_lake_entries`) and both ``format("paimon_lake")``
-    readers: one spec per (partition, bucket) group on key-value lakes
-    (the merge unit; ``grouped=False`` plans one per file, the shape of
-    unmerged reads) and one per file on append lakes. Each file rides
-    as ``[manifest entry index, path, level, field-id colmap, DV (index
-    path, offset, length)]``; ``src`` maps an entry to its path, and
-    ``spec_kw`` adds or overrides the per-caller keys (``merge``,
-    ``columns``, ``tz``, ``kv_cols``, ``row_kind``, ``file_name``,
-    ``row_pos``). Specs are JSON-safe."""
+    readers: one spec per :func:`bucket_groups` group on key-value
+    lakes (the merge unit; ``grouped=False`` plans one per file, the
+    shape of unmerged reads) and one per file on append lakes. Each
+    file rides as ``[manifest entry index, path, level, field-id
+    colmap, DV (index path, offset, length)]``; ``src`` maps an entry
+    to its path, and ``spec_kw`` adds or overrides the per-caller keys
+    (``merge``, ``columns``, ``tz``, ``kv_cols``, ``row_kind``,
+    ``file_name``, ``row_pos``). Specs are JSON-safe."""
     kv = bool(info.primary_keys)
     dv_by_file = {
         r.data_file_name: [r.index_path, r.offset, r.length] for r in dv_ranges
@@ -2769,53 +2781,6 @@ def arrow_task_df(spark, specs, schema: T.StructType, task):
     return plan.mapInArrow(run, schema)
 
 
-def merge_pk_entries_bucket_local(
-    spark,
-    info: PaimonSchemaInfo,
-    entries,
-    src,
-    needed_cols=None,
-    key_predicate=None,
-    dv_ranges=(),
-    table_path: "str | None" = None,
-):
-    """NO-SHUFFLE merge of a bucket-closed PK lake — real Paimon's own
-    execution shape: a key lives in exactly ONE (partition, bucket)
-    group, so the merge is closed per group and needs no cross-task
-    key clustering. :func:`read_lake_task` runs once per group on its
-    spec (files, DV marks, field-id colmaps, the session zone) and
-    emits the group's visible rows as Arrow batches; the groups pack
-    into :func:`arrow_task_df`'s slices. The key-window
-    path this replaces shuffles EVERY scanned byte by key — at 100 TB
-    that exchange is the dominant cost of every PK read, while
-    per-group state is bounded by bucket sizing exactly as in Paimon's
-    own per-bucket merge. Plan shape: scan → MapInArrow, zero Exchange
-    nodes (asserted by the gated roundtrip)."""
-    # COLUMN PRUNING pushed into the per-group pyarrow reads — the
-    # bucket-local path has no Catalyst scan to prune for it, so the
-    # caller passes projection ∪ predicate columns (keys always read:
-    # the merge needs them)
-    fields = list(info.spark_schema.fields)
-    if needed_cols is not None:
-        keep = set(needed_cols) | set(info.primary_keys) | set(info.partition_keys)
-        fields = [f for f in fields if f.name in keep]
-    specs = lake_read_specs(
-        table_path,
-        info,
-        entries,
-        src,
-        dv_ranges,
-        columns=[f.name for f in fields],
-        tz=spark.conf.get("spark.sql.session.timeZone"),
-    )
-    return arrow_task_df(
-        spark,
-        specs,
-        T.StructType(fields),
-        lambda spec: read_lake_task(spec, info, key_predicate),
-    )
-
-
 def merge_paimon_pk_entries(
     spark,
     info: PaimonSchemaInfo,
@@ -2827,13 +2792,19 @@ def merge_paimon_pk_entries(
     needed_cols=None,
     key_predicate=None,
 ):
-    """Distributed merge of a PK table's key-value files into the
-    visible rows: the bucket-local per-group merge when the groups are
-    merge-closed, else ``read.merge_on_read``'s key-window merge. For
-    deduplicate, max ``_SEQUENCE_NUMBER`` per (partition, key) wins,
-    ties broken deterministically by LSM level (0 = newest) then
-    manifest entry order (later commit wins — the reference's
-    sort-merge input-order convention); ``-D``/``-U`` kinds dropped.
+    """Distributed merge of a PK lake's key-value files into the
+    visible rows — real Paimon's own execution shape: a key's versions
+    are closed in one :func:`bucket_groups` group, so
+    :func:`read_lake_task` merges each group in-task with
+    ``agg_merge.merge_group`` and the groups pack into
+    :func:`arrow_task_df`'s slices. Plan shape: scan → MapInArrow,
+    zero Exchange. The shapes :func:`_bucket_local_merge_ok` names
+    take ``read.merge_on_read``'s key-window instead, one shuffle of
+    every scanned byte. Both merges rank a key's versions the same
+    way: ``sequence.field`` columns, then ``_SEQUENCE_NUMBER``, then
+    the lower LSM level (0 = newest), then the later manifest entry
+    (the reference's sort-merge input order); deduplicate keeps the
+    top row and drops it when it is a ``-D``/``-U``.
 
     ``dv_ranges`` (deletion-vector tables): each marked file's read
     task drops its marked positions BEFORE the merge — DV mode's whole
@@ -2841,29 +2812,40 @@ def merge_paimon_pk_entries(
     the merge afterwards anyway is idempotent and keeps the result
     exact even on partially-marked lakes.
 
-    ``src`` maps a :class:`PaimonFileEntry` to its absolute path.
-    Returns a DataFrame with exactly the declared schema columns."""
+    ``needed_cols`` prunes the in-task reads to those columns plus the
+    keys (the key-window lets Catalyst prune). ``key_predicate`` filters
+    the ``_KEY_*`` columns below either merge. ``src`` maps a
+    :class:`PaimonFileEntry` to its absolute path. Option errors raise
+    on the driver (``agg_merge.check_merge_options``). Returns a
+    DataFrame with exactly the declared schema columns."""
     from pyspark.sql import functions as F
 
+    from paimon_python_spark.agg_merge import check_merge_options
     from paimon_python_spark.write import KIND_COL, SEQ_COL
 
+    check_merge_options(info)
     if not entries:
         return local_df(spark, [], info.spark_schema)
     dv_ranges = _relevant_dv(dv_ranges, entries)
     if _bucket_local_merge_ok(info, entries):
-        # bucket-closed geometry makes the merge closed per (partition,
-        # bucket) group: take the NO-SHUFFLE per-group path (real
-        # Paimon's own execution shape) instead of the key-window
-        # exchange below
-        return merge_pk_entries_bucket_local(
-            spark,
+        fields = list(info.spark_schema.fields)
+        if needed_cols is not None:
+            keep = {*needed_cols, *info.primary_keys, *info.partition_keys}
+            fields = [f for f in fields if f.name in keep]
+        specs = lake_read_specs(
+            table_path,
             info,
             entries,
             src,
-            needed_cols=needed_cols,
-            key_predicate=key_predicate,
-            dv_ranges=dv_ranges,
-            table_path=table_path,
+            dv_ranges,
+            columns=[f.name for f in fields],
+            tz=spark.conf.get("spark.sql.session.timeZone"),
+        )
+        return arrow_task_df(
+            spark,
+            specs,
+            T.StructType(fields),
+            lambda spec: read_lake_task(spec, info, key_predicate),
         )
     raw = _load_lake_entries(
         spark,
@@ -2889,17 +2871,8 @@ def merge_paimon_pk_entries(
     from paimon_python_spark._localdf import cast_select_sql
     from paimon_python_spark.read import merge_on_read
 
-    merge_info, tie_cols, tie_breaks = info, [], ()
+    tie_cols, tie_breaks = [], ()
     if info.options.get("merge-engine", "deduplicate") == "deduplicate":
-        # lake writers bake a declared sequence.field into
-        # _SEQUENCE_NUMBER, which alone orders the deduplicate window
-        # (as in the bucket-local and data-source merges)
-        merge_info = dataclasses.replace(
-            info,
-            options={
-                k: v for k, v in info.options.items() if k != "sequence.field"
-            },
-        )
         # file names are UUID-unique within a Paimon table, so a
         # broadcast (file_name → entry order, level) lookup rides next
         # to every row: equal sequences resolve to the lower level,
@@ -2918,7 +2891,7 @@ def merge_paimon_pk_entries(
     value_cols = [f.name for f in info.spark_schema.fields]
     merged = merge_on_read(
         raw.select(*value_cols, SEQ_COL, KIND_COL, *tie_cols),
-        merge_info,
+        info,
         tie_breaks=tie_breaks,
     )
     # align physical widths with the declared schema — one parsed

@@ -27,12 +27,11 @@ native scan, so Catalyst still sees a declarative plan (parquet
 pushdown + column pruning apply per file); avro files and files with
 deletion-vector marks read through the Arrow read task
 (``paimon_import.read_lake_task``). PK tables run the same distributed
-merge recipe as the importer (``merge_paimon_pk_entries``): a
-bucket-closed deduplicate or first-row lake runs the Arrow read task
-(``paimon_import.read_lake_task``) once per (partition, bucket) group
-with no shuffle; other lakes take the window dedup on max sequence number
-with the deterministic level/entry-order tie-break, which shuffles
-once on (partition, key).
+merge recipe as the importer (``merge_paimon_pk_entries``): the Arrow
+read task (``paimon_import.read_lake_task``) merges each (partition,
+bucket) group in-task with no shuffle, whatever the merge engine; only
+``hll_sketch`` aggregation fields and oversized groups take the
+key-window merge, which shuffles once on (partition, key).
 
 Deletion-vector tables read transparently: the snapshot's index
 manifest is planned driver-side (``plan_paimon_dv`` — KB-scale
@@ -1068,9 +1067,10 @@ class PaimonLakeRead:
         elif info.primary_keys:
             needed = None
             if b._projection is not None:
-                # projection ∪ residual-predicate columns: the bucket-
-                # local merge prunes its pyarrow reads to these (the
-                # window path lets Catalyst prune the same set)
+                # projection ∪ residual-predicate columns: the in-task
+                # merge prunes its pyarrow reads to these plus the
+                # columns it orders and folds by (the window path lets
+                # Catalyst prune the same set)
                 needed = list(
                     dict.fromkeys(
                         list(b._projection)
@@ -1079,7 +1079,7 @@ class PaimonLakeRead:
                 )
             # KEY sub-predicate pushed below the merge (sound: all
             # versions of a key share its key values) — renamed to the
-            # kv files' _KEY_* system columns so the bucket-local reads
+            # kv files' _KEY_* system columns so the in-task reads
             # skip row groups on point lookups
             key_pred = None
             if b._predicate is not None:

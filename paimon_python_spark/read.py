@@ -130,14 +130,20 @@ MERGE_ENGINES = ("deduplicate", "first-row", "partial-update", "aggregation")
 #: supported fields.<name>.aggregate-function values for the
 #: aggregation merge engine (re-exported; the implementation moved to
 #: agg_merge.py when the surface grew to the full Paimon function list)
-from paimon_python_spark.agg_merge import AGG_FUNCTIONS  # noqa: E402,F401
+from paimon_python_spark.agg_merge import (  # noqa: E402,F401
+    AGG_FUNCTIONS,
+    check_merge_options,
+    sequence_fields,
+    sequence_groups,
+)
 
 
 def _engine_bucket_local_ok(schema, splits) -> bool:
-    """Eligibility for the NO-SHUFFLE engine PK merge — the lake gate
-    (paimon_import._bucket_local_merge_ok) applied to engine splits:
+    """Eligibility for the NO-SHUFFLE engine PK merge. Narrower than
+    the lake gate (paimon_import._bucket_local_merge_ok, which keeps
+    only hll_sketch fields and oversized groups on the key-window):
     parquet/orc files, plain deduplicate engine without sequence.field
-    or salt, and — the scale guard — no split larger than
+    or salt, and — the shared scale guard — no split larger than
     ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk. PK splits are already
     one (partition, bucket) group each (scan._group), which is what
     closes the merge per task."""
@@ -161,7 +167,7 @@ def merge_on_read_bucket_local(
 ) -> DataFrame:
     """NO-SHUFFLE merge-on-read for fixed-bucket engine PK tables —
     the same execution shape as the lake path
-    (paimon_import.merge_pk_entries_bucket_local): each planned split
+    (paimon_import.merge_paimon_pk_entries): each planned split
     is one merge-closed (partition, bucket) group, so an Arrow task
     reads the group's files with the shared reader
     (paimon_import.read_group_frame: pruned to projection ∪ predicate
@@ -245,6 +251,7 @@ def merge_on_read(
     engine = schema.options.get("merge-engine", "deduplicate")
     if engine not in MERGE_ENGINES:
         raise ValueError(f"unknown merge-engine {engine!r}; one of {MERGE_ENGINES}")
+    check_merge_options(schema)
     merge_keys = list(dict.fromkeys(schema.partition_keys + schema.primary_keys))
     value_cols = [
         f.name for f in schema.spark_schema.fields if f.name not in merge_keys
@@ -262,34 +269,8 @@ def merge_on_read(
     # _SEQUENCE_NUMBER at write time (paimon_lake.py); for those the
     # struct is (v, v)-ordered — same order, so applying it here too
     # is harmless.
-    seq_fields = [
-        c.strip()
-        for c in schema.options.get("sequence.field", "").split(",")
-        if c.strip()
-    ]
+    seq_fields = sequence_fields(schema.options)
     if seq_fields:
-        missing = [c for c in seq_fields if c not in value_cols]
-        if missing:
-            raise ValueError(
-                f"sequence.field: not value columns: {missing} "
-                f"(primary-key and partition columns cannot be sequence "
-                f"fields)"
-            )
-        if engine == "aggregation":
-            raise ValueError(
-                "sequence.field with merge-engine=aggregation is not "
-                "supported: aggregation folds in sequence order already; "
-                "order per-field with fields.<g>.sequence-group instead"
-            )
-        if engine == "partial-update" and any(
-            schema.options.get(f"fields.{c}.aggregate-function") is not None
-            for c in value_cols
-        ):
-            raise ValueError(
-                "sequence.field with fields.<c>.aggregate-function "
-                "columns is not supported; use fields.<g>.sequence-group "
-                "ordering instead"
-            )
         df = df.withColumn(
             "__seq_ord",
             F.struct(*[F.col(c) for c in seq_fields], F.col(seq_col)),
@@ -340,17 +321,7 @@ def merge_on_read(
 
     if engine == "partial-update":
         # fields.<g>.sequence-group = "c1,c2" -> columns c1,c2 version on g
-        groups: dict = {}
-        for opt, val in schema.options.items():
-            if opt.startswith("fields.") and opt.endswith(".sequence-group"):
-                g = opt[len("fields.") : -len(".sequence-group")]
-                cols = [c.strip() for c in val.split(",") if c.strip()]
-                missing = [c for c in [g, *cols] if c not in value_cols]
-                if missing:
-                    raise ValueError(
-                        f"sequence-group {g!r}: not value columns: {missing}"
-                    )
-                groups[g] = cols
+        groups = sequence_groups(schema.options)
         col_group = {c: g for g, cols in groups.items() for c in cols}
 
         # Paimon's delete contract for partial-update: retract records
@@ -366,17 +337,6 @@ def merge_on_read(
             ).lower()
             == "true"
         )
-        has_fn_cols = any(
-            schema.options.get(f"fields.{c}.aggregate-function") is not None
-            for c in value_cols
-        )
-        if remove_on_delete and (groups or has_fn_cols):
-            raise ValueError(
-                "partial-update.remove-record-on-delete cannot combine "
-                "with sequence-groups or fields.<c>.aggregate-function "
-                "(their folds are not restartable after a delete); use "
-                "sequence-group retraction or ignore-delete instead"
-            )
         is_add = F.col(kind_col).isin(*ADD_KINDS)
         extra_aggs = []
         if remove_on_delete:

@@ -4493,16 +4493,22 @@ _NO_SHUFFLE_LAKES = [
     "dv",
     "two_schemas",
     "first_row",
+    "partial_update",
+    "aggregation",
+    "cross_partition",
+    "pre_rescale",
 ]
 
 
 @pytest.mark.parametrize("lake", _NO_SHUFFLE_LAKES)
 def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
-    """Bucket-closed PK-lake reads take the bucket-local merge: ZERO
-    Exchange in the physical plan (the key-window path shuffles every
-    scanned byte — the dominant 100 TB read cost), whatever the column
-    types, with a sequence.field, deletion vectors, files under two
-    schema ids, or the first-row engine. Each answer matches the exact
+    """PK-lake reads take the in-task merge: ZERO Exchange in the
+    physical plan (the key-window path shuffles every scanned byte —
+    the dominant 100 TB read cost), whatever the column types, with a
+    sequence.field, deletion vectors, files under two schema ids, the
+    first-row, partial-update (sequence group) or aggregation (sum,
+    collect) engine, a cross-partition lake with a moved key, or time
+    travel to before a bucket rescale. Each answer matches the exact
     key-window read (forced by a group byte budget of 1) row for
     row."""
     import datetime
@@ -4517,6 +4523,7 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
         PaimonLakeTable,
         alter_lake_schema,
         create_lake_table,
+        rescale_lake_bucket,
         write_lake_pk_append,
     )
     from paimon_python_spark.session import set_spark
@@ -4525,6 +4532,7 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
     p = str(tmp_path / "nshuffle_lake")
     fields = [("k", "INT NOT NULL"), ("v", "STRING")]
     options = {"bucket": "4"}
+    partition_keys = None
     ddl = "k int, v string"
 
     def extra(i):
@@ -4556,7 +4564,39 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
 
     elif lake == "first_row":
         options["merge-engine"] = "first-row"
-    create_lake_table(p, fields, primary_keys=["k"], options=options)
+    elif lake == "partial_update":
+        # v versions on g: the second commit's stale g loses on odd keys
+        fields += [("g", "BIGINT"), ("w", "STRING")]
+        options["merge-engine"] = "partial-update"
+        options["fields.g.sequence-group"] = "v"
+        ddl += ", g bigint, w string"
+
+        def extra(i):
+            return (100, f"w{i}")
+
+    elif lake == "aggregation":
+        fields += [("n", "BIGINT"), ("c", "ARRAY<STRING>")]
+        options["merge-engine"] = "aggregation"
+        options["fields.n.aggregate-function"] = "sum"
+        options["fields.c.aggregate-function"] = "collect"
+        ddl += ", n bigint, c array<string>"
+
+        def extra(i):
+            return (i, [f"x{i}"])
+
+    elif lake == "cross_partition":
+        # bucket=-1 with the partition key outside the PK
+        fields.append(("seg", "STRING"))
+        options = {"bucket": "-1", "dynamic-bucket.target-row-num": "30"}
+        partition_keys = ["seg"]
+        ddl += ", seg string"
+
+        def extra(i):
+            return ("even" if i % 2 == 0 else "odd",)
+
+    create_lake_table(
+        p, fields, partition_keys=partition_keys, primary_keys=["k"], options=options
+    )
     write_lake_pk_append(
         p,
         spark.createDataFrame(
@@ -4576,6 +4616,21 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
         def extra(i):
             return (1000 - i - (1 if i % 2 else -1),)
 
+    elif lake == "partial_update":
+
+        def extra(i):
+            return (100 + (-1 if i % 2 else 1), None)
+
+    elif lake == "aggregation":
+
+        def extra(i):
+            return (1, [f"y{i}"])
+
+    elif lake == "cross_partition":
+        # key 3 moves from 'odd' to 'moved'
+        def extra(i):
+            return ("moved" if i == 3 else "even" if i % 2 == 0 else "odd",)
+
     write_lake_pk_append(
         p,
         spark.createDataFrame(
@@ -4585,9 +4640,16 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
     if lake == "dv":
         victim = next(e for e in plan_paimon_files(p) if e.bucket == 0)
         attach_paimon_dv_fixture(p, {victim.file_name: [0]})  # one row deleted
+    snapshot = None
+    if lake == "pre_rescale":
+        # read the 4-bucket snapshot after the table moved to 3 buckets
+        snapshot = rescale_lake_bucket(p, 3) - 1
 
     def read():
-        return PaimonLakeTable(p).new_read_builder().new_read().to_df()
+        b = PaimonLakeTable(p).new_read_builder()
+        if snapshot is not None:
+            b = b.with_snapshot(snapshot)
+        return b.new_read().to_df()
 
     df = read()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -4606,11 +4668,148 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
     assert got[1] == "a1" and got[199] == "a199"
     if lake == "first_row":
         assert got[3] == "a3"
-    elif lake == "sequence_field":
-        # odd keys' updates carry a lower event time and lose
+    elif lake in ("sequence_field", "partial_update"):
+        # odd keys' updates carry a lower event time / group version
+        # and lose
         assert got[3] == "a3" and got[6] == "b6"
     else:
         assert got[3] == "b3"
+    if lake == "partial_update":
+        assert {r[0]: r[3] for r in rows}[6] == "w6"  # NULL patch keeps w
+    elif lake == "aggregation":
+        agg = {r[0]: (r[2], list(r[3])) for r in rows}
+        assert agg[6] == (7, ["x6", "y6"]) and agg[7] == (7, ["x7"])
+    elif lake == "cross_partition":
+        assert {r[0]: r[2] for r in rows}[3] == "moved"
+
+
+@pytest.mark.parametrize("engine", ["deduplicate", "partial-update"])
+def test_lake_sequence_field_orders_every_merge_path(
+    tmp_path, spark, monkeypatch, engine
+):
+    """A ``sequence.field`` ranks a key's versions before
+    ``_SEQUENCE_NUMBER`` (Paimon's UserDefinedSeqComparator) on every
+    read door, also when the stored sequence is arrival order, as JVM
+    writers store it: the option arrives in schema-1, after
+    (1, 'new', 200) and then (1, 'old', 100) were written, and the
+    s-winner comes back from the builder's in-task merge, its forced
+    key-window and ``format("paimon_lake")``."""
+
+    from paimon_python_spark import paimon_import
+    from paimon_python_spark.lake_datasource import register_lake
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    register_lake(spark)
+    p = str(tmp_path / "seqf_lake")
+    create_lake_table(
+        p,
+        [("k", "INT NOT NULL"), ("v", "STRING"), ("s", "BIGINT")],
+        primary_keys=["k"],
+        options={"bucket": "1", "merge-engine": engine},
+    )
+    for row in [(1, "new", 200), (1, "old", 100)]:
+        write_lake_pk_append(p, spark.createDataFrame([row], "k int, v string, s bigint"))
+    with open(os.path.join(p, "schema", "schema-0")) as f:
+        raw = json.load(f)
+    raw["id"] = 1
+    raw["options"]["sequence.field"] = "s"
+    with open(os.path.join(p, "schema", "schema-1"), "w") as f:
+        json.dump(raw, f)
+
+    def read():
+        return PaimonLakeTable(p).new_read_builder().new_read().to_df()
+
+    df = read()
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in df.collect()] == [(1, "new", 200)]
+    with monkeypatch.context() as m:
+        m.setattr(paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", 1)
+        assert [tuple(r) for r in read().collect()] == [(1, "new", 200)]
+    ds = spark.read.format("paimon_lake").option("path", p).load()
+    assert [tuple(r) for r in ds.collect()] == [(1, "new", 200)]
+
+
+def test_lake_projected_partial_update_reads_sequence_group(tmp_path, spark):
+    """A projection of one sequence-group member still merges by the
+    group's version field: the in-task read pulls the columns the fold
+    orders by, although the projection drops them."""
+    from paimon_python_spark.lake_datasource import register_lake
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    register_lake(spark)
+    p = str(tmp_path / "pu_proj_lake")
+    create_lake_table(
+        p,
+        [("k", "INT NOT NULL"), ("v", "STRING"), ("u", "STRING"), ("g", "BIGINT")],
+        primary_keys=["k"],
+        options={
+            "bucket": "2",
+            "merge-engine": "partial-update",
+            "fields.g.sequence-group": "v,u",
+        },
+    )
+    ddl = "k int, v string, u string, g bigint"
+    write_lake_pk_append(p, spark.createDataFrame([(1, "new", "u2", 2)], ddl))
+    write_lake_pk_append(p, spark.createDataFrame([(1, "old", "u1", 1)], ddl))
+    df = PaimonLakeTable(p).new_read_builder().with_projection(["v"]).new_read().to_df()
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in df.collect()] == [("new",)]
+    ds = spark.read.format("paimon_lake").option("path", p).load().select("v")
+    assert [tuple(r) for r in ds.collect()] == [("new",)]
+
+
+def test_lake_hll_sketch_merges_on_key_window(tmp_path, spark):
+    """``hll_sketch`` aggregation fields are the one merge shape the
+    in-task fold lacks (the union is the JVM's ``hll_union_agg``): the
+    builder read plans the key-window Exchange and returns the union's
+    estimate, and ``format("paimon_lake")`` refuses toward the
+    builder."""
+    from pyspark.sql import functions as F
+
+    from paimon_python_spark.lake_datasource import register_lake
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    register_lake(spark)
+    p = str(tmp_path / "hll_lake")
+    create_lake_table(
+        p,
+        [("k", "INT NOT NULL"), ("h", "BYTES")],
+        primary_keys=["k"],
+        options={
+            "bucket": "1",
+            "merge-engine": "aggregation",
+            "fields.h.aggregate-function": "hll_sketch",
+        },
+    )
+    for lo, hi in [(0, 1000), (500, 1500)]:
+        sk = spark.range(lo, hi).agg(F.hll_sketch_agg("id")).collect()[0][0]
+        write_lake_pk_append(
+            p, spark.createDataFrame([(1, bytearray(sk))], "k int, h binary")
+        )
+    df = PaimonLakeTable(p).new_read_builder().new_read().to_df()
+    assert "Exchange" in df._jdf.queryExecution().executedPlan().toString()
+    est = df.select(F.hll_sketch_estimate("h")).collect()[0][0]
+    assert abs(est - 1500) / 1500 < 0.05
+    with pytest.raises(Exception, match="hll_sketch"):
+        spark.read.format("paimon_lake").option("path", p).load().collect()
 
 
 def test_bucket_local_merge_size_guard(tmp_path, spark, monkeypatch):
