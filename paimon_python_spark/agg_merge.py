@@ -438,18 +438,22 @@ def field_agg_plan(schema, value_cols, seq_col, kind_col):
     return aggs, post
 
 
-def hll_sketch_fields(schema, value_cols) -> list:
-    """Value columns declared ``fields.<c>.aggregate-function =
-    hll_sketch`` — the ONE function the in-task pandas fold cannot
-    express (the union is Spark's JVM ``hll_union_agg``; this engine
-    does not re-implement the DataSketches HLL wire merge in Python).
-    The lake builder merges tables with such fields on the key-window
+def hll_sketch_fields(schema) -> list:
+    """Columns of an aggregation-engine PK table declared
+    ``fields.<c>.aggregate-function = hll_sketch`` — the ONE function
+    the in-task pandas fold cannot express (the union is Spark's JVM
+    ``hll_union_agg``; this engine does not re-implement the
+    DataSketches HLL wire merge in Python). Empty under any other merge
+    engine, where the option is inert. The lake builder merges tables
+    with such fields on the key-window
     (``paimon_import._bucket_local_merge_ok``); the data sources refuse
     them at plan time and point at the builder path."""
+    if not schema.primary_keys or schema.options.get("merge-engine") != "aggregation":
+        return []
     return [
-        c
-        for c in value_cols
-        if schema.options.get(f"fields.{c}.aggregate-function") == "hll_sketch"
+        f.name
+        for f in schema.spark_schema.fields
+        if schema.options.get(f"fields.{f.name}.aggregate-function") == "hll_sketch"
     ]
 
 
@@ -487,21 +491,53 @@ def _as_map_items(v) -> list:
     return [tuple(kv) for kv in v]
 
 
+def _null_mask(col: pd.Series) -> pd.Series:
+    """:func:`_is_null_value` over a whole column in one Arrow kernel:
+    NULL, or NaN in a float column."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mask = pc.is_null(pa.array(col), nan_is_null=True)
+    return pd.Series(mask.to_numpy(zero_copy_only=False), index=col.index)
+
+
+def _per_key(pdf: pd.DataFrame, merge_keys, fn, *cols) -> pd.Series:
+    """``fn(*lists)`` once per merge key, each list holding that key's
+    values of one of ``cols`` in row order, as a Series indexed by the
+    keys: ``groupby(...).apply`` without building a pandas frame per
+    key, one Arrow-to-Python pass per column instead."""
+    import numpy as np
+    import pyarrow as pa
+
+    codes = pdf.groupby(merge_keys, sort=False, dropna=False).ngroup().to_numpy()
+    order = np.argsort(codes, kind="stable")
+    starts = np.flatnonzero(np.diff(codes[order], prepend=-1))
+    ends = np.append(starts[1:], len(order))
+    values = [pa.array(pdf[c].iloc[order]).to_pylist() for c in cols]
+    index = pdf[merge_keys].iloc[order[starts]].set_index(merge_keys).index
+    return pd.Series(
+        [fn(*(v[a:b] for v in values)) for a, b in zip(starts, ends)],
+        index=index,
+        dtype=object,
+    )
+
+
 def pandas_agg_merge(
     pdf: pd.DataFrame, schema, merge_keys, value_cols, seq_col, kind_col
 ) -> pd.DataFrame:
     """In-task pandas twin of :func:`field_agg_plan` — the aggregation
-    merge engine for the ``format(...)`` data sources, where one task
-    holds ALL runs of one (partition, bucket) and the fold is
-    executor-local (no Spark expressions available). Semantics are the
-    builder's, asserted equivalent by the pytest matrix
-    (tests/test_agg_merge.py) and the shared SQL oracle of the gated
-    format-agg roundtrip: keys with no add row drop; sum/product/count
-    subtract retractions; container functions fold (kind, value) in
-    sequence order; rbm/theta sketches union via the portable codecs;
-    non-retractable fields raise on a live retracted value unless
-    ``fields.<c>.ignore-retract``; every scalar keeps its declared
-    dtype via the caller's arrow-schema conversion. ``hll_sketch``
+    merge engine of :func:`merge_group`, where one task holds ALL runs
+    of one merge group and the fold is executor-local (no Spark
+    expressions available). Per-key container, ``listagg`` and sketch
+    folds run in one Python pass per column (:func:`_per_key`).
+    Semantics are the key-window's, asserted equivalent by the pytest
+    matrix (tests/test_agg_merge.py) and the shared SQL oracle of the
+    gated format-agg roundtrip: keys with no add row drop;
+    sum/product/count subtract retractions; container functions fold
+    (kind, value) in sequence order; rbm/theta sketches union via the
+    portable codecs; non-retractable fields raise on a live retracted
+    value unless ``fields.<c>.ignore-retract``; every scalar keeps its
+    declared dtype via the caller's arrow-schema conversion. ``hll_sketch``
     fields never reach it (:func:`hll_sketch_fields`), and the options
     were checked on the driver (:func:`check_merge_options`)."""
     import numpy as np
@@ -533,7 +569,7 @@ def pandas_agg_merge(
             opts.get(f"fields.{c}.ignore-retract", "false").lower() == "true"
         )
         col = pdf[c]
-        nn = ~col.map(_is_null_value)
+        nn = ~_null_mask(col)
 
         # Paimon's retraction contract: non-retractable fields raise on
         # a live (non-null) retracted value unless ignore-retract
@@ -596,11 +632,10 @@ def pandas_agg_merge(
         elif fn == "listagg":
             delim = opts.get(f"fields.{c}.list-agg-delimiter", ",")
             rows = pdf[add_mask & nn]
-            joined = (
-                rows.groupby(merge_keys, sort=False, dropna=False)[c]
-                .apply(lambda s: delim.join(str(v) for v in s))
+            _attach(
+                c,
+                _per_key(rows, merge_keys, lambda vs: delim.join(map(str, vs)), c),
             )
-            _attach(c, joined)
         elif fn in ("collect", "merge_map", "nested_update"):
             distinct = opts.get(f"fields.{c}.distinct", "false").lower() == "true"
             nkeys = [
@@ -609,14 +644,14 @@ def pandas_agg_merge(
                 if k.strip()
             ]
 
-            def _fold(sub, _fn=fn, _distinct=distinct, _nkeys=nkeys):
+            def _fold(kinds, vals, _fn=fn, _distinct=distinct, _nkeys=nkeys):
                 # NULL-accumulator parity: stays NULL until any row
                 # (any kind) carries a non-null container
-                if not any(not _is_null_value(v) for v in sub[c]):
+                if not any(not _is_null_value(v) for v in vals):
                     return None
                 if _fn == "merge_map":
                     acc = []
-                    for k_, v_ in zip(sub[kind_col], sub[c]):
+                    for k_, v_ in zip(kinds, vals):
                         rv = _as_map_items(v_)
                         rv_keys = {p[0] for p in rv}
                         if k_ in ADD_KINDS:
@@ -637,7 +672,7 @@ def pandas_agg_merge(
                         return True
 
                     acc = []
-                    for k_, v_ in zip(sub[kind_col], sub[c]):
+                    for k_, v_ in zip(kinds, vals):
                         rv = [dict(e) for e in _as_list(v_)]
                         acc = [
                             e
@@ -649,7 +684,7 @@ def pandas_agg_merge(
                     return acc
                 # collect
                 acc = []
-                for k_, v_ in zip(sub[kind_col], sub[c]):
+                for k_, v_ in zip(kinds, vals):
                     rv = _as_list(v_)
                     if k_ in ADD_KINDS:
                         acc = acc + rv
@@ -670,10 +705,7 @@ def pandas_agg_merge(
                                     acc.remove(x)
                 return acc
 
-            folded = pdf.groupby(merge_keys, sort=False, dropna=False)[
-                [kind_col, c]
-            ].apply(_fold)
-            _attach(c, folded)
+            _attach(c, _per_key(pdf, merge_keys, _fold, kind_col, c))
         elif fn in ("rbm32", "rbm64", "theta_sketch"):
             rows = pdf[add_mask & nn]
 
@@ -709,12 +741,7 @@ def pandas_agg_merge(
                     )
                     return ser(merged)
 
-            _attach(
-                c,
-                rows.groupby(merge_keys, sort=False, dropna=False)[c].apply(
-                    _union
-                ),
-            )
+            _attach(c, _per_key(rows, merge_keys, _union, c))
         else:  # pragma: no cover — AGG_FUNCTIONS is exhaustive above
             raise AssertionError(fn)
 
@@ -814,9 +841,7 @@ def _pandas_scalar_agg(
         rows = pdf.assign(__r=rank)[add_mask & nn].sort_values(
             "__r", kind="mergesort"
         )
-        return rows.groupby(merge_keys, sort=False, dropna=False)[c].apply(
-            lambda s: delim.join(str(v) for v in s)
-        )
+        return _per_key(rows, merge_keys, lambda vs: delim.join(map(str, vs)), c)
     raise ValueError(
         f"aggregate-function {fn!r} is not usable with merge-engine "
         f"partial-update; one of {sorted(SCALAR_AGG_FUNCTIONS)}"
@@ -830,10 +855,9 @@ def pandas_partial_update_merge(
     (read.py merge_on_read): sequence groups (``fields.<g>.
     sequence-group``), per-field scalar aggregates inside groups
     (``fields.<c>.aggregate-function``), and
-    ``partial-update.remove-record-on-delete`` — the extras the
-    ``format(...)`` data sources previously refused toward the
-    builder. Semantics pinned by the equivalence pytest matrix
-    (front-door read vs builder read) and the shared SQL oracles.
+    ``partial-update.remove-record-on-delete``, run by
+    :func:`merge_group`. Semantics pinned by the equivalence pytest
+    matrix (in-task merge vs key-window) and the shared SQL oracles.
     The caller applies ignore-delete BEFORE this fold, exactly like
     merge_on_read, and has run :func:`check_merge_options` on the
     driver."""
@@ -1119,8 +1143,9 @@ def merge_group(tbl, schema, keys, ord_col, kind_col):
     derives from its own tie-break (:func:`order_rank`: the
     ``sequence.field`` columns, then the commit sequence, first);
     options were checked on the driver (:func:`check_merge_options`);
-    ``keys`` are the
-    group's key columns as stored. ``ignore-delete`` drops retracts
+    ``keys`` are the group's key columns as stored. Groups are capped
+    at ``paimon_import.merge_budget`` bytes on disk, which is smaller
+    for the pandas folds. ``ignore-delete`` drops retracts
     before the merge, then the merge-engine option picks the fold:
 
     - ``deduplicate``: the max-``ord_col`` row per key, dropped when it

@@ -243,9 +243,7 @@ def _check_ds_merge_supported(schema, fmt: str) -> None:
     from paimon_python_spark.agg_merge import check_merge_options, hll_sketch_fields
 
     check_merge_options(schema)
-    if not schema.primary_keys or schema.options.get("merge-engine") != "aggregation":
-        return
-    bad = hll_sketch_fields(schema, [f.name for f in schema.spark_schema.fields])
+    bad = hll_sketch_fields(schema)
     if bad:
         builder = (
             "Table.new_read_builder()"

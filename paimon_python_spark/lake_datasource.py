@@ -12,9 +12,10 @@ on the same driver-side planner every lake read uses.
   ``paimon_import.read_lake_task``, the lake read task the builder's
   ``mapInArrow`` merge runs too, and yield its Arrow batches. Every
   merge engine, cross-partition and dynamic-bucket lakes and
-  ``sequence.field`` ordering merge there exactly as in the builder. Pushed filters re-enter the engine predicate tree so
-  partition pruning, manifest-stats skipping, bloom probes, and PK
-  bucket pruning all fire before partitions exist.
+  ``sequence.field`` ordering merge there exactly as in the builder.
+  Pushed filters re-enter the engine predicate tree so partition
+  pruning, manifest-stats skipping, bloom probes, and PK bucket
+  pruning all fire before partitions exist.
 - streaming: snapshot-id offsets; each micro-batch plans one
   ``InputPartition`` per delta file of the commits in ``(start, end]``
   (COMPACT rewrites skipped — the engine incremental contract) and
@@ -45,7 +46,7 @@ Scope guards (clear refusals, not wrong answers): the two shapes the
 builder sends to its key-window merge refuse here with a pointer to
 ``PaimonLakeTable`` reads, since the data source has no shuffle plan to
 fall back to — a merge group over the in-task byte budget
-(``paimon_import._BUCKET_LOCAL_MAX_GROUP_BYTES``) and ``hll_sketch``
+(``paimon_import.merge_budget``) and ``hll_sketch``
 aggregation fields (``datasource._check_ds_merge_supported``). Option
 errors (``agg_merge.check_merge_options``) raise on the driver. PK-lake
 streaming points at ``stream_lake_snapshots`` (changelog semantics
@@ -170,7 +171,7 @@ class PaimonLakeBatchReader(DataSourceReader):
         entries = _pruned_entries(self.table_path, info, b)
         src = pi.lake_file_src(self.table_path, info)
         if info.primary_keys:
-            budget = pi._BUCKET_LOCAL_MAX_GROUP_BYTES
+            budget = pi.merge_budget(info)
             if pi.max_group_bytes(entries) > budget:
                 # one merge group would merge in a single task's memory
                 # — same scale guard as the builder path, which falls
@@ -178,9 +179,10 @@ class PaimonLakeBatchReader(DataSourceReader):
                 # has no window plan to fall back to, so it refuses
                 # rather than OOM a task
                 raise RuntimeError(
-                    "paimon_lake data source: a (partition, bucket) group "
-                    "exceeds the max-group-bytes budget of the "
-                    f"bucket-local merge ({budget} bytes on disk); read via "
+                    "paimon_lake data source: a merge group (a (partition, "
+                    "bucket), or a whole partition with mixed bucket "
+                    "counts) exceeds the max-group-bytes budget of the "
+                    f"in-task merge ({budget} bytes on disk); read via "
                     "PaimonLakeTable(path).new_read_builder() (exact "
                     "key-window merge, spills instead of OOMing)"
                 )

@@ -2368,16 +2368,29 @@ def _load_lake_entries(
     return df.select(*schema.fieldNames())
 
 
-#: on-disk byte budget of one in-task merge group (:func:`bucket_groups`).
-#: A group merges whole in a single task's Arrow memory, so a
-#: misconfigured table (bucket=1, or a skewed bucket key) must NOT take
-#: that path: above the budget the builder falls back to the exact
-#: key-window merge, whose shuffle spills instead of OOMing, and the
-#: ``format("paimon_lake")`` data source refuses. The engine builder's
-#: per-split gate (``read._engine_bucket_local_ok``) shares it. 1 GiB
-#: on disk ≈ a few GiB decoded — comfortably inside one executor task
-#: at default sizing.
+#: on-disk byte budget of one in-task deduplicate / first-row merge
+#: group (:func:`bucket_groups`; :func:`merge_budget` gives every
+#: engine's). A group merges whole in a single task's Arrow memory, so
+#: a misconfigured table (bucket=1, or a skewed bucket key) must NOT
+#: take that path: above the budget the builder falls back to the
+#: exact key-window merge, whose shuffle spills instead of OOMing, and
+#: the ``format("paimon_lake")`` data source refuses. The engine
+#: builder's per-split gate (``read._engine_bucket_local_ok``) shares
+#: it. 1 GiB on disk ≈ a few GiB decoded — comfortably inside one
+#: executor task at default sizing.
 _BUCKET_LOCAL_MAX_GROUP_BYTES = 1 << 30
+
+
+def merge_budget(info: PaimonSchemaInfo) -> int:
+    """On-disk byte budget of one in-task merge group of this lake.
+    The Arrow sort of deduplicate and first-row peaks near 1.7x the
+    group's decoded table on top of it; the pandas folds of
+    partial-update and aggregation peak near 2x for scalar fields and
+    up to 5x for container fields (Python objects; 1-2M-row groups),
+    so they get a quarter of :data:`_BUCKET_LOCAL_MAX_GROUP_BYTES`."""
+    if info.options.get("merge-engine", "deduplicate") in ("deduplicate", "first-row"):
+        return _BUCKET_LOCAL_MAX_GROUP_BYTES
+    return _BUCKET_LOCAL_MAX_GROUP_BYTES // 4
 
 
 def bucket_groups(entries) -> list:
@@ -2422,16 +2435,16 @@ def _bucket_local_merge_ok(info: PaimonSchemaInfo, entries) -> bool:
 
     - a table with ``hll_sketch`` aggregation fields: the union is the
       JVM's ``hll_union_agg``, which the in-task fold does not have;
-    - any group larger than ``_BUCKET_LOCAL_MAX_GROUP_BYTES`` on disk:
-      a group merges whole in one task's memory, while the key-window's
+    - any group larger than :func:`merge_budget` on disk: a group
+      merges whole in one task's memory, while the key-window's
       shuffle spills instead of OOMing.
 
     Reads manifest metadata and options only."""
     from paimon_python_spark.agg_merge import hll_sketch_fields
 
-    if hll_sketch_fields(info, [f.name for f in info.spark_schema.fields]):
+    if hll_sketch_fields(info):
         return False
-    return max_group_bytes(entries) <= _BUCKET_LOCAL_MAX_GROUP_BYTES
+    return max_group_bytes(entries) <= merge_budget(info)
 
 
 def read_data_file(path: str, fmt: str, cols, arrow_filter=None, filter_fields=()):
@@ -2607,14 +2620,15 @@ def read_lake_task(spec: dict, info: PaimonSchemaInfo, key_predicate=None):
     (all when None); a merge still reads the columns it orders and
     folds by (``agg_merge.merge_input_cols``). ``spec["kv_cols"]``
     leads an unmerged key-value read with the stored ``_KEY_*``,
-    ``_SEQUENCE_NUMBER`` and ``_VALUE_KIND``. Trailing columns follow when their spec key names
-    them: ``row_kind`` (+I/-U/+U/-D from ``_VALUE_KIND`` on unmerged
-    key-value rows, +I on append files and merged rows), ``file_name``
-    (each row's file name) and ``row_pos`` (its position in its file,
-    counted before DV marks drop). ``key_predicate`` filters ``_KEY_*``
-    columns at the read (see :func:`read_group_frame`). Runs in the
-    builder's :func:`arrow_task_df` plans and in both
-    ``format("paimon_lake")`` readers."""
+    ``_SEQUENCE_NUMBER`` and ``_VALUE_KIND``. Trailing columns follow
+    when their spec key names them: ``row_kind`` (+I/-U/+U/-D from
+    ``_VALUE_KIND`` on unmerged key-value rows, +I on append files and
+    merged rows), ``file_name`` (each row's file name) and
+    ``row_pos`` (its position in its file, counted before DV marks
+    drop). ``key_predicate`` filters ``_KEY_*`` columns at the read
+    (see :func:`read_group_frame`). Runs in the builder's
+    :func:`arrow_task_df` plans and in both ``format("paimon_lake")``
+    readers."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -2823,11 +2837,12 @@ def merge_paimon_pk_entries(
     from paimon_python_spark.agg_merge import check_merge_options
     from paimon_python_spark.write import KIND_COL, SEQ_COL
 
-    check_merge_options(info)
     if not entries:
         return local_df(spark, [], info.spark_schema)
     dv_ranges = _relevant_dv(dv_ranges, entries)
     if _bucket_local_merge_ok(info, entries):
+        # the key-window below gets the same check from merge_on_read
+        check_merge_options(info)
         fields = list(info.spark_schema.fields)
         if needed_cols is not None:
             keep = {*needed_cols, *info.primary_keys, *info.partition_keys}

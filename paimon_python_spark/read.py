@@ -130,8 +130,8 @@ MERGE_ENGINES = ("deduplicate", "first-row", "partial-update", "aggregation")
 #: supported fields.<name>.aggregate-function values for the
 #: aggregation merge engine (re-exported; the implementation moved to
 #: agg_merge.py when the surface grew to the full Paimon function list)
-from paimon_python_spark.agg_merge import (  # noqa: E402,F401
-    AGG_FUNCTIONS,
+from paimon_python_spark.agg_merge import AGG_FUNCTIONS  # noqa: E402,F401
+from paimon_python_spark.agg_merge import (  # noqa: E402
     check_merge_options,
     sequence_fields,
     sequence_groups,

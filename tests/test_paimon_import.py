@@ -4497,6 +4497,7 @@ _NO_SHUFFLE_LAKES = [
     "aggregation",
     "cross_partition",
     "pre_rescale",
+    "inert_hll_option",
 ]
 
 
@@ -4507,8 +4508,9 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
     the dominant 100 TB read cost), whatever the column types, with a
     sequence.field, deletion vectors, files under two schema ids, the
     first-row, partial-update (sequence group) or aggregation (sum,
-    collect) engine, a cross-partition lake with a moved key, or time
-    travel to before a bucket rescale. Each answer matches the exact
+    collect) engine, a cross-partition lake with a moved key, time
+    travel to before a bucket rescale, or a deduplicate lake carrying
+    an inert ``hll_sketch`` option. Each answer matches the exact
     key-window read (forced by a group byte budget of 1) row for
     row."""
     import datetime
@@ -4584,6 +4586,9 @@ def test_bucket_local_merge_no_shuffle(tmp_path, spark, monkeypatch, lake):
         def extra(i):
             return (i, [f"x{i}"])
 
+    elif lake == "inert_hll_option":
+        # hll_sketch is inert outside merge-engine=aggregation
+        options["fields.v.aggregate-function"] = "hll_sketch"
     elif lake == "cross_partition":
         # bucket=-1 with the partition key outside the PK
         fields.append(("seg", "STRING"))
@@ -4810,6 +4815,64 @@ def test_lake_hll_sketch_merges_on_key_window(tmp_path, spark):
     assert abs(est - 1500) / 1500 < 0.05
     with pytest.raises(Exception, match="hll_sketch"):
         spark.read.format("paimon_lake").option("path", p).load().collect()
+
+
+@pytest.mark.parametrize(
+    "engine,budget_x,shuffles",
+    [
+        ("deduplicate", 1, False),
+        ("aggregation", 1, True),
+        ("aggregation", 4, False),
+        ("partial-update", 1, True),
+    ],
+)
+def test_lake_fold_engines_get_a_quarter_budget(
+    tmp_path, spark, monkeypatch, engine, budget_x, shuffles
+):
+    """The pandas folds of partial-update and aggregation peak at up to
+    about three times the memory of the Arrow deduplicate sort, so
+    their in-task group budget is a quarter of it
+    (``paimon_import.merge_budget``): with the deduplicate budget set
+    to the lake's largest group, a deduplicate lake still merges
+    in-task while the fold engines take the key-window, and four times
+    that budget brings them back in-task. Either path returns the
+    engine's merged rows."""
+    from paimon_python_spark import paimon_import
+    from paimon_python_spark.paimon_lake import (
+        PaimonLakeTable,
+        create_lake_table,
+        write_lake_pk_append,
+    )
+    from paimon_python_spark.session import set_spark
+
+    set_spark(spark)
+    p = str(tmp_path / "budget_lake")
+    options = {"bucket": "1", "merge-engine": engine}
+    if engine == "aggregation":
+        options["fields.n.aggregate-function"] = "sum"
+    create_lake_table(
+        p,
+        [("k", "INT NOT NULL"), ("n", "BIGINT")],
+        primary_keys=["k"],
+        options=options,
+    )
+    for lo in (0, 10):
+        write_lake_pk_append(
+            p,
+            spark.createDataFrame(
+                [(i, 1) for i in range(lo, lo + 20)], "k int, n bigint"
+            ),
+        )
+    group = paimon_import.max_group_bytes(paimon_import.plan_paimon_files(p))
+    monkeypatch.setattr(
+        paimon_import, "_BUCKET_LOCAL_MAX_GROUP_BYTES", group * budget_x
+    )
+    df = PaimonLakeTable(p).new_read_builder().new_read().to_df()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert ("Exchange" in plan) == shuffles, plan[:800]
+    got = dict(tuple(r) for r in df.collect())
+    want_n = 2 if engine == "aggregation" else 1
+    assert got == {k: want_n if 10 <= k < 20 else 1 for k in range(30)}
 
 
 def test_bucket_local_merge_size_guard(tmp_path, spark, monkeypatch):
